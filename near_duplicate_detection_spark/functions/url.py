@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from near_duplicate_detection_spark.session import local_frame
+
 # tracking parameters stripped from query strings (public lists: utm_*
 # campaign tags, facebook/google click ids)
 _TRACKING_PARAM = r"(utm_[a-zA-Z]+|fbclid|gclid)"
@@ -145,7 +147,7 @@ def registered_domain_psl(
     # would silently never match longer rules (and waste probes on absent
     # lengths)
     ks = sorted({r.count(".") + 1 for r in rules})
-    dim = spark.createDataFrame([(s,) for s in rules], "suffix string")
+    dim = local_frame(spark, [(s,) for s in rules], "suffix string")
     labels = F.split(host, r"\.")
     n = F.size(labels)
 

@@ -32,6 +32,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from near_duplicate_detection_spark.session import local_frame
+
 LINEAGE_SCHEMA = (
     "stage string, partition_id int, config_hash string, rows bigint, "
     "checksum bigint, wall_ms bigint, completed_at timestamp"
@@ -110,14 +112,10 @@ class StageCatalog:
         types: list | None = None,
     ) -> None:
         """Driver-side parquet write for TINY control tables (the stage-3
-        label patch, the retraction patch): zero Spark jobs. A
-        python-sourced Spark write (``spark.createDataFrame(list).write``)
-        parallelizes the local data into defaultParallelism python
-        partitions and a 1-task write then evaluates each through a Python
-        worker launch — measured ~4 s for a 2-row table at local[32];
-        pyarrow writes the same file in milliseconds. Columns default to
-        string; pass ``types`` (pyarrow DataTypes, one per column) for
-        anything else. Staged to a temp dir + atomic rename."""
+        label patch, the retraction patch): zero Spark jobs, where a Spark
+        write of driver rows costs a job and a commit protocol. Columns
+        default to string; pass ``types`` (pyarrow DataTypes, one per
+        column) for anything else. Staged to a temp dir + atomic rename."""
         types = types or [pa.string()] * len(columns)
         tbl = pa.table(
             {
@@ -146,7 +144,7 @@ class StageCatalog:
 
     def lineage(self) -> DataFrame:
         if not self.exists("lineage"):
-            return self.spark.createDataFrame([], schema=LINEAGE_SCHEMA)
+            return local_frame(self.spark, [], LINEAGE_SCHEMA)
         return self.read("lineage")
 
     def completed_partitions(self, stage: str, config_hash: str) -> set[int]:
@@ -347,5 +345,5 @@ class StageCatalog:
 
     def metrics(self) -> DataFrame:
         if not self.exists("metrics"):
-            return self.spark.createDataFrame([], schema=METRICS_SCHEMA)
+            return local_frame(self.spark, [], METRICS_SCHEMA)
         return self.read("metrics")

@@ -47,6 +47,7 @@ from near_duplicate_detection_spark.operators.lsh import (
     pairs_from_buckets,
     simhash_fallback_pairs,
 )
+from near_duplicate_detection_spark.session import local_frame
 
 
 def classify_drift(signatures: DataFrame, seen: DataFrame) -> DataFrame:
@@ -310,22 +311,10 @@ def cluster_label_delta(
             [(r["url_a"], r["url_b"]) for r in contracted.collect()]
         )
         spark = old_clusters.sparkSession
-        # ONE python slice: python-sourced local relations parallelize into
-        # defaultParallelism partitions by default, and every downstream
-        # evaluation (broadcast build, 1-task write) then pays a Python
-        # worker launch per partition — seconds of fixed cost for a
-        # handful of rows
-        def _local(rows):
-            return spark.createDataFrame(
-                spark.sparkContext.parallelize(rows, 1)
-                if rows
-                else spark.sparkContext.emptyRDD(),
-                schema="url string, label string",
-            )
-
         changed = [(u, l) for u, l in lab_map.items() if u != l]
-        node_labels = _local(list(lab_map.items()))
-        remap = _local(changed)
+        ddl = "url string, label string"
+        node_labels = local_frame(spark, list(lab_map.items()), ddl)
+        remap = local_frame(spark, changed, ddl)
         return remap, node_labels, len(changed), dict(changed)
     node_labels = connected_components(contracted)
     remap = node_labels.where(F.col("url") != F.col("label"))

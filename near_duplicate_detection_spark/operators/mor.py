@@ -49,9 +49,10 @@ from __future__ import annotations
 
 import os
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from near_duplicate_detection_spark.session import local_frame
 
 PATCH_TABLE = "retract_patch"
 # the tables whose readers resolve the patch (all six carry an `era` column)
@@ -87,9 +88,9 @@ def _dir_sig(path: str) -> tuple:
 
 def sidecar_local_df(catalog, table: str, build) -> DataFrame | None:
     """Cached LocalRelation for a ceiling-bounded sidecar table. ``build``
-    maps the driver-side rows to (pandas DataFrame, DDL schema). Returns
-    None when the table doesn't exist. Cache hits key on the parquet file
-    listing (name, size, mtime), so any rewrite invalidates."""
+    maps the driver-side rows to ``local_frame``'s (rows, DDL schema).
+    Returns None when the table doesn't exist. Cache hits key on the parquet
+    file listing (name, size, mtime), so any rewrite invalidates."""
     if not catalog.exists(table):
         return None
     key = (
@@ -100,8 +101,7 @@ def sidecar_local_df(catalog, table: str, build) -> DataFrame | None:
     hit = _SIDECAR_CACHE.get(key[:2])
     if hit is not None and hit[0] == key:
         return hit[1]
-    pdf, schema = build(catalog)
-    df = catalog.spark.createDataFrame(pdf, schema=schema)
+    df = local_frame(catalog.spark, *build(catalog))
     _SIDECAR_CACHE[key[:2]] = (key, df)
     return df
 
@@ -117,15 +117,8 @@ def patch_agg(catalog) -> DataFrame | None:
         agg: dict[str, list] = {}
         for url, nu, e in rows:
             agg.setdefault(url, []).append({"e": int(e), "nu": nu})
-        pdf = pd.DataFrame(
-            {
-                "url": list(agg),
-                "__entries": [
-                    sorted(v, key=lambda x: x["e"]) for v in agg.values()
-                ],
-            }
-        )
-        return pdf, "url string, __entries array<struct<e: bigint, nu: string>>"
+        rows = [(u, sorted(v, key=lambda x: x["e"])) for u, v in agg.items()]
+        return rows, "url string, __entries array<struct<e: bigint, nu: string>>"
 
     return sidecar_local_df(catalog, PATCH_TABLE, build)
 
@@ -141,10 +134,7 @@ def url_tombstone_agg(catalog, table: str) -> DataFrame | None:
         agg: dict[str, int] = {}
         for url, e in rows:
             agg[url] = max(agg.get(url, 0), int(e))
-        pdf = pd.DataFrame(
-            {"url": list(agg), "__tomb_era": list(agg.values())}
-        )
-        return pdf, "url string, __tomb_era bigint"
+        return list(agg.items()), "url string, __tomb_era bigint"
 
     return sidecar_local_df(catalog, table, build)
 
@@ -184,8 +174,7 @@ def remap_df(catalog) -> DataFrame | None:
 
     def build(cat):
         rows = cat.read_small_rows("cluster_remap", ["old_label", "new_label"])
-        pdf = pd.DataFrame(rows, columns=["old_label", "new_label"])
-        return pdf, "old_label string, new_label string"
+        return rows, "old_label string, new_label string"
 
     return sidecar_local_df(catalog, "cluster_remap", build)
 

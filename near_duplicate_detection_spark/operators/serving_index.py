@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from near_duplicate_detection_spark.operators import mor
 from near_duplicate_detection_spark.operators.lsh import explode_bands
+from near_duplicate_detection_spark.session import local_frame
 
 BAND_INDEX = "band_index"
 STAMP_TABLE = "band_index_stamp"
@@ -122,9 +123,7 @@ def probe_urls(
     (the always-correct path) otherwise."""
     from near_duplicate_detection_spark.pipeline import signatures_view
 
-    bands_df = spark.createDataFrame(
-        q_bands, "band_id int, band_hash bigint"
-    )
+    bands_df = local_frame(spark, q_bands, "band_id int, band_hash bigint")
     fresh = fresh_band_index(catalog)
     if fresh is None:
         exploded = explode_bands(signatures_view(catalog))
@@ -144,11 +143,11 @@ def probe_urls(
 
 def _pt_values(spark: SparkSession, hashes: list[int], P: int) -> list[int]:
     """xxhash64(h) % P for driver-known hashes — computed through Spark's
-    own xxhash64 (one LocalRelation expression evaluation, no scan job) so
-    the literals match the values written by ``build_band_index`` exactly."""
+    own xxhash64 (one LocalRelation expression evaluation, no job) so the
+    literals match the values written by ``build_band_index`` exactly."""
     if not hashes:
         return []
-    df = spark.createDataFrame([(h,) for h in hashes], "band_hash bigint")
+    df = local_frame(spark, [(h,) for h in hashes], "band_hash bigint")
     rows = df.select(
         F.pmod(F.xxhash64("band_hash"), F.lit(P)).alias("pt")
     ).collect()

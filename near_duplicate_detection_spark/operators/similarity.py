@@ -28,6 +28,8 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from near_duplicate_detection_spark.session import local_frame
+
 
 def _dot(a: str, b: str):
     return F.aggregate(
@@ -333,10 +335,11 @@ def train_centroids(
         .collect()
     )
     spark = df.sparkSession
-    cents = spark.createDataFrame(
+    cents = local_frame(
+        spark,
         [(i, [float(x) for x in r["_v"]]) for i, r in enumerate(seeds)],
         "centroid_id int, cvec array<double>",
-    ).localCheckpoint()
+    )
     for _ in range(iterations):
         assigned = assign_to_centroids(
             pts, cents, vec_col="_v", out_col="_cell", max_inline=max_inline

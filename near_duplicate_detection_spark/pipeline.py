@@ -53,6 +53,7 @@ from near_duplicate_detection_spark.operators.verify import (
     candidate_shingle_sets,
     verify_pairs,
 )
+from near_duplicate_detection_spark.session import local_frame
 
 
 def _wrap64(x: int) -> int:
@@ -853,9 +854,7 @@ class NDDPipeline:
         n_new = new_sigs.count()
         if n_new == 0:
             cat.mark_complete("pairs", h, {-1: cat.count_rows("pairs")}, 0)
-            self._appended_rep_urls = self.spark.createDataFrame(
-                [], "url string"
-            )
+            self._appended_rep_urls = local_frame(self.spark, [], "url string")
             return True
         self._appended_rep_urls = self._stage2_apply_append(
             new_sigs, n_new, h, t0
@@ -1227,13 +1226,9 @@ class NDDPipeline:
         # entry-point flow and need an era strictly above every
         # pre-existing clusters row
         era = self._bump_retract_era()
-        # single-slice local relation (the cluster_label_delta convention:
-        # python-sourced relations otherwise parallelize into
-        # defaultParallelism partitions and pay a Python worker launch per
-        # partition downstream) — consumed only by broadcast joins below
-        mapping_df = self.spark.createDataFrame(
-            self.spark.sparkContext.parallelize(sorted(mapping.items()), 1),
-            schema="url string, new_url string",
+        # consumed only by broadcast joins below
+        mapping_df = local_frame(
+            self.spark, sorted(mapping.items()), "url string, new_url string"
         )
         with open(self._retract_marker_path(), "w") as f:
             f.write("retraction in progress\n")
@@ -1807,9 +1802,7 @@ class NDDPipeline:
                 }
             )
             n_retr = len(retr_urls)
-            retr = self.spark.createDataFrame(
-                pd.DataFrame({"url": retr_urls}), schema="url string"
-            )
+            retr = local_frame(self.spark, [(u,) for u in retr_urls], "url string")
             # affected cluster ids and the surviving frontier are both
             # ceiling-bounded (affected ≤ |retraction|; frontier guarded by
             # max_remap below), so COLLECT them into LocalRelations instead
@@ -1825,9 +1818,8 @@ class NDDPipeline:
                 .collect()
             )
             n_dissolved = len(affected_ids)
-            affected = self.spark.createDataFrame(
-                pd.DataFrame({"cluster_id": affected_ids}),
-                schema="cluster_id string",
+            affected = local_frame(
+                self.spark, [(c,) for c in affected_ids], "cluster_id string"
             )
             # take(ceiling+1) pushes a CollectLimit: an over-ceiling dissolve
             # (giant cluster) early-stops instead of materializing the set
@@ -1841,9 +1833,8 @@ class NDDPipeline:
             if n_frontier > max_remap:
                 return False  # dissolve set too wide to broadcast → full CC
             frontier_urls = sorted(r["url"] for r in frontier_rows)
-            frontier = self.spark.createDataFrame(
-                pd.DataFrame({"url": frontier_urls}),
-                schema="url string",
+            frontier = local_frame(
+                self.spark, [(u,) for u in frontier_urls], "url string"
             )
             sub_edges = None
             if cat.exists("pairs"):
@@ -1903,7 +1894,7 @@ class NDDPipeline:
         new_rows = (
             cat.read("urls_new").select("url").distinct()
             if has_urls
-            else self.spark.createDataFrame([], "url string")
+            else local_frame(self.spark, [], "url string")
         )
         # NOTE: no retracted-url filter here — the retraction already
         # rewrote urls_new (dropping retracted rows), so any retracted url
@@ -2165,7 +2156,7 @@ class NDDPipeline:
             return
         cfg, cat = self.cfg, self.catalog
         rows = (
-            self.spark.createDataFrame([(u,) for u in urls], "url string")
+            local_frame(self.spark, [(u,) for u in urls], "url string")
             .select(self._bucket_expr().alias("bucket"))
             .distinct()
             .collect()
@@ -2726,9 +2717,7 @@ class NDDPipeline:
         h1 = cfg.stage1_hash()
         pstats = self._delta_preconditions(substring_pass)
         if not isinstance(urls, DataFrame):
-            urls = self.spark.createDataFrame(
-                [(u,) for u in urls], "url string"
-            )
+            urls = local_frame(self.spark, [(u,) for u in urls], "url string")
         # batch-sized: dedup + bucket each url; one tiny job yields the
         # affected-bucket list (the partition-pruning key for every corpus
         # touch below) and the retraction size
@@ -3475,7 +3464,7 @@ def query_top_k(
     )
     # query shingles ride along as a one-row broadcast, not a literal array
     # expression — a long query text would otherwise bloat the plan tree
-    qdf = spark.createDataFrame([(q_shingles,)], "q_shingles array<bigint>")
+    qdf = local_frame(spark, [(q_shingles,)], "q_shingles array<bigint>")
     inter = F.size(F.array_intersect(F.col("shingles"), F.col("q_shingles")))
     union = F.size("shingles") + F.size("q_shingles") - inter
     scored = (
@@ -3526,12 +3515,10 @@ def _candidate_texts(
         return full.select("url", "text").join(candidates, "url", "left_semi")
     if not rows:
         return full.select("url", "text").where(F.lit(False))
-    urls_df = spark.createDataFrame(
-        [(r["url"],) for r in rows], "url string"
-    )
+    urls_df = local_frame(spark, [(r["url"],) for r in rows], "url string")
     # bucket = f(url) through Spark's own xxhash64 (one LocalRelation
-    # expression evaluation, no scan job) so the literals match the
-    # partition values stage 0 wrote exactly
+    # expression evaluation, no job) so the literals match the partition
+    # values stage 0 wrote exactly
     buckets = sorted(
         {
             int(r["b"])

@@ -11,7 +11,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 _WAREHOUSE: str | None = None
 
@@ -35,13 +38,24 @@ def _warehouse_dir() -> str:
     return _WAREHOUSE
 
 
+def _host_defaults() -> tuple[str, str]:
+    """``local[N]`` over the CPUs this process may run on, and a driver heap
+    of a quarter of the host's memory: local mode is one JVM for driver and
+    executors, next to the Python workers and the OS page cache."""
+    with open("/proc/meminfo") as f:
+        total_kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    heap_mb = max(total_kb // 1024 // 4, 1024)
+    return f"local[{len(os.sched_getaffinity(0))}]", f"{heap_mb}m"
+
+
 def get_spark(
     app_name: str = "near_duplicate_detection_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[32]")
+    host_master, host_heap = _host_defaults()
+    master = master or os.environ.get("SPARK_GRAFT_MASTER", host_master)
     # parallelism-derived default: ~1 shuffle partition per core locally;
     # on a real cluster this would be 2-3x total executor cores.
     if shuffle_partitions is None:
@@ -66,12 +80,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # local mode = ONE JVM for driver + all 32 executor threads: heap
-        # must cover 32 concurrent task buffers + broadcast builds +
-        # localCheckpoint blocks. 16g starved a 400k-doc append onto a
-        # 4M-doc corpus ("Not enough memory to build and broadcast"); the
-        # sandbox has 128 GiB — size like a real 32-core executor group.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"))
+        # local mode = ONE JVM for driver + every task buffer, broadcast
+        # build and localCheckpoint block: a 400k-doc append onto a 4M-doc
+        # corpus needs more than 16g — set SPARK_GRAFT_DRIVER_MEM for that
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", host_heap))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Input-split granularity for Arrow-UDF-heavy stages: the 128 MB
@@ -94,3 +106,21 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """Driver-known rows (tuples) as a ``LocalRelation`` — the one way
+    driver-side rows enter a plan. ``createDataFrame`` over a list is
+    ``parallelize`` + a ``LogicalRDD`` (and the pandas route falls back to
+    it for empty input or on any Arrow error): every job consuming it
+    launches defaultParallelism Python-worker tasks to unpickle a few rows.
+    A pyarrow Table typed from the DDL goes in as a ``LocalRelation``, so
+    broadcast builds, collects and literal computations over it run on the
+    driver with no job."""
+    schema = DataType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)

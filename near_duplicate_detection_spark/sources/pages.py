@@ -38,7 +38,6 @@ SEED = 42
 _EPOCH_S = 1735689600  # 2025-01-01T00:00:00Z, fixed
 
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
-TRUTH_SCHEMA = "url_a string, url_b string, kind string, group_id bigint"
 
 _LANGS = ["en", "en", "en", "en", "en", "en", "de", "fr", "es", "zh"]
 _STOPWORDS = {
@@ -205,7 +204,3 @@ def truth_pairs(n_docs: int) -> pd.DataFrame:
         if b + 1 < n_docs:
             add(b, b + 1, "substring", b)
     return pd.DataFrame(rows, columns=["url_a", "url_b", "kind", "group_id"])
-
-
-def generate_truth(spark: SparkSession, n_docs: int) -> DataFrame:
-    return spark.createDataFrame(truth_pairs(n_docs), schema=TRUTH_SCHEMA)

@@ -13,7 +13,14 @@ from near_duplicate_detection_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="ndd-tests", master="local[8]", shuffle_partitions=8)
+    # the tier-1 command exports SPARK_GRAFT_CPUS; unset, get_spark sizes
+    # the master from the CPUs this process may use
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    s = get_spark(
+        app_name="ndd-tests",
+        master=f"local[{cpus}]" if cpus else None,
+        shuffle_partitions=8,
+    )
     yield s
     s.stop()
 

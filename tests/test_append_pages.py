@@ -232,6 +232,46 @@ def test_append_pages_crash_marker_routes_retry_to_full(
     assert not pipe._delta_suspect()
 
 
+def test_append_pages_crash_between_overlapped_commits_heals(
+    spark, tmp_path_factory, monkeypatch, base_catalog, full_n2
+):
+    """The overlapped stage-0/1 commit's worst order: the batch's pages
+    files are appended and the signatures lineage has advanced, then the
+    process dies before the pages lineage commit. The signatures lineage is
+    ahead of pages; the marker must refuse every retry and the full-snapshot
+    heal must reach the rebuild's partition."""
+    import threading
+
+    from near_duplicate_detection_spark.lineage import StageCatalog
+
+    cat_dir = _copy(base_catalog, tmp_path_factory, "ndd_ap_overlap_crash")
+    pipe = NDDPipeline(spark, CFG, cat_dir)
+    orig_mark = StageCatalog.mark_complete
+    sigs_committed = threading.Event()
+
+    def mark_then_crash(self, stage, *a, **kw):
+        if stage == "pages":
+            # hold the pages commit until the signatures commit is durable
+            assert sigs_committed.wait(timeout=300)
+            raise RuntimeError("simulated crash before the pages commit")
+        orig_mark(self, stage, *a, **kw)
+        if stage == "signatures":
+            sigs_committed.set()
+
+    monkeypatch.setattr(StageCatalog, "mark_complete", mark_then_crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        pipe.append_pages(generate_pages(spark, N2, start=N1))
+    monkeypatch.setattr(StageCatalog, "mark_complete", orig_mark)
+    assert sigs_committed.is_set()
+    assert pipe._delta_suspect()
+    with pytest.raises(AppendRefusedError, match="crash marker"):
+        pipe.append_pages(generate_pages(spark, N2, start=N1))
+    healed = pipe.run_incremental(generate_pages(spark, N2)).toPandas()
+    assert healed.url.nunique() == N2
+    assert _partition(healed) == _partition(full_n2)
+    assert not pipe._delta_suspect()
+
+
 def test_pure_append_fast_path_routing(
     spark, tmp_path_factory, base_catalog, full_n2
 ):
