@@ -151,7 +151,7 @@ def main():
             log: list[tuple[str, int, float]] = []
             methods = [
                 "_delta_preconditions",
-                "_stage2_apply_append",
+                "stage2_pairs_delta",
                 "_stage2_retract",
                 "stage2b_delta",
                 "stage3_clusters_delta",

@@ -26,12 +26,12 @@ therefore a superset of the full rebuild's verified pairs in that corner:
 recall is ≥ the full rebuild, never below (tests pin cluster-partition
 equality in the no-crossing case).
 
-Edits and deletions violate the append-only premise; the pipeline detects
-both against the stage-2 `seen` snapshot and first attempts a TARGETED
-RETRACTION (relabel_*: drop or rep-substitute the
-drifted urls' rows across every stage table, then treat edited content as
-a fresh append), falling back to the full rebuild only when the retraction
-is too large or prior retraction state is inconsistent (crash marker).
+Edits and deletions violate the append-only premise; the pipeline's
+changeset core first runs a TARGETED RETRACTION of the edited and deleted
+urls (relabel_*: drop or rep-substitute their rows across every stage
+table), then treats edited content as a fresh append. The changeset comes
+from the caller (explicit entry points) or from ``content_diff`` of a
+snapshot against the committed pages.
 """
 
 from __future__ import annotations
@@ -50,37 +50,16 @@ from near_duplicate_detection_spark.operators.lsh import (
 from near_duplicate_detection_spark.session import local_frame
 
 
-def classify_drift(signatures: DataFrame, seen: DataFrame) -> DataFrame:
-    """signatures (current) vs seen (url, fp as of last stage 2) → the
-    DRIFT frame: one full-outer join keeping only changed rows — appended
-    (``seen_fp`` NULL, signature columns populated), removed (``fp`` NULL),
-    or edited (both present, fp ≠ seen_fp). The result is drift-sized, so
-    the caller checkpoints it ONCE and derives new docs and violations from
-    the materialized frame — the previous two-frame API cost two separate
-    corpus scans (one per checkpoint). Split with ``drift_new`` /
-    ``drift_violations``."""
-    return (
-        signatures.join(
-            seen.select("url", F.col("fp").alias("seen_fp")), "url", "full_outer"
-        )
-        .where(
-            F.col("seen_fp").isNull()
-            | F.col("fp").isNull()
-            | (F.col("fp") != F.col("seen_fp"))
-        )
-    )
-
-
-def drift_new(drift: DataFrame) -> DataFrame:
-    """Appended docs' signature rows (columns as in `signatures`)."""
-    return drift.where(F.col("seen_fp").isNull()).drop("seen_fp")
-
-
-def drift_violations(drift: DataFrame) -> DataFrame:
-    """Removed ∪ edited urls; non-empty ⇒ retraction or full rebuild."""
-    return drift.where(
-        F.col("fp").isNull() | (F.col("fp") != F.col("seen_fp"))
-    ).select("url")
+def content_diff(snapshot: DataFrame, committed: DataFrame) -> DataFrame:
+    """The committed rows a snapshot retracts, both sides keyed by ``url``
+    with ``h`` = xxhash64(url, text) (``committed``'s renamed ``h_old``):
+    ONE right-outer join keeping the committed urls whose snapshot row is
+    missing (deleted: ``h`` NULL) or differs (edited: the snapshot's whole
+    row rides along). Callers restrict both sides to the buckets whose
+    stats say they drifted, so the join reads only those buckets."""
+    return snapshot.join(
+        committed.select("url", F.col("h").alias("h_old")), "url", "right"
+    ).where(F.col("h").isNull() | (F.col("h") != F.col("h_old")))
 
 
 def pairs_touching(cands: DataFrame, new_urls: DataFrame) -> DataFrame:

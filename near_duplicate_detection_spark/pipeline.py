@@ -63,41 +63,34 @@ def _wrap64(x: int) -> int:
     return x - (1 << 64) if x >= (1 << 63) else x
 
 
+def _overlap(*thunks):
+    """Run ``thunks`` concurrently on driver threads (each submits its own
+    Spark jobs, so independent writes and computes run UNDER each other —
+    guide §2.6), wait for ALL of them, and return their results in order.
+    The first error is re-raised only after every thunk has finished, so no
+    write is still in flight when a caller's crash protocol takes over."""
+    from concurrent.futures import ThreadPoolExecutor, wait
+
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [pool.submit(t) for t in thunks]
+        wait(futures)
+    return [f.result() for f in futures]
+
+
 class NDDPipeline:
     def __init__(self, spark: SparkSession, cfg: NDDConfig, base_dir: str):
         self.spark = spark
         self.cfg = cfg
         self.catalog = StageCatalog(spark, base_dir)
-        # appended rep urls from the last stage-2 delta in THIS process —
-        # threaded into stage2b_delta to skip its discovery anti-join; None
-        # means "unknown, discover". Never persisted: a fresh process always
-        # discovers.
-        self._appended_rep_urls: DataFrame | None = None
-        # the same run's appended stage-2 pairs (checkpointed in
-        # _stage2_apply_append) — threaded into stage2b_delta's
-        # already-verified prune so the threaded path never scans the
-        # corpus-sized edge tables. Consumed (and cleared) per call; a
-        # fresh process falls back to the edge-table scan.
-        self._appended_edges: DataFrame | None = None
         # snapshot-diff seam (run_incremental(changed_buckets=...)): when a
         # caller can ENUMERATE the drifted url-hash buckets (the Iceberg
         # snapshot-metadata analog — changed data files → changed
-        # partitions), the inferred path's O(corpus) control-plane scans
-        # (stage-0 _input_stats, the pure-append url probe, stage-2
-        # classify_drift's full-outer join) restrict to those buckets:
-        # partition-pruned reads on the bucket-partitioned tables, a
-        # computed-bucket filter on the input/seen sides. None = infer over
-        # the whole corpus (default behavior, unchanged).
+        # partitions), the snapshot diff's scans (the url probe and the
+        # content join) and the resume fallback's stage-0 stats scan
+        # restrict to those buckets: partition-pruned reads on the
+        # bucket-partitioned tables, a computed-bucket filter on the input
+        # side. None = infer over the whole corpus (default behavior).
         self._changed_buckets: frozenset[int] | None = None
-        # per-bucket (rows, checksum) of the CURRENT input snapshot, as a
-        # by-product of _try_pure_append's identity aggregate — consumed by
-        # run_incremental's slow path so stage0_ingest's resume scan does
-        # not re-evaluate the snapshot for the identical numbers (the probe
-        # sums the same count / decimal xxhash64 expressions per bucket;
-        # exactness relies on the corpus url-uniqueness invariant the
-        # probe's own identity algebra already assumes). Never persisted;
-        # valid only for the snapshot of the run_incremental call in flight.
-        self._inferred_stats: dict[int, tuple[int, int]] | None = None
 
     # ---------- stage 0 ----------
 
@@ -151,12 +144,7 @@ class NDDPipeline:
             for r in rows
         }
 
-    def stage0_ingest(
-        self,
-        pages: DataFrame,
-        resume: bool = True,
-        stats_hint: dict[int, tuple[int, int]] | None = None,
-    ) -> None:
+    def stage0_ingest(self, pages: DataFrame, resume: bool = True) -> None:
         """Materialize the input as the catalog's `pages` table, partitioned
         by url-hash bucket. Every later stage scans this table instead of
         re-evaluating the input plan, and stage 1's pending-bucket filter
@@ -169,13 +157,6 @@ class NDDPipeline:
         appended, edited, or shrunken snapshot refreshes exactly the changed
         buckets, and a bucket whose docs all vanished is dropped (the
         reference drops deleted videos on update, ndd/server_ndd.py:246-261).
-
-        ``stats_hint``: the input's per-bucket (rows, checksum) when the
-        caller already aggregated exactly ``_input_stats``'s expressions
-        over exactly this (restricted) snapshot — ``run_incremental``
-        threads the pure-append probe's identity aggregate here, saving one
-        full snapshot evaluation on the inferred edit/delete path (guide
-        §1.2: remove duplicate passes). Trusted verbatim; resume-path only.
 
         PURE-APPEND fast path (same checksum algebra as stage 1's): appends
         hash uniformly into ALL buckets, so the bucket-granular rewrite
@@ -211,7 +192,7 @@ class NDDPipeline:
             # (they must decide WHAT to write before writing).
             self._ingest_one_pass(pages, h, t0)
             return
-        stats = stats_hint if stats_hint is not None else self._input_stats(pages)
+        stats = self._input_stats(pages)
         pending = sorted(
             b for b in candidates if done.get(b, None) != stats.get(b, (0, 0))
         )
@@ -649,8 +630,8 @@ class NDDPipeline:
         # nothing (the minhash column exists for the query path / re-banding)
         sigs = self.signatures_table().select("url", "fp", "bands", "simhash")
         # the `seen` and `reps` writes depend only on the signature scan /
-        # the star checkpoint, not on the candidate-verify chain — submit
-        # them as soon as their input exists so they run UNDER the chain
+        # the star checkpoint, not on the candidate-verify chain — each is
+        # overlapped as soon as its input exists so it runs UNDER the chain
         # instead of as a serial tail (guide §2.6). Lineage still commits
         # only at mark_complete, so crash behavior matches the sequential
         # shape.
@@ -659,20 +640,17 @@ class NDDPipeline:
         # the stage-2 PARAM hash so the delta path can reject state built
         # under different parameters. At Iceberg scale this is a snapshot
         # id + table property, not a table.
-        from concurrent.futures import ThreadPoolExecutor
-
-        pool = ThreadPoolExecutor(max_workers=2)
-        try:
-            fut_seen = pool.submit(
-                lambda: cat.write(
-                    self._stamp_era(
-                        sigs.select("url", "fp").withColumn(
-                            "cfg_hash", F.lit(cfg.stage2_hash())
-                        )
-                    ),
-                    "seen",
-                )
+        def write_seen():
+            cat.write(
+                self._stamp_era(
+                    sigs.select("url", "fp").withColumn(
+                        "cfg_hash", F.lit(cfg.stage2_hash())
+                    )
+                ),
+                "seen",
             )
+
+        def pairs_chain() -> int:
             # exact-dup star edges first; LSH sees one representative per
             # distinct content (collapses boilerplate/exact-dup bucket
             # skew). Materialize the JOINED star table ONCE and derive
@@ -696,50 +674,51 @@ class NDDPipeline:
             # delta run (an O(corpus) shuffle per append in round 3).
             # Signatures are pure functions of text, so retraction
             # rep-substitution keeps these columns exact.
-            fut_reps = pool.submit(
-                lambda: cat.write(
-                    self._stamp_era(
-                        reps.select("url", "fp", "bands", "simhash")
-                    ),
+            def write_reps():
+                cat.write(
+                    self._stamp_era(reps.select("url", "fp", "bands", "simhash")),
                     "reps",
                 )
-            )
-            # materialize ONLY the multi-member band buckets (small) —
-            # every later consumer (flag metric, pair expansion) derives
-            # map-side from it instead of recomputing the
-            # scan+window+groupBy subtree
-            buckets = band_buckets(reps, cfg).localCheckpoint()
-            flagged = flagged_buckets(buckets, cfg)
-            # the fallback is only joined in when a bucket actually tripped
-            # the ceiling. Deciding that takes one count over the
-            # checkpointed (tiny) bucket table — near-zero, and it doubles
-            # as the flagged metric the round-5 shape paid a separate
-            # post-commit job for. (Round 1's sin was recomputing the
-            # corpus-wide band explode to decide; counting materialized
-            # partitions is the CC-fixpoint trick instead.) The
-            # unconditional union cost ~0.4 s of empty-side shuffles/run.
-            n_flagged = flagged.count()
-            cands = pairs_from_buckets(buckets, cfg, dedup=False)
-            if n_flagged:
-                cands = cands.union(
-                    simhash_fallback_pairs(
-                        reps, flagged_members(buckets, cfg), cfg, dedup=False
+
+            def verify_chain() -> int:
+                # materialize ONLY the multi-member band buckets (small) —
+                # every later consumer (flag metric, pair expansion) derives
+                # map-side from it instead of recomputing the
+                # scan+window+groupBy subtree
+                buckets = band_buckets(reps, cfg).localCheckpoint()
+                flagged = flagged_buckets(buckets, cfg)
+                # the fallback is only joined in when a bucket actually
+                # tripped the ceiling. Deciding that takes one count over the
+                # checkpointed (tiny) bucket table — near-zero, and it doubles
+                # as the flagged metric the round-5 shape paid a separate
+                # post-commit job for. (Round 1's sin was recomputing the
+                # corpus-wide band explode to decide; counting materialized
+                # partitions is the CC-fixpoint trick instead.) The
+                # unconditional union cost ~0.4 s of empty-side shuffles/run.
+                n_flagged = flagged.count()
+                cands = pairs_from_buckets(buckets, cfg, dedup=False)
+                if n_flagged:
+                    cands = cands.union(
+                        simhash_fallback_pairs(
+                            reps, flagged_members(buckets, cfg), cfg, dedup=False
+                        )
                     )
+                cands = cands.dropDuplicates(["url_a", "url_b"]).localCheckpoint()
+                # materialize the shingle sets: verify joins them TWICE
+                # (url_a and url_b sides), which would run the Arrow
+                # recompute twice
+                sets = candidate_shingle_sets(
+                    cands, self.pages_table(), cfg
+                ).localCheckpoint()
+                verified = verify_pairs(cands, sets, cfg)
+                cat.write(
+                    self._stamp_era(verified.unionByName(exact_edges)), "pairs"
                 )
-            cands = cands.dropDuplicates(["url_a", "url_b"]).localCheckpoint()
-            # materialize the shingle sets: verify joins them TWICE (url_a
-            # and url_b sides), which would run the Arrow recompute twice
-            sets = candidate_shingle_sets(
-                cands, self.pages_table(), cfg
-            ).localCheckpoint()
-            verified = verify_pairs(cands, sets, cfg)
-            cat.write(
-                self._stamp_era(verified.unionByName(exact_edges)), "pairs"
-            )
-            fut_seen.result()
-            fut_reps.result()
-        finally:
-            pool.shutdown(wait=True)
+                return n_flagged
+
+            return _overlap(write_reps, verify_chain)[1]
+
+        n_flagged = _overlap(write_seen, pairs_chain)[1]
         if wipe_patch:
             # the merge-on-read retraction patch dies with the last table
             # it could govern: seen/reps/pairs were just rebuilt (fresh era
@@ -767,116 +746,40 @@ class NDDPipeline:
             },
         )
 
-    def stage2_pairs_delta(self, max_retract: int | None = None) -> bool:
-        """Incremental stage 2 (operators/delta.py): new docs' pairs are
-        computed against the existing reps/pairs state instead of re-running
-        the corpus-wide band groupBy. Edited/deleted docs are handled by a
-        TARGETED RETRACTION first (``_stage2_retract`` — drop or
-        rep-substitute their rows, then treat edited content as appended).
-        Returns True if the delta path ran (or nothing changed); False when
-        the state can't support it (no prior run, partial crash state,
-        param drift, retraction larger than ``max_retract``) — the caller
-        must run the full ``stage2_pairs``.
+    def stage2_pairs_delta(
+        self,
+        retracted: list[str],
+        new_sigs: DataFrame | None,
+        n_new: int,
+    ) -> tuple[DataFrame, DataFrame] | None:
+        """Incremental stage 2 of one changeset (``_apply_changeset``): the
+        TARGETED RETRACTION of the ``retracted`` urls (``_stage2_retract`` —
+        drop or rep-substitute their rows), then the append of ``new_sigs``
+        (``n_new`` materialized signature rows of genuinely new or just
+        retracted urls) against the persisted reps/pairs index instead of
+        the corpus-wide band groupBy (operators/delta.py) — both under the
+        ONE final run hash. A pure retraction commits the pairs table under
+        its new hash. Returns the appended reps' urls (the stage-2b delta's
+        new coverage) and pair keys (its already-verified prune), or None
+        when nothing was appended.
 
         Cluster-partition equivalence with a full rebuild is pinned by
         tests/test_incremental.py; in the bucket-ceiling-crossing corner
         the delta keeps strictly MORE verified pairs (recall ≥ full)."""
-        from near_duplicate_detection_spark.operators.delta import (
-            classify_drift,
-            drift_new,
-            drift_violations,
-        )
-
-        cfg, cat = self.cfg, self.catalog
-        if max_retract is None:
-            max_retract = cfg.max_retract
-        if self._delta_suspect():
-            return False  # crashed retraction/delta append → tables suspect
-        h = self.stage2_run_hash()
-        if cat.completed_partitions("pairs", h) and cat.exists("pairs"):
-            return True  # already current (exists: never trust a lineage
-            # row whose table was wiped — see the stage-2b mirror below)
-        if not (cat.exists("seen") and cat.exists("reps") and cat.exists("pairs")):
-            return False  # no prior full run to delta against
-        t0 = time.monotonic()
-        # snapshot-diff seam: drift can only live in the declared buckets,
-        # so BOTH sides of classify_drift's full-outer join restrict to
-        # them — the signatures side partition-prunes (bucket-partitioned),
-        # the flat `seen` side filters on the derived bucket (at Iceberg
-        # scale `seen` is a snapshot id, not a table — see stage2_pairs)
-        sigs = self._restrict_changed(
-            self.signatures_table(), "bucket"
-        ).select("url", "fp", "bands", "simhash")
-        # param-drift guard: delta state built under DIFFERENT stage-2
-        # params must not be extended or re-committed (a param change with
-        # zero appended docs would otherwise mark the stale pairs complete
-        # under the new hash). Footer-level pyarrow read — no Spark job —
-        # and stricter than a first()-row probe: MIXED stamps also refuse.
-        # (Crash-idempotence — partial appends from a killed delta — is the
-        # delta.inflight marker's job, checked at entry above; the round-3
-        # anti-join guard over reps ∪ pairs here cost two full edge-table
-        # scans per run for the same crash window.)
-        if cat.distinct_values("seen", "cfg_hash") != {cfg.stage2_hash()}:
-            return False
-        seen = self._restrict_changed(
-            self.stage_view("seen")
-        ).select("url", "fp")
-        # ONE corpus-scan job classifies all drift (append/edit/delete);
-        # the checkpointed frame is drift-sized and feeds both splits
-        drift = classify_drift(sigs, seen).localCheckpoint()
-        violations = drift_violations(drift)
-        new_sigs = drift_new(drift)
-        if violations.limit(1).count():
-            # edit/delete drift: targeted retraction (drop or rep-substitute
-            # the drifted urls' rows across the stage tables), after which
-            # edited docs classify as plain appends. Refusals (too large,
-            # crash marker) → full path.
-            if not self._stage2_retract(violations, max_retract):
-                return False
-            if not (
-                cat.exists("seen") and cat.exists("reps") and cat.exists("pairs")
-            ):
-                return False  # retraction emptied a core table → full path
-            # post-retraction new set WITHOUT a second corpus-wide
-            # classify_drift join (r6, guide §1.2): the retraction dropped
-            # exactly `violations` from the seen view (drop-only patch /
-            # fold anti-join, operators/mor.py URL_DROP_TABLES), so
-            #   new₂ = {sigs ∉ seen_before} ∪ {sigs ∩ violations}
-            # — the first term is the materialized drift's new split, the
-            # second a broadcast semi-join of the drift-sized violation set
-            # against the (partition-restricted) signatures scan. Disjoint
-            # by construction (violations ⊆ seen_before), so the union adds
-            # no duplicates. One map-side scan replaces the full-outer join.
-            new_sigs = drift_new(drift).unionByName(
-                sigs.join(F.broadcast(violations), "url", "left_semi")
-            )
-        new_sigs = new_sigs.localCheckpoint()
-        n_new = new_sigs.count()
-        if n_new == 0:
-            cat.mark_complete("pairs", h, {-1: cat.count_rows("pairs")}, 0)
-            self._appended_rep_urls = local_frame(self.spark, [], "url string")
-            return True
-        self._appended_rep_urls = self._stage2_apply_append(
-            new_sigs, n_new, h, t0
-        )
-        return True
-
-    def _stage2_apply_append(
-        self, new_sigs: DataFrame, n_new: int, h: str, t0: float
-    ) -> DataFrame:
-        """Shared append core of the stage-2 delta: compute the appended
-        docs' pairs against the persisted index state and append them to
-        every stage-2 table + the stage-3 log. ``new_sigs`` must be
-        materialized rows that are genuinely NEW (callers establish this —
-        ``stage2_pairs_delta`` via drift classification, ``append_pages``
-        via its caller contract). Returns the appended reps' urls (the
-        stage-2b delta's new-coverage set)."""
         from near_duplicate_detection_spark.operators.delta import (
             delta_exact,
             delta_lsh_candidates,
         )
 
         cfg, cat = self.cfg, self.catalog
+        if retracted:
+            self._stage2_retract(retracted)
+        h = self.stage2_run_hash()  # after the changeset's lineage advance
+        if new_sigs is None:
+            cat.mark_complete("pairs", h, {-1: cat.count_rows("pairs")}, 0)
+            self._clear_marker("delta.inflight")
+            return None
+        t0 = time.monotonic()
         reps_tbl = self.stage_view("reps")
         rep_map = reps_tbl.select("fp", F.col("url").alias("rep"))
         exact_edges, new_reps = delta_exact(new_sigs, rep_map)
@@ -888,43 +791,25 @@ class NDDPipeline:
         old_rep_sigs = reps_tbl.select("url", "bands", "simhash")
         cands, flagged = delta_lsh_candidates(old_rep_sigs, new_reps, cfg)
         cands = cands.localCheckpoint()
-        from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=5) as pool:
-            self._stage2_apply_append_tail(
-                pool, cat, cfg, cands, flagged, exact_edges, new_sigs,
-                new_reps, n_new, h, t0,
+        def verify() -> DataFrame:
+            sets = candidate_shingle_sets(
+                cands, self.pages_table(), cfg
+            ).localCheckpoint()
+            # materialize the appended pairs ONCE: two writes consume them
+            # (edges_new log, pairs append) and the verify join must not
+            # re-run
+            return (
+                verify_pairs(cands, sets, cfg)
+                .unionByName(exact_edges)
+                .localCheckpoint()
             )
-        return new_reps.select("url")
 
-    def _stage2_apply_append_tail(
-        self, pool, cat, cfg, cands, flagged, exact_edges, new_sigs,
-        new_reps, n_new, h, t0,
-    ) -> None:
-        """Compute/write tail of ``_stage2_apply_append``, run inside its
-        write pool's scope so an exception anywhere still joins the pool."""
         # the flagged metric only has to COMPLETE before the appends below
         # mutate the tables its lineage reads from (stale file-listing
-        # hazard) — submit it now so it runs UNDER the shingle-set/verify
-        # chain instead of as a serial step after it (guide §2.6)
-        flagged_future = pool.submit(flagged.count)
-        sets = candidate_shingle_sets(
-            cands, self.pages_table(), cfg
-        ).localCheckpoint()
-        verified = verify_pairs(cands, sets, cfg)
-        # materialize the appended pairs ONCE: two writes consume them
-        # (edges_new log, pairs append) and the verify join must not re-run
-        appended_pairs = verified.unionByName(exact_edges).localCheckpoint()
-        # stash this run's edge keys for stage2b_delta's prune: on the
-        # threaded path every VISIBLE prior edge touching a new url is by
-        # construction in this set (new urls have no earlier visible edges —
-        # appends are genuinely new, and updates' old edges are retraction-
-        # governed before this append runs)
-        self._appended_edges = appended_pairs.select("url_a", "url_b")
-        # the flagged metric must have COMPLETED before the appends below
-        # mutate the tables its lineage reads from (stale file-listing
-        # hazard) — join the overlapped job here
-        n_flagged = flagged_future.result()
+        # hazard) — overlapped with the shingle-set/verify chain instead of
+        # run as a serial step after it (guide §2.6)
+        n_flagged, appended_pairs = _overlap(flagged.count, verify)
         # marker up across the multi-table appends (no atomic commit): a
         # crash anywhere below leaves it set, so every later delta entry
         # refuses and the idempotent full rebuild takes over
@@ -939,8 +824,7 @@ class NDDPipeline:
         # task while the other three appends — order-free among themselves
         # and vs the log (the inflight marker, set above and cleared only
         # after mark_complete, routes ANY partial combination to the
-        # idempotent full rebuild) — overlap it from the same pool (guide
-        # §2.6; r6: the log write was a serial step ahead of the pool).
+        # idempotent full rebuild) — overlap it (guide §2.6).
         def log_then_pairs():
             cat.write(
                 appended_pairs.select("url_a", "url_b"),
@@ -949,7 +833,7 @@ class NDDPipeline:
             )
             cat.write(self._stamp_era(appended_pairs), "pairs", mode="append")
 
-        writes = (
+        _overlap(
             log_then_pairs,
             lambda: cat.write(new_sigs.select("url"), "urls_new", mode="append"),
             lambda: cat.write(
@@ -969,8 +853,6 @@ class NDDPipeline:
                 mode="append",
             ),
         )
-        for _ in pool.map(lambda w: w(), writes):
-            pass
         wall_ms = int((time.monotonic() - t0) * 1000)
         n_pairs = cat.count_rows("pairs")
         cat.mark_complete("pairs", h, {-1: n_pairs}, wall_ms)
@@ -984,6 +866,7 @@ class NDDPipeline:
                 "wall_ms": wall_ms,
             },
         )
+        return new_reps.select("url"), appended_pairs.select("url_a", "url_b")
 
     # ---------- targeted retraction (edit/delete delta) ----------
 
@@ -1020,9 +903,6 @@ class NDDPipeline:
             os.remove(self._marker_path(name))
         except FileNotFoundError:
             pass
-
-    def _retract_marker_path(self) -> str:
-        return self._marker_path("retract.inflight")
 
     def _retract_inflight(self) -> bool:
         return self._marker_up("retract.inflight")
@@ -1133,9 +1013,7 @@ class NDDPipeline:
             df, patch, drop_only=table in mor.URL_DROP_TABLES
         )
 
-    def _stage2_retract(
-        self, retracted: DataFrame, max_retract: int | None = None
-    ) -> bool:
+    def _stage2_retract(self, urls: list[str]) -> None:
         """Merge-on-read retraction: retract edited/deleted urls from every
         stage-2/2b table by committing ONE driver-written patch sidecar
         (operators/mor.py ``retract_patch`` — url → new_url|NULL stamped
@@ -1168,8 +1046,9 @@ class NDDPipeline:
         commit); a crash leaves the marker up and every delta entry point
         refuses until the full ``stage2_pairs`` rebuild clears it.
 
-        Returns False (nothing touched) when the retraction exceeds
-        ``max_retract`` — the broadcast-mapping ceiling."""
+        ``urls``: the distinct retracted urls, driver-side — the changeset
+        core has already bounded them by ``cfg.max_retract`` (the
+        broadcast-mapping ceiling)."""
         import shutil as _shutil
 
         import pandas as pd
@@ -1182,12 +1061,8 @@ class NDDPipeline:
         )
 
         cat, cfg = self.catalog, self.cfg
-        if max_retract is None:
-            max_retract = cfg.max_retract
-        retracted = retracted.select("url").distinct().localCheckpoint()
-        n_ret = retracted.count()
-        if n_ret > max_retract:
-            return False
+        n_ret = len(urls)
+        retracted = local_frame(self.spark, [(u,) for u in urls], "url string")
         # --- the relabel/drop plan, from the VIEWS (prior patch applied):
         # broken reps' fp groups → min surviving member per group. All
         # joins broadcast; outputs retraction-sized.
@@ -1212,9 +1087,7 @@ class NDDPipeline:
             .select("url", "new_url")
             .collect()
         }
-        mapping = {
-            r["url"]: rep_new.get(r["url"]) for r in retracted.collect()
-        }
+        mapping = {u: rep_new.get(u) for u in urls}
         stored = (
             cat.read_small_rows(mor.PATCH_TABLE, ["url", "new_url", "era"])
             if cat.exists(mor.PATCH_TABLE)
@@ -1230,8 +1103,7 @@ class NDDPipeline:
         mapping_df = local_frame(
             self.spark, sorted(mapping.items()), "url string, new_url string"
         )
-        with open(self._retract_marker_path(), "w") as f:
-            f.write("retraction in progress\n")
+        self._set_marker("retract.inflight")
         if fold:
             # copy-on-write fold: one broadcast-mapped rewrite per stage
             # table, reading through the VIEWS so the stored patch folds in
@@ -1312,7 +1184,6 @@ class NDDPipeline:
                 "retract_patch_rows": patch_rows,
             },
         )
-        return True
 
     # ---------- stage 2b ----------
 
@@ -1374,29 +1245,19 @@ class NDDPipeline:
             if cat.exists("reps")
             else pages.select("url")
         )
-        from concurrent.futures import ThreadPoolExecutor
-
-        pool = ThreadPoolExecutor(max_workers=2)
-        try:
-            fut_windows = pool.submit(
-                lambda: cat.write(self._stamp_era(windows), "window_index")
-            )
-            fut_seen = pool.submit(
-                lambda: cat.write(
-                    self._stamp_era(
-                        covered.withColumn(
-                            "cfg_hash", F.lit(cfg.stage2b_hash())
-                        )
-                    ),
-                    "seen_2b",
-                )
-            )
-            hits = verify_substring_pairs(cands, pages, cfg)
-            cat.write(self._stamp_era(hits), "substring_pairs")
-            fut_windows.result()
-            fut_seen.result()
-        finally:
-            pool.shutdown(wait=True)
+        _overlap(
+            lambda: cat.write(self._stamp_era(windows), "window_index"),
+            lambda: cat.write(
+                self._stamp_era(
+                    covered.withColumn("cfg_hash", F.lit(cfg.stage2b_hash()))
+                ),
+                "seen_2b",
+            ),
+            lambda: cat.write(
+                self._stamp_era(verify_substring_pairs(cands, pages, cfg)),
+                "substring_pairs",
+            ),
+        )
         wall_ms = int((time.monotonic() - t0) * 1000)
         n = cat.count_rows("substring_pairs")
         cat.mark_complete("substring_pairs", h, {-1: n}, wall_ms)
@@ -1413,118 +1274,20 @@ class NDDPipeline:
 
     def stage2b_delta(
         self,
-        new_urls: DataFrame | None = None,
-        new_pages: DataFrame | None = None,
-    ) -> bool:
-        """Append-only incremental stage 2b: new reps' anchored windows probe
-        the persisted window_index (operators/delta.py
-        delta_window_candidates) instead of re-fingerprinting the corpus.
-        Returns True if the delta ran (or nothing changed); False when there
-        is no valid delta state — caller runs the full stage2b_substring.
-        The full stage-2 path wipes window_index/seen_2b, so an edit/delete
-        rebuild can never leave stale 2b delta state behind.
-
-        ``new_urls``: the appended reps' urls when the caller already knows
-        them (the stage-2 delta just computed them, or ``append_pages`` was
-        handed them) — skips the corpus×corpus discovery anti-join
-        reps ∖ seen_2b. Trust-but-verify: the threaded set equals that
-        difference iff prior state was consistent and exactly this batch
-        was appended, which footer-level row counts decide with zero Spark
-        jobs (|reps| = |seen_2b| + |new_urls|); a mismatch (e.g. 2b skipped
-        for several batches via substring_pass=False) falls back to the
-        discovery join.
-
-        ``new_pages``: the appended (url, text) rows when the caller holds
-        them materialized (``append_pages``'s batch) — the window
-        fingerprint then reads the batch instead of probing the corpus
-        pages table for the same texts. Ignored whenever ``new_urls`` falls
-        back to discovery (discovered urls need not be in the batch).
-
-        On the verified-threaded path the already-verified-pair prune uses
-        the same run's appended stage-2 edges (``self._appended_edges``)
-        instead of scanning the pairs/substring_pairs tables — the threaded
-        urls can have no other visible edges. The discovery fallback keeps
-        the edge-table probe."""
-        cfg, cat = self.cfg, self.catalog
-        if self._delta_suspect():
-            return False  # crashed retraction/delta append → tables suspect
-        h = self.stage2b_run_hash()
-        # exists guard on the early-return too (not only the full path's):
-        # run hashes are CONTENT-derived, so healing a crashed retraction
-        # over unchanged content collides with the pre-crash commit's hash
-        # while the table was just WIPED by stage2_pairs — the stale
-        # lineage row must not shadow the missing table (stage 3 would
-        # silently lose every substring edge)
-        if cat.completed_partitions("substring_pairs", h) and cat.exists(
-            "substring_pairs"
-        ):
-            return True
-        if not (
-            cat.exists("window_index")
-            and cat.exists("seen_2b")
-            and cat.exists("substring_pairs")
-            and cat.exists("reps")
-        ):
-            return False
-        t0 = time.monotonic()
-        # param-drift guard (same convention as stage 2's delta): footer-
-        # level stamp read, no Spark job, mixed stamps refuse. Crash-
-        # idempotence is the delta.inflight marker's job (entry check) —
-        # the round-3 anti-join guards here scanned window_index,
-        # substring_pairs (twice) and seen_2b per run for the same window.
-        if cat.distinct_values("seen_2b", "cfg_hash") != {cfg.stage2b_hash()}:
-            return False
-        # consume the same-run stage-2 edge stash (see _stage2_apply_append):
-        # only trustworthy on the verified-threaded path below — a discovery
-        # fallback may cover urls from EARLIER batches whose visible edges
-        # the stash never saw
-        edges_hint, self._appended_edges = self._appended_edges, None
-        if new_urls is not None:
-            n_new = new_urls.count()
-            if cat.count_rows("reps") != cat.count_rows("seen_2b") + n_new:
-                new_urls = None  # coverage lag → discover below
-        if new_urls is None:
-            edges_hint = None
-            new_pages = None  # discovered urls may predate the batch
-            new_urls = (
-                self.stage_view("reps")
-                .select("url")
-                .join(
-                    self.stage_view("seen_2b").select("url"),
-                    "url",
-                    "left_anti",
-                )
-                .localCheckpoint()
-            )
-            n_new = new_urls.count()
-        if n_new == 0:
-            cat.mark_complete(
-                "substring_pairs", h, {-1: cat.count_rows("substring_pairs")}, 0
-            )
-            return True
-        self._stage2b_apply_append(
-            new_urls,
-            n_new,
-            h,
-            t0,
-            new_pages=new_pages,
-            prior_edges=edges_hint,
-        )
-        return True
-
-    def _stage2b_apply_append(
-        self,
-        new_urls: DataFrame,
-        n_new: int,
-        h: str,
-        t0: float,
-        new_pages: DataFrame | None = None,
-        prior_edges: DataFrame | None = None,
+        new_urls: DataFrame | None,
+        new_pages: DataFrame | None,
+        prior_edges: DataFrame | None,
     ) -> None:
-        """Shared append core of the stage-2b delta: fingerprint the new
-        docs' windows, probe the persisted window_index, verify, append.
-        ``new_urls`` must be materialized, append-sized, and genuinely new
-        (not covered by seen_2b)."""
+        """Incremental stage 2b of one changeset (``_apply_changeset``): the
+        appended reps' anchored windows probe the persisted window_index
+        (operators/delta.py delta_window_candidates) instead of
+        re-fingerprinting the corpus. ``new_urls`` are the stage-2 delta's
+        appended rep urls (materialized, not covered by seen_2b),
+        ``new_pages`` the changeset's materialized (url, text) batch they
+        come from, ``prior_edges`` the same run's appended stage-2 pair
+        keys; None (a pure retraction) commits substring_pairs under its
+        new run hash. The full stage-2 path wipes window_index/seen_2b, so
+        a rebuild never leaves stale 2b delta state behind."""
         from near_duplicate_detection_spark.operators.delta import (
             delta_window_candidates,
         )
@@ -1534,15 +1297,18 @@ class NDDPipeline:
         )
 
         cfg, cat = self.cfg, self.catalog
-        # text source: the caller's materialized batch when provided (the
-        # urls are a subset of it — zero corpus reads), else a map-side
-        # probe of the corpus pages table
-        src = new_pages if new_pages is not None else self.pages_table()
-        new_pages = src.join(
-            F.broadcast(new_urls), "url", "left_semi"
-        )
+        h = self.stage2b_run_hash()
+        n_new = new_urls.count() if new_urls is not None else 0
+        if n_new == 0:
+            cat.mark_complete(
+                "substring_pairs", h, {-1: cat.count_rows("substring_pairs")}, 0
+            )
+            return
+        t0 = time.monotonic()
+        # text source: the changeset's materialized batch — zero corpus reads
         new_windows = (
-            new_pages.select("url", "text")
+            new_pages.join(F.broadcast(new_urls), "url", "left_semi")
+            .select("url", "text")
             .mapInPandas(window_fingerprint_fn(cfg), DOC_WINDOWS_SCHEMA)
             .select("url", F.explode("win_hashes").alias("win_hash"))
             .localCheckpoint()
@@ -1550,68 +1316,27 @@ class NDDPipeline:
         cands, flagged = delta_window_candidates(
             self.stage_view("window_index"), new_windows, cfg
         )
-        from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            self._stage2b_apply_append_tail(
-                pool, cat, cfg, cands, flagged, new_windows, new_urls,
-                prior_edges, n_new, h, t0,
-            )
-
-    def _stage2b_apply_append_tail(
-        self, pool, cat, cfg, cands, flagged, new_windows, new_urls,
-        prior_edges, n_new, h, t0,
-    ) -> None:
-        """Prune/verify/write tail of ``_stage2b_apply_append``, run inside
-        its write pool's scope so an exception anywhere still joins the
-        pool. The flagged metric only has to COMPLETE before the appends
-        mutate the tables its lineage reads from — submit it now so it runs
-        UNDER the prune + LCS-verify chain instead of as a serial step
-        after it (guide §2.6)."""
-        flagged_future = pool.submit(flagged.count)
-        # already-verified pairs (stage 2 or earlier 2b runs) skip the LCS.
-        if prior_edges is not None:
-            # verified-threaded path: ``prior_edges`` is the SAME run's
-            # appended stage-2 pairs (checkpointed, append-sized). Every
-            # candidate touches ≥1 threaded url, and a threaded url has no
-            # OTHER visible edges — it is either genuinely new or its old
-            # edges were retraction-governed before the append — so one
-            # broadcast anti-join prunes exactly what the edge-table scan
+        def verify() -> DataFrame:
+            # already-verified pairs skip the LCS. ``prior_edges`` is the
+            # SAME run's appended stage-2 pairs (checkpointed,
+            # append-sized): every candidate touches ≥1 new url, and a new
+            # url has no OTHER visible edges — it is either genuinely new or
+            # its old edges were retraction-governed before the append — so
+            # one broadcast anti-join prunes exactly what an edge-table scan
             # would, with zero corpus-edge reads.
-            cands = cands.join(
+            pruned = cands.join(
                 F.broadcast(prior_edges), ["url_a", "url_b"], "left_anti"
             ).localCheckpoint()
-        else:
-            # discovery path: covered urls may predate this run, so probe
-            # the prior edge tables (corpus-dup-volume-sized) map-side with
-            # the broadcast candidate keys, then anti-join the append-sized
-            # hit set back — never a shuffle of the edge tables.
-            # ONE materialization fuses candidate generation with the
-            # prune: the unmaterialized cands subplan appears twice in it
-            # (broadcast keys + probe side) but re-derives from the
-            # checkpointed window buckets — cheaper than the extra barrier
-            # a cands-then-prune double checkpoint paid.
-            cand_keys = cands.select("url_a", "url_b")
-            edge_tables = (
-                self.stage_view("pairs")
-                .select("url_a", "url_b")
-                .union(
-                    self.stage_view("substring_pairs").select("url_a", "url_b")
-                )
-            )
-            prior_hits = edge_tables.join(
-                F.broadcast(cand_keys), ["url_a", "url_b"], "left_semi"
-            )
-            # materialized: verify reads cands three times (url set + pair
-            # join), and each read would otherwise re-run the scan above
-            cands = cands.join(
-                F.broadcast(prior_hits), ["url_a", "url_b"], "left_anti"
+            # two consumers: log + table append
+            return verify_substring_pairs(
+                pruned, self.pages_table(), cfg
             ).localCheckpoint()
-        hits = verify_substring_pairs(cands, self.pages_table(), cfg)
-        hits = hits.localCheckpoint()  # two consumers: log + table append
-        # must have COMPLETED before the appends below mutate the tables
-        # its lineage reads from (stale file-listing hazard)
-        n_flagged = flagged_future.result()
+
+        # the flagged metric only has to COMPLETE before the appends mutate
+        # the tables its lineage reads from — overlapped with the prune +
+        # LCS-verify chain instead of run as a serial step after it (§2.6)
+        n_flagged, hits = _overlap(flagged.count, verify)
         self._set_marker("delta.inflight")
 
         # stage-3 append log BEFORE the substring_pairs append (same crash
@@ -1619,13 +1344,12 @@ class NDDPipeline:
         # under-logging not) — the only pairwise barrier beyond the marker,
         # run as one chained task; window_index/seen_2b are order-free (the
         # inflight marker routes any partial state to the full rebuild) and
-        # overlap it from the same pool (guide §2.6; r6: the log write was
-        # a serial step ahead of the pool).
+        # overlap it (guide §2.6).
         def log_then_table():
             cat.write(hits.select("url_a", "url_b"), "edges_new", mode="append")
             cat.write(self._stamp_era(hits), "substring_pairs", mode="append")
 
-        writes = (
+        _overlap(
             log_then_table,
             lambda: cat.write(
                 self._stamp_era(new_windows), "window_index", mode="append"
@@ -1638,8 +1362,6 @@ class NDDPipeline:
                 mode="append",
             ),
         )
-        for _ in pool.map(lambda w: w(), writes):
-            pass
         wall_ms = int((time.monotonic() - t0) * 1000)
         n = cat.count_rows("substring_pairs")
         cat.mark_complete("substring_pairs", h, {-1: n}, wall_ms)
@@ -2194,43 +1916,31 @@ class NDDPipeline:
         substring_pass: bool = True,
         changed_buckets=None,
     ) -> DataFrame:
-        """Change-optimized build: stage 0 refreshes drifted buckets, stage
-        1 signs only changed docs, stages 2 and 2b run their DELTA paths —
-        appends probe the persisted index state, edits/deletes go through a
-        targeted retraction (drop or rep-substitute the drifted urls' rows)
-        and then re-enter as appends — and stage 3 merges appended edges
-        into the committed clusters via cluster contraction, dissolving and
-        re-clustering only the clusters a retraction touched. The full
-        rebuild runs only when the delta state is missing, superseded, too
-        large to retract, or marked inconsistent by a crashed retraction.
-        `pages` is the FULL current snapshot (same contract as run());
-        appends/edits/deletes are inferred.
-
-        PURE-APPEND fast path: ONE fused marker-join + aggregation over the
-        snapshot both classifies the drift (per-bucket checksum algebra —
-        any edit/delete/url-dup fails an identity) and yields the appended
-        rows, which then go through ``append_pages``'s shared delta core.
-        The inferred path's control plane thereby drops from three
-        corpus-table scans per run (stage-0 discovery anti-join, stage-1
-        unsigned-doc anti-join, stage-2 ``classify_drift`` full-outer join)
-        to ONE url-probe join; mixed drift falls back to the full
-        stage-by-stage machinery below, unchanged.
+        """Snapshot-inferred incremental build. ``pages`` is the FULL
+        current snapshot (same contract as run()); its appends, edits and
+        deletes are inferred by diffing it against the pages view
+        (``_snapshot_changeset``) and applied by the changeset core every
+        explicit entry point shares (``_apply_changeset``). When the catalog
+        cannot take a delta — first build, crash marker, param change,
+        signatures lagging pages (e.g. after ``invalidate_urls``), a
+        retraction over ``cfg.max_retract`` — this is
+        ``run(pages, resume=True)``, whose data-aware resume rebuilds exactly
+        what drifted. A snapshot that repeats a url raises ``ValueError``
+        before any mutation.
 
         SNAPSHOT-DIFF SEAM: ``changed_buckets`` (iterable of bucket ids)
         declares that ONLY those url-hash buckets can have drifted since
         the last committed run — the information an Iceberg snapshot diff
-        yields for free (changed data files → changed partitions). Under
-        that contract the control plane restricts to the declared buckets:
-        the stage-0 stats scan and the pure-append url probe filter to
-        them (partition-pruned on the bucket-partitioned pages table), and
-        stage-2 ``classify_drift``'s full-outer join reads only their
-        signature partitions — O(changed-bucket data), not O(corpus).
-        ``pages`` may be the full snapshot or just the changed buckets'
-        complete current rows (rows hashing elsewhere are ignored); either
-        way every declared bucket's CURRENT content must be fully present.
-        A caller that declares too few buckets silently misses that drift —
-        same trust model as ``append_pages``'s caller contract. Default
-        (None) infers over the whole corpus, behavior unchanged."""
+        yields for free (changed data files → changed partitions). The
+        diff's probe and content join then read only those buckets
+        (partition-pruned on the bucket-partitioned pages table), and so
+        does the resume fallback's stage 0. ``pages`` may be the full
+        snapshot or just the changed buckets' complete current rows (rows
+        hashing elsewhere are ignored); either way every declared bucket's
+        CURRENT content must be fully present. A caller that declares too
+        few buckets silently misses that drift — same trust model as
+        ``append_pages``'s caller contract. Default (None) infers over the
+        whole corpus."""
         if changed_buckets is not None:
             bset = frozenset(int(b) for b in changed_buckets)
             bad = [b for b in bset if not 0 <= b < self.cfg.num_buckets]
@@ -2239,81 +1949,54 @@ class NDDPipeline:
             self._changed_buckets = bset
         try:
             if pages is not None:
-                fast = self._try_pure_append(pages, substring_pass)
-                if fast is not None:
-                    return fast
-                # the rejected probe's identity aggregate IS this snapshot's
-                # _input_stats — reuse it instead of a second full pass
-                self.stage0_ingest(
-                    pages, resume=True, stats_hint=self._inferred_stats
-                )
-            self.stage1_signatures(resume=True)
-            self._appended_rep_urls = None
-            self._appended_edges = None
-            if not self.stage2_pairs_delta():
-                self.stage2_pairs(resume=True)
-            if substring_pass:
-                # thread the stage-2 delta's appended rep set into 2b so it
-                # can skip the corpus×corpus discovery anti-join (verified
-                # there by footer-level row counts; None falls back to
-                # discovery)
-                if not self.stage2b_delta(new_urls=self._appended_rep_urls):
-                    self.stage2b_substring(resume=True)
-            if not self.stage3_clusters_delta():
-                self.stage3_clusters(resume=True)
-            return self.clusters_view()
+                try:
+                    pstats = self._delta_preconditions(substring_pass)
+                    upserts, deletes, expect = self._snapshot_changeset(
+                        pages, pstats
+                    )
+                    return self._apply_changeset(
+                        upserts, deletes, substring_pass, expect
+                    )
+                except AppendRefusedError:
+                    pass  # nothing mutated: heal through the resume path
+            return self.run(pages, resume=True, substring_pass=substring_pass)
         finally:
             self._changed_buckets = None
-            self._inferred_stats = None
 
-    def _try_pure_append(
-        self, pages: DataFrame, substring_pass: bool
-    ) -> DataFrame | None:
-        """``run_incremental``'s fast path: prove the snapshot is the
-        committed corpus plus appended rows, extract those rows, and run
-        them through ``append_pages``. Returns the clusters DataFrame, or
-        None when the snapshot is not a clean append onto a healthy catalog
-        (first build, edits/deletes, signature lag, crash marker, param
-        drift, no drift at all) — the caller then runs the slow inferred
-        path, which handles every one of those cases.
+    def _snapshot_changeset(
+        self, pages: DataFrame, pstats: dict[int, tuple[int, int]]
+    ) -> tuple[DataFrame | None, list[str] | None, dict]:
+        """The snapshot diff behind ``run_incremental``: ``pages`` (the full
+        current snapshot) against the pages view and its committed lineage
+        ``pstats`` → ``(upserts, deletes, expect)`` for ``_apply_changeset``.
 
-        Proof obligation (per bucket, same mod-2^64 algebra as
-        ``stage0_ingest``): split the snapshot's rows by whether their url
-        already exists in the pages table (one join against the corpus URL
-        column — the fast path's single corpus-table probe); the
-        OLD-portion (rows, Σ xxhash64(url, text)) must equal the committed
-        lineage stats exactly. An edit keeps the url but shifts the old
-        checksum; a delete drops the old row count; a duplicated url
-        inflates it — each fails the identity (collision odds 2^-64 per
-        bucket, see ``_input_stats``). Buckets absent from the lineage must
-        be all-new. The surviving difference is by construction a pure
-        append, which ``append_pages`` verifies no further (its caller
-        contract is established here)."""
-        cat, cfg = self.catalog, self.cfg
-        self._inferred_stats = None  # valid only for THIS call's snapshot
-        if self._delta_suspect():
-            return None  # crashed delta/retraction: slow path heals
-        h1 = cfg.stage1_hash()
-        pstats = cat.latest_partition_stats("pages", h1)
-        if not pstats or not cat.exists("pages"):
-            return None  # first build (or param change invalidated stage 0)
-        if cat.latest_partition_stats("signatures", h1) != pstats:
-            return None  # signatures lag pages: stage 1 must heal first
-        # snapshot-diff seam: restrict the snapshot scan AND the corpus url
-        # probe to the declared buckets (the probe side partition-prunes on
-        # the bucket-partitioned pages table); undeclared buckets are
-        # trusted committed and skip the identity check below
-        marked = (
-            self._restrict_changed(pages.select("url", "text"))
+        1. ONE probe: the snapshot left-joined to the pages view's urls,
+           aggregated per bucket into (rows, Σ xxhash64(url, text)), the
+           new-url share of both, and the distinct url count — a repeated
+           url raises ``ValueError``. A bucket whose OLD share still equals
+           its committed stats changed by appends only: an edit keeps the
+           url but shifts the checksum, a delete drops the row count
+           (collision odds 2^-64 per bucket, see ``_input_stats``). Its
+           new-url rows are the appends.
+        2. Only the buckets failing that identity pay a content join: the
+           snapshot's (url, xxhash64(url, text)) outer-joined to the pages
+           view's, partition-pruned to those buckets (``content_diff``;
+           appends are already known from step 1). It yields the
+           edited rows (upserts that replace) and the deleted urls. A pure
+           append never reads ``pages.text``.
+        3. ``expect`` = the probe's per-bucket snapshot stats over every
+           checked bucket: the core refuses unless its merged lineage
+           reproduces them exactly."""
+        from near_duplicate_detection_spark.operators.delta import content_diff
+
+        snap = (
+            self._restrict_changed(pages)
             .withColumn("bucket", self._bucket_expr())
             .withColumn("h", F.xxhash64("url", "text"))
-            .join(
-                self._restrict_changed(self.pages_table(), "bucket")
-                .select("url")
-                .withColumn("_old", F.lit(True)),
-                "url",
-                "left",
-            )
+        )
+        corpus = self._restrict_changed(self.pages_table(), "bucket")
+        marked = snap.join(
+            corpus.select("url", F.lit(True).alias("_old")), "url", "left"
         )
         is_new = F.col("_old").isNull()
         dec = F.col("h").cast("decimal(38,0)")
@@ -2325,44 +2008,55 @@ class NDDPipeline:
                 F.sum(dec).alias("cks"),
                 F.sum(F.when(is_new, 1).otherwise(0)).alias("new_rows"),
                 F.sum(F.when(is_new, dec).otherwise(zero)).alias("new_cks"),
+                F.countDistinct("url").alias("urls"),
             )
             .collect()
         )
-        totals = {int(r["bucket"]): r for r in agg}
-        # by-product stash: the aggregate above already IS _input_stats of
-        # this (restricted) snapshot — per-bucket count + decimal xxhash64
-        # sum, wrapped to mod-2^64 — so when drift forces the slow path,
-        # run_incremental hands it to stage0_ingest instead of paying a
-        # second full snapshot evaluation for the identical dict (guide
-        # §1.2). The left probe join cannot change multiplicity: the pages
-        # view is url-unique (MOR governance + the url-primary-key caller
-        # contract this probe's identity algebra already relies on).
-        self._inferred_stats = {
-            b: (int(r["rows"]), _wrap64(int(r["cks"])))
-            for b, r in totals.items()
+        if any(r["rows"] != r["urls"] for r in agg):
+            raise ValueError(
+                "snapshot repeats a url (urls are the corpus primary key)"
+            )
+        totals = {
+            int(r["bucket"]): (
+                int(r["rows"]), int(r["cks"]), int(r["new_rows"]),
+                int(r["new_cks"]),
+            )
+            for r in agg
         }
-        n_new = sum(int(r["new_rows"]) for r in agg)
-        if n_new == 0:
-            return None  # no appended rows: no-drift or delete-only drift
         check = set(totals) | {b for b, s in pstats.items() if s != (0, 0)}
         if self._changed_buckets is not None:
             check &= self._changed_buckets
-        for b in check:
-            want_rows, want_cks = pstats.get(b, (0, 0))
-            t = totals.get(b)
-            old_rows = int(t["rows"]) - int(t["new_rows"]) if t else 0
-            old_cks = (
-                _wrap64(int(t["cks"]) - int(t["new_cks"])) if t else 0
+        expect, drifted = {}, []
+        for b in sorted(check):
+            rows, cks, new_rows, new_cks = totals.get(b, (0, 0, 0, 0))
+            expect[b] = (rows, _wrap64(cks))
+            old = (rows - new_rows, _wrap64(cks - new_cks))
+            if old != pstats.get(b, (0, 0)):
+                drifted.append(b)
+        upserts = deletes = None
+        if sum(t[2] for t in totals.values()):
+            upserts = marked.where(is_new).drop("_old", "bucket", "h")
+        if drifted:
+            in_drifted = F.col("bucket").isin(drifted)
+            gone = content_diff(
+                snap.where(in_drifted),
+                corpus.where(in_drifted).select(
+                    "url", F.xxhash64("url", "text").alias("h")
+                ),
+            ).localCheckpoint()
+            # bounded collect: over max_retract the core refuses anyway
+            rows = gone.select("url", F.col("h").isNull().alias("deleted")).take(
+                self.cfg.max_retract + 1
             )
-            if old_rows != want_rows:
-                return None  # delete / duplicated url in this bucket
-            if want_rows and old_cks != want_cks:
-                return None  # edit in this bucket
-        batch = marked.where(is_new).select("url", "text")
-        try:
-            return self.append_pages(batch, substring_pass=substring_pass)
-        except AppendRefusedError:
-            return None  # stale stage-2/2b/3 state: slow path rebuilds
+            deletes = [r["url"] for r in rows]
+            if not all(r["deleted"] for r in rows):
+                edited = gone.where(F.col("h").isNotNull()).drop(
+                    "h_old", "bucket", "h"
+                )
+                upserts = (
+                    edited if upserts is None else upserts.unionByName(edited)
+                )
+        return upserts, deletes, expect
 
     @staticmethod
     def _refuse(why: str):
@@ -2428,191 +2122,320 @@ class NDDPipeline:
             refuse("no committed clusters build")
         return pstats
 
-    def append_pages(
-        self, new_pages: DataFrame, substring_pass: bool = True
+    def _conform_to_pages(self, rows: DataFrame) -> DataFrame:
+        """``rows`` shaped to the stored pages column set, so every pages
+        file carries ONE schema (a reader infers it from a single file, and
+        ``compact()`` rewrites buckets from that view): stored columns the
+        rows lack are null-filled, passthrough columns they carry are kept
+        (cast to the stored type), other columns are dropped. The stored set
+        comes from a driver-side parquet footer read — no Spark job."""
+        import pyarrow.dataset as pads
+        from pyspark.sql.pandas.types import from_arrow_type
+
+        stored = pads.dataset(self.catalog.path("pages"), format="parquet")
+        have = set(rows.columns)
+        return rows.select(
+            *(
+                (F.col(f.name) if f.name in have else F.lit(None))
+                .cast(from_arrow_type(f.type))
+                .alias(f.name)
+                for f in stored.schema
+                if f.name not in ("bucket", "era")
+            )
+        )
+
+    def _apply_changeset(
+        self,
+        upserts: DataFrame | None,
+        deletes: list[str] | DataFrame | None,
+        substring_pass: bool,
+        expect: dict[int, tuple[int, int]] | None = None,
     ) -> DataFrame:
-        """O(append) incremental entry point: the caller KNOWS the appended
-        rows and hands exactly them (the reference's ``update_index`` with
-        explicit videoids, ndd/server_ndd.py:307-315) — so the engine skips
-        every per-run O(corpus) control-plane cost ``run_incremental`` pays
-        to INFER the drift from a full snapshot: the stage-0 ``_input_stats``
-        aggregation scan, the stage-1 unsigned-doc discovery anti-join, the
-        stage-2 ``classify_drift`` full-outer join against the corpus-sized
-        ``seen`` table, and the stage-2b reps∖seen_2b discovery anti-join.
-        What remains corpus-proportional is only the DATA-PLANE index probe
-        (map-side scans of the persisted reps/window_index tables — the
-        analog of probing a partitioned index; zero corpus shuffles).
+        """The one changeset core behind ``append_pages``, ``delete_pages``,
+        ``update_pages`` and ``run_incremental``'s delta path.
 
-        Caller contract (refusals raise ``AppendRefusedError``, nothing
-        mutated):
-        - ``new_pages`` urls must not exist in the catalog — violations are
-          NOT detected here (detecting them is exactly the O(corpus) probe
-          this path exists to skip); a violated contract surfaces as
-          duplicate urls in ``seen``/``clusters``. In-batch duplicate urls
-          ARE detected (the batch-sized stats job counts distinct urls).
-        - The catalog must be a committed, CURRENT build: pages/signatures
-          lineage consistent, pairs (and substring_pairs, when
-          ``substring_pass``) committed under the current run hashes,
-          param stamps matching, clusters committed, no crash marker.
+        ``upserts``: rows to add — (url, text) plus any passthrough columns
+        of the stored pages schema. Their urls must be new unless listed in
+        ``deletes``, in which case they REPLACE the committed row (an
+        update); new urls are not probed — proving novelty is the O(corpus)
+        scan an explicit append exists to skip. ``deletes``: urls whose
+        committed rows die (deleted and updated urls); each must exist.
+        ``expect``: per-bucket (rows, checksum) the merged lineage must
+        reproduce (the snapshot diff's identity guard). Every refusal
+        raises ``AppendRefusedError`` before the first mutation.
 
-        Crash recovery: a ``delta.inflight`` marker brackets all mutations;
-        after a crash, every delta entry point (including this one) refuses
-        and ``run_incremental(full_snapshot)`` heals the catalog (stage 0/1
-        checksum algebra re-ingests/re-signs exactly the missing rows, the
-        full stage-2 rebuild clears the marker).
+        Plan — an empty half skips its work, so a pure append runs no
+        existence scan, tombstone or retraction, and a pure delete signs
+        nothing:
+        - batch prep: ONE materialization of the upserts, bucket-pure, and
+          one batch-sized job for per-bucket (rows, checksum, distinct
+          urls) — in-batch duplicate urls refuse;
+        - ONE existence scan over only the buckets holding deleted urls
+          (partition-pruned pages view, broadcast semi-join): per-bucket
+          stats of the dying rows;
+        - lineage merged once: committed − dying rows + upserts (mod-2^64
+          checksum algebra; bucket = f(url), so a replaced row re-enters
+          its own bucket);
+        - stages 0/1, merge-on-read: ONE ``page_tombstones`` append for the
+          dying urls (rows stamped AT its era are the re-adds and survive —
+          operators/mor.py), or past ``page_tombstone_ceiling`` the
+          copy-on-write fold; then the pages append and the batch signing +
+          signatures append, overlapped — no bucket is rewritten;
+        - stage 2: ``stage2_pairs_delta`` (retraction, then append, under
+          the one final run hash); stage 2b: ``stage2b_delta``; stage 3:
+          ``stage3_clusters_delta``, or the full CC over the committed edge
+          tables past its broadcast ceilings.
 
-        Lineage semantics are identical to ``run_incremental`` on the same
-        appended rows — per-bucket (rows, checksum) advance by the batch's
-        delta via the same mod-2^64 algebra — so the two entry points are
-        interchangeable run-to-run, which tests pin by alternating them."""
-        cfg, cat = self.cfg, self.catalog
+        Crash protocol: ``delta.inflight`` brackets the stage-0/1 commit and
+        each stage's appends, ``retract.inflight`` the stage-2/2b patch;
+        after a crash every delta entry refuses and
+        ``run_incremental(full_snapshot)`` heals through the resume path."""
+        import pandas as pd
+        import pyarrow as pa
+
+        from near_duplicate_detection_spark.operators import mor
+
+        cfg, cat, refuse = self.cfg, self.catalog, self._refuse
         h1 = cfg.stage1_hash()
-        refuse = self._refuse
         pstats = self._delta_preconditions(substring_pass)
 
-        # ---- batch prep: ONE materialization, bucket-pure partitions so
-        # both partitioned appends below write one file per task ----
-        new_rows = (
-            new_pages.select("url", "text")
-            .withColumn("bucket", self._bucket_expr())
-            .withColumn("h", F.xxhash64("url", "text"))
-            .repartition("bucket")
-            .localCheckpoint()
-        )
-        # one batch-sized job: per-bucket (rows, checksum) delta + in-batch
-        # url-duplicate detection (urls hash-partition by bucket, so the
-        # per-bucket distinct counts sum to the global distinct count)
-        agg = (
-            new_rows.groupBy("bucket")
-            .agg(
-                F.count("*").alias("rows"),
-                F.sum(F.col("h").cast("decimal(38,0)")).alias("cks"),
-                F.countDistinct("url").alias("urls"),
+        new_rows, add_stats = None, {}
+        if upserts is not None:
+            new_rows = (
+                self._conform_to_pages(upserts)
+                .withColumn("bucket", self._bucket_expr())
+                .withColumn("h", F.xxhash64("url", "text"))
+                .repartition("bucket")
+                .localCheckpoint()
             )
-            .collect()
-        )
-        delta_stats = {
-            int(r["bucket"]): (int(r["rows"]), _wrap64(int(r["cks"])))
-            for r in agg
-        }
-        n_new = sum(int(r["rows"]) for r in agg)
-        if n_new != sum(int(r["urls"]) for r in agg):
-            refuse("batch contains duplicate urls")
-        if n_new == 0:
-            return self.clusters_view()
-
-        # ---- stages 0 + 1, overlapped (guide §2.6; r6 second pass): the
-        # pages append/commit and the batch signing both read only the
-        # checkpointed batch and mutate DIFFERENT tables under the
-        # delta.inflight marker, which routes any partial combination to
-        # the idempotent full heal — the relative order of the two lineage
-        # commits adds no guarantee (either partial order trips the
-        # signatures-lag-pages precondition and heals). Both joined before
-        # the stage-2 run hash is computed, since that hash is derived
-        # from the advanced lineage.
-        t0 = time.monotonic()
-        self._set_marker("delta.inflight")
-        merged = {
-            b: (
-                pstats.get(b, (0, 0))[0] + d[0],
-                _wrap64(pstats.get(b, (0, 0))[1] + d[1]),
+            # urls hash-partition by bucket, so the per-bucket distinct
+            # counts sum to the global distinct count
+            agg = (
+                new_rows.groupBy("bucket")
+                .agg(
+                    F.count("*").alias("rows"),
+                    F.sum(F.col("h").cast("decimal(38,0)")).alias("cks"),
+                    F.countDistinct("url").alias("urls"),
+                )
+                .collect()
             )
-            for b, d in delta_stats.items()
-        }
+            if any(r["rows"] != r["urls"] for r in agg):
+                refuse("batch contains duplicate urls")
+            add_stats = {
+                int(r["bucket"]): (int(r["rows"]), _wrap64(int(r["cks"])))
+                for r in agg
+            }
+            if not add_stats:
+                new_rows = None
+        n_up = sum(r for r, _ in add_stats.values())
 
-        def stage0_commit():
-            cat.write(
-                self._stamp_era(new_rows.drop("h")),
-                "pages",
-                partition_by=["bucket"],
-                mode="append",
-                max_records_per_file=2048,
+        if isinstance(deletes, DataFrame):
+            deletes = [
+                r["url"]
+                for r in deletes.select("url")
+                .distinct()
+                .limit(cfg.max_retract + 1)
+                .collect()
+            ]
+        gone = sorted(set(deletes or ()))
+        if len(gone) > cfg.max_retract:
+            refuse(
+                f"retraction of {len(gone)} urls exceeds max_retract="
+                f"{cfg.max_retract} (broadcast-mapping ceiling)"
+            )
+        del_stats: dict[int, tuple[int, int]] = {}
+        if gone:
+            gone_df = local_frame(
+                self.spark, [(u,) for u in gone], "url string"
+            )
+            # bucket = f(url) through Spark's own xxhash64 — a projection of
+            # a LocalRelation, evaluated without a job
+            buckets = sorted(
+                {
+                    int(r["b"])
+                    for r in gone_df.select(
+                        self._bucket_expr().alias("b")
+                    ).collect()
+                }
+            )
+            in_buckets = F.col("bucket").isin(buckets)
+            # pages urls are unique by build invariant, so the matched-row
+            # count is the number of handed urls actually present
+            del_stats = {
+                int(r["bucket"]): (int(r["rows"]), _wrap64(int(r["cks"])))
+                for r in self.pages_table()
+                .where(in_buckets)
+                .join(F.broadcast(gone_df), "url", "left_semi")
+                .withColumn("h", F.xxhash64("url", "text"))
+                .groupBy("bucket")
+                .agg(
+                    F.count("*").alias("rows"),
+                    F.sum(F.col("h").cast("decimal(38,0)")).alias("cks"),
+                )
+                .collect()
+            }
+            n_found = sum(r for r, _ in del_stats.values())
+            if n_found != len(gone):
+                refuse(
+                    f"{len(gone) - n_found} of the handed urls are not in "
+                    "the corpus"
+                )
+            if any(b not in pstats for b in del_stats):
+                refuse("retracted rows found in buckets with no committed lineage")
+        merged = {}
+        for b in set(add_stats) | set(del_stats):
+            rows, cks = pstats.get(b, (0, 0))
+            d, a = del_stats.get(b, (0, 0)), add_stats.get(b, (0, 0))
+            merged[b] = (rows - d[0] + a[0], _wrap64(cks - d[1] + a[1]))
+        if expect is not None and any(
+            merged.get(b, pstats.get(b, (0, 0))) != s for b, s in expect.items()
+        ):
+            refuse("changeset does not reproduce the snapshot's bucket stats")
+
+        if merged:
+            t0 = time.monotonic()
+            fold = False
+            if gone:
+                stored = (
+                    cat.count_rows(mor.PAGE_TOMBSTONES)
+                    if cat.exists(mor.PAGE_TOMBSTONES)
+                    else 0
+                )
+                fold = stored + len(gone) > cfg.page_tombstone_ceiling
+                if fold:
+                    # over the sidecar ceiling: reclaim the stored tombstones
+                    # physically first (self-bracketing), then drop THIS
+                    # batch's rows copy-on-write — ceiling 0 disables
+                    # merge-on-read entirely
+                    self._fold_page_tombstones()
+                era = self._bump_retract_era()
+            self._set_marker("delta.inflight")
+            if fold:
+                for table in ("pages", "signatures"):
+                    # checkpointed: the overwrite replaces partitions the
+                    # plan reads
+                    survivors = (
+                        cat.read(table)
+                        .where(in_buckets)
+                        .join(F.broadcast(gone_df), "url", "left_anti")
+                        .localCheckpoint()
+                    )
+                    cat.write(
+                        survivors,
+                        table,
+                        partition_by=["bucket"],
+                        mode="overwrite",
+                        max_records_per_file=2048,
+                    )
+                    for b in buckets:
+                        if del_stats[b][0] == pstats[b][0]:
+                            # dynamic overwrite never touches a partition
+                            # with zero output rows — drop the emptied dir
+                            # (before the appends below refill it)
+                            cat.drop_partition(table, b)
+            elif gone:
+                cat._append_small(
+                    mor.PAGE_TOMBSTONES,
+                    pd.DataFrame({"url": gone, "era": era}),
+                    pa.schema([("url", pa.string()), ("era", pa.int64())]),
+                )
+
+            def commit(table: str, rows: DataFrame | None) -> None:
+                if rows is not None:
+                    cat.write(
+                        self._stamp_era(rows),
+                        table,
+                        partition_by=["bucket"],
+                        mode="append",
+                        max_records_per_file=2048,
+                    )
+                cat.mark_complete(
+                    table,
+                    h1,
+                    {b: m[0] for b, m in merged.items()},
+                    int((time.monotonic() - t0) * 1000),
+                    checksums={b: m[1] for b, m in merged.items()},
+                )
+
+            def commit_signatures() -> DataFrame | None:
+                # sign ONLY the batch (partitions stay bucket-pure through
+                # the Arrow map, so the partitioned append is fan-out-free)
+                sigs = None
+                if new_rows is not None:
+                    sigs = (
+                        new_rows.select("url", "text")
+                        .mapInPandas(
+                            signature_map_fn(cfg), schema=SIGNATURE_SCHEMA
+                        )
+                        .withColumn("bucket", self._bucket_expr())
+                        .localCheckpoint()
+                    )
+                commit("signatures", sigs)
+                return sigs
+
+            # the two commits read only the checkpointed batch and mutate
+            # different tables under the marker, which routes any partial
+            # combination to the idempotent heal — so they overlap (§2.6)
+            _, new_sigs = _overlap(
+                lambda: commit(
+                    "pages", None if new_rows is None else new_rows.drop("h")
+                ),
+                commit_signatures,
             )
             wall_ms = int((time.monotonic() - t0) * 1000)
-            cat.mark_complete(
-                "pages",
-                h1,
-                {b: m[0] for b, m in merged.items()},
-                wall_ms,
-                checksums={b: m[1] for b, m in merged.items()},
-            )
             cat.add_metrics(
                 "pages",
                 {
-                    "buckets_appended": len(merged),
-                    "buckets_rewritten": 0,
-                    "appended_docs_ingested": n_new,
+                    "buckets_appended": len(add_stats),
+                    "buckets_rewritten": len(buckets) if fold else 0,
+                    "appended_docs_ingested": n_up,
+                    # tombstoned rows: deleted AND replaced urls
+                    "deleted_docs": len(gone),
+                    "page_tombstone_rows": 0 if fold else len(gone),
                     "wall_ms": wall_ms,
                 },
-            )
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            stage0_future = pool.submit(stage0_commit)
-            # stage 1: sign ONLY the batch (partitions stay bucket-pure
-            # through the Arrow map, so the partitioned append is
-            # fan-out-free)
-            t1 = time.monotonic()
-            new_sigs = (
-                new_rows.select("url", "text")
-                .mapInPandas(signature_map_fn(cfg), schema=SIGNATURE_SCHEMA)
-                .withColumn(
-                    "bucket",
-                    F.pmod(
-                        F.xxhash64("url"), F.lit(cfg.num_buckets)
-                    ).cast("int"),
-                )
-                .localCheckpoint()
-            )
-            cat.write(
-                self._stamp_era(new_sigs),
-                "signatures",
-                partition_by=["bucket"],
-                mode="append",
-                max_records_per_file=2048,
-            )
-            wall_ms = int((time.monotonic() - t1) * 1000)
-            cat.mark_complete(
-                "signatures",
-                h1,
-                {b: m[0] for b, m in merged.items()},
-                wall_ms,
-                checksums={b: m[1] for b, m in merged.items()},
             )
             cat.add_metrics(
                 "signatures",
                 {
                     "buckets_computed": 0,
-                    "buckets_appended": len(merged),
-                    "appended_docs_signed": n_new,
+                    "buckets_appended": len(add_stats),
+                    "appended_docs_signed": n_up,
                     "wall_ms": wall_ms,
                 },
             )
-            stage0_future.result()
-
-        # ---- stages 2 / 2b / 3: the shared delta append cores ----
-        h2 = self.stage2_run_hash()  # AFTER the stage-0/1 lineage advances
-        new_rep_urls = self._stage2_apply_append(
-            new_sigs.select("url", "fp", "bands", "simhash"),
-            n_new,
-            h2,
-            time.monotonic(),
-        )
-        if substring_pass:
-            if not self.stage2b_delta(
-                new_urls=new_rep_urls,
-                new_pages=new_rows.select("url", "text"),
-            ):
-                # unreachable given the preconditions above; surface rather
-                # than silently rebuild (the caller wanted O(append))
-                refuse("stage-2b delta state became invalid mid-append")
+            appended = self.stage2_pairs_delta(
+                gone,
+                None
+                if new_sigs is None
+                else new_sigs.select("url", "fp", "bands", "simhash"),
+                n_up,
+            )
+            if substring_pass:
+                new_urls, prior_edges = appended or (None, None)
+                self.stage2b_delta(
+                    new_urls,
+                    None if new_rows is None else new_rows.select("url", "text"),
+                    prior_edges,
+                )
         if not self.stage3_clusters_delta():
-            # legitimate wide-merge fallback (remap over the broadcast
-            # ceiling): full CC over the catalog's committed edge tables —
-            # no input snapshot needed, correctness identical
+            # wide merge/dissolve fallback (over the broadcast ceiling): full
+            # CC over the committed edge tables, correctness identical
             self.stage3_clusters(resume=True)
         return self.clusters_view()
+
+    def append_pages(
+        self, new_pages: DataFrame, substring_pass: bool = True
+    ) -> DataFrame:
+        """O(append) explicit entry point: the caller KNOWS the appended
+        rows and hands exactly them (the reference's ``update_index`` with
+        explicit videoids, ndd/server_ndd.py:307-315), so no drift is
+        inferred. Caller contract: the urls must not exist in the catalog —
+        NOT detected (that probe is the O(corpus) scan this path skips; a
+        violation surfaces as duplicate urls in ``seen``/``clusters``);
+        in-batch duplicates are refused. Plan, refusals and crash protocol:
+        ``_apply_changeset``."""
+        return self._apply_changeset(new_pages, None, substring_pass)
 
     def _fold_page_tombstones(self) -> int:
         """Physically reclaim the ``page_tombstones`` merge-on-read sidecar
@@ -2685,477 +2508,25 @@ class NDDPipeline:
     ) -> DataFrame:
         """O(delete) explicit retraction: the caller KNOWS the deleted urls
         and hands exactly them (the reference's ``update_index`` dropping a
-        vanished video's entries by videoid, ndd/server_ndd.py:246-261) —
-        so the engine skips the drift inference ``run_incremental`` pays on
-        a shrunken snapshot: the stage-0 ``_input_stats`` corpus scan, the
-        per-drifted-bucket stage-0 rewrite from the snapshot, the stage-1
-        RE-SIGNING of every drifted bucket (a uniform delete drifts ALL
-        buckets, so the inferred path re-signs ~the whole surviving corpus
-        through the MinHash UDF), and the ``classify_drift`` full-outer
-        join. Here zero docs are re-signed: pages and signatures are
-        rewritten by a broadcast anti-join over ONLY the buckets holding
-        deleted urls (partition-pruned scans — the Iceberg MERGE/DELETE
-        analog), lineage advances by checksum subtraction (the same
-        mod-2^64 algebra as the append), and the stage-2/2b/3 tables go
-        through the shared targeted-retraction core (``_stage2_retract`` —
-        rep rows inherited verbatim by the min surviving exact-group
-        member, dissolved clusters re-clustered by the stage-3 delta).
-
-        Caller contract (refusals raise ``AppendRefusedError``, nothing
-        mutated): every url must exist in the corpus — verified here
-        cheaply (the checksum scan over the affected buckets counts the
-        matches), unlike ``append_pages``'s unverifiable no-duplicate
-        contract. The retraction must fit the broadcast ceiling
-        (``cfg.max_retract``). The catalog must be a committed, current
-        build (shared ``_delta_preconditions`` gate).
-
-        Crash recovery: ``delta.inflight`` brackets the pages/signatures
-        rewrites, ``retract.inflight`` (inside ``_stage2_retract``) the
-        stage-table rewrites; after a crash every delta entry refuses and
-        ``run_incremental(full_snapshot)`` heals the catalog."""
-        cfg, cat, refuse = self.cfg, self.catalog, self._refuse
-        h1 = cfg.stage1_hash()
-        pstats = self._delta_preconditions(substring_pass)
+        vanished video's entries by videoid, ndd/server_ndd.py:246-261).
+        Every url must exist (the core's existence scan verifies it) and
+        zero docs are re-signed. Plan, refusals and crash protocol:
+        ``_apply_changeset``."""
         if not isinstance(urls, DataFrame):
-            urls = local_frame(self.spark, [(u,) for u in urls], "url string")
-        # batch-sized: dedup + bucket each url; one tiny job yields the
-        # affected-bucket list (the partition-pruning key for every corpus
-        # touch below) and the retraction size
-        u = (
-            urls.select("url")
-            .distinct()
-            .withColumn("bucket", self._bucket_expr())
-            .localCheckpoint()
-        )
-        per_bucket_urls = {
-            int(r["bucket"]): int(r["n"])
-            for r in u.groupBy("bucket").agg(F.count("*").alias("n")).collect()
-        }
-        n_del = sum(per_bucket_urls.values())
-        if n_del == 0:
-            return self.clusters_view()
-        if n_del > cfg.max_retract:
-            refuse(
-                f"retraction of {n_del} urls exceeds max_retract="
-                f"{cfg.max_retract} (broadcast-mapping ceiling)"
-            )
-        affected = sorted(per_bucket_urls)
-        bucket_pred = F.col("bucket").isin([int(b) for b in affected])
-        # ONE partition-pruned scan: per-bucket (rows, checksum) of the
-        # doomed rows — both the lineage delta AND the existence check
-        # (pages urls are unique by build invariant, so matched-row count
-        # == number of handed urls actually present)
-        del_stats = {
-            int(r["bucket"]): (int(r["rows"]), _wrap64(int(r["cks"])))
-            for r in self.pages_table()
-            .where(bucket_pred)
-            .join(F.broadcast(u.select("url")), "url", "left_semi")
-            .withColumn("h", F.xxhash64("url", "text"))
-            .groupBy("bucket")
-            .agg(
-                F.count("*").alias("rows"),
-                F.sum(F.col("h").cast("decimal(38,0)")).alias("cks"),
-            )
-            .collect()
-        }
-        n_found = sum(r for r, _ in del_stats.values())
-        if n_found != n_del:
-            refuse(
-                f"{n_del - n_found} of the handed urls are not in the corpus"
-            )
-        if any(b not in pstats for b in del_stats):
-            refuse("deleted rows found in buckets with no committed lineage")
-        merged = {
-            b: (
-                pstats[b][0] - d[0],
-                _wrap64(pstats[b][1] - d[1]),
-            )
-            for b, d in del_stats.items()
-        }
-
-        # ---- stages 0/1: MERGE-ON-READ delete — the batch commits as ONE
-        # driver-written tombstone sidecar append (url, era) governing both
-        # bucket tables (operators/mor.py), lineage advances by checksum
-        # subtraction, and NO bucket is rewritten (the round-3 shape
-        # rewrote every affected bucket — O(corpus) write volume for a
-        # uniformly random batch; it survives below as the over-ceiling
-        # fold, the Iceberg position-delete + maintenance pattern).
-        import pandas as pd
-        import pyarrow as pa
-
-        from near_duplicate_detection_spark.operators import mor
-
-        t0 = time.monotonic()
-        stored_tomb = (
-            cat.count_rows(mor.PAGE_TOMBSTONES)
-            if cat.exists(mor.PAGE_TOMBSTONES)
-            else 0
-        )
-        fold = stored_tomb + n_del > cfg.page_tombstone_ceiling
-        if fold:
-            # over the sidecar ceiling: reclaim the stored tombstones
-            # physically first (self-bracketing), then apply THIS batch
-            # copy-on-write — ceiling 0 disables merge-on-read entirely
-            self._fold_page_tombstones()
-        era = self._bump_retract_era()
-        self._set_marker("delta.inflight")
-        if fold:
-            for table in ("pages", "signatures"):
-                # checkpointed: the write overwrites partitions the plan
-                # reads (same source-break rule as the _stage2_retract fold)
-                survivors = (
-                    cat.read(table)
-                    .where(bucket_pred)
-                    .join(F.broadcast(u.select("url")), "url", "left_anti")
-                    .localCheckpoint()
-                )
-                cat.write(
-                    survivors,
-                    table,
-                    partition_by=["bucket"],
-                    mode="overwrite",
-                    max_records_per_file=2048,
-                )
-                for b, m in merged.items():
-                    if m[0] == 0:
-                        # dynamic overwrite never touches a partition with
-                        # zero output rows — drop the emptied dir explicitly
-                        cat.drop_partition(table, b)
-        else:
-            cat._append_small(
-                mor.PAGE_TOMBSTONES,
-                pd.DataFrame(
-                    {
-                        "url": sorted(r["url"] for r in u.select("url").collect()),
-                        "era": era,
-                    }
-                ),
-                pa.schema([("url", pa.string()), ("era", pa.int64())]),
-            )
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        for table in ("pages", "signatures"):
-            cat.mark_complete(
-                table,
-                h1,
-                {b: m[0] for b, m in merged.items()},
-                wall_ms,
-                checksums={b: m[1] for b, m in merged.items()},
-            )
-        cat.add_metrics(
-            "pages",
-            {
-                "deleted_docs": n_del,
-                "buckets_rewritten": len(affected) if fold else 0,
-                "buckets_dropped": sum(
-                    1 for m in merged.values() if m[0] == 0
-                )
-                if fold
-                else 0,
-                "page_tombstone_rows": 0 if fold else n_del,
-                "wall_ms": wall_ms,
-            },
-        )
-
-        # ---- stages 2/2b: the shared targeted-retraction core (broadcast
-        # relabel/drop per stage table; rep rows inherited by the min
-        # surviving exact-group member) — size pre-checked above, so a
-        # False here is unreachable; surface rather than silently rebuild
-        if not self._stage2_retract(u.select("url"), cfg.max_retract):
-            refuse(
-                "stage-2 retraction declined mid-delete (pages/signatures "
-                "already rewritten — heal with run_incremental)"
-            )
-        # no appended docs: commit pairs/substring_pairs under the NEW run
-        # hashes (the lineage advance above changed them) — same contract
-        # as stage2_pairs_delta's n_new == 0 branch
-        cat.mark_complete(
-            "pairs", self.stage2_run_hash(), {-1: cat.count_rows("pairs")}, 0
-        )
-        if substring_pass:
-            cat.mark_complete(
-                "substring_pairs",
-                self.stage2b_run_hash(),
-                {-1: cat.count_rows("substring_pairs")},
-                0,
-            )
-        self._clear_marker("delta.inflight")
-
-        # ---- stage 3: dissolve + re-cluster only the touched clusters
-        if not self.stage3_clusters_delta():
-            # wide-dissolve fallback (over the broadcast ceiling): full
-            # CC over the committed edge tables, correctness identical
-            self.stage3_clusters(resume=True)
-        return self.clusters_view()
+            urls = list(urls)
+        return self._apply_changeset(None, urls, substring_pass)
 
     def update_pages(
         self, changed_rows: DataFrame, substring_pass: bool = True
     ) -> DataFrame:
-        """O(edit) explicit upsert, single-pass: the caller hands the NEW
-        (url, text) rows of docs that already exist (the reference's
-        ``update_index`` re-indexing explicit videoids,
-        ndd/server_ndd.py:307-315). The inferred edit path
-        (``run_incremental`` on the full snapshot) re-signs every drifted
-        bucket — ~the whole corpus for a uniform edit set; here ONLY the
-        handed batch goes through the signature UDF.
-
-        Fused, not composed: the former delete_pages + append_pages
-        composition paid both delta chains' fixed costs — each affected
-        bucket of pages AND signatures written twice (anti-join overwrite,
-        then append), four lineage commits, two run-hash advances with an
-        intermediate no-op pairs/substring_pairs commit between them.
-        Every updated url keeps its bucket (bucket = f(url)), so here each
-        affected bucket is rewritten ONCE with survivors ∪ re-signed batch
-        rows, per-bucket row counts are INVARIANT and lineage advances
-        ONCE by checksum substitution (old rows subtracted, batch rows
-        added — the same mod-2^64 algebra), and the shared stage-2
-        retraction + append cores run back-to-back under the single final
-        run hash. Stage 3 commits both halves — retraction dissolves +
-        appended edges — in ONE clusters swap (the same mixed-drift shape
-        ``run_incremental`` produces).
-
-        Caller contract (refusals raise ``AppendRefusedError``, nothing
-        mutated): every url must already exist in the corpus — verified
-        cheaply by the affected-bucket checksum scan; no duplicate urls in
-        the batch; the batch must fit the broadcast-mapping ceiling
-        (``cfg.max_retract``); the catalog must be a committed, current
-        build (shared ``_delta_preconditions`` gate).
-
-        Crash recovery: ``delta.inflight`` brackets the pages/signatures
-        rewrites and the stage-2 appends, ``retract.inflight`` (inside
-        ``_stage2_retract``) the stage-table relabels; after a crash every
-        delta entry refuses and ``run_incremental(full_snapshot)`` heals
-        the catalog."""
-        cfg, cat, refuse = self.cfg, self.catalog, self._refuse
-        h1 = cfg.stage1_hash()
-        pstats = self._delta_preconditions(substring_pass)
-
-        # ---- batch prep: ONE materialization, bucket-pure partitions so
-        # both partitioned rewrites below write one file per task ----
-        new_rows = (
-            changed_rows.select("url", "text")
-            .withColumn("bucket", self._bucket_expr())
-            .withColumn("h", F.xxhash64("url", "text"))
-            .repartition("bucket")
-            .localCheckpoint()
+        """O(edit) explicit upsert: the caller hands the NEW rows of docs
+        that already exist (the reference's ``update_index`` re-indexing
+        explicit videoids, ndd/server_ndd.py:307-315); only the batch is
+        signed. Every url must exist and appear once. Plan, refusals and
+        crash protocol: ``_apply_changeset``."""
+        return self._apply_changeset(
+            changed_rows, changed_rows.select("url"), substring_pass
         )
-        agg = (
-            new_rows.groupBy("bucket")
-            .agg(
-                F.count("*").alias("rows"),
-                F.sum(F.col("h").cast("decimal(38,0)")).alias("cks"),
-                F.countDistinct("url").alias("urls"),
-            )
-            .collect()
-        )
-        add_stats = {
-            int(r["bucket"]): (int(r["rows"]), _wrap64(int(r["cks"])))
-            for r in agg
-        }
-        n_upd = sum(r for r, _ in add_stats.values())
-        if n_upd == 0:
-            return self.clusters_view()
-        if n_upd != sum(int(r["urls"]) for r in agg):
-            refuse("batch contains duplicate urls")
-        if n_upd > cfg.max_retract:
-            refuse(
-                f"update of {n_upd} urls exceeds max_retract="
-                f"{cfg.max_retract} (broadcast-mapping ceiling)"
-            )
-        urls = new_rows.select("url")
-        affected = sorted(add_stats)
-        bucket_pred = F.col("bucket").isin([int(b) for b in affected])
-        # ONE partition-pruned scan: per-bucket (rows, checksum) of the
-        # doomed OLD rows — the subtraction half of the lineage delta AND
-        # the existence check (pages urls are unique by build invariant,
-        # so matched-row count == number of handed urls actually present)
-        del_stats = {
-            int(r["bucket"]): (int(r["rows"]), _wrap64(int(r["cks"])))
-            for r in self.pages_table()
-            .where(bucket_pred)
-            .join(F.broadcast(urls), "url", "left_semi")
-            .withColumn("h", F.xxhash64("url", "text"))
-            .groupBy("bucket")
-            .agg(
-                F.count("*").alias("rows"),
-                F.sum(F.col("h").cast("decimal(38,0)")).alias("cks"),
-            )
-            .collect()
-        }
-        n_found = sum(r for r, _ in del_stats.values())
-        if n_found != n_upd:
-            refuse(
-                f"{n_upd - n_found} of the handed urls are not in the corpus"
-            )
-        if any(b not in pstats for b in del_stats):
-            refuse("updated rows found in buckets with no committed lineage")
-        # bucket = f(url): every replaced row re-enters its own bucket, so
-        # per-bucket row counts hold and only the checksums substitute
-        merged = {
-            b: (
-                pstats[b][0] - del_stats[b][0] + a[0],
-                _wrap64(pstats[b][1] - del_stats[b][1] + a[1]),
-            )
-            for b, a in add_stats.items()
-        }
-
-        # ---- stage 1 compute: sign ONLY the batch (pure — no mutation
-        # yet, so a crash here needs no heal; partitions stay bucket-pure
-        # through the Arrow map)
-        t0 = time.monotonic()
-        new_sigs = (
-            new_rows.select("url", "text")
-            .mapInPandas(signature_map_fn(cfg), schema=SIGNATURE_SCHEMA)
-            .withColumn(
-                "bucket",
-                F.pmod(F.xxhash64("url"), F.lit(cfg.num_buckets)).cast("int"),
-            )
-            .localCheckpoint()
-        )
-
-        # ---- stages 0/1 commit: MERGE-ON-READ upsert — the old rows die
-        # as ONE driver-written tombstone sidecar append (url, era) and the
-        # re-signed batch lands as new era-stamped files in its buckets
-        # (delete-then-append, the Iceberg v2 position-delete + append
-        # commit shape; rows stamped AT the tombstone era are the re-adds
-        # and survive — operators/mor.py). NO bucket is rewritten; the
-        # round-3 survivors ∪ batch rewrite survives as the over-ceiling
-        # fold. Batch partitions are bucket-pure, so both appends write one
-        # file per touched bucket.
-        import pandas as pd
-        import pyarrow as pa
-
-        from near_duplicate_detection_spark.operators import mor
-
-        stored_tomb = (
-            cat.count_rows(mor.PAGE_TOMBSTONES)
-            if cat.exists(mor.PAGE_TOMBSTONES)
-            else 0
-        )
-        fold = stored_tomb + n_upd > cfg.page_tombstone_ceiling
-        if fold:
-            # over the sidecar ceiling: reclaim stored tombstones first
-            # (self-bracketing), then apply THIS batch copy-on-write —
-            # ceiling 0 disables merge-on-read entirely
-            self._fold_page_tombstones()
-        era = self._bump_retract_era()
-        self._set_marker("delta.inflight")
-        if fold:
-            for table, fresh in (
-                ("pages", self._stamp_era(new_rows.drop("h"))),
-                ("signatures", self._stamp_era(new_sigs)),
-            ):
-                # checkpointed: the write overwrites partitions the plan
-                # reads. allowMissingColumns: the stored pages table keeps
-                # the input's full schema (warc_ts/html/lang ride along);
-                # the batch carries only (url, text, bucket, era) —
-                # extraction inputs — so its rows null-fill the passthrough
-                # columns, same as an appended batch
-                replaced = (
-                    cat.read(table)
-                    .where(bucket_pred)
-                    .join(F.broadcast(urls), "url", "left_anti")
-                    .unionByName(fresh, allowMissingColumns=True)
-                    .localCheckpoint()
-                )
-                cat.write(
-                    replaced,
-                    table,
-                    partition_by=["bucket"],
-                    mode="overwrite",
-                    max_records_per_file=2048,
-                )
-        else:
-            cat._append_small(
-                mor.PAGE_TOMBSTONES,
-                pd.DataFrame(
-                    {
-                        "url": sorted(r["url"] for r in urls.collect()),
-                        "era": era,
-                    }
-                ),
-                pa.schema([("url", pa.string()), ("era", pa.int64())]),
-            )
-            # the two appends are order-free (different tables, both under
-            # the marker — any partial combination heals) — pooled (§2.6)
-            from concurrent.futures import ThreadPoolExecutor
-
-            appends = (
-                lambda: cat.write(
-                    self._stamp_era(new_rows.drop("h")),
-                    "pages",
-                    partition_by=["bucket"],
-                    mode="append",
-                    max_records_per_file=2048,
-                ),
-                lambda: cat.write(
-                    self._stamp_era(new_sigs),
-                    "signatures",
-                    partition_by=["bucket"],
-                    mode="append",
-                    max_records_per_file=2048,
-                ),
-            )
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                for _ in pool.map(lambda w: w(), appends):
-                    pass
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        for table in ("pages", "signatures"):
-            cat.mark_complete(
-                table,
-                h1,
-                {b: m[0] for b, m in merged.items()},
-                wall_ms,
-                checksums={b: m[1] for b, m in merged.items()},
-            )
-        cat.add_metrics(
-            "pages",
-            {
-                "updated_docs": n_upd,
-                "buckets_rewritten": len(affected) if fold else 0,
-                "page_tombstone_rows": 0 if fold else n_upd,
-                "wall_ms": wall_ms,
-            },
-        )
-        cat.add_metrics(
-            "signatures",
-            {
-                "buckets_computed": 0,
-                "buckets_appended": 0,
-                "appended_docs_signed": n_upd,
-                "wall_ms": wall_ms,
-            },
-        )
-
-        # ---- stage 2: the shared retraction core (old rows out of every
-        # stage table; rep rows inherited by the min surviving exact-group
-        # member), then the shared append core — back-to-back under the
-        # ONE final run hash (size pre-checked above, so a False here is
-        # unreachable; surface rather than silently rebuild)
-        if not self._stage2_retract(urls, cfg.max_retract):
-            refuse(
-                "stage-2 retraction declined mid-update (pages/signatures "
-                "already rewritten — heal with run_incremental)"
-            )
-        h2 = self.stage2_run_hash()  # AFTER the single stage-1 advance
-        new_rep_urls = self._stage2_apply_append(
-            new_sigs.select("url", "fp", "bands", "simhash"),
-            n_upd,
-            h2,
-            time.monotonic(),
-        )
-        if substring_pass:
-            if not self.stage2b_delta(
-                new_urls=new_rep_urls,
-                new_pages=new_rows.select("url", "text"),
-            ):
-                refuse("stage-2b delta state became invalid mid-update")
-
-        # ---- stage 3: ONE clusters swap commits retraction + re-append
-        if not self.stage3_clusters_delta():
-            # wide-merge/dissolve fallback (over the broadcast ceiling):
-            # full CC over the committed edge tables, correctness identical
-            self.stage3_clusters(resume=True)
-        return self.clusters_view()
 
     def compact(self) -> dict:
         """Table maintenance: fold the merge-on-read label patch and rewrite
@@ -3232,8 +2603,7 @@ class NDDPipeline:
             # multi-table rewrite (same marker as a mid-flight retraction);
             # a crash routes every delta entry to the full rebuild.
             n_patch = cat.count_rows(_mor.PATCH_TABLE)
-            with open(self._retract_marker_path(), "w") as f:
-                f.write("patch fold in progress\n")
+            self._set_marker("retract.inflight")
             for table in _mor.GOVERNED_TABLES:
                 if cat.exists(table):
                     cat.write(

@@ -5,8 +5,13 @@ must never invalidate committed state."""
 
 from __future__ import annotations
 
+import pytest
+
 from near_duplicate_detection_spark.config import NDDConfig
-from near_duplicate_detection_spark.pipeline import NDDPipeline
+from near_duplicate_detection_spark.pipeline import (
+    AppendRefusedError,
+    NDDPipeline,
+)
 from near_duplicate_detection_spark.sources.pages import generate_pages
 
 BASE = NDDConfig(num_buckets=4)
@@ -40,7 +45,8 @@ def test_execution_knobs_do_not_touch_stage_hashes():
 
 def test_execution_knobs_preserve_resume_state(spark, tmp_path):
     """A catalog built under default knobs stays fully resumable under
-    different execution knobs: both deltas accept and no-op."""
+    different execution knobs: the delta preconditions accept and an
+    unchanged snapshot no-ops through the changeset core."""
     base = str(tmp_path)
     NDDPipeline(spark, BASE, base).run(generate_pages(spark, 80))
     tweaked = NDDPipeline(
@@ -49,9 +55,12 @@ def test_execution_knobs_preserve_resume_state(spark, tmp_path):
         base,
     )
     n_pairs = tweaked.catalog.count_rows("pairs")
-    assert tweaked.stage2_pairs_delta() is True
-    assert tweaked.stage2b_delta() is True
+    assert tweaked._delta_preconditions(True)
+    assert len(tweaked.run_incremental(generate_pages(spark, 80)).toPandas()) == 80
     assert tweaked.catalog.count_rows("pairs") == n_pairs
+    m = tweaked.catalog.read("metrics").toPandas()
+    # no stage was rebuilt: one verified_pairs row, from the base build
+    assert len(m[(m.stage == "pairs") & (m.key == "verified_pairs")]) == 1
 
 
 def test_ceiling_change_invalidates_2b_delta_state(spark, tmp_path):
@@ -63,4 +72,21 @@ def test_ceiling_change_invalidates_2b_delta_state(spark, tmp_path):
     changed = NDDPipeline(
         spark, NDDConfig(num_buckets=4, bucket_pair_ceiling=999), base
     )
-    assert changed.stage2b_delta() is False
+    cat = changed.catalog
+    assert not cat.completed_partitions(
+        "substring_pairs", changed.stage2b_run_hash()
+    )
+    assert cat.distinct_values("seen_2b", "cfg_hash") != {
+        changed.cfg.stage2b_hash()
+    }
+    with pytest.raises(AppendRefusedError):
+        changed._delta_preconditions(True)
+    # the refused delta heals through the resume path: substring_pairs is
+    # recommitted under the new run hash and param stamp
+    assert len(changed.run_incremental(generate_pages(spark, 80)).toPandas()) == 80
+    assert cat.completed_partitions(
+        "substring_pairs", changed.stage2b_run_hash()
+    )
+    assert cat.distinct_values("seen_2b", "cfg_hash") == {
+        changed.cfg.stage2b_hash()
+    }

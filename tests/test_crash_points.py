@@ -1,0 +1,157 @@
+"""Crash-point enumeration for the changeset core.
+
+One mixed ``run_incremental`` (one appended doc, one edited exact-dup
+representative, one deleted near-dup member) is killed at every catalog
+mutation in turn: the ``StageCatalog`` primitives (``write``,
+``write_small_local``, ``_append_small``, ``drop_partition``,
+``mark_complete``) and the pipeline's marker and counter writes. For every
+kill point k:
+
+1. when no crash marker is up, ``pages_table()`` and ``clusters_view()``
+   each show either the state before the run or the state after it;
+2. ``run_incremental`` of the intended snapshot heals the catalog to the
+   from-scratch rebuild's cluster partition, with no marker left up.
+
+The last case kills nothing: it pins the number of mutation points, so a
+change to the commit protocol must revisit this enumeration.
+"""
+
+from __future__ import annotations
+
+import shutil
+import threading
+
+import pytest
+from pyspark.sql import functions as F
+
+from near_duplicate_detection_spark.config import NDDConfig
+from near_duplicate_detection_spark.lineage import StageCatalog
+from near_duplicate_detection_spark.pipeline import NDDPipeline
+from near_duplicate_detection_spark.sources.pages import generate_pages
+
+CFG = NDDConfig(num_buckets=2)
+N = 40
+CATALOG_MUTATORS = (
+    "write",
+    "write_small_local",
+    "_append_small",
+    "drop_partition",
+    "mark_complete",
+)
+PIPELINE_MUTATORS = ("_set_marker", "_clear_marker", "_write_counter")
+# mutation points of one mixed run on the base catalog (lineage rows are
+# counted once, at mark_complete; metrics rows are advisory, not counted)
+N_MUTATIONS = 34
+
+
+class Crash(RuntimeError):
+    pass
+
+
+class FaultInjector:
+    """Counts mutations across the driver's threads; raises at the k-th,
+    before it takes effect."""
+
+    def __init__(self, crash_at: int):
+        self.crash_at = crash_at
+        self.count = 0
+        self.lock = threading.Lock()
+
+    def hit(self, what: str) -> None:
+        with self.lock:
+            self.count += 1
+            k = self.count
+        if k == self.crash_at:
+            raise Crash(f"simulated crash at mutation {k}: {what}")
+
+    def install(self, monkeypatch) -> None:
+        for cls, names in (
+            (StageCatalog, CATALOG_MUTATORS),
+            (NDDPipeline, PIPELINE_MUTATORS),
+        ):
+            for name in names:
+                monkeypatch.setattr(cls, name, self._wrap(name, getattr(cls, name)))
+
+    def _wrap(self, name, orig):
+        def wrapped(obj, *args, **kwargs):
+            target = next((a for a in args if isinstance(a, str)), "")
+            if not (name == "_append_small" and target in ("lineage", "metrics")):
+                self.hit(f"{name}({target})")
+            return orig(obj, *args, **kwargs)
+
+        return wrapped
+
+
+def _intended(spark):
+    return (
+        generate_pages(spark, N + 1)
+        .withColumn(
+            "text",
+            F.when(
+                F.col("url").endswith("0020"),
+                F.concat(F.col("text"), F.lit(" crash-point edited tail")),
+            ).otherwise(F.col("text")),
+        )
+        .where(~F.col("url").endswith("0023"))
+    )
+
+
+def _partition(clusters_df):
+    pdf = clusters_df.toPandas()
+    return {frozenset(grp.url) for _, grp in pdf.groupby("cluster_id")}
+
+
+def _pages(pages_df):
+    return frozenset(map(tuple, pages_df.select("url", "text").toPandas().values))
+
+
+@pytest.fixture(scope="module")
+def base(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("ndd_cp_base"))
+    pipe = NDDPipeline(spark, CFG, d)
+    pipe.run(generate_pages(spark, N))
+    return d, _pages(pipe.pages_table()), _partition(pipe.clusters_view())
+
+
+@pytest.fixture(scope="module")
+def snapshot(spark, tmp_path_factory):
+    """The intended snapshot, written once as parquet (every case reads it
+    twice: the killed run and the heal)."""
+    path = str(tmp_path_factory.mktemp("ndd_cp_snap") / "snap")
+    _intended(spark).write.parquet(path)
+    return lambda: spark.read.parquet(path)
+
+
+@pytest.fixture(scope="module")
+def rebuilt(spark, tmp_path_factory, snapshot):
+    pipe = NDDPipeline(spark, CFG, str(tmp_path_factory.mktemp("ndd_cp_full")))
+    part = _partition(pipe.run(snapshot()))
+    return part, _pages(pipe.pages_table())
+
+
+@pytest.mark.parametrize("k", range(1, N_MUTATIONS + 2))
+def test_crash_at_every_mutation_heals(
+    spark, tmp_path_factory, monkeypatch, base, snapshot, rebuilt, k
+):
+    base_dir, pages_before, part_before = base
+    part_after, pages_after = rebuilt
+    d = str(tmp_path_factory.mktemp(f"ndd_cp_{k}") / "cat")
+    shutil.copytree(base_dir, d)
+    pipe = NDDPipeline(spark, CFG, d)
+    injector = FaultInjector(k)
+    injector.install(monkeypatch)
+    if k <= N_MUTATIONS:
+        with pytest.raises(Crash):
+            pipe.run_incremental(snapshot())
+    else:
+        pipe.run_incremental(snapshot())
+        assert injector.count == N_MUTATIONS
+    monkeypatch.undo()
+
+    if not pipe._delta_suspect():
+        assert _pages(pipe.pages_table()) in (pages_before, pages_after)
+        assert _partition(pipe.clusters_view()) in (part_before, part_after)
+    healed = pipe.run_incremental(snapshot())
+    assert _partition(healed) == part_after
+    assert _pages(pipe.pages_table()) == pages_after
+    assert not pipe._delta_suspect()

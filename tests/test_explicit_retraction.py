@@ -4,9 +4,9 @@ ndd/server_ndd.py:246-261, 307-315).
 
 The caller hands exactly the deleted urls (or edited rows), so the engine
 must (a) produce the same cluster partition as a full rebuild over the
-changed corpus, (b) never invoke the O(corpus) control-plane scans the
-inferred path needs (stage-0 _input_stats, stage-2 classify_drift) NOR
-re-sign a single unchanged doc through the signature UDF (all three pinned
+changed corpus, (b) never invoke the O(corpus) scans the inferred path needs
+(the snapshot diff, the stage-0 _input_stats) nor the full stage-2 rebuild,
+NOR re-sign a single unchanged doc through the signature UDF (all pinned
 here by monkeypatching them to raise), and (c) refuse with nothing mutated
 whenever its preconditions don't hold."""
 
@@ -67,7 +67,9 @@ def _poison_control_plane(monkeypatch, what: str = "scan+sign"):
         raise AssertionError(f"forbidden path invoked ({what})")
 
     monkeypatch.setattr(NDDPipeline, "_input_stats", boom)
-    monkeypatch.setattr(delta_mod, "classify_drift", boom)
+    monkeypatch.setattr(NDDPipeline, "_snapshot_changeset", boom)
+    monkeypatch.setattr(NDDPipeline, "stage2_pairs", boom)
+    monkeypatch.setattr(delta_mod, "content_diff", boom)
     if "sign" in what:
         monkeypatch.setattr(pipeline_mod, "signature_map_fn", boom)
 

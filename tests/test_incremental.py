@@ -10,8 +10,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from near_duplicate_detection_spark.config import NDDConfig
-from near_duplicate_detection_spark.pipeline import NDDPipeline
-from near_duplicate_detection_spark.sources.pages import generate_pages
+from near_duplicate_detection_spark.pipeline import (
+    AppendRefusedError,
+    NDDPipeline,
+)
+from near_duplicate_detection_spark.sources.pages import generate_pages, url_of
 
 CFG = NDDConfig(num_buckets=4)
 # Chained appends that CUT planted dup structures across boundaries
@@ -115,8 +118,6 @@ def test_incremental_used_delta_path(incremental_built):
 def test_cross_boundary_links_present(incremental_built):
     """The boundary-cut structures must be linked: 301 (appended) with its
     exact base 300 (old), and 303/304 (appended) with near base 302 (old)."""
-    from near_duplicate_detection_spark.sources.pages import url_of
-
     _, clusters, _ = incremental_built
     cl = dict(zip(clusters.url, clusters.cluster_id))
     assert cl[url_of(300)] == cl[url_of(301)]
@@ -240,20 +241,36 @@ def test_edit_retracts_and_matches_full(spark, tmp_path_factory):
 def test_retraction_cap_refuses_before_touching_state(
     spark, tmp_path_factory
 ):
+    """An inferred retraction over max_retract is refused by the changeset
+    core before any mutation; run_incremental then heals through the
+    resume path (a full stage 2) instead of the targeted retraction."""
     base = str(tmp_path_factory.mktemp("ndd_cap"))
-    pipe = NDDPipeline(spark, CFG, base)
-    pipe.run(generate_pages(spark, 100))
+    NDDPipeline(spark, CFG, base).run(generate_pages(spark, 100))
+    capped = NDDPipeline(spark, NDDConfig(num_buckets=4, max_retract=0), base)
     edited = _edit_doc(spark, 100, "0006")
-    pipe.stage0_ingest(edited, resume=True)
-    pipe.stage1_signatures(resume=True)
-    n_pairs = pipe.catalog.count_rows("pairs")
-    assert pipe.stage2_pairs_delta(max_retract=0) is False
+    lineage = capped.catalog.latest_partition_stats("pages", CFG.stage1_hash())
+    n_pairs = capped.catalog.count_rows("pairs")
+    upserts, deletes, expect = capped._snapshot_changeset(
+        edited, capped._delta_preconditions(True)
+    )
+    assert deletes == [url_of(6)]
+    with pytest.raises(AppendRefusedError, match="max_retract"):
+        capped._apply_changeset(upserts, deletes, True, expect)
     # the refusal happened before any rewrite
-    assert not pipe.catalog.exists("urls_retracted")
-    assert not pipe._retract_inflight()
-    assert pipe.catalog.count_rows("pairs") == n_pairs
-    clusters = pipe.run_incremental(edited).toPandas()  # default cap
+    assert not capped.catalog.exists("urls_retracted")
+    assert not capped.catalog.exists("page_tombstones")
+    assert not capped._delta_suspect()
+    assert capped.catalog.count_rows("pairs") == n_pairs
+    assert (
+        capped.catalog.latest_partition_stats("pages", CFG.stage1_hash())
+        == lineage
+    )
+    clusters = capped.run_incremental(edited).toPandas()
     assert len(clusters) == 100
+    m = capped.catalog.read("metrics").toPandas()
+    assert not len(m[(m.stage == "pairs") & (m.key == "retracted_docs")])
+    # the resume path rebuilt stage 2: a second full verified_pairs row
+    assert len(m[(m.stage == "pairs") & (m.key == "verified_pairs")]) == 2
 
 
 def test_retract_crash_marker_forces_full_rebuild(spark, tmp_path_factory):
@@ -263,10 +280,9 @@ def test_retract_crash_marker_forces_full_rebuild(spark, tmp_path_factory):
     base = str(tmp_path_factory.mktemp("ndd_crash"))
     pipe = NDDPipeline(spark, CFG, base)
     pipe.run(generate_pages(spark, 80))
-    with open(pipe._retract_marker_path(), "w") as f:
-        f.write("simulated crash\n")
-    assert pipe.stage2_pairs_delta() is False
-    assert pipe.stage2b_delta() is False
+    pipe._set_marker("retract.inflight")  # a killed retraction
+    with pytest.raises(AppendRefusedError, match="crash marker"):
+        pipe._delta_preconditions(True)
     assert pipe.stage3_clusters_delta() is False
     clusters = pipe.run_incremental(generate_pages(spark, 90)).toPandas()
     assert len(clusters) == 90
@@ -296,12 +312,35 @@ def test_param_change_rejects_delta_state(spark, tmp_path_factory):
         NDDConfig(num_buckets=4, jaccard_threshold=0.5, substring_min_len=400),
         base,
     )
-    assert changed.stage2_pairs_delta() is False
-    assert changed.stage2b_delta() is False
-    # same params → both deltas accept (and no-op cleanly)
+    with pytest.raises(AppendRefusedError, match="pairs not committed"):
+        changed._delta_preconditions(True)
+    # a stage-2b-only change refuses on the 2b state alone
+    changed_2b = NDDPipeline(
+        spark, NDDConfig(num_buckets=4, substring_min_len=400), base
+    )
+    assert changed_2b._delta_preconditions(False)
+    with pytest.raises(AppendRefusedError, match="substring_pairs"):
+        changed_2b._delta_preconditions(True)
+    # same params → the delta accepts, and an unchanged snapshot no-ops
     again = NDDPipeline(spark, CFG, base)
-    assert again.stage2_pairs_delta() is True
-    assert again.stage2b_delta() is True
+    assert again._delta_preconditions(True)
+    n_pairs = again.catalog.count_rows("pairs")
+    again.run_incremental(generate_pages(spark, 100))
+    assert again.catalog.count_rows("pairs") == n_pairs
+    # the changed params heal through the resume path: stage 2 and 2b are
+    # recommitted under the new run hashes and param stamps
+    assert len(changed.run_incremental(generate_pages(spark, 100)).toPandas()) == 100
+    cat = changed.catalog
+    assert cat.completed_partitions("pairs", changed.stage2_run_hash())
+    assert cat.completed_partitions(
+        "substring_pairs", changed.stage2b_run_hash()
+    )
+    assert cat.distinct_values("seen", "cfg_hash") == {
+        changed.cfg.stage2_hash()
+    }
+    assert cat.distinct_values("seen_2b", "cfg_hash") == {
+        changed.cfg.stage2b_hash()
+    }
 
 
 def test_delete_retracts_and_matches_full(spark, tmp_path_factory):

@@ -377,8 +377,7 @@ def test_crash_mid_mor_routes_to_full(spark, tmp_path_factory, base_catalog):
         spark, CFG, _copy(base_catalog, tmp_path_factory, "ndd_mor_crash")
     )
     pipe.delete_pages([url_of(11)])
-    with open(pipe._retract_marker_path(), "w") as f:
-        f.write("simulated crash\n")
+    pipe._set_marker("retract.inflight")  # a killed retraction
     with pytest.raises(AppendRefusedError, match="crash marker"):
         pipe.delete_pages([url_of(12)])
     snap = generate_pages(spark, N).where(F.col("url") != url_of(11))

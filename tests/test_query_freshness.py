@@ -30,10 +30,17 @@ def mid_incremental(spark, tmp_path_factory):
     base = str(tmp_path_factory.mktemp("ndd_fresh"))
     pipe = NDDPipeline(spark, CFG, base)
     pipe.run(generate_pages(spark, N1))
-    pipe.stage0_ingest(generate_pages(spark, N2))
-    pipe.stage1_signatures()
-    assert pipe.stage2_pairs_delta()
-    assert pipe.stage2b_delta(new_urls=pipe._appended_rep_urls)
+    # the changeset core with its stage-3 step stubbed out (instance
+    # attributes shadow the methods; deleting them restores both)
+    pipe.stage3_clusters_delta = lambda: True
+    pipe.stage3_clusters = lambda resume=True: None
+    pipe.run_incremental(generate_pages(spark, N2))
+    del pipe.stage3_clusters_delta, pipe.stage3_clusters
+    m = pipe.catalog.read("metrics").toPandas()
+    # both deltas ran: stage 2 over every appended doc, 2b over its new reps
+    new = m[m.key == "delta_new_docs"]
+    assert (new[new.stage == "pairs"].value == N2 - N1).any()
+    assert (new[new.stage == "substring_pairs"].value > 0).any()
     # deliberately NO stage 3: clusters is the stale N1 table
     assert pipe.catalog.count_rows("clusters") == N1
     return pipe

@@ -181,10 +181,10 @@ def test_literal_sql_double_rendering_roundtrips(spark):
 def test_mixed_edit_delete_append_single_snapshot_matches_full(
     spark, tmp_path_factory
 ):
-    """r6 internals change: after a targeted retraction the stage-2 delta
-    derives the post-retraction new set as drift_new ∪ (sigs ⋉ violations)
-    instead of a second corpus-wide classify_drift join. Pin its full
-    generality in ONE snapshot: an edited doc (0020 — an exact-dup REP),
+    """One snapshot diff carries every change kind into the changeset
+    core: the retraction covers edited ∪ deleted urls, the append covers
+    appended ∪ edited rows. Pin its full generality in ONE snapshot: an
+    edited doc (0020 — an exact-dup REP),
     a deleted doc (0021 — that rep's only dup member, so the surviving-
     member substitution finds nobody and must drop), and two appended docs
     (0100/0101 — an exact-dup pair by generator role). The delta must
@@ -237,17 +237,17 @@ def test_mixed_edit_delete_append_single_snapshot_matches_full(
 def test_inferred_path_never_recomputes_input_stats(
     spark, tmp_path_factory, monkeypatch
 ):
-    """r6 second pass: run_incremental's slow path must consume the
-    pure-append probe's identity aggregate as stage 0's stats instead of
-    re-evaluating the snapshot through _input_stats (one full pass, not
-    two). Spy-pinned so a refactor that silently reintroduces the second
-    pass fails here."""
+    """run_incremental's edit path runs the snapshot diff and the
+    changeset core: the probe's per-bucket stats are the only snapshot
+    aggregation — the stage-0 _input_stats scan (resume path only) never
+    runs, and neither does the full stage-2 rebuild. Spy-pinned so a
+    refactor that silently reintroduces the second pass fails here."""
     from pyspark.sql import functions as F
 
     from near_duplicate_detection_spark.sources.pages import generate_pages
 
     cfg = NDDConfig(num_buckets=4)
-    base = str(tmp_path_factory.mktemp("ndd_stats_hint"))
+    base = str(tmp_path_factory.mktemp("ndd_inferred_core"))
     pipe = NDDPipeline(spark, cfg, base)
     pipe.run(generate_pages(spark, 100))
 
@@ -259,6 +259,11 @@ def test_inferred_path_never_recomputes_input_stats(
         return orig(self, pages)
 
     monkeypatch.setattr(NDDPipeline, "_input_stats", spy)
+
+    def no_full_stage2(*a, **k):  # pragma: no cover - failure mode
+        raise AssertionError("full stage-2 rebuild ran instead of the core")
+
+    monkeypatch.setattr(NDDPipeline, "stage2_pairs", no_full_stage2)
     snapshot = generate_pages(spark, 100).withColumn(
         "text",
         F.when(
@@ -269,5 +274,5 @@ def test_inferred_path_never_recomputes_input_stats(
     clusters = pipe.run_incremental(snapshot).toPandas()
     assert len(clusters) == 100
     assert calls["stats"] == 0, (
-        "inferred path re-ran _input_stats despite the probe's aggregate"
+        "inferred path ran the stage-0 _input_stats scan"
     )

@@ -1,19 +1,21 @@
 """Snapshot-diff provider seam (run_incremental(changed_buckets=...)) —
 round-4 VERDICT next-round #2: a caller that can enumerate the drifted
 url-hash buckets (the Iceberg snapshot-metadata analog) must get an
-inferred-path run whose control-plane scans touch ONLY those buckets —
-stage-0 ``_input_stats``, the pure-append url probe, and stage-2
-``classify_drift``'s full-outer join — while producing the same cluster
-partition as a full rebuild. Default behavior (no ``changed_buckets``)
-stays corpus-inferred and is pinned by the rest of the suite.
+inferred-path run whose snapshot-diff scans touch ONLY those buckets —
+the url probe and the content join (``content_diff``) over the buckets it
+flags, plus the stage-0 ``_input_stats`` of the resume fallback — while
+producing the same cluster partition as a full rebuild. Default behavior
+(no ``changed_buckets``) stays corpus-inferred and is pinned by the rest of
+the suite.
 
 Spy strategy (the test_explicit_retraction poison pattern, adapted): the
 restricted scans still RUN — so instead of raising unconditionally, the
 spies assert semantically that every frame reaching them contains zero
 rows outside the declared buckets (an unrestricted corpus frame always
-does), then delegate to the real implementation. The pure-append case
-poisons outright: that path must never call ``_input_stats`` or
-``classify_drift`` at all."""
+does), then delegate to the real implementation. The full stage-2 rebuild
+is poisoned throughout: every case must go through the changeset core.
+The pure-append case poisons the content join too: a clean append is
+proven by the probe alone."""
 
 from __future__ import annotations
 
@@ -78,13 +80,18 @@ def _copy(base, tmp_path_factory, name):
     return dst
 
 
+def _no_full_stage2(*a, **k):  # pragma: no cover - failure mode
+    raise AssertionError("full stage-2 rebuild ran instead of the core")
+
+
 def test_mixed_drift_restricted_scans_match_full(
     spark, tmp_path_factory, monkeypatch, base_catalog
 ):
-    """Edit one doc + append two (mixed drift → the slow inferred path with
-    a targeted retraction). With changed_buckets declared, every frame
-    reaching _input_stats / classify_drift must be bucket-restricted, and
-    the result must equal a from-scratch rebuild of the same snapshot."""
+    """Edit one doc + append two (mixed drift → the content join and a
+    targeted retraction in the changeset core). With changed_buckets
+    declared, every frame reaching _input_stats / content_diff must be
+    bucket-restricted, and the result must equal a from-scratch rebuild of
+    the same snapshot."""
     # doc 20 is an exact-dup rep (21 copies it) — the structure-cutting edit
     snapshot = generate_pages(spark, N + 2).withColumn(
         "text",
@@ -100,32 +107,31 @@ def test_mixed_drift_restricted_scans_match_full(
     calls = {"stats": 0, "drift": 0}
 
     orig_stats = NDDPipeline._input_stats
-    orig_drift = delta_mod.classify_drift
+    orig_drift = delta_mod.content_diff
 
     def spy_stats(self, pages):
         _assert_within(pages, changed, "_input_stats")
         calls["stats"] += 1
         return orig_stats(self, pages)
 
-    def spy_drift(signatures, seen):
-        _assert_within(signatures, changed, "classify_drift(signatures)")
-        _assert_within(seen, changed, "classify_drift(seen)")
+    def spy_drift(snapshot, committed):
+        _assert_within(snapshot, changed, "content_diff(snapshot)")
+        _assert_within(committed, changed, "content_diff(committed)")
         calls["drift"] += 1
-        return orig_drift(signatures, seen)
+        return orig_drift(snapshot, committed)
 
     monkeypatch.setattr(NDDPipeline, "_input_stats", spy_stats)
-    monkeypatch.setattr(delta_mod, "classify_drift", spy_drift)
+    monkeypatch.setattr(delta_mod, "content_diff", spy_drift)
+    monkeypatch.setattr(NDDPipeline, "stage2_pairs", _no_full_stage2)
 
     cat_dir = _copy(base_catalog, tmp_path_factory, "ndd_sd_mixed")
     pipe = NDDPipeline(spark, CFG, cat_dir)
     clusters = pipe.run_incremental(
         snapshot, changed_buckets=changed
     ).toPandas()
-    # r6: stage 0 consumes the pure-append probe's identity aggregate as
-    # its stats (the probe frame is _restrict_changed-built — its
-    # restriction is spy-verified by the pure-append test below), so
-    # _input_stats may legitimately never run here; its spy stays as a
-    # guard on any path that still reaches it.
+    # the changeset core never runs the stage-0 stats scan (only the
+    # resume fallback does); its spy stays as a guard on any path that
+    # still reaches it
     assert calls["drift"] >= 1
     assert pipe._changed_buckets is None  # seam reset after the run
     assert len(clusters) == N + 2
@@ -144,10 +150,10 @@ def test_mixed_drift_restricted_scans_match_full(
 def test_pure_append_with_seam_never_full_scans(
     spark, tmp_path_factory, monkeypatch, base_catalog
 ):
-    """Append-only drift + declared buckets: the fast path (restricted url
-    probe → append_pages) must complete WITHOUT ever invoking the two
-    corpus control-plane scans — both are poisoned to raise — and match a
-    full rebuild."""
+    """Append-only drift + declared buckets: the restricted url probe
+    proves the append and the changeset core applies it WITHOUT the stage-0
+    stats scan, the content join or the full stage-2 rebuild — all three
+    poisoned to raise — and the result matches a full rebuild."""
     snapshot = generate_pages(spark, N + 3)
     changed = _buckets_of(spark, [url_of(N + i) for i in range(3)])
 
@@ -155,7 +161,8 @@ def test_pure_append_with_seam_never_full_scans(
         raise AssertionError("corpus control-plane scan invoked")
 
     monkeypatch.setattr(NDDPipeline, "_input_stats", boom)
-    monkeypatch.setattr(delta_mod, "classify_drift", boom)
+    monkeypatch.setattr(delta_mod, "content_diff", boom)
+    monkeypatch.setattr(NDDPipeline, "stage2_pairs", _no_full_stage2)
 
     cat_dir = _copy(base_catalog, tmp_path_factory, "ndd_sd_append")
     pipe = NDDPipeline(spark, CFG, cat_dir)
@@ -180,8 +187,8 @@ def test_delete_drift_restricted_matches_full(
 ):
     """Delete-only drift under the seam: the snapshot drops two docs (one an
     exact-dup rep whose rows must transfer to the surviving member). The
-    slow path's restricted scans must stay inside the declared buckets and
-    the retraction must match a from-scratch rebuild of the shrunken
+    diff's restricted scans must stay inside the declared buckets and the
+    core's retraction must match a from-scratch rebuild of the shrunken
     corpus."""
     gone = [url_of(20), url_of(11)]
     snapshot = generate_pages(spark, N).where(~F.col("url").isin(gone))
@@ -189,19 +196,22 @@ def test_delete_drift_restricted_matches_full(
     assert len(changed) < CFG.num_buckets
 
     orig_stats = NDDPipeline._input_stats
-    orig_drift = delta_mod.classify_drift
+    orig_drift = delta_mod.content_diff
+    calls = {"drift": 0}
 
     def spy_stats(self, pages):
         _assert_within(pages, changed, "_input_stats")
         return orig_stats(self, pages)
 
-    def spy_drift(signatures, seen):
-        _assert_within(signatures, changed, "classify_drift(signatures)")
-        _assert_within(seen, changed, "classify_drift(seen)")
-        return orig_drift(signatures, seen)
+    def spy_drift(snapshot, committed):
+        _assert_within(snapshot, changed, "content_diff(snapshot)")
+        _assert_within(committed, changed, "content_diff(committed)")
+        calls["drift"] += 1
+        return orig_drift(snapshot, committed)
 
     monkeypatch.setattr(NDDPipeline, "_input_stats", spy_stats)
-    monkeypatch.setattr(delta_mod, "classify_drift", spy_drift)
+    monkeypatch.setattr(delta_mod, "content_diff", spy_drift)
+    monkeypatch.setattr(NDDPipeline, "stage2_pairs", _no_full_stage2)
 
     cat_dir = _copy(base_catalog, tmp_path_factory, "ndd_sd_del")
     pipe = NDDPipeline(spark, CFG, cat_dir)
@@ -210,6 +220,7 @@ def test_delete_drift_restricted_matches_full(
     ).toPandas()
     assert len(clusters) == N - 2
     assert not set(gone) & set(clusters.url)
+    assert calls["drift"] >= 1
 
     monkeypatch.undo()
     full = (
@@ -230,3 +241,26 @@ def test_changed_buckets_validation(spark, tmp_path_factory, base_catalog):
             generate_pages(spark, N), changed_buckets=[CFG.num_buckets]
         )
     assert pipe._changed_buckets is None
+
+
+def test_duplicate_url_snapshot_refused_before_mutation(
+    spark, tmp_path_factory, base_catalog
+):
+    """A snapshot that repeats a url (two texts for one primary key) is
+    refused by the diff's per-bucket distinct-url count with ValueError,
+    before anything is written — the resume path would otherwise ingest
+    both rows."""
+    cat_dir = _copy(base_catalog, tmp_path_factory, "ndd_sd_dup")
+    pipe = NDDPipeline(spark, CFG, cat_dir)
+    lineage_rows = pipe.catalog.count_rows("lineage")
+    snapshot = generate_pages(spark, N + 2)
+    dup = snapshot.where(F.col("url") == url_of(5)).withColumn(
+        "text", F.lit("a second text for the same url")
+    )
+    with pytest.raises(ValueError, match="repeats a url"):
+        pipe.run_incremental(snapshot.unionByName(dup))
+    assert pipe.catalog.count_rows("lineage") == lineage_rows
+    assert pipe.catalog.count_rows("pages") == N
+    assert not pipe._delta_suspect()
+    # the deduplicated snapshot still applies through the core
+    assert len(pipe.run_incremental(snapshot).toPandas()) == N + 2
