@@ -125,7 +125,7 @@ def _measure_incremental(
                                re-cluster path)
       delete_pages_sec         the same ~10% delete via delete_pages (caller
                                hands exactly the deleted urls — one
-                               page_tombstones sidecar commit, zero bucket
+                               retract_patch log append, zero bucket
                                rewrites, zero re-signing)
     """
     from pyspark.sql import functions as F

@@ -15,7 +15,7 @@ import hashlib
 import json
 from dataclasses import asdict, dataclass, field
 
-ENGINE_VERSION = "20260816"
+ENGINE_VERSION = "20261017"
 
 
 @dataclass(frozen=True)
@@ -53,11 +53,14 @@ class NDDConfig:
     # exactly one file, while a rewrite's file count scales with cluster
     # parallelism — counting eras keeps the trigger scale-independent.
     clusters_append_ceiling: int = 64
-    # accumulated retract_patch rows before a retraction folds the patch
-    # into the stage-2/2b tables (copy-on-write rewrite) instead of
-    # extending it — bounds both the broadcast the readers pay and the
-    # driver-side composition. Same Iceberg MOR-maintenance shape as
-    # clusters_append_ceiling; execution strategy, excluded from hashes.
+    # stored retract_patch log rows above which a delete/update folds the
+    # log (rewrites the governed pages/signatures buckets and the six
+    # stage-2/2b tables from their views — the same routine compact()
+    # runs) right after appending its entries — bounds both the broadcast
+    # the readers pay and the driver-side composition. 0 folds on every
+    # delete/update (copy-on-write). Same Iceberg MOR-maintenance shape as
+    # clusters_append_ceiling; execution strategy, excluded from hashes
+    # (views are identical either way).
     retract_patch_ceiling: int = 1_000_000
     # band_index (operators/serving_index.py) partition count: a single
     # query reads ≤ lsh_bands of these directories, so P sets the pruning
@@ -72,13 +75,6 @@ class NDDConfig:
     # Above the ceiling it falls back to the unpruned semi-join, the right
     # plan at that size. Execution strategy, excluded from stage hashes.
     query_collect_ceiling: int = 100_000
-    # accumulated page_tombstones rows before a delete/update folds the
-    # sidecar physically (rewrites the governed buckets of pages/signatures
-    # and applies its own batch copy-on-write) instead of extending it.
-    # 0 disables merge-on-read entirely — every delete/update rewrites its
-    # affected buckets, the round-3 copy-on-write shape. Execution
-    # strategy, excluded from hashes (views are identical either way).
-    page_tombstone_ceiling: int = 1_000_000
     # --- layout ---
     # url-hash partitions for lineage granularity. ≥2× the largest local core
     # count (and thousands on a real cluster): stage-0/1 partitioned writes

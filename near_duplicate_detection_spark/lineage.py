@@ -112,7 +112,7 @@ class StageCatalog:
         types: list | None = None,
     ) -> None:
         """Driver-side parquet write for TINY control tables (the stage-3
-        label patch, the retraction patch): zero Spark jobs, where a Spark
+        label patch and tombstones): zero Spark jobs, where a Spark
         write of driver rows costs a job and a commit protocol. Columns
         default to string; pass ``types`` (pyarrow DataTypes, one per
         column) for anything else. Staged to a temp dir + atomic rename."""
@@ -132,7 +132,7 @@ class StageCatalog:
         os.rename(tmp, dst)
 
     def read_small_rows(self, table: str, columns: list[str]) -> list[tuple]:
-        """Driver-side read of a TINY control table (the retraction patch):
+        """Driver-side read of a TINY control table (the retraction log):
         the inverse of ``write_small_local``, zero Spark jobs. Only ever
         called on sidecars bounded by an explicit ceiling."""
         tbl = pads.dataset(self.path(table), format="parquet").to_table(

@@ -28,8 +28,9 @@ equality in the no-crossing case).
 
 Edits and deletions violate the append-only premise; the pipeline's
 changeset core first runs a TARGETED RETRACTION of the edited and deleted
-urls (relabel_*: drop or rep-substitute their rows across every stage
-table), then treats edited content as a fresh append. The changeset comes
+urls (one retraction-log entry per url: drop or rep-substitute their rows
+across every governed table, operators/mor.py), then treats edited content
+as a fresh append. The changeset comes
 from the caller (explicit entry points) or from ``content_diff`` of a
 snapshot against the committed pages.
 """
@@ -298,25 +299,6 @@ def cluster_label_delta(
     node_labels = connected_components(contracted)
     remap = node_labels.where(F.col("url") != F.col("label"))
     return remap, node_labels, None, None
-
-
-def relabel_url_table(
-    df: DataFrame, mapping: DataFrame, col: str = "url"
-) -> DataFrame:
-    """Apply a retraction mapping to a single-url table: rows whose url maps
-    to NULL are dropped, mapped urls are substituted, everything else passes
-    through. Map-side (broadcast) — never shuffles the table."""
-    m = mapping.select(
-        F.col("url").alias(col),
-        F.col("new_url").alias("__new"),
-        F.lit(True).alias("__hit"),
-    )
-    return (
-        df.join(F.broadcast(m), col, "left")
-        .where(F.col("__hit").isNull() | F.col("__new").isNotNull())
-        .withColumn(col, F.coalesce("__new", F.col(col)))
-        .drop("__new", "__hit")
-    )
 
 
 def relabel_pair_table(df: DataFrame, mapping: DataFrame) -> DataFrame:

@@ -1,43 +1,48 @@
-"""Merge-on-read retraction: era-tagged stage tables + a tombstone/relabel
-patch sidecar.
+"""Merge-on-read retraction: era-tagged tables + one append-only retraction
+log.
 
-The copy-on-write retraction (`relabel_url_table`/`relabel_pair_table` over
-every stage-2/2b table) is O(change) in COMPUTE but O(corpus) in I/O — each
-of the six governed tables (seen, reps, pairs, window_index, seen_2b,
-substring_pairs) is rewritten wholesale per retraction batch. At the 10^12-doc
+Rewriting every table a delete or edit touches is O(change) in COMPUTE but
+O(corpus) in I/O: the two bucket tables (pages, signatures) and the six
+stage-2/2b tables (seen, reps, pairs, window_index, seen_2b,
+substring_pairs) would each be rewritten per changeset. At the 10^12-doc
 contract that write volume dominates any delete/edit. This module is the
-position-delete analog (Iceberg v2 merge-on-read): a retraction commits ONE
-driver-written sidecar (`retract_patch`) of rows
+position-delete analog (Iceberg v2 merge-on-read): each changeset that
+deletes or updates urls appends ONE driver-written file to the
+``retract_patch`` log, holding its raw mapping at its one era
 
     (url, new_url, era)      -- new_url NULL = tombstone, else relabel
 
-and every reader resolves the patch through a broadcast join. Physical rows
-are reclaimed later by `compact()` (or an inline fold when the patch crosses
-`cfg.retract_patch_ceiling`) — the Iceberg MOR-plus-maintenance pattern, same
-shape as the stage-3 `cluster_remap` sidecar.
+and every reader resolves the log through a broadcast join. The stored
+files are never rewritten; physical rows are reclaimed later by the one
+fold routine (``NDDPipeline._fold``), run by ``compact()`` or inline when
+the log crosses ``cfg.retract_patch_ceiling`` — the Iceberg
+MOR-plus-maintenance pattern, same shape as the stage-3 ``cluster_remap``
+sidecar.
 
 Era semantics — why a plain url keyset is NOT enough: an edited url re-enters
 the corpus under the SAME url string, so a url-level tombstone would kill the
 re-appended rows too. Every governed table therefore carries an `era` column:
 rows are stamped with the catalog's retraction-era counter at write time, and
-a patch entry with era R governs exactly the rows with `row.era < R` (rows
+a log entry with era R governs exactly the rows with `row.era < R` (rows
 that physically existed when the retraction committed). The counter bumps
-only on MOR retraction commits, so rows appended after a retraction carry
-era >= R and pass through untouched. Per url the patch may hold several
+once per changeset with deletes or updates, so rows appended after it carry
+era >= R and pass through untouched. Per url the log may hold several
 entries (retract -> re-add -> retract again); the governing entry for a row
 is the EARLIEST entry with `entry.era > row.era` — the first retraction that
-happened after the row was written.
+happened after the row was written. The bucket tables and ``seen`` only
+drop governed rows (a row dies iff some entry is newer than it); the other
+stage tables relabel a retracted representative's rows onto its replacement.
 
-Transitive closure: entries are composed driver-side at every retraction
-commit (`compose_patch`) — when url B (a prior retraction's replacement) is
-itself retracted with replacement C, every stored entry (X -> B) becomes
-(X -> C) with its ORIGINAL era (X's inherited rows logically carried B's
-identity from that era on, so B's retraction governs them). Composition is
-always content-safe: an entry only ever points at a url that was a live
-member of the same exact-content fingerprint group when the entry was
-created, and any later retraction of that target composes immediately —
-the target of a stored entry is therefore always live, so one broadcast
-join pass resolves every row at read time.
+Transitive closure: the stored entries are composed at READ time
+(``patch_agg`` replays ``compose_patch`` over the entries in era order) —
+when url B (a prior retraction's replacement) is itself retracted with
+replacement C, the entry (X -> B) resolves to (X -> C) with its ORIGINAL
+era (X's inherited rows logically carried B's identity from that era on,
+so B's retraction governs them). Composition is always content-safe: an
+entry only ever points at a url that was a live member of the same
+exact-content fingerprint group when the entry was created, and any later
+retraction of that target composes over it — the resolved target is
+therefore always live, so one broadcast join pass resolves every row.
 
 Reference semantics: ``update_index`` drops a vanished video's index entries
 without rebuilding the index (ndd/server_ndd.py:246-261); the engine
@@ -55,16 +60,12 @@ from pyspark.sql import functions as F
 from near_duplicate_detection_spark.session import local_frame
 
 PATCH_TABLE = "retract_patch"
-# the tables whose readers resolve the patch (all six carry an `era` column)
+# the stage tables whose readers resolve the log (all six carry an `era`
+# column); the bucket tables pages/signatures resolve it drop-only too
 URL_DROP_TABLES = ("seen",)            # governing entry ⇒ row dropped
 URL_RELABEL_TABLES = ("reps", "window_index", "seen_2b")
 PAIR_TABLES = ("pairs", "substring_pairs")
 GOVERNED_TABLES = URL_DROP_TABLES + URL_RELABEL_TABLES + PAIR_TABLES
-# url-tombstone sidecar governing the bucket tables (pages + signatures):
-# explicit deletes/updates append (url, era) rows here instead of rewriting
-# every affected bucket — the same position-delete analog as the stage-3
-# cluster_tombstones, folded physically by compact() or the ceiling
-PAGE_TOMBSTONES = "page_tombstones"
 
 # sidecar → broadcast-ready LocalRelation cache, keyed by (session, catalog
 # dir, file signature). Sidecars are ceiling-bounded, so they are read
@@ -107,52 +108,49 @@ def sidecar_local_df(catalog, table: str, build) -> DataFrame | None:
 
 
 def patch_agg(catalog) -> DataFrame | None:
-    """The retraction patch as a broadcast-ready per-url LocalRelation:
-    (url, __entries: array<struct<e: era, nu: new_url>>), entries sorted by
-    era ascending so `get(filter(...), 0)` picks the earliest governing
-    entry. None when no patch exists (readers skip the join entirely)."""
+    """The retraction log as a broadcast-ready per-url LocalRelation:
+    (url, __entries: array<struct<e: era, nu: new_url>>), entries composed
+    (``compose_patch`` replayed over the stored mappings in era order) and
+    sorted by era ascending so `get(filter(...), 0)` picks the earliest
+    governing entry. None when no log exists (readers skip the join
+    entirely)."""
 
     def build(cat):
+        by_era: dict[int, dict] = {}
         rows = cat.read_small_rows(PATCH_TABLE, ["url", "new_url", "era"])
-        agg: dict[str, list] = {}
         for url, nu, e in rows:
-            agg.setdefault(url, []).append({"e": int(e), "nu": nu})
+            by_era.setdefault(int(e), {})[url] = nu
+        composed: list = []
+        for e in sorted(by_era):
+            composed = compose_patch(composed, by_era[e], e)
+        agg: dict[str, list] = {}
+        for url, nu, e in composed:
+            agg.setdefault(url, []).append({"e": e, "nu": nu})
         rows = [(u, sorted(v, key=lambda x: x["e"])) for u, v in agg.items()]
         return rows, "url string, __entries array<struct<e: bigint, nu: string>>"
 
     return sidecar_local_df(catalog, PATCH_TABLE, build)
 
 
-def url_tombstone_agg(catalog, table: str) -> DataFrame | None:
-    """A url-tombstone sidecar as a broadcast-ready LocalRelation:
-    (url, __tomb_era = newest tombstone era per url). The newest suffices —
-    a tombstone kills every row alive at its commit, so exemption from the
-    newest entry implies exemption from every older one."""
+def tombstone_agg(catalog) -> DataFrame | None:
+    """The stage-3 ``cluster_tombstones`` sidecar as a broadcast-ready
+    LocalRelation: (url, __tomb_era = newest tombstone era per url). The
+    newest suffices — a tombstone kills every row alive at its commit, so
+    exemption from the newest entry implies exemption from every older
+    one."""
 
     def build(cat):
-        rows = cat.read_small_rows(table, ["url", "era"])
         agg: dict[str, int] = {}
+        rows = cat.read_small_rows("cluster_tombstones", ["url", "era"])
         for url, e in rows:
             agg[url] = max(agg.get(url, 0), int(e))
         return list(agg.items()), "url string, __tomb_era bigint"
 
-    return sidecar_local_df(catalog, table, build)
-
-
-def tombstone_agg(catalog) -> DataFrame | None:
-    """The stage-3 ``cluster_tombstones`` sidecar (see url_tombstone_agg)."""
-    return url_tombstone_agg(catalog, "cluster_tombstones")
-
-
-def page_tombstone_agg(catalog) -> DataFrame | None:
-    """The ``page_tombstones`` sidecar governing the pages AND signatures
-    bucket tables (they are written in lockstep, one row per live url each,
-    so one sidecar governs both)."""
-    return url_tombstone_agg(catalog, PAGE_TOMBSTONES)
+    return sidecar_local_df(catalog, "cluster_tombstones", build)
 
 
 def apply_tombstones(df: DataFrame, tomb: DataFrame) -> DataFrame:
-    """Resolve a url-tombstone sidecar over an era-stamped table: a row
+    """Resolve ``tombstone_agg`` over an era-stamped table: a row
     survives iff no tombstone governs it (row.era >= newest tombstone era —
     rows written at or after the tombstone commit are re-adds). One
     broadcast join against a cached LocalRelation — map-side, zero scan
@@ -190,14 +188,14 @@ def _gov(entries_col, era_col):
 def apply_url_patch(
     df: DataFrame, patch: DataFrame, col: str = "url", drop_only: bool = False
 ) -> DataFrame:
-    """Resolve the retraction patch over a single-url table. Broadcast join
+    """Resolve the retraction log over a single-url table. Broadcast join
     only — a map-side pass over the table, zero wide shuffles.
 
-    drop_only: `seen`-style tables where a retracted url's row is dropped
-    outright (the replacement rep has its OWN row already); otherwise the
-    eager `relabel_url_table` semantics — NULL target drops the row, a
-    non-NULL target substitutes it (the replacement has byte-identical
-    content, so signature/window columns stay exact)."""
+    drop_only: `seen`-style tables (and the pages/signatures bucket
+    tables) where a retracted url's row is dropped outright (the
+    replacement rep has its OWN row already); otherwise a NULL target drops
+    the row and a non-NULL target substitutes it (the replacement has
+    byte-identical content, so signature/window columns stay exact)."""
     cols = df.columns
     p = patch.select(F.col("url").alias(col), "__entries")
     j = df.join(F.broadcast(p), col, "left")
@@ -212,7 +210,7 @@ def apply_url_patch(
 
 
 def apply_pair_patch(df: DataFrame, patch: DataFrame) -> DataFrame:
-    """Resolve the retraction patch over a (url_a, url_b, ...) pair table.
+    """Resolve the retraction log over a (url_a, url_b, ...) pair table.
 
     Untouched rows (neither endpoint governed) pass through map-side. The
     governed subset — bounded by the retracted reps' edge degree, not the
@@ -267,13 +265,13 @@ def compose_patch(
     mapping: dict[str, str | None],
     era: int,
 ) -> list[tuple[str, str | None, int]]:
-    """Driver-side transitive closure: compose the stored patch with a new
-    retraction mapping and append the new entries.
+    """Driver-side transitive closure: compose the entries of earlier eras
+    with one changeset's retraction mapping and append its entries.
 
-    Stored entries whose target is retracted in this batch follow the
+    Earlier entries whose target is retracted at this era follow the
     target's fate (keep the ORIGINAL era — the inherited rows' governance
     window is unchanged). New entries land at the new era. Bounded by the
-    patch ceiling — pure python over broadcast-sized data, the same shape
+    log ceiling — pure python over broadcast-sized data, the same shape
     as the stage-3 `_compose_label_patch`."""
     out = [
         (url, mapping.get(nu, nu) if nu is not None else None, e)

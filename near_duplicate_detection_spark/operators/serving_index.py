@@ -23,8 +23,8 @@ reads ≤ lsh_bands directories.
 
 Freshness is validated, never assumed (the materialized-view-with-snapshot
 pattern): the build stamps a sidecar with a signature of the SOURCE state
-(the signatures table's parquet file listing + the page_tombstones
-sidecar's), and the query path uses the index only when the current source
+(the signatures table's parquet file listing + the retract_patch
+log's), and the query path uses the index only when the current source
 state matches the stamp — any append, delete, update, or rebuild flips the
 signature and queries fall back to the exact full-view probe until
 ``build_band_index`` runs again. Stale reads are therefore impossible by
@@ -52,8 +52,8 @@ from near_duplicate_detection_spark.session import local_frame
 BAND_INDEX = "band_index"
 STAMP_TABLE = "band_index_stamp"
 # source tables whose physical state the stamp covers: the signatures rows
-# themselves plus the url-tombstone sidecar that governs their view
-_SOURCES = ("signatures", mor.PAGE_TOMBSTONES)
+# themselves plus the retraction log that governs their view
+_SOURCES = ("signatures", mor.PATCH_TABLE)
 
 
 def source_signature(catalog) -> str:
@@ -67,12 +67,12 @@ def source_signature(catalog) -> str:
 
 
 def build_band_index(catalog, cfg, partitions: int | None = None) -> None:
-    """Materialize ``band_index`` from the CURRENT tombstone-resolved
+    """Materialize ``band_index`` from the CURRENT log-resolved
     signatures view and stamp it against the current source state.
 
     One job: explode (map-side), one shuffle into P partitions, sorted by
     ``band_hash`` within each so probe literals prune parquet row groups.
-    Tombstones are resolved AT BUILD TIME, so index rows need no era column;
+    The log is resolved AT BUILD TIME, so index rows need no era column;
     any later retraction invalidates the stamp instead."""
     import shutil
 

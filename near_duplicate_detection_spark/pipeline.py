@@ -200,7 +200,7 @@ class NDDPipeline:
             return
         nonempty = [b for b in pending if b in stats]
         # era-stamped at write time (merge-on-read governance — rows written
-        # now postdate every stored page tombstone, see operators/mor.py)
+        # now postdate every stored retraction-log entry, see operators/mor.py)
         with_bucket = self._stamp_era(
             pages.withColumn("bucket", self._bucket_expr())
         )
@@ -350,16 +350,16 @@ class NDDPipeline:
         )
 
     def pages_table(self) -> DataFrame:
-        """The pages VIEW: physical rows minus the ``page_tombstones``
-        merge-on-read sidecar (explicit deletes/updates commit url
-        tombstones instead of rewriting buckets — see ``delete_pages``).
-        Every consumer must read through this, never ``catalog.read``
-        raw — the same contract as ``clusters_view``/``stage_view``."""
+        """The pages VIEW: physical rows minus the rows the ``retract_patch``
+        log governs (deletes/updates append log entries instead of
+        rewriting buckets — see ``_apply_changeset``). Every consumer must
+        read through this, never ``catalog.read`` raw — the same contract
+        as ``clusters_view``/``stage_view``."""
         return pages_view(self.catalog)
 
     def signatures_table(self) -> DataFrame:
-        """The signatures VIEW (same ``page_tombstones`` governance as
-        ``pages_table`` — the two tables are written in lockstep)."""
+        """The signatures VIEW (same log governance as ``pages_table`` —
+        the two tables are written in lockstep)."""
         return signatures_view(self.catalog)
 
     # ---------- stage 1 ----------
@@ -506,7 +506,7 @@ class NDDPipeline:
         wall_ms = int((time.monotonic() - t0) * 1000)
         # LIVE rows per bucket = the pages stats (one signature per live
         # page; physical footer counts would include merge-on-read dead
-        # rows awaiting a page_tombstones fold)
+        # rows awaiting a fold)
         cat.mark_complete(
             "signatures",
             h,
@@ -590,15 +590,10 @@ class NDDPipeline:
     def stage2_pairs(self, resume: bool = True) -> None:
         cfg, cat = self.cfg, self.catalog
         h = self.stage2_run_hash()
-        # a crashed retraction (marker up) may have mutated stage tables
-        # AFTER the lineage commit — e.g. crash mid-retract, then the
-        # snapshot reverts to the committed content: h matches but the
-        # tables don't. Never trust the early-return while the marker is up.
         if (
             resume
             and cat.completed_partitions("pairs", h)
             and cat.exists("pairs")
-            and not self._delta_suspect()
         ):
             return
         t0 = time.monotonic()
@@ -613,16 +608,7 @@ class NDDPipeline:
         # conservative window is merely wider.)
         import shutil as _shutil
 
-        wipe = ["window_index", "seen_2b", *self._STAGE3_LOG_TABLES]
-        if self._retract_inflight():
-            # a crashed retraction may also have mutated substring_pairs
-            # in a way the (signature-content-based) 2b run hash cannot
-            # see — wipe it so 2b is forced to rebuild, not early-return
-            wipe.append("substring_pairs")
-        wipe_patch = self._retract_inflight() or not cat.exists(
-            "substring_pairs"
-        )
-        for t in wipe:
+        for t in ("window_index", "seen_2b", *self._STAGE3_LOG_TABLES):
             _shutil.rmtree(cat.path(t), ignore_errors=True)
         # column-prune BEFORE the fp join: stage 2 only ever uses url+bands
         # (LSH) and url+simhash (fallback) — shipping the 128-perm minhash
@@ -719,22 +705,12 @@ class NDDPipeline:
             return _overlap(write_reps, verify_chain)[1]
 
         n_flagged = _overlap(write_seen, pairs_chain)[1]
-        if wipe_patch:
-            # the merge-on-read retraction patch dies with the last table
-            # it could govern: seen/reps/pairs were just rebuilt (fresh era
-            # stamps exempt them regardless), window_index/seen_2b wiped
-            # above — only a SURVIVING substring_pairs still needs it.
-            # AFTER the writes (not in the wipe list above): a crash
-            # between wipe and rebuild would have left stale governed
-            # tables with their patch gone.
-            _shutil.rmtree(cat.path("retract_patch"), ignore_errors=True)
         wall_ms = int((time.monotonic() - t0) * 1000)
         n_pairs = cat.count_rows("pairs")
         cat.mark_complete("pairs", h, {-1: n_pairs}, wall_ms)
-        # the committed rebuild supersedes any crashed retraction or delta
-        # append — only HERE are the crash markers cleared (every delta
-        # entry point refuses while either is up)
-        self._clear_retract_inflight()
+        # the committed rebuild supersedes any crashed changeset — only
+        # HERE is the crash marker cleared (every delta entry point refuses
+        # while it is up)
         self._clear_marker("delta.inflight")
         cat.add_metrics(
             "pairs",
@@ -748,13 +724,15 @@ class NDDPipeline:
 
     def stage2_pairs_delta(
         self,
-        retracted: list[str],
+        mapping: dict[str, str | None],
         new_sigs: DataFrame | None,
         n_new: int,
     ) -> tuple[DataFrame, DataFrame] | None:
         """Incremental stage 2 of one changeset (``_apply_changeset``): the
-        TARGETED RETRACTION of the ``retracted`` urls (``_stage2_retract`` —
-        drop or rep-substitute their rows), then the append of ``new_sigs``
+        pending stage-3 log edits of the changeset's retraction ``mapping``
+        (``_stage2_retract`` — the stage tables themselves are governed by
+        the log entries the core already appended), then the append of
+        ``new_sigs``
         (``n_new`` materialized signature rows of genuinely new or just
         retracted urls) against the persisted reps/pairs index instead of
         the corpus-wide band groupBy (operators/delta.py) — both under the
@@ -772,8 +750,8 @@ class NDDPipeline:
         )
 
         cfg, cat = self.cfg, self.catalog
-        if retracted:
-            self._stage2_retract(retracted)
+        if mapping:
+            self._stage2_retract(mapping)
         h = self.stage2_run_hash()  # after the changeset's lineage advance
         if new_sigs is None:
             cat.mark_complete("pairs", h, {-1: cat.count_rows("pairs")}, 0)
@@ -870,13 +848,13 @@ class NDDPipeline:
 
     # ---------- targeted retraction (edit/delete delta) ----------
 
-    # Two write-ahead markers guard the multi-table delta mutations, which
-    # have no atomic commit: `retract.inflight` brackets a targeted
-    # retraction's table rewrites, `delta.inflight` brackets a delta run's
-    # table APPENDS (set before the first append, cleared after the stage's
-    # mark_complete). Either marker up ⇒ a crash may have left partial
-    # stage-table state ⇒ every delta entry point refuses and the full
-    # ``stage2_pairs`` rebuild (whose overwrite is idempotent) clears both.
+    # One write-ahead marker guards the multi-table mutations, which have no
+    # atomic commit: `delta.inflight` brackets a changeset's log append and
+    # table appends (set before the first, cleared after the stage's
+    # mark_complete), every fold and every compact() rewrite. Marker up ⇒ a
+    # crash may have left partial table state ⇒ every delta entry point
+    # refuses, and ``run`` rebuilds every stage from scratch (whose
+    # overwrites are idempotent); ``stage2_pairs`` clears the marker.
     # This file-exists check replaced the round-3 anti-join "partial" guards
     # (reps ∪ pairs(a) ∪ pairs(b) vs seen, and the 2b mirror) — two full
     # edge-table scans per delta run whose only purpose was detecting the
@@ -904,18 +882,10 @@ class NDDPipeline:
         except FileNotFoundError:
             pass
 
-    def _retract_inflight(self) -> bool:
-        return self._marker_up("retract.inflight")
-
-    def _clear_retract_inflight(self) -> None:
-        self._clear_marker("retract.inflight")
-
     def _delta_suspect(self) -> bool:
-        """True when a crashed retraction OR a crashed delta append may have
-        left partial stage-table state — every delta entry point refuses."""
-        return self._marker_up("retract.inflight") or self._marker_up(
-            "delta.inflight"
-        )
+        """True when a crashed changeset, fold or compaction may have left
+        partial table state — every delta entry point refuses."""
+        return self._marker_up("delta.inflight")
 
     # ---- clusters append-era counter (compaction trigger) ----
     # Each merge-on-read commit appends exactly one clusters file; a
@@ -939,13 +909,14 @@ class NDDPipeline:
     def _reset_append_era(self) -> None:
         self._clear_marker("delta.appends")
 
-    # retraction-era counter for the stage-2/2b merge-on-read patch
-    # (operators/mor.py). MONOTONE and never reset: governed-table rows are
-    # stamped with the counter at write time, patch entries with the
-    # post-bump value, and an entry governs exactly the rows with
-    # row.era < entry.era — so stale rows surviving a partial rebuild
-    # (e.g. substring_pairs across a stage-2-only rewrite) stay correctly
-    # governed while freshly rebuilt rows are automatically exempt.
+    # retraction-era counter for the merge-on-read retraction log
+    # (operators/mor.py), bumped once per changeset with deletes or
+    # updates. MONOTONE and never reset: governed-table rows are stamped
+    # with the counter at write time, log entries with the post-bump value,
+    # and an entry governs exactly the rows with row.era < entry.era — so
+    # stale rows surviving a partial rebuild (e.g. substring_pairs across a
+    # stage-2-only rewrite) stay correctly governed while freshly rebuilt
+    # rows are automatically exempt.
     def _retract_era(self) -> int:
         """Missing file = era 0 (a catalog that never retracted). An
         EXISTING but unparsable file is refused, never read as 0: the
@@ -966,8 +937,8 @@ class NDDPipeline:
                 "retract.era counter file is corrupt — refusing to read it "
                 "as 0 (a reset clock makes stored sidecar entries govern "
                 "the wrong rows, silently). Heal: delete retract.era AND "
-                "every MOR sidecar dir (retract_patch, page_tombstones, "
-                "cluster_remap, cluster_tombstones), then full-rebuild via "
+                "every MOR sidecar dir (retract_patch, cluster_remap, "
+                "cluster_tombstones), then full-rebuild via "
                 "run() — it re-stamps every governed table at the fresh "
                 "clock."
             ) from None
@@ -991,13 +962,13 @@ class NDDPipeline:
 
     def _stamp_era(self, df: DataFrame) -> DataFrame:
         """Stamp governed-table rows with the current retraction era (rows
-        written NOW postdate every stored patch entry, so no entry governs
+        written NOW postdate every stored log entry, so no entry governs
         them — see operators/mor.py)."""
         return df.withColumn("era", F.lit(int(self._retract_era())))
 
     def stage_view(self, table: str) -> DataFrame:
         """A governed stage-2/2b table with the merge-on-read retraction
-        patch resolved (operators/mor.py) — broadcast join only, zero wide
+        log resolved (operators/mor.py) — broadcast join only, zero wide
         shuffles over the table. Every consumer of seen/reps/pairs/
         window_index/seen_2b/substring_pairs must read through this, never
         ``catalog.read(...)`` raw (same contract as ``clusters_view``)."""
@@ -1013,59 +984,20 @@ class NDDPipeline:
             df, patch, drop_only=table in mor.URL_DROP_TABLES
         )
 
-    def _stage2_retract(self, urls: list[str]) -> None:
-        """Merge-on-read retraction: retract edited/deleted urls from every
-        stage-2/2b table by committing ONE driver-written patch sidecar
-        (operators/mor.py ``retract_patch`` — url → new_url|NULL stamped
-        with this retraction's era) instead of rewriting the six
-        corpus-sized tables. The round-3 copy-on-write shape was O(change)
-        compute but one FULL rewrite per stage table per retraction —
-        O(corpus) write volume for every delete at the 10^12-doc contract;
-        it survives below as the FOLD (taken when the accumulated patch
-        would cross ``cfg.retract_patch_ceiling``, and schedulable off the
-        ingest path via ``compact()``). Readers resolve the patch through
-        ``stage_view`` — one broadcast join, the position-delete analog of
-        Iceberg v2 MOR.
-
-        Semantics (identical to the fold, pinned by tests): a retracted
-        exact-group representative's rows are INHERITED verbatim by the
-        min surviving member (identical content ⇒ identical signatures,
-        windows, and verified scores); everything else is dropped.
+    def _retraction_mapping(self, urls: list[str]) -> dict[str, str | None]:
+        """The retraction mapping of one changeset, read before its first
+        mutation: every retracted url → NULL (its rows die), except a
+        retracted exact-group representative, whose rows are INHERITED
+        verbatim by the min surviving member of its fp group (identical
+        content ⇒ identical signatures, windows, and verified scores).
         Reference: ``update_index`` removes a vanished video's entries
         without rebuilding the index (ndd/server_ndd.py:246-261).
 
-        Cost shape of the MOR commit: the mapping needs the broken reps'
-        fp groups — ONE map-side broadcast-pruned pass over the reps view
-        and one over the seen view (read-only scans with tiny outputs; an
-        fp-zone-mapped Iceberg layout would prune them further) — plus
-        delta-sized rewrites of the pending edges_new/urls_new logs and
-        two driver-side sidecar writes. No corpus-sized write anywhere.
-
-        Crash protocol: ``retract.inflight`` is set BEFORE the first
-        mutation and cleared after the last (multi-table, no atomic
-        commit); a crash leaves the marker up and every delta entry point
-        refuses until the full ``stage2_pairs`` rebuild clears it.
-
-        ``urls``: the distinct retracted urls, driver-side — the changeset
-        core has already bounded them by ``cfg.max_retract`` (the
-        broadcast-mapping ceiling)."""
-        import shutil as _shutil
-
-        import pandas as pd
-        import pyarrow as pa
-
-        from near_duplicate_detection_spark.operators import mor
-        from near_duplicate_detection_spark.operators.delta import (
-            relabel_pair_table,
-            relabel_url_table,
-        )
-
-        cat, cfg = self.catalog, self.cfg
-        n_ret = len(urls)
+        Cost: the broken reps' fp groups — ONE map-side broadcast-pruned
+        pass over the reps view and one over the seen view (read-only
+        scans with tiny outputs). ``urls``: the distinct retracted urls,
+        already bounded by ``cfg.max_retract`` (the broadcast ceiling)."""
         retracted = local_frame(self.spark, [(u,) for u in urls], "url string")
-        # --- the relabel/drop plan, from the VIEWS (prior patch applied):
-        # broken reps' fp groups → min surviving member per group. All
-        # joins broadcast; outputs retraction-sized.
         broken = (
             self.stage_view("reps")
             .join(F.broadcast(retracted), "url", "left_semi")
@@ -1087,72 +1019,30 @@ class NDDPipeline:
             .select("url", "new_url")
             .collect()
         }
-        mapping = {u: rep_new.get(u) for u in urls}
-        stored = (
-            cat.read_small_rows(mor.PATCH_TABLE, ["url", "new_url", "era"])
-            if cat.exists(mor.PATCH_TABLE)
-            else []
+        return {u: rep_new.get(u) for u in urls}
+
+    def _stage2_retract(self, mapping: dict[str, str | None]) -> None:
+        """Apply a changeset's retraction ``mapping`` to the pending stage-3
+        logs (delta-sized, rewritten eagerly): edges_new is relabeled under
+        the mapping so an uncommitted stage-3 delta stays consistent;
+        urls_new DROPS retracted urls outright (the replacement rep is an
+        OLD doc — substituting it would double it into stage 3's new_rows;
+        an edited url re-enters via the subsequent append delta); the
+        mapping is appended to urls_retracted, stage 3's dissolve log. The
+        six stage tables need nothing here: the core's log entries govern
+        them. Runs under the core's ``delta.inflight`` marker."""
+        import pyarrow as pa
+
+        from near_duplicate_detection_spark.operators.delta import (
+            relabel_pair_table,
         )
-        fold = len(stored) + n_ret > cfg.retract_patch_ceiling
-        # bump FIRST and unconditionally (fold included): stage 3's
-        # merge-on-read tombstones reuse this counter later in the same
-        # entry-point flow and need an era strictly above every
-        # pre-existing clusters row
-        era = self._bump_retract_era()
-        # consumed only by broadcast joins below
-        mapping_df = local_frame(
-            self.spark, sorted(mapping.items()), "url string, new_url string"
-        )
-        self._set_marker("retract.inflight")
-        if fold:
-            # copy-on-write fold: one broadcast-mapped rewrite per stage
-            # table, reading through the VIEWS so the stored patch folds in
-            # with this retraction's mapping; the fresh era stamp exempts
-            # the rewritten rows from every stored entry, then the patch
-            # dies. The replacement rep inherits the old rep's rows
-            # byte-for-byte (identical content).
-            cat.write(
-                self._stamp_era(
-                    self.stage_view("seen").join(
-                        F.broadcast(retracted), "url", "left_anti"
-                    )
-                ).localCheckpoint(),
-                "seen",
-            )
-            for t in ("reps", "window_index", "seen_2b"):
-                if cat.exists(t):
-                    cat.write(
-                        self._stamp_era(
-                            relabel_url_table(self.stage_view(t), mapping_df)
-                        ).localCheckpoint(),
-                        t,
-                    )
-            for t in ("pairs", "substring_pairs"):
-                if cat.exists(t):
-                    cat.write(
-                        self._stamp_era(
-                            relabel_pair_table(self.stage_view(t), mapping_df)
-                        ).localCheckpoint(),
-                        t,
-                    )
-            _shutil.rmtree(cat.path(mor.PATCH_TABLE), ignore_errors=True)
-            patch_rows = 0
-        else:
-            patch = mor.compose_patch(stored, mapping, era)
-            cat.write_small_local(
-                mor.PATCH_TABLE,
-                patch,
-                ["url", "new_url", "era"],
-                types=[pa.string(), pa.string(), pa.int64()],
-            )
-            patch_rows = len(patch)
-        # pending stage-3 logs are delta-sized — eager rewrite either way.
-        # edges_new: relabeled under the mapping so an uncommitted stage-3
-        # delta stays consistent; urls_new DROPS retracted urls outright
-        # (the replacement rep is an OLD doc — substituting it would double
-        # it into stage 3's new_rows); an edited url re-enters via the
-        # subsequent append delta.
+
+        cat = self.catalog
+        rows = sorted(mapping.items())
         if cat.exists("edges_new"):
+            mapping_df = local_frame(
+                self.spark, rows, "url string, new_url string"
+            )
             cat.write(
                 relabel_pair_table(
                     cat.read("edges_new"), mapping_df
@@ -1160,29 +1050,21 @@ class NDDPipeline:
                 "edges_new",
             )
         if cat.exists("urls_new"):
+            retracted = local_frame(
+                self.spark, [(u,) for u, _ in rows], "url string"
+            )
             cat.write(
                 cat.read("urls_new")
                 .join(F.broadcast(retracted), "url", "left_anti")
                 .localCheckpoint(),
                 "urls_new",
             )
-        # stage-3 dissolve log LAST among the mutations (crash before this
-        # append → the marker still routes everything to the full path):
-        # driver-side parquet append, zero Spark jobs
+        # dissolve log LAST (crash before this append → the marker still
+        # routes everything to the full path): driver-side, zero Spark jobs
         cat._append_small(
             "urls_retracted",
-            pd.DataFrame(sorted(mapping.items()), columns=["url", "new_url"]),
+            pd.DataFrame(rows, columns=["url", "new_url"]),
             pa.schema([("url", pa.string()), ("new_url", pa.string())]),
-        )
-        self._clear_retract_inflight()
-        cat.add_metrics(
-            "pairs",
-            {
-                "retracted_docs": n_ret,
-                "retract_mor_commit": 0 if fold else 1,
-                "retract_fold": 1 if fold else 0,
-                "retract_patch_rows": patch_rows,
-            },
         )
 
     # ---------- stage 2b ----------
@@ -1190,8 +1072,7 @@ class NDDPipeline:
     def stage2b_substring(self, resume: bool = True) -> None:
         cfg, cat = self.cfg, self.catalog
         h = self.stage2b_run_hash()
-        # exists guard: a wiped table must rebuild even if lineage matches
-        # (stage2_pairs wipes substring_pairs after a crashed retraction)
+        # exists guard: a missing table must rebuild even if lineage matches
         if (
             resume
             and cat.completed_partitions("substring_pairs", h)
@@ -1900,7 +1781,13 @@ class NDDPipeline:
         resume: bool = True,
         substring_pass: bool = True,
     ) -> DataFrame:
-        """Full build. `pages=None` reuses the catalog's existing pages table."""
+        """Full build. `pages=None` reuses the catalog's existing pages table.
+        While a crash marker is up the catalog's physical state is suspect
+        (a killed changeset may have appended rows its lineage never
+        recorded), so every stage rebuilds from scratch instead of
+        trusting its lineage."""
+        if self._delta_suspect():
+            resume = False
         if pages is not None:
             self.stage0_ingest(pages, resume)
         self.stage1_signatures(resume)
@@ -2176,21 +2063,25 @@ class NDDPipeline:
         - lineage merged once: committed − dying rows + upserts (mod-2^64
           checksum algebra; bucket = f(url), so a replaced row re-enters
           its own bucket);
-        - stages 0/1, merge-on-read: ONE ``page_tombstones`` append for the
-          dying urls (rows stamped AT its era are the re-adds and survive —
-          operators/mor.py), or past ``page_tombstone_ceiling`` the
-          copy-on-write fold; then the pages append and the batch signing +
-          signatures append, overlapped — no bucket is rewritten;
-        - stage 2: ``stage2_pairs_delta`` (retraction, then append, under
-          the one final run hash); stage 2b: ``stage2b_delta``; stage 3:
-          ``stage3_clusters_delta``, or the full CC over the committed edge
-          tables past its broadcast ceilings.
+        - retraction, merge-on-read: the mapping of the dying urls is read
+          first (``_retraction_mapping``), then the era bumps ONCE and ONE
+          ``retract_patch`` log file holds the mapping at that era (rows
+          stamped AT the era are the re-adds and survive —
+          operators/mor.py); it governs pages, signatures and the six
+          stage-2/2b tables. Past ``retract_patch_ceiling`` stored log rows,
+          ``_fold`` reclaims them physically;
+        - stages 0/1: the pages append and the batch signing + signatures
+          append, overlapped — no bucket is rewritten;
+        - stage 2: ``stage2_pairs_delta`` (stage-3 log edits of the
+          retraction, then the append, under the one final run hash); stage
+          2b: ``stage2b_delta``; stage 3: ``stage3_clusters_delta``, or the
+          full CC over the committed edge tables past its broadcast
+          ceilings.
 
-        Crash protocol: ``delta.inflight`` brackets the stage-0/1 commit and
-        each stage's appends, ``retract.inflight`` the stage-2/2b patch;
-        after a crash every delta entry refuses and
-        ``run_incremental(full_snapshot)`` heals through the resume path."""
-        import pandas as pd
+        Crash protocol: ``delta.inflight`` brackets the log append, the
+        stage-0/1 commit and each stage's appends; after a crash every
+        delta entry refuses and ``run_incremental(full_snapshot)`` heals
+        through a full rebuild."""
         import pyarrow as pa
 
         from near_duplicate_detection_spark.operators import mor
@@ -2248,23 +2139,12 @@ class NDDPipeline:
             gone_df = local_frame(
                 self.spark, [(u,) for u in gone], "url string"
             )
-            # bucket = f(url) through Spark's own xxhash64 — a projection of
-            # a LocalRelation, evaluated without a job
-            buckets = sorted(
-                {
-                    int(r["b"])
-                    for r in gone_df.select(
-                        self._bucket_expr().alias("b")
-                    ).collect()
-                }
-            )
-            in_buckets = F.col("bucket").isin(buckets)
             # pages urls are unique by build invariant, so the matched-row
             # count is the number of handed urls actually present
             del_stats = {
                 int(r["bucket"]): (int(r["rows"]), _wrap64(int(r["cks"])))
                 for r in self.pages_table()
-                .where(in_buckets)
+                .where(F.col("bucket").isin(sorted(self._buckets_of(gone))))
                 .join(F.broadcast(gone_df), "url", "left_semi")
                 .withColumn("h", F.xxhash64("url", "text"))
                 .groupBy("bucket")
@@ -2294,50 +2174,35 @@ class NDDPipeline:
 
         if merged:
             t0 = time.monotonic()
-            fold = False
+            mapping, era = {}, None
             if gone:
-                stored = (
-                    cat.count_rows(mor.PAGE_TOMBSTONES)
-                    if cat.exists(mor.PAGE_TOMBSTONES)
-                    else 0
-                )
-                fold = stored + len(gone) > cfg.page_tombstone_ceiling
-                if fold:
-                    # over the sidecar ceiling: reclaim the stored tombstones
-                    # physically first (self-bracketing), then drop THIS
-                    # batch's rows copy-on-write — ceiling 0 disables
-                    # merge-on-read entirely
-                    self._fold_page_tombstones()
+                mapping = self._retraction_mapping(gone)
                 era = self._bump_retract_era()
             self._set_marker("delta.inflight")
-            if fold:
-                for table in ("pages", "signatures"):
-                    # checkpointed: the overwrite replaces partitions the
-                    # plan reads
-                    survivors = (
-                        cat.read(table)
-                        .where(in_buckets)
-                        .join(F.broadcast(gone_df), "url", "left_anti")
-                        .localCheckpoint()
-                    )
-                    cat.write(
-                        survivors,
-                        table,
-                        partition_by=["bucket"],
-                        mode="overwrite",
-                        max_records_per_file=2048,
-                    )
-                    for b in buckets:
-                        if del_stats[b][0] == pstats[b][0]:
-                            # dynamic overwrite never touches a partition
-                            # with zero output rows — drop the emptied dir
-                            # (before the appends below refill it)
-                            cat.drop_partition(table, b)
-            elif gone:
+            if gone:
                 cat._append_small(
-                    mor.PAGE_TOMBSTONES,
-                    pd.DataFrame({"url": gone, "era": era}),
-                    pa.schema([("url", pa.string()), ("era", pa.int64())]),
+                    mor.PATCH_TABLE,
+                    pd.DataFrame(
+                        [(u, nu, era) for u, nu in sorted(mapping.items())],
+                        columns=["url", "new_url", "era"],
+                    ),
+                    pa.schema(
+                        [("url", pa.string()), ("new_url", pa.string()),
+                         ("era", pa.int64())]
+                    ),
+                )
+                log_rows = cat.count_rows(mor.PATCH_TABLE)
+                fold = log_rows > cfg.retract_patch_ceiling
+                if fold:
+                    self._fold()
+                cat.add_metrics(
+                    "pairs",
+                    {
+                        "retracted_docs": len(gone),
+                        "retract_mor_commit": 0 if fold else 1,
+                        "retract_fold": 1 if fold else 0,
+                        "retract_patch_rows": 0 if fold else log_rows,
+                    },
                 )
 
             def commit(table: str, rows: DataFrame | None) -> None:
@@ -2387,11 +2252,10 @@ class NDDPipeline:
                 "pages",
                 {
                     "buckets_appended": len(add_stats),
-                    "buckets_rewritten": len(buckets) if fold else 0,
+                    "buckets_rewritten": 0,
                     "appended_docs_ingested": n_up,
-                    # tombstoned rows: deleted AND replaced urls
+                    # retracted rows: deleted AND replaced urls
                     "deleted_docs": len(gone),
-                    "page_tombstone_rows": 0 if fold else len(gone),
                     "wall_ms": wall_ms,
                 },
             )
@@ -2405,7 +2269,7 @@ class NDDPipeline:
                 },
             )
             appended = self.stage2_pairs_delta(
-                gone,
+                mapping,
                 None
                 if new_sigs is None
                 else new_sigs.select("url", "fp", "bands", "simhash"),
@@ -2437,69 +2301,85 @@ class NDDPipeline:
         ``_apply_changeset``."""
         return self._apply_changeset(new_pages, None, substring_pass)
 
-    def _fold_page_tombstones(self) -> int:
-        """Physically reclaim the ``page_tombstones`` merge-on-read sidecar
-        (operators/mor.py): rewrite ONLY the buckets holding governed urls
-        — partition-pruned scans of pages and signatures with the tombstone
-        join resolved — then drop the sidecar and any bucket whose live
-        rows all died (lineage already records 0 for it). Pure physical
-        reorganization: both views are row-identical before and after, no
-        lineage row advances (the committed LIVE content never changed).
-        Bounded by the sidecar (``page_tombstone_ceiling``), never the
-        corpus. Crash protocol: ``delta.inflight`` brackets the rewrites; a
-        crash mid-fold leaves views CORRECT (rewritten rows keep their
-        original eras, so the still-present sidecar governs nothing that
-        survived) and the marker routes every delta entry to the full heal.
-        Returns the number of tombstone rows folded."""
+    def _buckets_of(self, urls) -> set[int]:
+        """The url-hash buckets of driver-known urls: Spark's own xxhash64
+        over a projection of a LocalRelation, evaluated without a job."""
+        df = local_frame(self.spark, [(u,) for u in urls], "url string")
+        rows = df.select(self._bucket_expr().alias("b")).collect()
+        return {int(r["b"]) for r in rows}
+
+    def _fold(self, extra_buckets=()) -> dict:
+        """The one fold routine (inline past ``retract_patch_ceiling`` and
+        in ``compact()``): physically reclaim the ``retract_patch`` log and
+        rewrite ``extra_buckets`` of the bucket tables. Runs under the
+        caller's ``delta.inflight`` marker.
+
+        - pages / signatures: the buckets holding a logged url, plus
+          ``extra_buckets``, are rewritten from their views — one file per
+          bucket, row eras kept — and a bucket whose view came out empty is
+          dropped (decided from this output: inside a changeset the lineage
+          still lags);
+        - the six stage-2/2b tables are rewritten from ``stage_view`` with
+          a fresh era stamp;
+        - the log is removed.
+
+        Pure physical reorganization: every view is row-identical before
+        and after, and no lineage row advances. A crash mid-fold leaves the
+        views correct (a rewritten row is one its view kept, so the
+        remaining log governs it no more than before) and the marker routes
+        every delta entry to the full rebuild. Returns ``{table:
+        (files_before, files_after)}`` for every table it rewrote."""
         import shutil as _shutil
 
         from near_duplicate_detection_spark.operators import mor
 
-        cat, cfg = self.catalog, self.cfg
-        if not cat.exists(mor.PAGE_TOMBSTONES):
-            return 0
-        n_tomb = cat.count_rows(mor.PAGE_TOMBSTONES)
-        tomb = mor.page_tombstone_agg(cat)
-        # governed buckets from the sidecar urls: one tiny job over the
-        # single-slice LocalRelation (bucket = f(url) needs Spark's xxhash64)
-        buckets = sorted(
-            int(r["bucket"])
-            for r in tomb.withColumn("bucket", self._bucket_expr())
-            .select("bucket")
-            .distinct()
-            .collect()
-        )
-        bucket_pred = F.col("bucket").isin([int(b) for b in buckets])
-        live_rows = cat.latest_partition_stats("pages", cfg.stage1_hash())
-        self._set_marker("delta.inflight")
-        for table in ("pages", "signatures"):
-            # localCheckpoint: the overwrite replaces partitions the plan
-            # reads (the same source-break rule as every bucket rewrite)
-            live = mor.apply_tombstones(
-                cat.read(table).where(bucket_pred), tomb
-            ).localCheckpoint()
-            cat.write(
-                live,
-                table,
-                partition_by=["bucket"],
-                mode="overwrite",
-                max_records_per_file=2048,
+        cat = self.catalog
+        has_log = cat.exists(mor.PATCH_TABLE)
+        buckets = set(extra_buckets)
+        if has_log:
+            buckets |= self._buckets_of(
+                {u for (u,) in cat.read_small_rows(mor.PATCH_TABLE, ["url"])}
             )
-            for b in buckets:
-                if live_rows.get(b, (0, 0))[0] == 0:
-                    # dynamic overwrite never touches a partition with zero
-                    # output rows — drop fully-dead bucket dirs explicitly
-                    cat.drop_partition(table, b)
-        _shutil.rmtree(cat.path(mor.PAGE_TOMBSTONES), ignore_errors=True)
-        self._clear_marker("delta.inflight")
-        cat.add_metrics(
-            "pages",
-            {
-                "tombstones_folded": n_tomb,
-                "buckets_rewritten": len(buckets),
-            },
-        )
-        return n_tomb
+        out: dict = {}
+        for table, view in (
+            ("pages", pages_view),
+            ("signatures", signatures_view),
+        ):
+            if not buckets or not cat.exists(table):
+                continue
+            before = cat.file_count(table)
+            # localCheckpoint: the overwrite replaces partitions the plan
+            # reads; repartition: bucket-pure → one file per bucket
+            live = (
+                view(cat)
+                .where(F.col("bucket").isin(sorted(buckets)))
+                .repartition("bucket")
+                .localCheckpoint()
+            )
+            kept = {
+                r["bucket"] for r in live.select("bucket").distinct().collect()
+            }
+            cat.write(live, table, partition_by=["bucket"])
+            # dynamic overwrite never touches a partition with zero output
+            # rows — drop the emptied dirs explicitly
+            for b in sorted(buckets - kept):
+                cat.drop_partition(table, b)
+            out[table] = (before, cat.file_count(table))
+        if has_log:
+            n_log = cat.count_rows(mor.PATCH_TABLE)
+            for table in mor.GOVERNED_TABLES:
+                if cat.exists(table):
+                    cat.write(
+                        self._stamp_era(
+                            self.stage_view(table)
+                        ).localCheckpoint(),
+                        table,
+                    )
+            out[mor.PATCH_TABLE] = (cat.file_count(mor.PATCH_TABLE), 0)
+            _shutil.rmtree(cat.path(mor.PATCH_TABLE), ignore_errors=True)
+            cat.add_metrics("compaction", {"retract_patch_rows_folded": n_log})
+        cat.add_metrics("pages", {"buckets_rewritten": len(buckets)})
+        return out
 
     def delete_pages(
         self,
@@ -2543,11 +2423,12 @@ class NDDPipeline:
           via the staged ``clusters_next`` → atomic-rename swap, wipe the
           sidecar, reset the era counter. Readers then skip the patch join
           entirely.
-        - ``pages`` / ``signatures``: buckets holding more than one parquet
-          file (every delta append/upsert adds one file per touched bucket)
-          are rewritten in place by dynamic partition overwrite — ONE
-          shuffle over only the fragmented buckets' rows (partition-pruned
-          scan), bucket-pure partitions so each bucket lands as one file.
+        - the ``retract_patch`` log and fragmented buckets: ONE ``_fold``
+          call with the buckets of ``pages`` / ``signatures`` holding more
+          than one parquet file (every delta append/upsert adds one file
+          per touched bucket) — each table is written once, each bucket at
+          most once, and the log's governed tables are rewritten from their
+          views.
 
         The append path folds on its own once
         ``cfg.clusters_append_ceiling`` eras accumulate; this entry point
@@ -2559,9 +2440,9 @@ class NDDPipeline:
         marker is up or a stage-3 log is pending — maintenance must not
         interleave with a mid-flight delta. Crash protocol: the
         ``delta.inflight`` marker brackets every destructive window (swap
-        and bucket overwrites); a crash leaves the marker, all delta entry
-        points refuse, and ``run_incremental(full_snapshot)`` heals via the
-        per-bucket checksum algebra, exactly as for a crashed retraction.
+        and fold); a crash leaves the marker, all delta entry points
+        refuse, and ``run_incremental(full_snapshot)`` heals through a full
+        rebuild, exactly as for a crashed changeset.
         Returns ``{table: (files_before, files_after), ...}``."""
         import os as _os
         import shutil as _shutil
@@ -2573,82 +2454,36 @@ class NDDPipeline:
             refuse("stage-3 log pending (mid-flight delta)")
         t0 = time.monotonic()
         out: dict = {}
-        if cat.exists("clusters") and (
+        from near_duplicate_detection_spark.operators import mor as _mor
+
+        fold_clusters = cat.exists("clusters") and (
             cat.exists("cluster_remap")
             or cat.exists("cluster_tombstones")
             or self._append_era() > 0
-        ):
+        )
+        frag = set(cat.fragmented_partitions("pages"))
+        frag |= set(cat.fragmented_partitions("signatures"))
+        if fold_clusters:
             before = cat.file_count("clusters")
             _shutil.rmtree(cat.path("clusters_next"), ignore_errors=True)
             # the view resolves tombstones + label patch → both folded
             cat.write(self._stamp_era(self.clusters_view()), "clusters_next")
+        if fold_clusters or frag or cat.exists(_mor.PATCH_TABLE):
             self._set_marker("delta.inflight")
-            _shutil.rmtree(cat.path("cluster_remap"), ignore_errors=True)
-            _shutil.rmtree(cat.path("clusters"), ignore_errors=True)
-            _os.rename(cat.path("clusters_next"), cat.path("clusters"))
-            # after the swap: era-inert against the staged rows, so the
-            # swap→wipe crash window never resurrects dead rows
-            _shutil.rmtree(cat.path("cluster_tombstones"), ignore_errors=True)
-            self._reset_append_era()
+            if fold_clusters:
+                _shutil.rmtree(cat.path("cluster_remap"), ignore_errors=True)
+                _shutil.rmtree(cat.path("clusters"), ignore_errors=True)
+                _os.rename(cat.path("clusters_next"), cat.path("clusters"))
+                # after the swap: era-inert against the staged rows, so the
+                # swap→wipe crash window never resurrects dead rows
+                _shutil.rmtree(
+                    cat.path("cluster_tombstones"), ignore_errors=True
+                )
+                self._reset_append_era()
+                out["clusters"] = (before, cat.file_count("clusters"))
+            if frag or cat.exists(_mor.PATCH_TABLE):
+                out.update(self._fold(frag))
             self._clear_marker("delta.inflight")
-            out["clusters"] = (before, cat.file_count("clusters"))
-        from near_duplicate_detection_spark.operators import mor as _mor
-
-        if cat.exists(_mor.PATCH_TABLE):
-            # fold the merge-on-read RETRACTION patch (operators/mor.py):
-            # rewrite each governed stage-2/2b table from its view — the
-            # broadcast-resolved logical rows — with a fresh era stamp,
-            # then drop the sidecar. Readers skip the patch join entirely
-            # afterwards. Crash protocol: retract.inflight brackets the
-            # multi-table rewrite (same marker as a mid-flight retraction);
-            # a crash routes every delta entry to the full rebuild.
-            n_patch = cat.count_rows(_mor.PATCH_TABLE)
-            self._set_marker("retract.inflight")
-            for table in _mor.GOVERNED_TABLES:
-                if cat.exists(table):
-                    cat.write(
-                        self._stamp_era(self.stage_view(table))
-                        .localCheckpoint(),
-                        table,
-                    )
-            _shutil.rmtree(cat.path(_mor.PATCH_TABLE), ignore_errors=True)
-            self._clear_retract_inflight()
-            out["retract_patch"] = (1, 0)
-            cat.add_metrics(
-                "compaction", {"retract_patch_rows_folded": n_patch}
-            )
-        if cat.exists(_mor.PAGE_TOMBSTONES):
-            # fold the merge-on-read PAGE tombstones (explicit deletes/
-            # updates commit url tombstones instead of bucket rewrites):
-            # rewrite only the governed buckets of pages/signatures with
-            # the tombstone join resolved, drop the sidecar. Readers then
-            # skip the tombstone join entirely.
-            folded = self._fold_page_tombstones()
-            out["page_tombstones"] = (1, 0)
-            cat.add_metrics(
-                "compaction", {"page_tombstone_rows_folded": folded}
-            )
-        for table in ("pages", "signatures"):
-            if not cat.exists(table):
-                continue
-            frag = cat.fragmented_partitions(table)
-            if not frag:
-                continue
-            before = cat.file_count(table)
-            # localCheckpoint: materialize the fragmented rows BEFORE the
-            # overwrite — the write would otherwise read the very files it
-            # replaces. Bounded by the fragmented buckets' size, not the
-            # corpus (partition-pruned scan).
-            df = (
-                cat.read(table)
-                .where(F.col("bucket").isin(frag))
-                .repartition("bucket")  # bucket-pure → one file per bucket
-                .localCheckpoint()
-            )
-            self._set_marker("delta.inflight")
-            cat.write(df, table, partition_by=["bucket"])
-            self._clear_marker("delta.inflight")
-            out[table] = (before, cat.file_count(table))
         # a serving operator who built a band_index wants it to survive
         # maintenance: any bucket rewrite above flipped its source stamp,
         # so refresh it here (off the ingest path — exactly where the
@@ -2673,7 +2508,7 @@ class NDDPipeline:
         """Materialize the partition-pruned query probe index
         (operators/serving_index.py): ``band_index`` partitioned by
         ``xxhash64(band_hash) % cfg.band_index_partitions``, stamped against
-        the current signatures + page_tombstones state. ``query_top_k``
+        the current signatures + retract_patch state. ``query_top_k``
         uses it only while that stamp matches — any later commit routes
         queries back to the exact full-view probe, so this is pure derived
         state a serving operator refreshes on their own cadence (the
@@ -2692,29 +2527,32 @@ class AppendRefusedError(RuntimeError):
     ``run_incremental(full_snapshot)`` or a full ``run()``."""
 
 
-def pages_view(catalog: StageCatalog) -> DataFrame:
-    """The pages table with the ``page_tombstones`` merge-on-read sidecar
-    resolved (operators/mor.py): explicit deletes/updates append url
-    tombstones instead of rewriting every affected bucket, and readers drop
-    the governed rows through one broadcast join against a cached
-    LocalRelation (era semantics: a row written at or after the tombstone's
-    commit is a re-add and survives). Physical reclamation happens at the
-    ``page_tombstone_ceiling`` fold or via ``compact()``."""
+def _log_view(catalog: StageCatalog, table: str) -> DataFrame:
+    """A bucket table with the ``retract_patch`` log resolved drop-only
+    (operators/mor.py): deletes/updates append log entries instead of
+    rewriting every affected bucket, and readers drop a row iff some entry
+    is newer than it, through one broadcast join against a cached
+    LocalRelation (a row written at or after an entry's era is a re-add
+    and survives). Physical reclamation happens at the
+    ``retract_patch_ceiling`` fold or via ``compact()``."""
     from near_duplicate_detection_spark.operators import mor
 
-    df = catalog.read("pages")
-    tomb = mor.page_tombstone_agg(catalog)
-    return df if tomb is None else mor.apply_tombstones(df, tomb)
+    df = catalog.read(table)
+    patch = mor.patch_agg(catalog)
+    if patch is None:
+        return df
+    return mor.apply_url_patch(df, patch, drop_only=True)
+
+
+def pages_view(catalog: StageCatalog) -> DataFrame:
+    """The pages table with the retraction log resolved (``_log_view``)."""
+    return _log_view(catalog, "pages")
 
 
 def signatures_view(catalog: StageCatalog) -> DataFrame:
-    """The signatures table under the same ``page_tombstones`` governance
-    as ``pages_view`` (one row per live url each, written in lockstep)."""
-    from near_duplicate_detection_spark.operators import mor
-
-    df = catalog.read("signatures")
-    tomb = mor.page_tombstone_agg(catalog)
-    return df if tomb is None else mor.apply_tombstones(df, tomb)
+    """The signatures table under the same log governance as
+    ``pages_view`` (one row per live url each, written in lockstep)."""
+    return _log_view(catalog, "signatures")
 
 
 def patched_clusters(catalog: StageCatalog) -> DataFrame:

@@ -32,9 +32,8 @@ def test_execution_knobs_do_not_touch_stage_hashes():
         max_retract=1,
         max_remap=1,
         driver_cc_max=1,
-        retract_patch_ceiling=1,
+        retract_patch_ceiling=0,
         clusters_append_ceiling=1,
-        page_tombstone_ceiling=0,
         query_collect_ceiling=0,
     )
     assert changed.stage1_hash() == BASE.stage1_hash()

@@ -1,4 +1,4 @@
-"""Crash-point enumeration for the changeset core.
+"""Crash-point enumeration for the changeset core and for ``compact()``.
 
 One mixed ``run_incremental`` (one appended doc, one edited exact-dup
 representative, one deleted near-dup member) is killed at every catalog
@@ -12,8 +12,15 @@ kill point k:
 2. ``run_incremental`` of the intended snapshot heals the catalog to the
    from-scratch rebuild's cluster partition, with no marker left up.
 
-The last case kills nothing: it pins the number of mutation points, so a
-change to the commit protocol must revisit this enumeration.
+One ``compact()`` — the shared fold over retraction-log entries and
+fragmented buckets, plus the clusters patch fold — is killed the same way,
+on a catalog holding all three. For every kill point: with no marker up,
+every view equals the view before the ``compact()``; and
+``run_incremental`` of the catalog's snapshot heals to the rebuild's
+partition.
+
+The last case of each kills nothing: it pins the number of mutation
+points, so a change to a commit protocol must revisit this enumeration.
 """
 
 from __future__ import annotations
@@ -27,7 +34,7 @@ from pyspark.sql import functions as F
 from near_duplicate_detection_spark.config import NDDConfig
 from near_duplicate_detection_spark.lineage import StageCatalog
 from near_duplicate_detection_spark.pipeline import NDDPipeline
-from near_duplicate_detection_spark.sources.pages import generate_pages
+from near_duplicate_detection_spark.sources.pages import generate_pages, url_of
 
 CFG = NDDConfig(num_buckets=2)
 N = 40
@@ -41,7 +48,12 @@ CATALOG_MUTATORS = (
 PIPELINE_MUTATORS = ("_set_marker", "_clear_marker", "_write_counter")
 # mutation points of one mixed run on the base catalog (lineage rows are
 # counted once, at mark_complete; metrics rows are advisory, not counted)
-N_MUTATIONS = 34
+N_MUTATIONS = 30
+# mutation points of one compact() on the compact base catalog
+N_COMPACT = 12
+# sorts below every generated url, so appending it as an exact copy of
+# url 11 relabels url 11's cluster: a cluster_remap entry for compact()
+COPY_URL = "https://aaa.example.com/p/copy-0000000011"
 
 
 class Crash(RuntimeError):
@@ -154,4 +166,80 @@ def test_crash_at_every_mutation_heals(
     healed = pipe.run_incremental(snapshot())
     assert _partition(healed) == part_after
     assert _pages(pipe.pages_table()) == pages_after
+    assert not pipe._delta_suspect()
+
+
+def _views(pipe):
+    """Every read view compact() must leave row-identical."""
+    dfs = {
+        "pages": pipe.pages_table().select("url", "text"),
+        "signatures": pipe.signatures_table().select("url", "fp"),
+    }
+    for t, cols in (
+        ("seen", ["url", "fp"]),
+        ("reps", ["url", "fp"]),
+        ("pairs", ["url_a", "url_b"]),
+        ("window_index", ["url", "win_hash"]),
+        ("seen_2b", ["url"]),
+        ("substring_pairs", ["url_a", "url_b"]),
+    ):
+        dfs[t] = pipe.stage_view(t).select(*cols)
+    out = {t: frozenset(map(tuple, df.toPandas().values)) for t, df in dfs.items()}
+    out["clusters"] = _partition(pipe.clusters_view())
+    return out
+
+
+@pytest.fixture(scope="module")
+def compact_base(spark, tmp_path_factory, base):
+    """The base catalog after an append (fragmented buckets, and a
+    cluster_remap entry from COPY_URL) and a delete (retraction-log entries
+    and cluster tombstones), with its views, its snapshot and the
+    rebuild's partition."""
+    d = str(tmp_path_factory.mktemp("ndd_cp_cbase") / "cat")
+    shutil.copytree(base[0], d)
+    pipe = NDDPipeline(spark, CFG, d)
+    copy = (
+        generate_pages(spark, N)
+        .where(F.col("url") == url_of(11))
+        .withColumn("url", F.lit(COPY_URL))
+    )
+    added = generate_pages(spark, N + 3, start=N).unionByName(copy)
+    pipe.append_pages(added)
+    pipe.delete_pages([url_of(23)])
+    cat = pipe.catalog
+    assert cat.exists("retract_patch") and cat.exists("cluster_remap")
+    assert cat.fragmented_partitions("pages")
+    path = str(tmp_path_factory.mktemp("ndd_cp_csnap") / "snap")
+    (
+        generate_pages(spark, N)
+        .unionByName(added)
+        .where(F.col("url") != url_of(23))
+        .write.parquet(path)
+    )
+    snap = lambda: spark.read.parquet(path)  # noqa: E731
+    full = NDDPipeline(spark, CFG, str(tmp_path_factory.mktemp("ndd_cp_cfull")))
+    return d, _views(pipe), snap, _partition(full.run(snap()))
+
+
+@pytest.mark.parametrize("k", range(1, N_COMPACT + 2))
+def test_compact_crash_at_every_mutation_heals(
+    spark, tmp_path_factory, monkeypatch, compact_base, k
+):
+    base_dir, views_before, snapshot, part_rebuilt = compact_base
+    d = str(tmp_path_factory.mktemp(f"ndd_cpc_{k}") / "cat")
+    shutil.copytree(base_dir, d)
+    pipe = NDDPipeline(spark, CFG, d)
+    injector = FaultInjector(k)
+    injector.install(monkeypatch)
+    if k <= N_COMPACT:
+        with pytest.raises(Crash):
+            pipe.compact()
+    else:
+        pipe.compact()
+        assert injector.count == N_COMPACT
+    monkeypatch.undo()
+
+    if not pipe._delta_suspect():
+        assert _views(pipe) == views_before
+    assert _partition(pipe.run_incremental(snapshot())) == part_rebuilt
     assert not pipe._delta_suspect()

@@ -19,6 +19,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from near_duplicate_detection_spark.config import NDDConfig
+from near_duplicate_detection_spark.operators import mor
 from near_duplicate_detection_spark.pipeline import (
     AppendRefusedError,
     NDDPipeline,
@@ -103,7 +104,7 @@ def test_delete_pages_matches_full_rebuild_zero_resigning(
     assert pipe.signatures_table().count() == N - len(DEL_IDS)
     assert pipe.catalog.count_rows("pages") == N
     assert pipe.catalog.count_rows("signatures") == N
-    assert pipe.catalog.count_rows("page_tombstones") == len(DEL_IDS)
+    assert pipe.catalog.count_rows(mor.PATCH_TABLE) == len(DEL_IDS)
     m = pipe.catalog.read("metrics").toPandas()
     assert (
         m[(m.stage == "pages") & (m.key == "deleted_docs")].value
@@ -169,7 +170,7 @@ def test_delete_pages_drops_emptied_bucket(
         assert not os.path.isdir(
             os.path.join(pipe.catalog.path(t), "bucket=1")
         )
-    assert not pipe.catalog.exists("page_tombstones")
+    assert not pipe.catalog.exists(mor.PATCH_TABLE)
     assert pipe.catalog.count_rows("pages") == N - len(doomed)
     # and the catalog still accepts further deltas (append lands cleanly)
     clusters = pipe.append_pages(generate_pages(spark, 210, start=N))

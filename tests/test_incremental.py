@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from near_duplicate_detection_spark.config import NDDConfig
+from near_duplicate_detection_spark.operators import mor
 from near_duplicate_detection_spark.pipeline import (
     AppendRefusedError,
     NDDPipeline,
@@ -235,7 +236,7 @@ def test_edit_retracts_and_matches_full(spark, tmp_path_factory):
     # logs consumed on commit; no crash marker left behind
     for t in ("edges_new", "urls_new", "urls_retracted"):
         assert not pipe.catalog.exists(t)
-    assert not pipe._retract_inflight()
+    assert not pipe._delta_suspect()
 
 
 def test_retraction_cap_refuses_before_touching_state(
@@ -258,7 +259,7 @@ def test_retraction_cap_refuses_before_touching_state(
         capped._apply_changeset(upserts, deletes, True, expect)
     # the refusal happened before any rewrite
     assert not capped.catalog.exists("urls_retracted")
-    assert not capped.catalog.exists("page_tombstones")
+    assert not capped.catalog.exists(mor.PATCH_TABLE)
     assert not capped._delta_suspect()
     assert capped.catalog.count_rows("pairs") == n_pairs
     assert (
@@ -280,13 +281,13 @@ def test_retract_crash_marker_forces_full_rebuild(spark, tmp_path_factory):
     base = str(tmp_path_factory.mktemp("ndd_crash"))
     pipe = NDDPipeline(spark, CFG, base)
     pipe.run(generate_pages(spark, 80))
-    pipe._set_marker("retract.inflight")  # a killed retraction
+    pipe._set_marker("delta.inflight")  # a killed retraction
     with pytest.raises(AppendRefusedError, match="crash marker"):
         pipe._delta_preconditions(True)
     assert pipe.stage3_clusters_delta() is False
     clusters = pipe.run_incremental(generate_pages(spark, 90)).toPandas()
     assert len(clusters) == 90
-    assert not pipe._retract_inflight()  # cleared by the committed rebuild
+    assert not pipe._delta_suspect()  # cleared by the committed rebuild
 
 
 def test_noop_incremental_is_cheap(spark, tmp_path_factory):

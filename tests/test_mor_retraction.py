@@ -1,11 +1,11 @@
 """Merge-on-read retraction (operators/mor.py): a delete/edit within the
-patch ceiling must commit ZERO bytes to the six governed stage-2/2b tables —
-the retraction lands as a driver-written ``retract_patch`` sidecar resolved
-by every reader through ``stage_view`` — while staying cluster-identical to a
-full rebuild. The round-3 copy-on-write shape (one full rewrite per stage
-table per retraction — O(corpus) write volume for every delete at the
-10^12-doc contract) survives only as the FOLD: inline past
-``retract_patch_ceiling``, or scheduled via ``compact()``.
+log ceiling must commit ZERO bytes to the six governed stage-2/2b tables —
+the retraction lands as one driver-written file appended to the
+``retract_patch`` log, resolved by every reader through ``stage_view`` —
+while staying cluster-identical to a full rebuild. The copy-on-write shape
+(one full rewrite per stage table per retraction — O(corpus) write volume
+for every delete at the 10^12-doc contract) survives only as the FOLD:
+inline past ``retract_patch_ceiling``, or scheduled via ``compact()``.
 
 Era semantics under test: an edited/re-added url re-enters under the SAME
 url string, so url tombstones alone would kill the new rows — rows carry the
@@ -192,7 +192,7 @@ def test_chained_retraction_composes_patch(
     spark, tmp_path_factory, base_catalog
 ):
     """Retract a rep (survivor inherits), then retract the survivor: the
-    stored entry must COMPOSE (A→B then B→C ⇒ A→C with A's original era),
+    resolved entry must COMPOSE (A→B then B→C ⇒ A→C with A's original era),
     the views must stay duplicate-free, and the partition must equal the
     from-scratch rebuild. Docs 20/21 are exact copies; generate a third
     copy first so a survivor exists for the second retraction."""
@@ -214,12 +214,15 @@ def test_chained_retraction_composes_patch(
     pipe.delete_pages([url_of(20)])   # rep 20 → survivor (min of 21/third)
     pipe.delete_pages([url_of(21)])   # that survivor may itself be 21
     entries = {
-        r["url"]: r["new_url"]
-        for r in pipe.catalog.read(mor.PATCH_TABLE).collect()
+        r["url"]: [(e["e"], e["nu"]) for e in r["__entries"]]
+        for r in mor.patch_agg(pipe.catalog).collect()
     }
     # both retracted urls resolve to the ONE live copy — transitive closure
-    assert entries[url_of(20)] == third
-    assert entries[url_of(21)] == third
+    # (read-time composition; 20's entry keeps its original, older era)
+    [(era20, nu20)] = entries[url_of(20)]
+    [(era21, nu21)] = entries[url_of(21)]
+    assert nu20 == third and nu21 == third
+    assert era20 < era21
     for t, key in (("seen", "url"), ("reps", "url")):
         v = pipe.stage_view(t).groupBy(key).count()
         assert v.where(F.col("count") > 1).count() == 0, t
@@ -262,8 +265,11 @@ def test_double_update_same_url(spark, tmp_path_factory, base_catalog):
 
     pipe.update_pages(batch("first rewrite of doc eighty eight"))
     pipe.update_pages(batch("second rewrite of doc eighty eight"))
-    p = pipe.catalog.read(mor.PATCH_TABLE).where(F.col("url") == u)
-    assert p.count() == 2
+    [row] = [
+        r for r in mor.patch_agg(pipe.catalog).collect() if r["url"] == u
+    ]
+    eras = [e["e"] for e in row["__entries"]]
+    assert len(eras) == 2 and eras[0] < eras[1]
     assert pipe.stage_view("seen").where(F.col("url") == u).count() == 1
     clusters = pipe.clusters_view().toPandas()
     snap = generate_pages(spark, N).withColumn(
@@ -370,28 +376,41 @@ def test_patch_ceiling_is_execution_strategy_not_semantics(base_catalog):
 
 
 def test_crash_mid_mor_routes_to_full(spark, tmp_path_factory, base_catalog):
-    """retract.inflight up (simulated crash between the sidecar write and
-    the dissolve-log append) ⇒ every delta entry refuses; the full rebuild
-    heals AND wipes the suspect patch."""
+    """delta.inflight up (simulated crash between the log append and the
+    dissolve-log append) ⇒ every delta entry refuses; the heal rebuilds
+    every stage, and every view equals a from-scratch rebuild's (the log
+    stays on disk but governs none of the rebuilt rows)."""
     pipe = NDDPipeline(
         spark, CFG, _copy(base_catalog, tmp_path_factory, "ndd_mor_crash")
     )
     pipe.delete_pages([url_of(11)])
-    pipe._set_marker("retract.inflight")  # a killed retraction
+    pipe._set_marker("delta.inflight")  # a killed changeset
     with pytest.raises(AppendRefusedError, match="crash marker"):
         pipe.delete_pages([url_of(12)])
     snap = generate_pages(spark, N).where(F.col("url") != url_of(11))
     clusters = pipe.run_incremental(snap).toPandas()
     assert not pipe._delta_suspect()
-    assert not pipe.catalog.exists(mor.PATCH_TABLE)
-    full = (
-        NDDPipeline(
-            spark, CFG, str(tmp_path_factory.mktemp("ndd_mor_crash_f"))
-        )
-        .run(snap)
-        .toPandas()
+    rebuilt = NDDPipeline(
+        spark, CFG, str(tmp_path_factory.mktemp("ndd_mor_crash_f"))
     )
+    full = rebuilt.run(snap).toPandas()
     assert _partition(clusters) == _partition(full)
+
+    def views(p):
+        out = {
+            "pages": p.pages_table().select("url", "text"),
+            "signatures": p.signatures_table().select("url", "fp"),
+        }
+        for t, cols in (
+            ("seen", ["url", "fp"]),
+            ("reps", ["url", "fp"]),
+            ("pairs", ["url_a", "url_b"]),
+            ("substring_pairs", ["url_a", "url_b"]),
+        ):
+            out[t] = p.stage_view(t).select(*cols)
+        return {t: set(map(tuple, df.toPandas().values)) for t, df in out.items()}
+
+    assert views(pipe) == views(rebuilt)
 
 
 def test_era_counter_write_is_atomic(spark, tmp_path_factory, base_catalog):
