@@ -149,18 +149,22 @@ class StageCatalog:
 
     def completed_partitions(self, stage: str, config_hash: str) -> set[int]:
         """The resume predicate (reference P1, ndd/extract_features.py:88):
-        a partition is complete iff a lineage row with the SAME config hash
-        exists — param AND upstream-content changes invalidate it because
-        the hash chains upstream hashes and content fingerprints
-        (config.py + content_fingerprint)."""
+        a partition is complete iff its LATEST lineage row (the
+        ``completed_at`` order of ``latest_partition_stats``) carries the
+        SAME config hash — param AND upstream-content changes invalidate it
+        because the hash chains upstream hashes and content fingerprints
+        (config.py + content_fingerprint). An older row never counts:
+        content-derived hashes cycle back (append X, then drop X) to a
+        commit whose table state has since been overwritten."""
         if not self.exists("lineage"):
             return set()
         tbl = pads.dataset(self.path("lineage"), format="parquet").to_table(
-            columns=["stage", "config_hash", "partition_id"],
-            filter=(pads.field("stage") == stage)
-            & (pads.field("config_hash") == config_hash),
+            columns=["partition_id", "config_hash", "completed_at"],
+            filter=pads.field("stage") == stage,
         )
-        return set(tbl.column("partition_id").to_pylist())
+        pdf = tbl.to_pandas().sort_values("completed_at")
+        latest = dict(zip(pdf["partition_id"], pdf["config_hash"]))
+        return {int(p) for p, h in latest.items() if h == config_hash}
 
     def latest_partition_stats(
         self, stage: str, config_hash: str | None = None

@@ -301,40 +301,6 @@ def cluster_label_delta(
     return remap, node_labels, None, None
 
 
-def relabel_pair_table(df: DataFrame, mapping: DataFrame) -> DataFrame:
-    """Apply a retraction mapping to a (url_a, url_b, …) pair table.
-
-    Rows touching a NULL-mapped url are dropped; mapped endpoints are
-    substituted by their replacement rep (identical content ⇒ the verified
-    score columns remain exact). Substitution can turn a star edge into a
-    self-edge ((old_rep, new_rep) → (new_rep, new_rep)) — dropped — and
-    re-canonicalization keeps url_a < url_b. Broadcast joins only."""
-    out = df
-    for side in ("url_a", "url_b"):
-        m = mapping.select(
-            F.col("url").alias(side),
-            F.col("new_url").alias(f"__new_{side}"),
-            F.lit(True).alias(f"__hit_{side}"),
-        )
-        out = out.join(F.broadcast(m), side, "left")
-    out = out.where(
-        (F.col("__hit_url_a").isNull() | F.col("__new_url_a").isNotNull())
-        & (F.col("__hit_url_b").isNull() | F.col("__new_url_b").isNotNull())
-    )
-    a = F.coalesce("__new_url_a", F.col("url_a"))
-    b = F.coalesce("__new_url_b", F.col("url_b"))
-    others = [c for c in df.columns if c not in ("url_a", "url_b")]
-    return (
-        out.select(
-            F.least(a, b).alias("url_a"),
-            F.greatest(a, b).alias("url_b"),
-            *others,
-        )
-        .where(F.col("url_a") != F.col("url_b"))
-        .dropDuplicates(["url_a", "url_b"])
-    )
-
-
 def delta_window_candidates(
     window_index: DataFrame, new_windows: DataFrame, cfg: NDDConfig
 ) -> tuple[DataFrame, DataFrame]:

@@ -573,12 +573,6 @@ class NDDPipeline:
             self.cfg.stage3_hash() + "|" + self.stage2_run_hash() + "|" + s2b
         )
 
-    # stage-3 append log: edges/docs appended by the stage-2/2b delta paths
-    # since the last committed clusters build. Any FULL stage-2/2b rewrite
-    # wipes it (the rebuilt edge set supersedes the log), and stage 3 wipes
-    # it on commit (consumed). Missing log ⇒ stage 3 runs full.
-    _STAGE3_LOG_TABLES = ("edges_new", "urls_new", "urls_retracted")
-
     def clusters_view(self) -> DataFrame:
         """The committed clusters with the merge-on-read label patch applied
         — see ``patched_clusters``. Every consumer of cluster labels must
@@ -598,17 +592,14 @@ class NDDPipeline:
             return
         t0 = time.monotonic()
         # a full stage-2 rewrite (e.g. after an edit) invalidates the 2b
-        # delta state (reps/windows may change under seen_2b's cover) AND
-        # the stage-3 append log (the rebuilt edge set supersedes it; stage
-        # 3 must run full) — wipe both BEFORE any write below: a crash
-        # mid-rewrite must leave the conservative state (missing ⇒ delta
-        # consumers fall back to full), never stale-but-plausible state.
-        # (r6: wipes moved ahead of the compute chain so the overlapped
-        # `seen` write can start immediately — same crash argument, the
-        # conservative window is merely wider.)
+        # delta state (reps/windows may change under seen_2b's cover) — wipe
+        # it BEFORE any write below: a crash mid-rewrite must leave the
+        # conservative state (missing ⇒ the 2b delta refuses), never
+        # stale-but-plausible state. (r6: the wipe moved ahead of the
+        # compute chain so the overlapped `seen` write can start at once.)
         import shutil as _shutil
 
-        for t in ("window_index", "seen_2b", *self._STAGE3_LOG_TABLES):
+        for t in ("window_index", "seen_2b"):
             _shutil.rmtree(cat.path(t), ignore_errors=True)
         # column-prune BEFORE the fp join: stage 2 only ever uses url+bands
         # (LSH) and url+simhash (fallback) — shipping the 128-perm minhash
@@ -708,10 +699,6 @@ class NDDPipeline:
         wall_ms = int((time.monotonic() - t0) * 1000)
         n_pairs = cat.count_rows("pairs")
         cat.mark_complete("pairs", h, {-1: n_pairs}, wall_ms)
-        # the committed rebuild supersedes any crashed changeset — only
-        # HERE is the crash marker cleared (every delta entry point refuses
-        # while it is up)
-        self._clear_marker("delta.inflight")
         cat.add_metrics(
             "pairs",
             {
@@ -723,23 +710,20 @@ class NDDPipeline:
         )
 
     def stage2_pairs_delta(
-        self,
-        mapping: dict[str, str | None],
-        new_sigs: DataFrame | None,
-        n_new: int,
+        self, new_sigs: DataFrame | None, n_new: int
     ) -> tuple[DataFrame, DataFrame] | None:
         """Incremental stage 2 of one changeset (``_apply_changeset``): the
-        pending stage-3 log edits of the changeset's retraction ``mapping``
-        (``_stage2_retract`` — the stage tables themselves are governed by
-        the log entries the core already appended), then the append of
-        ``new_sigs``
-        (``n_new`` materialized signature rows of genuinely new or just
-        retracted urls) against the persisted reps/pairs index instead of
-        the corpus-wide band groupBy (operators/delta.py) — both under the
-        ONE final run hash. A pure retraction commits the pairs table under
+        append of ``new_sigs`` (``n_new`` materialized signature rows of
+        genuinely new or just retracted urls) against the persisted
+        reps/pairs index instead of the corpus-wide band groupBy
+        (operators/delta.py), under the changeset's final run hash — the
+        retraction itself is already governed by the core's log entry. A
+        pure retraction (``new_sigs`` None) commits the pairs table under
         its new hash. Returns the appended reps' urls (the stage-2b delta's
-        new coverage) and pair keys (its already-verified prune), or None
-        when nothing was appended.
+        new coverage) and the appended pair keys (its already-verified
+        prune, and stage 3's new edges), both checkpointed, or None when
+        nothing was appended. Runs under the core's ``delta.inflight``
+        marker.
 
         Cluster-partition equivalence with a full rebuild is pinned by
         tests/test_incremental.py; in the bucket-ceiling-crossing corner
@@ -750,12 +734,9 @@ class NDDPipeline:
         )
 
         cfg, cat = self.cfg, self.catalog
-        if mapping:
-            self._stage2_retract(mapping)
         h = self.stage2_run_hash()  # after the changeset's lineage advance
         if new_sigs is None:
             cat.mark_complete("pairs", h, {-1: cat.count_rows("pairs")}, 0)
-            self._clear_marker("delta.inflight")
             return None
         t0 = time.monotonic()
         reps_tbl = self.stage_view("reps")
@@ -774,9 +755,9 @@ class NDDPipeline:
             sets = candidate_shingle_sets(
                 cands, self.pages_table(), cfg
             ).localCheckpoint()
-            # materialize the appended pairs ONCE: two writes consume them
-            # (edges_new log, pairs append) and the verify join must not
-            # re-run
+            # materialize the appended pairs ONCE: the pairs append and the
+            # returned keys (2b prune, stage-3 edges) consume them, and the
+            # verify join must not re-run
             return (
                 verify_pairs(cands, sets, cfg)
                 .unionByName(exact_edges)
@@ -788,32 +769,12 @@ class NDDPipeline:
         # hazard) — overlapped with the shingle-set/verify chain instead of
         # run as a serial step after it (guide §2.6)
         n_flagged, appended_pairs = _overlap(flagged.count, verify)
-        # marker up across the multi-table appends (no atomic commit): a
-        # crash anywhere below leaves it set, so every later delta entry
-        # refuses and the idempotent full rebuild takes over
-        self._set_marker("delta.inflight")
-
-        # stage-3 append log BEFORE the pairs append: a crash between the
-        # log write and the pairs append leaves an over-complete log (retry
-        # re-appends → the log dedups on read) — the reverse order could
-        # commit pairs whose edges the log never saw, and stage 3's delta
-        # would miss them. That pairwise barrier is the ONLY ordering that
-        # adds a guarantee beyond the marker, so it runs as one chained
-        # task while the other three appends — order-free among themselves
-        # and vs the log (the inflight marker, set above and cleared only
-        # after mark_complete, routes ANY partial combination to the
-        # idempotent full rebuild) — overlap it (guide §2.6).
-        def log_then_pairs():
-            cat.write(
-                appended_pairs.select("url_a", "url_b"),
-                "edges_new",
-                mode="append",
-            )
-            cat.write(self._stamp_era(appended_pairs), "pairs", mode="append")
-
+        # the three appends are order-free: the core's inflight marker
+        # routes any partial combination to the idempotent full rebuild
         _overlap(
-            log_then_pairs,
-            lambda: cat.write(new_sigs.select("url"), "urls_new", mode="append"),
+            lambda: cat.write(
+                self._stamp_era(appended_pairs), "pairs", mode="append"
+            ),
             lambda: cat.write(
                 self._stamp_era(
                     new_reps.select("url", "fp", "bands", "simhash")
@@ -834,7 +795,6 @@ class NDDPipeline:
         wall_ms = int((time.monotonic() - t0) * 1000)
         n_pairs = cat.count_rows("pairs")
         cat.mark_complete("pairs", h, {-1: n_pairs}, wall_ms)
-        self._clear_marker("delta.inflight")
         cat.add_metrics(
             "pairs",
             {
@@ -849,12 +809,12 @@ class NDDPipeline:
     # ---------- targeted retraction (edit/delete delta) ----------
 
     # One write-ahead marker guards the multi-table mutations, which have no
-    # atomic commit: `delta.inflight` brackets a changeset's log append and
-    # table appends (set before the first, cleared after the stage's
-    # mark_complete), every fold and every compact() rewrite. Marker up ⇒ a
-    # crash may have left partial table state ⇒ every delta entry point
-    # refuses, and ``run`` rebuilds every stage from scratch (whose
-    # overwrites are idempotent); ``stage2_pairs`` clears the marker.
+    # atomic commit: `delta.inflight` brackets a whole changeset (set before
+    # its first mutation, cleared after its clusters commit) and every
+    # compact() rewrite. Marker up ⇒ a crash may have left partial table
+    # state ⇒ every delta entry point refuses, and ``run`` rebuilds every
+    # stage from scratch (whose overwrites are idempotent), clearing the
+    # marker once its clusters commit.
     # This file-exists check replaced the round-3 anti-join "partial" guards
     # (reps ∪ pairs(a) ∪ pairs(b) vs seen, and the 2b mirror) — two full
     # edge-table scans per delta run whose only purpose was detecting the
@@ -1021,52 +981,6 @@ class NDDPipeline:
         }
         return {u: rep_new.get(u) for u in urls}
 
-    def _stage2_retract(self, mapping: dict[str, str | None]) -> None:
-        """Apply a changeset's retraction ``mapping`` to the pending stage-3
-        logs (delta-sized, rewritten eagerly): edges_new is relabeled under
-        the mapping so an uncommitted stage-3 delta stays consistent;
-        urls_new DROPS retracted urls outright (the replacement rep is an
-        OLD doc — substituting it would double it into stage 3's new_rows;
-        an edited url re-enters via the subsequent append delta); the
-        mapping is appended to urls_retracted, stage 3's dissolve log. The
-        six stage tables need nothing here: the core's log entries govern
-        them. Runs under the core's ``delta.inflight`` marker."""
-        import pyarrow as pa
-
-        from near_duplicate_detection_spark.operators.delta import (
-            relabel_pair_table,
-        )
-
-        cat = self.catalog
-        rows = sorted(mapping.items())
-        if cat.exists("edges_new"):
-            mapping_df = local_frame(
-                self.spark, rows, "url string, new_url string"
-            )
-            cat.write(
-                relabel_pair_table(
-                    cat.read("edges_new"), mapping_df
-                ).localCheckpoint(),
-                "edges_new",
-            )
-        if cat.exists("urls_new"):
-            retracted = local_frame(
-                self.spark, [(u,) for u, _ in rows], "url string"
-            )
-            cat.write(
-                cat.read("urls_new")
-                .join(F.broadcast(retracted), "url", "left_anti")
-                .localCheckpoint(),
-                "urls_new",
-            )
-        # dissolve log LAST (crash before this append → the marker still
-        # routes everything to the full path): driver-side, zero Spark jobs
-        cat._append_small(
-            "urls_retracted",
-            pd.DataFrame(rows, columns=["url", "new_url"]),
-            pa.schema([("url", pa.string()), ("new_url", pa.string())]),
-        )
-
     # ---------- stage 2b ----------
 
     def stage2b_substring(self, resume: bool = True) -> None:
@@ -1086,14 +1000,6 @@ class NDDPipeline:
             # exact copies are already linked by stage 2's star edges
             # (view: a retraction may have relabeled reps onto survivors)
             pages = pages.join(self.stage_view("reps"), "url", "left_semi")
-        # a full 2b rewrite supersedes the stage-3 append log the same way a
-        # full stage-2 rewrite does (the substring edge set may change
-        # wholesale — e.g. ceiling crossings can DROP pairs, which the
-        # merge-only stage-3 delta cannot express) → wipe, stage 3 runs full
-        import shutil as _shutil
-
-        for t in self._STAGE3_LOG_TABLES:
-            _shutil.rmtree(cat.path(t), ignore_errors=True)
         cands, flagged, windows = substring_candidates(
             pages, cfg, return_windows=True
         )
@@ -1158,7 +1064,7 @@ class NDDPipeline:
         new_urls: DataFrame | None,
         new_pages: DataFrame | None,
         prior_edges: DataFrame | None,
-    ) -> None:
+    ) -> DataFrame | None:
         """Incremental stage 2b of one changeset (``_apply_changeset``): the
         appended reps' anchored windows probe the persisted window_index
         (operators/delta.py delta_window_candidates) instead of
@@ -1167,8 +1073,11 @@ class NDDPipeline:
         ``new_pages`` the changeset's materialized (url, text) batch they
         come from, ``prior_edges`` the same run's appended stage-2 pair
         keys; None (a pure retraction) commits substring_pairs under its
-        new run hash. The full stage-2 path wipes window_index/seen_2b, so
-        a rebuild never leaves stale 2b delta state behind."""
+        new run hash. Returns the appended pair keys (checkpointed — stage
+        3's new edges), or None when nothing was appended. Runs under the
+        core's ``delta.inflight`` marker. The full stage-2 path wipes
+        window_index/seen_2b, so a rebuild never leaves stale 2b delta
+        state behind."""
         from near_duplicate_detection_spark.operators.delta import (
             delta_window_candidates,
         )
@@ -1184,7 +1093,7 @@ class NDDPipeline:
             cat.mark_complete(
                 "substring_pairs", h, {-1: cat.count_rows("substring_pairs")}, 0
             )
-            return
+            return None
         t0 = time.monotonic()
         # text source: the changeset's materialized batch — zero corpus reads
         new_windows = (
@@ -1209,7 +1118,7 @@ class NDDPipeline:
             pruned = cands.join(
                 F.broadcast(prior_edges), ["url_a", "url_b"], "left_anti"
             ).localCheckpoint()
-            # two consumers: log + table append
+            # two consumers: the table append and the returned keys
             return verify_substring_pairs(
                 pruned, self.pages_table(), cfg
             ).localCheckpoint()
@@ -1218,20 +1127,11 @@ class NDDPipeline:
         # the tables its lineage reads from — overlapped with the prune +
         # LCS-verify chain instead of run as a serial step after it (§2.6)
         n_flagged, hits = _overlap(flagged.count, verify)
-        self._set_marker("delta.inflight")
-
-        # stage-3 append log BEFORE the substring_pairs append (same crash
-        # ordering rule as the stage-2 delta: over-logging is safe,
-        # under-logging not) — the only pairwise barrier beyond the marker,
-        # run as one chained task; window_index/seen_2b are order-free (the
-        # inflight marker routes any partial state to the full rebuild) and
-        # overlap it (guide §2.6).
-        def log_then_table():
-            cat.write(hits.select("url_a", "url_b"), "edges_new", mode="append")
-            cat.write(self._stamp_era(hits), "substring_pairs", mode="append")
-
+        # order-free appends under the core's inflight marker (§2.6)
         _overlap(
-            log_then_table,
+            lambda: cat.write(
+                self._stamp_era(hits), "substring_pairs", mode="append"
+            ),
             lambda: cat.write(
                 self._stamp_era(new_windows), "window_index", mode="append"
             ),
@@ -1246,7 +1146,6 @@ class NDDPipeline:
         wall_ms = int((time.monotonic() - t0) * 1000)
         n = cat.count_rows("substring_pairs")
         cat.mark_complete("substring_pairs", h, {-1: n}, wall_ms)
-        self._clear_marker("delta.inflight")
         cat.add_metrics(
             "substring_pairs",
             {
@@ -1256,6 +1155,7 @@ class NDDPipeline:
                 "wall_ms": wall_ms,
             },
         )
+        return hits.select("url_a", "url_b")
 
     # ---------- stage 3 ----------
 
@@ -1266,10 +1166,6 @@ class NDDPipeline:
             resume
             and cat.completed_partitions("clusters", h)
             and cat.exists("clusters")
-            # content-derived hashes can cycle back to an ancient commit's
-            # value while a stage-3 log still holds un-applied changes
-            # (append X then delete X) — never trust the resume row then
-            and not any(cat.exists(t) for t in self._STAGE3_LOG_TABLES)
         ):
             return
         t0 = time.monotonic()
@@ -1280,22 +1176,12 @@ class NDDPipeline:
             )
         labels = connected_components(edges)
         clusters = clusters_table(labels, self.pages_table().select("url"))
-        # wipe the append log BEFORE the clusters write (the stage-2/2b
-        # convention): the full build consumes everything the log covered,
-        # and a crash in the wipe-after-write window would leave a clusters
-        # table that already incorporates the logged edges NEXT TO an intact
-        # log — the delta's guards would then re-apply the log onto the
-        # updated table (duplicate url rows). Wipe-first means a crash
-        # anywhere after it routes the retry to this full path (no log ⇒
-        # delta refuses), whose overwrite is idempotent.
         import shutil as _shutil
 
-        for t in self._STAGE3_LOG_TABLES:
-            _shutil.rmtree(cat.path(t), ignore_errors=True)
         # the full build recomputes every label from the edge tables, so the
-        # merge-on-read patch is superseded — wipe it with the logs (before
-        # the write: a stale patch key could collide with a legitimately
-        # re-emerging label in the rebuilt table)
+        # merge-on-read patch is superseded — wipe it before the write (a
+        # stale patch key could collide with a legitimately re-emerging
+        # label in the rebuilt table)
         _shutil.rmtree(cat.path("cluster_remap"), ignore_errors=True)
         cat.write(self._stamp_era(clusters), "clusters")
         # tombstones die AFTER the write (not with the remap wipe above):
@@ -1326,37 +1212,40 @@ class NDDPipeline:
             },
         )
 
-    def stage3_clusters_delta(self, max_remap: int | None = None) -> bool:
-        """Incremental clustering from the append/retract logs.
+    def stage3_clusters_delta(
+        self,
+        new_edges: DataFrame | None,
+        new_urls: DataFrame | None,
+        retracted: list[str],
+        n_new_edges: int,
+    ) -> bool:
+        """Incremental clustering of one changeset (``_apply_changeset``),
+        handed its change in memory: ``new_edges`` the stage-2/2b deltas'
+        appended pair keys (checkpointed; ``n_new_edges`` rows),
+        ``new_urls`` the batch's urls (materialized, unique), ``retracted``
+        the urls of the changeset's retraction mapping.
 
-        Append half: contracts the logged new edges (edges_new) to the
-        committed clusters' labels and runs CC over the contracted graph
-        (operators/delta.py cluster_label_delta) — work scales with the
-        append, not the corpus edge set (round-2 verdict #1: the last
-        full-reprocess stage). Retract half (urls_retracted): every cluster
-        touching a retracted url is DISSOLVED — edge removal can split it
-        and change its min-url label — and its surviving members re-cluster
-        as raw nodes from the post-retraction edge tables (a map-side
-        semi-join filter over the full pairs/substring_pairs tables against
-        the dissolved membership — an O(edges) READ, but no wide shuffle
-        and no re-verification), side by side with the appended edges. A
-        pure append with ZERO label merges (the common case) commits by
-        appending only the new rows — O(append), no corpus-table touch;
-        only merge/retract runs pay the map-side rewrite of the clusters
-        table (broadcast remap join + union of new rows) — an Iceberg
-        MERGE at production scale.
+        Append half: contracts the new edges to the committed clusters'
+        labels and runs CC over the contracted graph (operators/delta.py
+        cluster_label_delta) — work scales with the change, not the corpus
+        edge set (round-2 verdict #1: the last full-reprocess stage).
+        Retract half: every cluster touching a retracted url is DISSOLVED —
+        edge removal can split it and change its min-url label — and its
+        surviving members re-cluster as raw nodes from the post-retraction
+        edge tables (a map-side semi-join filter over the full
+        pairs/substring_pairs tables against the dissolved membership — an
+        O(edges) READ, but no wide shuffle and no re-verification), side by
+        side with the new edges. A pure append with ZERO label merges (the
+        common case) commits by appending only the new rows — O(append), no
+        corpus-table touch; only merge/retract runs pay the map-side
+        rewrite of the clusters table (broadcast remap join + union of new
+        rows) — an Iceberg MERGE at production scale.
 
-        Returns True if the delta ran (or clusters is already current);
-        False when there is no valid log, the prior clusters build is
-        uncommitted, a crashed retraction left its marker up, or the
-        dissolve/remap set exceeds ``max_remap`` (the broadcast ceiling) —
-        caller runs the full stage.
-
-        Crash protocol: stage the new table as ``clusters_next``, wipe the
-        log, then swap dirs. A crash at any point leaves either the old
-        committed clusters + intact log (retry re-deltas, idempotent) or a
-        wiped log (retry falls back to full) — never a stale-but-plausible
-        clusters table."""
+        Returns False, before any mutation, when the dissolve/remap set
+        exceeds ``cfg.max_remap`` (the broadcast ceiling) — the caller then
+        runs the full stage. Runs under the core's ``delta.inflight``
+        marker: a crash in either commit branch leaves it up, every delta
+        entry refuses, and the idempotent full rebuild heals."""
         import os
         import shutil as _shutil
 
@@ -1365,47 +1254,17 @@ class NDDPipeline:
             pairs_touching,
         )
 
-        cat = self.catalog
-        if max_remap is None:
-            max_remap = self.cfg.max_remap
-        if self._delta_suspect():
-            # crashed retraction OR crashed stage-2/2b delta append: the log
-            # may reference edges whose pairs append never committed
-            return False
+        cat, max_remap = self.catalog, self.cfg.max_remap
         h = self.stage3_run_hash()
-        has_retract = cat.exists("urls_retracted")
-        has_edges = cat.exists("edges_new")
-        has_urls = cat.exists("urls_new")
-        log_pending = has_edges or has_urls or has_retract
-        # "already current" is only trustworthy with NO pending log: run
-        # hashes are CONTENT-derived, so a change that restores an earlier
-        # content state (append a doc, then delete that same doc) collides
-        # with the ancient commit's hash while the log still holds the
-        # un-applied retraction — the stale lineage row must not shadow it
-        if cat.completed_partitions("clusters", h) and not log_pending:
-            return True
-        if not (cat.exists("clusters") and cat.latest_partition_stats("clusters")):
-            return False  # no committed prior build to delta against
-        if not log_pending:
-            return False  # no log → edge set may have been rebuilt wholesale
         t0 = time.monotonic()
-        n_new_edges = cat.count_rows("edges_new") if has_edges else 0
         n_old_rows = cat.count_rows("clusters")  # footer read, no Spark job
         # the VIEW (patched labels): new remaps must contract against what
         # readers currently see, and any rewrite below must fold the patch
         old = self.clusters_view().select("url", "cluster_id")
+        has_retract = bool(retracted)
         if has_retract:
-            # the dissolve log is retraction-sized and driver-written: read
-            # it driver-side and ship a LocalRelation (no scan job, no
-            # checkpoint, count known without a job)
-            retr_urls = sorted(
-                {
-                    u
-                    for (u,) in cat.read_small_rows("urls_retracted", ["url"])
-                }
-            )
-            n_retr = len(retr_urls)
-            retr = local_frame(self.spark, [(u,) for u in retr_urls], "url string")
+            n_retr = len(retracted)
+            retr = local_frame(self.spark, [(u,) for u in retracted], "url string")
             # affected cluster ids and the surviving frontier are both
             # ceiling-bounded (affected ≤ |retraction|; frontier guarded by
             # max_remap below), so COLLECT them into LocalRelations instead
@@ -1439,27 +1298,19 @@ class NDDPipeline:
             frontier = local_frame(
                 self.spark, [(u,) for u in frontier_urls], "url string"
             )
-            sub_edges = None
-            if cat.exists("pairs"):
-                all_edges = self.stage_view("pairs").select("url_a", "url_b")
-                if cat.exists("substring_pairs"):
-                    all_edges = all_edges.union(
-                        self.stage_view("substring_pairs").select(
-                            "url_a", "url_b"
-                        )
-                    )
-                sub_edges = pairs_touching(all_edges, frontier)
+            all_edges = self.stage_view("pairs").select("url_a", "url_b")
+            if cat.exists("substring_pairs"):
+                all_edges = all_edges.union(
+                    self.stage_view("substring_pairs").select("url_a", "url_b")
+                )
+            sub_edges = pairs_touching(all_edges, frontier)
             base_old = old.join(F.broadcast(affected), "cluster_id", "left_anti")
         else:
-            retr = frontier = sub_edges = None
+            frontier = sub_edges = None
             n_retr = n_dissolved = n_frontier = 0
             base_old = old
         had_tomb = cat.exists("cluster_tombstones")
-        edge_parts = []
-        if has_edges:
-            edge_parts.append(cat.read("edges_new").select("url_a", "url_b"))
-        if sub_edges is not None:
-            edge_parts.append(sub_edges)
+        edge_parts = [p for p in (new_edges, sub_edges) if p is not None]
         if edge_parts:
             combined = edge_parts[0]
             for p in edge_parts[1:]:
@@ -1469,9 +1320,9 @@ class NDDPipeline:
                 # the dissolve edges read the corpus-sized pairs views;
                 # cluster_label_delta evaluates its edge input twice (label
                 # lookup endpoints, then the contraction) — materialize ONCE.
-                # Change-proportional: |edges_new| + the dissolved clusters'
-                # edge degree. The pure-append path skips this (edges_new is
-                # a small committed read — a checkpoint would only add a job)
+                # Change-proportional: |new_edges| + the dissolved clusters'
+                # edge degree. The pure-append path skips this (new_edges is
+                # already checkpointed — a checkpoint would only add a job)
                 combined = combined.localCheckpoint()
             # frontier members are NOT in base_old, so the contraction keeps
             # them as raw nodes and re-derives their labels from scratch
@@ -1494,15 +1345,13 @@ class NDDPipeline:
             n_remap = 0
             changed_map = {}
             driver_solved = True  # vacuously: no edges, no remaps
+        # no retracted-url filter: a retracted url in the batch is an
+        # UPDATED doc, re-entering with its new content
         new_rows = (
-            cat.read("urls_new").select("url").distinct()
-            if has_urls
+            new_urls
+            if new_urls is not None
             else local_frame(self.spark, [], "url string")
         )
-        # NOTE: no retracted-url filter here — the retraction already
-        # rewrote urls_new (dropping retracted rows), so any retracted url
-        # present now is an EDITED doc legitimately re-appended by the
-        # subsequent append delta
         if frontier is not None:
             # dissolved-cluster survivors re-enter exactly like new docs:
             # label from the contraction CC, else themselves (singletons)
@@ -1530,10 +1379,7 @@ class NDDPipeline:
             # retraction era, which the tombstone written at that same era
             # does not govern — only the pre-retraction rows die. Over any
             # broadcast ceiling the rewrite-and-swap below folds both
-            # sidecars instead (the Iceberg-MERGE analog). Crash protocol:
-            # marker up across append + sidecar writes + log wipe — a
-            # crash leaves the marker, every delta entry refuses, and the
-            # idempotent full rebuild heals.
+            # sidecars instead (the Iceberg-MERGE analog).
             new_patch = self._compose_label_patch(changed_map or {})
             n_tomb = n_retr + n_frontier
             n_tomb_old = (
@@ -1554,7 +1400,6 @@ class NDDPipeline:
                         F.col("url") == F.col("cluster_id"),
                     )
                 ).coalesce(1)
-                self._set_marker("delta.inflight")
                 cat.write(appended, "clusters", mode="append")
                 if has_retract:
                     # ALL rows of the dissolved clusters die: retracted
@@ -1572,7 +1417,7 @@ class NDDPipeline:
                     era_now = int(self._retract_era())
                     new_tomb = [
                         (u, era_now)
-                        for u in sorted(set(retr_urls) | set(frontier_urls))
+                        for u in sorted(set(retracted) | set(frontier_urls))
                     ]
                     old_tomb = (
                         cat.read_small_rows(
@@ -1601,12 +1446,9 @@ class NDDPipeline:
                         cat.path("cluster_remap"), ignore_errors=True
                     )
                 n = cat.count_rows("clusters")  # footer read, no Spark job
-                for t in self._STAGE3_LOG_TABLES:
-                    _shutil.rmtree(cat.path(t), ignore_errors=True)
                 wall_ms = int((time.monotonic() - t0) * 1000)
                 cat.mark_complete("clusters", h, {-1: n}, wall_ms)
                 self._bump_append_era()
-                self._clear_marker("delta.inflight")
                 cat.add_metrics(
                     "clusters",
                     {
@@ -1649,32 +1491,20 @@ class NDDPipeline:
                 "is_representative", F.col("url") == F.col("cluster_id")
             )
         )
-        # stage → wipe log → swap (see docstring crash protocol)
+        # stage, then swap dirs under the core's marker
         _shutil.rmtree(cat.path("clusters_next"), ignore_errors=True)
         cat.write(clusters_next, "clusters_next")
-        n_merged = n_remap
         # pure-append runs derive the new-url count from footer counts
         # (clusters_next = base_old ∪ new_rows row-for-row, and base_old is
         # the whole prior table when nothing dissolved); the retract path
-        # keeps the Spark count — base_old is then a filtered plan — and
-        # must count BEFORE the log wipe below (new_rows reads urls_new)
+        # keeps the Spark count — base_old is then a filtered plan
         n_new_urls = (
             cat.count_rows("clusters_next") - n_old_rows
             if not (has_retract or had_tomb)
             else new_rows.count()
         )
-        # marker brackets the destructive window (first wipe → swap →
-        # mark_complete), mirroring the MOR branch above and compact():
-        # without it, a crash after the log wipe but before the rename
-        # leaves the OLD clusters table with its logs (and below, its remap
-        # sidecar) gone — the next delta would then commit "no change" /
-        # unpatched labels with no error anywhere. Marker up ⇒ every delta
-        # entry refuses and the idempotent full rebuild heals.
-        self._set_marker("delta.inflight")
-        for t in self._STAGE3_LOG_TABLES:
-            _shutil.rmtree(cat.path(t), ignore_errors=True)
         # the staged table was built from the VIEW, so the patch is folded
-        # into it — wipe the sidecar with the logs, before the swap
+        # into it — wipe the sidecar before the swap
         _shutil.rmtree(cat.path("cluster_remap"), ignore_errors=True)
         _shutil.rmtree(cat.path("clusters"), ignore_errors=True)
         os.rename(cat.path("clusters_next"), cat.path("clusters"))
@@ -1688,14 +1518,13 @@ class NDDPipeline:
         wall_ms = int((time.monotonic() - t0) * 1000)
         n = cat.count_rows("clusters")
         cat.mark_complete("clusters", h, {-1: n}, wall_ms)
-        self._clear_marker("delta.inflight")
         cat.add_metrics(
             "clusters",
             {
                 "rows": n,
                 "delta_new_edges": n_new_edges,
                 "delta_new_urls": n_new_urls,
-                "delta_merged_labels": n_merged,
+                "delta_merged_labels": n_remap,
                 "delta_retracted_urls": n_retr,
                 "delta_dissolved_clusters": n_dissolved,
                 # multi_doc_clusters deliberately NOT recomputed here: it is
@@ -1785,7 +1614,8 @@ class NDDPipeline:
         While a crash marker is up the catalog's physical state is suspect
         (a killed changeset may have appended rows its lineage never
         recorded), so every stage rebuilds from scratch instead of
-        trusting its lineage."""
+        trusting its lineage; the marker clears only once the rebuilt
+        clusters commit."""
         if self._delta_suspect():
             resume = False
         if pages is not None:
@@ -1795,6 +1625,7 @@ class NDDPipeline:
         if substring_pass:
             self.stage2b_substring(resume)
         self.stage3_clusters(resume)
+        self._clear_marker("delta.inflight")
         return self.clusters_view()
 
     def run_incremental(
@@ -1809,8 +1640,9 @@ class NDDPipeline:
         (``_snapshot_changeset``) and applied by the changeset core every
         explicit entry point shares (``_apply_changeset``). When the catalog
         cannot take a delta — first build, crash marker, param change,
-        signatures lagging pages (e.g. after ``invalidate_urls``), a
-        retraction over ``cfg.max_retract`` — this is
+        signatures lagging pages (e.g. after ``invalidate_urls``), clusters
+        lagging the edge tables (a killed full build), a retraction over
+        ``cfg.max_retract`` — this is
         ``run(pages, resume=True)``, whose data-aware resume rebuilds exactly
         what drifted. A snapshot that repeats a url raises ``ValueError``
         before any mutation.
@@ -1960,8 +1792,10 @@ class NDDPipeline:
         catalog must be a committed, CURRENT build with healthy delta state
         — pages/signatures lineage consistent, pairs (and substring_pairs,
         when ``substring_pass``) committed under the current run hashes,
-        param stamps matching, clusters committed, no crash marker. Every
-        check is footer/lineage-level (zero Spark jobs). Raises
+        param stamps matching, clusters committed under the current stage-3
+        run hash (a killed full build leaves them lagging with no marker
+        up), no crash marker. Every check is footer/lineage-level (zero
+        Spark jobs). Raises
         ``AppendRefusedError`` (nothing mutated); returns the committed
         per-bucket pages stats."""
         cfg, cat, refuse = self.cfg, self.catalog, self._refuse
@@ -2004,9 +1838,10 @@ class NDDPipeline:
             }:
                 refuse("stage-2b param stamp drift in seen_2b")
         if not (
-            cat.exists("clusters") and cat.latest_partition_stats("clusters")
+            cat.exists("clusters")
+            and cat.completed_partitions("clusters", self.stage3_run_hash())
         ):
-            refuse("no committed clusters build")
+            refuse("clusters not committed under the current run hash")
         return pstats
 
     def _conform_to_pages(self, rows: DataFrame) -> DataFrame:
@@ -2072,16 +1907,17 @@ class NDDPipeline:
           ``_fold`` reclaims them physically;
         - stages 0/1: the pages append and the batch signing + signatures
           append, overlapped — no bucket is rewritten;
-        - stage 2: ``stage2_pairs_delta`` (stage-3 log edits of the
-          retraction, then the append, under the one final run hash); stage
-          2b: ``stage2b_delta``; stage 3: ``stage3_clusters_delta``, or the
-          full CC over the committed edge tables past its broadcast
-          ceilings.
+        - stage 2: ``stage2_pairs_delta`` (the append, under the one final
+          run hash); stage 2b: ``stage2b_delta``; stage 3:
+          ``stage3_clusters_delta``, handed the change in memory — the two
+          deltas' appended pair keys, the batch's urls and the retracted
+          urls — or the full CC over the committed edge tables past its
+          broadcast ceilings. An empty changeset runs no stage.
 
-        Crash protocol: ``delta.inflight`` brackets the log append, the
-        stage-0/1 commit and each stage's appends; after a crash every
-        delta entry refuses and ``run_incremental(full_snapshot)`` heals
-        through a full rebuild."""
+        Crash protocol: ONE ``delta.inflight`` bracket, set before the first
+        table mutation and cleared after the clusters commit; after a crash
+        every delta entry refuses and ``run_incremental(full_snapshot)``
+        heals through a full rebuild."""
         import pyarrow as pa
 
         from near_duplicate_detection_spark.operators import mor
@@ -2172,120 +2008,137 @@ class NDDPipeline:
         ):
             refuse("changeset does not reproduce the snapshot's bucket stats")
 
-        if merged:
-            t0 = time.monotonic()
-            mapping, era = {}, None
-            if gone:
-                mapping = self._retraction_mapping(gone)
-                era = self._bump_retract_era()
-            self._set_marker("delta.inflight")
-            if gone:
-                cat._append_small(
-                    mor.PATCH_TABLE,
-                    pd.DataFrame(
-                        [(u, nu, era) for u, nu in sorted(mapping.items())],
-                        columns=["url", "new_url", "era"],
-                    ),
-                    pa.schema(
-                        [("url", pa.string()), ("new_url", pa.string()),
-                         ("era", pa.int64())]
-                    ),
-                )
-                log_rows = cat.count_rows(mor.PATCH_TABLE)
-                fold = log_rows > cfg.retract_patch_ceiling
-                if fold:
-                    self._fold()
-                cat.add_metrics(
-                    "pairs",
-                    {
-                        "retracted_docs": len(gone),
-                        "retract_mor_commit": 0 if fold else 1,
-                        "retract_fold": 1 if fold else 0,
-                        "retract_patch_rows": 0 if fold else log_rows,
-                    },
-                )
-
-            def commit(table: str, rows: DataFrame | None) -> None:
-                if rows is not None:
-                    cat.write(
-                        self._stamp_era(rows),
-                        table,
-                        partition_by=["bucket"],
-                        mode="append",
-                        max_records_per_file=2048,
-                    )
-                cat.mark_complete(
-                    table,
-                    h1,
-                    {b: m[0] for b, m in merged.items()},
-                    int((time.monotonic() - t0) * 1000),
-                    checksums={b: m[1] for b, m in merged.items()},
-                )
-
-            def commit_signatures() -> DataFrame | None:
-                # sign ONLY the batch (partitions stay bucket-pure through
-                # the Arrow map, so the partitioned append is fan-out-free)
-                sigs = None
-                if new_rows is not None:
-                    sigs = (
-                        new_rows.select("url", "text")
-                        .mapInPandas(
-                            signature_map_fn(cfg), schema=SIGNATURE_SCHEMA
-                        )
-                        .withColumn("bucket", self._bucket_expr())
-                        .localCheckpoint()
-                    )
-                commit("signatures", sigs)
-                return sigs
-
-            # the two commits read only the checkpointed batch and mutate
-            # different tables under the marker, which routes any partial
-            # combination to the idempotent heal — so they overlap (§2.6)
-            _, new_sigs = _overlap(
-                lambda: commit(
-                    "pages", None if new_rows is None else new_rows.drop("h")
+        if not merged:
+            return self.clusters_view()
+        t0 = time.monotonic()
+        mapping, era = {}, None
+        if gone:
+            mapping = self._retraction_mapping(gone)
+            era = self._bump_retract_era()
+        self._set_marker("delta.inflight")
+        if gone:
+            cat._append_small(
+                mor.PATCH_TABLE,
+                pd.DataFrame(
+                    [(u, nu, era) for u, nu in sorted(mapping.items())],
+                    columns=["url", "new_url", "era"],
                 ),
-                commit_signatures,
+                pa.schema(
+                    [("url", pa.string()), ("new_url", pa.string()),
+                     ("era", pa.int64())]
+                ),
             )
-            wall_ms = int((time.monotonic() - t0) * 1000)
+            log_rows = cat.count_rows(mor.PATCH_TABLE)
+            fold = log_rows > cfg.retract_patch_ceiling
+            if fold:
+                self._fold()
             cat.add_metrics(
-                "pages",
+                "pairs",
                 {
-                    "buckets_appended": len(add_stats),
-                    "buckets_rewritten": 0,
-                    "appended_docs_ingested": n_up,
-                    # retracted rows: deleted AND replaced urls
-                    "deleted_docs": len(gone),
-                    "wall_ms": wall_ms,
+                    "retracted_docs": len(gone),
+                    "retract_mor_commit": 0 if fold else 1,
+                    "retract_fold": 1 if fold else 0,
+                    "retract_patch_rows": 0 if fold else log_rows,
                 },
             )
-            cat.add_metrics(
-                "signatures",
-                {
-                    "buckets_computed": 0,
-                    "buckets_appended": len(add_stats),
-                    "appended_docs_signed": n_up,
-                    "wall_ms": wall_ms,
-                },
-            )
-            appended = self.stage2_pairs_delta(
-                mapping,
-                None
-                if new_sigs is None
-                else new_sigs.select("url", "fp", "bands", "simhash"),
-                n_up,
-            )
-            if substring_pass:
-                new_urls, prior_edges = appended or (None, None)
-                self.stage2b_delta(
-                    new_urls,
-                    None if new_rows is None else new_rows.select("url", "text"),
-                    prior_edges,
+
+        def commit(table: str, rows: DataFrame | None) -> None:
+            if rows is not None:
+                cat.write(
+                    self._stamp_era(rows),
+                    table,
+                    partition_by=["bucket"],
+                    mode="append",
+                    max_records_per_file=2048,
                 )
-        if not self.stage3_clusters_delta():
-            # wide merge/dissolve fallback (over the broadcast ceiling): full
-            # CC over the committed edge tables, correctness identical
-            self.stage3_clusters(resume=True)
+            cat.mark_complete(
+                table,
+                h1,
+                {b: m[0] for b, m in merged.items()},
+                int((time.monotonic() - t0) * 1000),
+                checksums={b: m[1] for b, m in merged.items()},
+            )
+
+        def commit_signatures() -> DataFrame | None:
+            # sign ONLY the batch (partitions stay bucket-pure through the
+            # Arrow map, so the partitioned append is fan-out-free)
+            sigs = None
+            if new_rows is not None:
+                sigs = (
+                    new_rows.select("url", "text")
+                    .mapInPandas(signature_map_fn(cfg), schema=SIGNATURE_SCHEMA)
+                    .withColumn("bucket", self._bucket_expr())
+                    .localCheckpoint()
+                )
+            commit("signatures", sigs)
+            return sigs
+
+        # the two commits read only the checkpointed batch and mutate
+        # different tables under the marker, which routes any partial
+        # combination to the idempotent heal — so they overlap (§2.6)
+        _, new_sigs = _overlap(
+            lambda: commit(
+                "pages", None if new_rows is None else new_rows.drop("h")
+            ),
+            commit_signatures,
+        )
+        wall_ms = int((time.monotonic() - t0) * 1000)
+        cat.add_metrics(
+            "pages",
+            {
+                "buckets_appended": len(add_stats),
+                "buckets_rewritten": 0,
+                "appended_docs_ingested": n_up,
+                # retracted rows: deleted AND replaced urls
+                "deleted_docs": len(gone),
+                "wall_ms": wall_ms,
+            },
+        )
+        cat.add_metrics(
+            "signatures",
+            {
+                "buckets_computed": 0,
+                "buckets_appended": len(add_stats),
+                "appended_docs_signed": n_up,
+                "wall_ms": wall_ms,
+            },
+        )
+
+        def edge_rows() -> int:
+            # footer reads: the deltas only append, so the difference is
+            # the new-edge count with no Spark job
+            return sum(
+                cat.count_rows(t)
+                for t in ("pairs", "substring_pairs")
+                if cat.exists(t)
+            )
+
+        n_edges_before = edge_rows()
+        appended = self.stage2_pairs_delta(
+            None
+            if new_sigs is None
+            else new_sigs.select("url", "fp", "bands", "simhash"),
+            n_up,
+        )
+        new_rep_urls, new_edges = appended or (None, None)
+        if substring_pass:
+            hits = self.stage2b_delta(
+                new_rep_urls,
+                None if new_rows is None else new_rows.select("url", "text"),
+                new_edges,
+            )
+            if hits is not None:
+                new_edges = new_edges.unionByName(hits)
+        if not self.stage3_clusters_delta(
+            new_edges,
+            None if new_rows is None else new_rows.select("url"),
+            sorted(mapping),
+            edge_rows() - n_edges_before,
+        ):
+            # wide merge/dissolve fallback (over the broadcast ceiling):
+            # full CC over the committed edge tables, correctness identical
+            self.stage3_clusters(resume=False)
+        self._clear_marker("delta.inflight")
         return self.clusters_view()
 
     def append_pages(
@@ -2437,11 +2290,12 @@ class NDDPipeline:
         pickle rewritten wholesale, ndd/server_ndd.py:246-261).
 
         Refuses (``AppendRefusedError``, nothing mutated) while a crash
-        marker is up or a stage-3 log is pending — maintenance must not
-        interleave with a mid-flight delta. Crash protocol: the
-        ``delta.inflight`` marker brackets every destructive window (swap
-        and fold); a crash leaves the marker, all delta entry points
-        refuse, and ``run_incremental(full_snapshot)`` heals through a full
+        marker is up — maintenance must not interleave with a crashed
+        changeset (a changeset hands stage 3 its change in memory, so none
+        is ever left pending between calls). Crash protocol: its own
+        ``delta.inflight`` bracket spans every destructive window (swap and
+        fold); a crash leaves the marker, all delta entry points refuse,
+        and ``run_incremental(full_snapshot)`` heals through a full
         rebuild, exactly as for a crashed changeset.
         Returns ``{table: (files_before, files_after), ...}``."""
         import os as _os
@@ -2450,8 +2304,6 @@ class NDDPipeline:
         cat, refuse = self.catalog, self._refuse
         if self._delta_suspect():
             refuse("crash marker up (a prior retraction/delta was killed)")
-        if any(cat.exists(t) for t in self._STAGE3_LOG_TABLES):
-            refuse("stage-3 log pending (mid-flight delta)")
         t0 = time.monotonic()
         out: dict = {}
         from near_duplicate_detection_spark.operators import mor as _mor

@@ -338,8 +338,8 @@ def test_pure_append_commits_clusters_append_only(
     APPENDING only the new rows: the committed clusters files are left
     byte-untouched on disk (no corpus-table rewrite — the last
     corpus-proportional cost on the pure-append path), old memberships are
-    unchanged, the novel docs enter as singletons, and the append log is
-    consumed."""
+    unchanged, the novel docs enter as singletons, and the changeset's
+    crash bracket is closed."""
     import os
 
     pipe = NDDPipeline(
@@ -376,8 +376,7 @@ def test_pure_append_commits_clusters_append_only(
         .value
         == 1
     ).any()
-    assert not pipe.catalog.exists("edges_new")
-    assert not pipe.catalog.exists("urls_new")
+    assert not pipe._delta_suspect()
 
 
 def test_append_with_merge_uses_label_patch(
@@ -471,8 +470,8 @@ def test_append_then_delete_same_doc_restores_base(
     assert dup_url not in set(after.url)
     assert _partition(after) == _partition(base)
     # the MOR retraction keeps (composes) the label patch — the displayed
-    # partition above is what matters; the log must be consumed though
-    assert not pipe.catalog.exists("urls_retracted")
+    # partition above is what matters; the changeset's bracket closed
+    assert not pipe._delta_suspect()
 
 
 def test_append_pages_keeps_one_pages_schema(

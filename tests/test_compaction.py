@@ -107,7 +107,12 @@ def test_append_ceiling_is_execution_knob_not_semantics(spark, tmp_path):
     tweaked = NDDPipeline(
         spark, NDDConfig(num_buckets=4, clusters_append_ceiling=1), base
     )
-    assert tweaked.stage3_clusters_delta() is True  # resume row trusted
+    assert tweaked._delta_preconditions(True)  # committed state trusted
+    before = _clusters_pdf(tweaked)
+    n_lineage = tweaked.catalog.count_rows("lineage")
+    tweaked.run_incremental(generate_pages(spark, 80))  # no drift → no-op
+    assert tweaked.catalog.count_rows("lineage") == n_lineage
+    assert _clusters_pdf(tweaked).equals(before)
 
 
 def test_compact_refuses_mid_flight(spark, tmp_path):
@@ -116,22 +121,15 @@ def test_compact_refuses_mid_flight(spark, tmp_path):
     pipe._set_marker("delta.inflight")
     with pytest.raises(AppendRefusedError):
         pipe.compact()
-    pipe._clear_marker("delta.inflight")
-    # pending stage-3 log also refuses
-    pipe.catalog.write(
-        pipe.spark.createDataFrame([("u",)], "url string"), "urls_new"
-    )
-    with pytest.raises(AppendRefusedError):
-        pipe.compact()
 
 
 def test_crash_mid_swap_leaves_marker_and_heals(spark, tmp_path, monkeypatch):
     """The rewrite-and-swap stage-3 delta branch (taken past the append-era
-    ceiling) wipes the log and the cluster_remap sidecar BEFORE the dir
-    rename. A crash inside that window must leave the delta.inflight marker
-    up — without it, the old clusters table survives with its patch/log
-    gone, and the next delta would commit unpatched labels or drop the
-    appended docs with no error anywhere. Marker up ⇒ every delta entry
+    ceiling) wipes the cluster_remap sidecar BEFORE the dir rename. A
+    crash inside that window must leave the delta.inflight marker up —
+    without it, the old clusters table survives with its patch gone, and
+    the next delta would commit unpatched labels or drop the appended docs
+    with no error anywhere. Marker up ⇒ every delta entry
     refuses; the full rebuild heals to exactly the from-scratch result."""
     import os as _os
 

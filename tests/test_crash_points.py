@@ -47,8 +47,10 @@ CATALOG_MUTATORS = (
 )
 PIPELINE_MUTATORS = ("_set_marker", "_clear_marker", "_write_counter")
 # mutation points of one mixed run on the base catalog (lineage rows are
-# counted once, at mark_complete; metrics rows are advisory, not counted)
-N_MUTATIONS = 30
+# counted once, at mark_complete; metrics rows are advisory, not counted):
+# era bump, marker set, log append, pages + signatures commits, the
+# stage-2 and 2b appends + commits, the clusters commit, marker clear
+N_MUTATIONS = 21
 # mutation points of one compact() on the compact base catalog
 N_COMPACT = 12
 # sorts below every generated url, so appending it as an exact copy of

@@ -114,9 +114,7 @@ def test_delete_pages_matches_full_rebuild_zero_resigning(
         int(m[(m.stage == "pairs") & (m.key == "retracted_docs")].value.sum())
         == len(DEL_IDS)
     )
-    # logs consumed on the clusters swap; no crash marker left behind
-    for t in ("edges_new", "urls_new", "urls_retracted"):
-        assert not pipe.catalog.exists(t)
+    # no crash marker left behind
     assert not pipe._delta_suspect()
 
 
@@ -260,8 +258,7 @@ def test_update_pages_matches_full_rebuild_signs_only_batch(
     # exactly one delta metrics row, carrying both counts
     retr = m[(m.stage == "clusters") & (m.key == "delta_retracted_urls")]
     assert retr.value.tolist() == [float(len(edit_urls))]
-    for t in ("edges_new", "urls_new", "urls_retracted"):
-        assert not pipe.catalog.exists(t)
+    assert not pipe._delta_suspect()
 
 
 def test_update_pages_refusals_mutate_nothing(

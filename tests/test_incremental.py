@@ -189,9 +189,8 @@ def test_append_merges_two_existing_clusters_via_stage3_delta(
     m = pipe.catalog.read("metrics").toPandas()
     relabeled = m[(m.stage == "clusters") & (m.key == "delta_merged_labels")]
     assert len(relabeled) == 1 and int(relabeled.value.iloc[0]) >= 1
-    # the append log is consumed on commit
-    assert not pipe.catalog.exists("edges_new")
-    assert not pipe.catalog.exists("urls_new")
+    # the changeset's crash bracket closed with its clusters commit
+    assert not pipe._delta_suspect()
 
 
 def _edit_doc(spark, n, suffix):
@@ -233,9 +232,7 @@ def test_edit_retracts_and_matches_full(spark, tmp_path_factory):
     # the full edge set
     dis = m[(m.stage == "clusters") & (m.key == "delta_dissolved_clusters")]
     assert len(dis) == 1 and int(dis.value.iloc[0]) >= 1
-    # logs consumed on commit; no crash marker left behind
-    for t in ("edges_new", "urls_new", "urls_retracted"):
-        assert not pipe.catalog.exists(t)
+    # no crash marker left behind
     assert not pipe._delta_suspect()
 
 
@@ -258,7 +255,6 @@ def test_retraction_cap_refuses_before_touching_state(
     with pytest.raises(AppendRefusedError, match="max_retract"):
         capped._apply_changeset(upserts, deletes, True, expect)
     # the refusal happened before any rewrite
-    assert not capped.catalog.exists("urls_retracted")
     assert not capped.catalog.exists(mor.PATCH_TABLE)
     assert not capped._delta_suspect()
     assert capped.catalog.count_rows("pairs") == n_pairs
@@ -284,10 +280,72 @@ def test_retract_crash_marker_forces_full_rebuild(spark, tmp_path_factory):
     pipe._set_marker("delta.inflight")  # a killed retraction
     with pytest.raises(AppendRefusedError, match="crash marker"):
         pipe._delta_preconditions(True)
-    assert pipe.stage3_clusters_delta() is False
     clusters = pipe.run_incremental(generate_pages(spark, 90)).toPandas()
     assert len(clusters) == 90
     assert not pipe._delta_suspect()  # cleared by the committed rebuild
+
+
+@pytest.mark.parametrize("killed", ["heal", "plain_run"])
+def test_lagging_clusters_refuse_deltas(
+    spark, tmp_path_factory, monkeypatch, killed
+):
+    """A full build killed at its clusters write leaves clusters lagging
+    the committed edge tables: a heal (run under the crash marker) keeps
+    the marker up, and a plain run leaves none but fails the clusters
+    run-hash precondition. Either way append_pages refuses — accepting
+    would commit a clusters view missing the killed run's docs — and
+    run_incremental heals to the rebuild's partition."""
+    from near_duplicate_detection_spark.lineage import StageCatalog
+
+    base = str(tmp_path_factory.mktemp(f"ndd_lag_{killed}"))
+    pipe = NDDPipeline(spark, CFG, base)
+    pipe.run(generate_pages(spark, 80))
+    if killed == "heal":
+        pipe._set_marker("delta.inflight")
+    orig_write = StageCatalog.write
+
+    def crash_at_clusters(self, df, table, **kw):
+        if table == "clusters":
+            raise RuntimeError("simulated crash at the clusters write")
+        return orig_write(self, df, table, **kw)
+
+    monkeypatch.setattr(StageCatalog, "write", crash_at_clusters)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        if killed == "heal":
+            pipe.run_incremental(generate_pages(spark, 90))
+        else:
+            pipe.run(generate_pages(spark, 90))
+    monkeypatch.undo()
+    assert pipe.clusters_view().count() == 80  # clusters lag the pairs
+
+    with pytest.raises(AppendRefusedError):
+        pipe.append_pages(generate_pages(spark, 100, start=90))
+    healed = pipe.run_incremental(generate_pages(spark, 100)).toPandas()
+    assert not pipe._delta_suspect()
+    full = NDDPipeline(
+        spark, CFG, str(tmp_path_factory.mktemp(f"ndd_lag_{killed}_full"))
+    ).run(generate_pages(spark, 100)).toPandas()
+    assert _partition(healed) == _partition(full)
+
+
+def test_resume_trusts_only_latest_lineage_row(spark, tmp_path_factory):
+    """Run hashes are content-derived, so rebuilding the original snapshot
+    after an append reproduces the first build's hashes. Resume must trust
+    only each partition's LATEST lineage row: the first build's older row
+    with the same hash would skip stages 2-3 and keep the appended docs in
+    pairs and clusters."""
+    base = str(tmp_path_factory.mktemp("ndd_cycle"))
+    pipe = NDDPipeline(spark, CFG, base)
+    pipe.run(generate_pages(spark, 80))
+    h3 = pipe.stage3_run_hash()
+    pipe.append_pages(generate_pages(spark, 85, start=80))
+    got = pipe.run(generate_pages(spark, 80)).toPandas()
+    assert pipe.stage3_run_hash() == h3  # the hash did cycle back
+    assert len(got) == 80
+    full = NDDPipeline(
+        spark, CFG, str(tmp_path_factory.mktemp("ndd_cycle_full"))
+    ).run(generate_pages(spark, 80)).toPandas()
+    assert _partition(got) == _partition(full)
 
 
 def test_noop_incremental_is_cheap(spark, tmp_path_factory):
@@ -315,11 +373,13 @@ def test_param_change_rejects_delta_state(spark, tmp_path_factory):
     )
     with pytest.raises(AppendRefusedError, match="pairs not committed"):
         changed._delta_preconditions(True)
-    # a stage-2b-only change refuses on the 2b state alone
+    # a stage-2b-only change refuses on the 2b state — and, with the
+    # substring pass off, on clusters, whose run hash chains the 2b params
     changed_2b = NDDPipeline(
         spark, NDDConfig(num_buckets=4, substring_min_len=400), base
     )
-    assert changed_2b._delta_preconditions(False)
+    with pytest.raises(AppendRefusedError, match="clusters not committed"):
+        changed_2b._delta_preconditions(False)
     with pytest.raises(AppendRefusedError, match="substring_pairs"):
         changed_2b._delta_preconditions(True)
     # same params → the delta accepts, and an unchanged snapshot no-ops
@@ -369,18 +429,18 @@ def test_delete_retracts_and_matches_full(spark, tmp_path_factory):
     assert len(m[(m.stage == "pairs") & (m.key == "verified_pairs")]) == 1
     cl_retr = m[(m.stage == "clusters") & (m.key == "delta_retracted_urls")]
     assert len(cl_retr) == 1 and int(cl_retr.value.iloc[0]) == 30
-    for t in ("edges_new", "urls_new", "urls_retracted"):
-        assert not pipe.catalog.exists(t)
+    assert not pipe._delta_suspect()
 
 
 def test_stage3_full_crash_after_clusters_write_never_reapplies_log(
     spark, tmp_path_factory, monkeypatch
 ):
-    """ADVICE r3: the full stage 3 must wipe the append log BEFORE writing
-    clusters. A crash right after the write then leaves NO log (retry routes
-    to the idempotent full path) — the old write-then-wipe order left an
-    intact log next to a clusters table that already incorporated it, and a
-    retry's delta would union the logged urls in a second time."""
+    """ADVICE r3: a crash right after stage 3's clusters write must never
+    let a retry add the change a second time (the old stage-3 append log,
+    left intact next to a clusters table that already incorporated it, made
+    a retry's delta union the logged urls in again). The changeset's one
+    crash bracket spans its clusters commit, so the marker is still up at
+    the crash point and the retry routes to the idempotent full rebuild."""
     from near_duplicate_detection_spark.lineage import StageCatalog
 
     base = str(tmp_path_factory.mktemp("ndd_s3crash"))
@@ -403,13 +463,13 @@ def test_stage3_full_crash_after_clusters_write_never_reapplies_log(
         forced.run_incremental(generate_pages(spark, 110))
     monkeypatch.setattr(StageCatalog, "write", orig_write)
 
-    # the fix's signature: the log is already gone at the crash point
-    assert not pipe.catalog.exists("edges_new")
-    assert not pipe.catalog.exists("urls_new")
+    # the changeset's bracket is still open at the crash point
+    assert pipe._delta_suspect()
 
     clusters = pipe.run_incremental(generate_pages(spark, 110)).toPandas()
     assert len(clusters) == 110
     assert clusters.url.nunique() == 110  # never duplicate url rows
+    assert not pipe._delta_suspect()
     full = NDDPipeline(
         spark, CFG, str(tmp_path_factory.mktemp("ndd_s3crash_full"))
     ).run(generate_pages(spark, 110)).toPandas()
