@@ -152,7 +152,7 @@ def main():
             methods = [
                 "_delta_preconditions",
                 "stage2_pairs_delta",
-                "_stage2_retract",
+                "_retraction_mapping",
                 "stage2b_delta",
                 "stage3_clusters_delta",
                 "stage3_clusters",

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 ENGINE_VERSION = "20261017"
 
@@ -81,7 +81,6 @@ class NDDConfig:
     # run one task per bucket, so a low count caps write parallelism — the
     # round-1 value (16) throttled 32-core runs.
     num_buckets: int = 64
-    shuffle_partitions: int = 32
 
     def __post_init__(self) -> None:
         if self.lsh_bands * self.lsh_rows != self.num_perms:

@@ -122,10 +122,10 @@ class NDDPipeline:
         only if their multiset hash sums collide — 2^-64 per bucket for
         random drift (the sum is over the full 64-bit hash; accumulated in
         decimal(38,0) because ANSI mode rejects wrap-around bigint sums,
-        then wrapped back to mod-2^64 driver-side so the append-delta
-        subtraction algebra in stage 1 stays exact). An adversary
-        controlling page text would need a 2^64-work multiset-sum collision
-        — impractical, and crawl pipelines don't face adversarial inputs at
+        then wrapped back to mod-2^64 driver-side so the old-share
+        subtraction algebra of ``_snapshot_changeset`` stays exact). An
+        adversary controlling page text would need a 2^64-work multiset-sum
+        collision — impractical, and crawl pipelines don't face adversarial inputs at
         that precision. (Round-2 used the top 32 bits only: 2^-32.)"""
         rows = (
             pages.select(
@@ -157,15 +157,8 @@ class NDDPipeline:
         appended, edited, or shrunken snapshot refreshes exactly the changed
         buckets, and a bucket whose docs all vanished is dropped (the
         reference drops deleted videos on update, ndd/server_ndd.py:246-261).
-
-        PURE-APPEND fast path (same checksum algebra as stage 1's): appends
-        hash uniformly into ALL buckets, so the bucket-granular rewrite
-        above degenerates to a full-corpus rewrite for a 1% append. A
-        drifted bucket whose NEW urls alone account for its (rows, checksum)
-        delta has every old row byte-unchanged → append only the new rows
-        (an O(append) write instead of O(corpus); the remaining O(corpus)
-        cost is the stats scan + new-url anti-join, which Iceberg snapshot
-        diffing replaces in production per the note above).
+        A cold build is the case where every bucket is pending. O(append)
+        writes go through ``append_pages`` / ``run_incremental`` instead.
         """
         cfg, cat = self.cfg, self.catalog
         h = cfg.stage1_hash()
@@ -180,18 +173,6 @@ class NDDPipeline:
             else range(cfg.num_buckets)
         )
         done = cat.latest_partition_stats("pages", h) if resume else {}
-        if not done and self._changed_buckets is None:
-            # ---- one-pass full build (r6): nothing is resumable, so every
-            # input row will be written regardless of its stats — fold the
-            # per-bucket (rows, checksum) aggregation into the write itself
-            # via observed metrics instead of paying a SECOND full pass over
-            # the input for _input_stats (guide §1.2: remove unnecessary
-            # passes). The observed values are the same count/decimal-sum
-            # expressions _input_stats aggregates, so lineage content is
-            # bit-identical; resume/seam paths keep the stats-first scan
-            # (they must decide WHAT to write before writing).
-            self._ingest_one_pass(pages, h, t0)
-            return
         stats = self._input_stats(pages)
         pending = sorted(
             b for b in candidates if done.get(b, None) != stats.get(b, (0, 0))
@@ -199,61 +180,17 @@ class NDDPipeline:
         if not pending:
             return
         nonempty = [b for b in pending if b in stats]
-        # era-stamped at write time (merge-on-read governance — rows written
-        # now postdate every stored retraction-log entry, see operators/mor.py)
-        with_bucket = self._stamp_era(
-            pages.withColumn("bucket", self._bucket_expr())
-        )
-        appended: set[int] = set()
-        append_cand = [
-            b
-            for b in nonempty
-            if resume and b in done and stats[b][0] > done[b][0]
-        ]
-        if append_cand and cat.exists("pages"):
-            cand = with_bucket.where(
-                F.col("bucket").isin([int(b) for b in append_cand])
-            ).withColumn("h", F.xxhash64("url", "text"))
-            new_rows = cand.join(
-                self.pages_table()
-                .where(F.col("bucket").isin([int(b) for b in append_cand]))
-                .select("url"),
-                "url",
-                "left_anti",
-            ).localCheckpoint()
-            delta_stats = {
-                int(r["bucket"]): (int(r["rows"]), _wrap64(int(r["cks"])))
-                for r in new_rows.groupBy("bucket")
-                .agg(
-                    F.count("*").alias("rows"),
-                    F.sum(F.col("h").cast("decimal(38,0)")).alias("cks"),
+        if nonempty:
+            # era-stamped at write time (merge-on-read governance — rows
+            # written now postdate every stored retraction-log entry, see
+            # operators/mor.py)
+            todo = self._stamp_era(
+                pages.withColumn("bucket", self._bucket_expr())
+            )
+            if len(nonempty) < cfg.num_buckets:
+                todo = todo.where(
+                    F.col("bucket").isin([int(b) for b in nonempty])
                 )
-                .collect()
-            }
-            for b in append_cand:
-                want = (
-                    stats[b][0] - done[b][0],
-                    _wrap64(stats[b][1] - done[b][1]),
-                )
-                if delta_stats.get(b) == want:
-                    appended.add(b)
-            if appended:
-                cat.write(
-                    new_rows.where(
-                        F.col("bucket").isin([int(b) for b in appended])
-                    )
-                    .drop("h")
-                    .repartition("bucket"),
-                    "pages",
-                    partition_by=["bucket"],
-                    mode="append",
-                    max_records_per_file=2048,
-                )
-        full = [b for b in nonempty if b not in appended]
-        if full:
-            todo = with_bucket
-            if len(full) < cfg.num_buckets:
-                todo = todo.where(F.col("bucket").isin([int(b) for b in full]))
             # bucket-PURE partitions: without this, every upstream task writes
             # a file into every bucket dir (tasks × buckets small files), and
             # every downstream partitioned write inherits the explosion. One
@@ -280,73 +217,7 @@ class NDDPipeline:
             checksums={b: stats.get(b, (0, 0))[1] for b in pending},
         )
         cat.add_metrics(
-            "pages",
-            {
-                "buckets_appended": len(appended),
-                "buckets_rewritten": len(full),
-                "appended_docs_ingested": sum(
-                    stats[b][0] - done[b][0] for b in appended
-                ),
-                "wall_ms": wall_ms,
-            },
-        )
-
-    def _ingest_one_pass(self, pages: DataFrame, h: str, t0: float) -> None:
-        """Full-build stage 0 in ONE pass over the input: write every row
-        and collect the per-bucket (rows, Σ xxhash64(url, text)) lineage
-        stats as observed metrics of the SAME write job. Behavior-identical
-        to the stats-then-write path when nothing is resumable: same files,
-        same lineage rows, same metrics, same stale-partition drops."""
-        from pyspark.sql import Observation
-
-        cfg, cat = self.cfg, self.catalog
-        dec = F.col("h").cast("decimal(38,0)")
-        aggs = []
-        for b in range(cfg.num_buckets):
-            w = F.col("bucket") == b
-            aggs.append(F.sum(F.when(w, 1).otherwise(0)).alias(f"r{b}"))
-            aggs.append(F.sum(F.when(w, dec)).alias(f"c{b}"))
-        df = (
-            self._stamp_era(pages.withColumn("bucket", self._bucket_expr()))
-            .withColumn("h", F.xxhash64("url", "text"))
-            # bucket-PURE partitions, same rationale as the two-pass path
-            .repartition("bucket")
-        )
-        obs = Observation("ingest_stats")
-        cat.write(
-            df.observe(obs, *aggs).drop("h"),
-            "pages",
-            partition_by=["bucket"],
-            max_records_per_file=2048,
-        )
-        got = obs.get
-        stats: dict[int, tuple[int, int]] = {}
-        for b in range(cfg.num_buckets):
-            r = int(got[f"r{b}"] or 0)
-            if r:
-                stats[b] = (r, _wrap64(int(got[f"c{b}"])))
-        # dynamic overwrite never touches a partition with zero input rows —
-        # drop stale dirs explicitly, exactly like the two-pass path
-        pending = list(range(cfg.num_buckets))
-        for b in pending:
-            if b not in stats:
-                cat.drop_partition("pages", b)
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        cat.mark_complete(
-            "pages",
-            h,
-            {b: stats.get(b, (0, 0))[0] for b in pending},
-            wall_ms,
-            checksums={b: stats.get(b, (0, 0))[1] for b in pending},
-        )
-        cat.add_metrics(
-            "pages",
-            {
-                "buckets_appended": 0,
-                "buckets_rewritten": len(stats),
-                "appended_docs_ingested": 0,
-                "wall_ms": wall_ms,
-            },
+            "pages", {"buckets_rewritten": len(nonempty), "wall_ms": wall_ms}
         )
 
     def pages_table(self) -> DataFrame:
@@ -407,102 +278,22 @@ class NDDPipeline:
             return
         t0 = time.monotonic()
 
-        # ---- pure-append fast path: a drifted bucket whose NEW urls alone
-        # account for the full (rows, checksum) delta has every old row
-        # byte-unchanged (an edit keeps the url in signatures, so it is
-        # excluded from the anti-join and the checksum identity fails; a
-        # delete fails the row-count identity) → sign ONLY the new docs and
-        # append to the partition. Appends hash uniformly into ALL buckets,
-        # so without this the bucket-granular resume re-signs the whole
-        # corpus for a 1% append.
-        append_cand = [
-            b
-            for b in pending
-            if resume
-            and b in sig_stats
-            and pages_stats.get(b, (0, 0))[0] > sig_stats[b][0]
-        ]
-        appended: set[int] = set()
-        n_appended_docs = 0
-        if append_cand:
-            cand_pages = (
-                self.pages_table()
-                .where(F.col("bucket").isin([int(b) for b in append_cand]))
-                .select(
-                    "url",
-                    "text",
-                    "bucket",
-                    F.xxhash64("url", "text").alias("h"),
-                )
-            )
-            new_docs = cand_pages.join(
-                self.signatures_table()
-                .where(F.col("bucket").isin([int(b) for b in append_cand]))
-                .select("url"),
-                "url",
-                "left_anti",
-            ).localCheckpoint()
-            delta_stats = {
-                int(r["bucket"]): (int(r["rows"]), _wrap64(int(r["cks"])))
-                for r in new_docs.groupBy("bucket")
-                .agg(
-                    F.count("*").alias("rows"),
-                    F.sum(F.col("h").cast("decimal(38,0)")).alias("cks"),
-                )
-                .collect()
-            }
-            for b in append_cand:
-                want = (
-                    pages_stats[b][0] - sig_stats[b][0],
-                    _wrap64(pages_stats[b][1] - sig_stats[b][1]),
-                )
-                if delta_stats.get(b) == want:
-                    appended.add(b)
-                    n_appended_docs += want[0]
-            if appended:
-                new_sigs = (
-                    new_docs.where(
-                        F.col("bucket").isin([int(b) for b in appended])
-                    )
-                    .select("url", "text")
-                    .mapInPandas(signature_map_fn(cfg), schema=SIGNATURE_SCHEMA)
-                    .withColumn(
-                        "bucket",
-                        F.pmod(
-                            F.xxhash64("url"), F.lit(cfg.num_buckets)
-                        ).cast("int"),
-                    )
-                )
-                cat.write(
-                    self._stamp_era(new_sigs),
-                    "signatures",
-                    partition_by=["bucket"],
-                    mode="append",
-                    max_records_per_file=2048,
-                )
-
-        full = [b for b in pending if b not in appended]
-        if full:
-            todo = self.pages_table().where(
-                F.col("bucket").isin([int(b) for b in full])
-            )
-            # bucket recomputed JVM-side after the UDF — it is a pure
-            # function of url (the stage-0 expression, see stage0_ingest),
-            # so no Python passthrough layer is needed
-            sigs = (
-                todo.select("url", "text")
-                .mapInPandas(signature_map_fn(cfg), schema=SIGNATURE_SCHEMA)
-                .withColumn(
-                    "bucket",
-                    F.pmod(F.xxhash64("url"), F.lit(cfg.num_buckets)).cast("int"),
-                )
-            )
-            # input partitions are bucket-pure (stage 0), so this partitioned
-            # write emits one file per task, no fan-out
-            cat.write(
-                self._stamp_era(sigs), "signatures", partition_by=["bucket"],
-                max_records_per_file=2048,
-            )
+        # bucket recomputed JVM-side after the UDF — it is a pure function
+        # of url (the stage-0 expression, see stage0_ingest), so no Python
+        # passthrough layer is needed
+        sigs = (
+            self.pages_table()
+            .where(F.col("bucket").isin([int(b) for b in pending]))
+            .select("url", "text")
+            .mapInPandas(signature_map_fn(cfg), schema=SIGNATURE_SCHEMA)
+            .withColumn("bucket", self._bucket_expr())
+        )
+        # input partitions are bucket-pure (stage 0), so this partitioned
+        # write emits one file per task, no fan-out
+        cat.write(
+            self._stamp_era(sigs), "signatures", partition_by=["bucket"],
+            max_records_per_file=2048,
+        )
         wall_ms = int((time.monotonic() - t0) * 1000)
         # LIVE rows per bucket = the pages stats (one signature per live
         # page; physical footer counts would include merge-on-read dead
@@ -525,9 +316,7 @@ class NDDPipeline:
         cat.add_metrics(
             "signatures",
             {
-                "buckets_computed": len(full),
-                "buckets_appended": len(appended),
-                "appended_docs_signed": n_appended_docs,
+                "buckets_computed": len(pending),
                 "wall_ms": wall_ms,
                 "empty_docs": n_empty,
             },
@@ -1787,9 +1576,11 @@ class NDDPipeline:
     def _delta_preconditions(
         self, substring_pass: bool
     ) -> dict[int, tuple[int, int]]:
-        """Shared refusal gate of the explicit O(change) entry points
-        (``append_pages`` / ``delete_pages`` / ``update_pages``): the
-        catalog must be a committed, CURRENT build with healthy delta state
+        """Shared refusal gate of the O(change) paths: ``run_incremental``
+        calls it before its snapshot diff, and ``_apply_changeset`` (behind
+        ``append_pages`` / ``delete_pages`` / ``update_pages``) before its
+        first mutation. The catalog must be a committed, CURRENT build with
+        healthy delta state
         — pages/signatures lineage consistent, pairs (and substring_pairs,
         when ``substring_pass``) committed under the current run hashes,
         param stamps matching, clusters committed under the current stage-3

@@ -247,8 +247,8 @@ def test_update_pages_matches_full_rebuild_signs_only_batch(
     assert _partition(clusters) == _partition(full)
     m = pipe.catalog.read("metrics").toPandas()
     signed = m[(m.stage == "signatures") & (m.key == "appended_docs_signed")]
-    # the base build logs a 0-row; the update's append must be the only
-    # nonzero signing, and exactly batch-sized
+    # the base build logs no such row; the update's append must be the
+    # only nonzero signing, and exactly batch-sized
     assert signed.value[signed.value > 0].tolist() == [float(len(edit_urls))]
     assert (
         int(m[(m.stage == "pairs") & (m.key == "retracted_docs")].value.sum())

@@ -80,18 +80,18 @@ def test_incremental_used_delta_path(incremental_built):
     ]
     assert len(sp_delta) == 3
     assert pipe.catalog.count_rows("pairs") > pairs_before
-    # stage 1 must have used the pure-append fast path: the delta runs
-    # signed exactly the appended docs (metrics rows carry no timestamp, so
-    # assert over value sums: the full build contributes 0 to append keys)
+    # the changeset core signed exactly the appended docs (metrics rows
+    # carry no timestamp, so assert over value sums: only the core emits
+    # the append keys, the full build none)
     sig = metrics[metrics.stage == "signatures"]
     assert (
         sig[sig.key == "appended_docs_signed"].value.astype(int).sum()
         == N2 - N1
     )
     assert sig[sig.key == "buckets_appended"].value.astype(int).sum() > 0
-    # stage 0 must have used ITS pure-append fast path too: only the initial
-    # full build rewrote buckets (appends hash into every bucket, so without
-    # the fast path each incremental run would rewrite the whole pages table)
+    # and appended the new pages without a rewrite: only the initial full
+    # build rewrote buckets (appends hash into every bucket, so a bucket
+    # rewrite per incremental run would rewrite the whole pages table)
     pg = metrics[metrics.stage == "pages"]
     assert (
         pg[pg.key == "buckets_rewritten"].value.astype(int).sum()

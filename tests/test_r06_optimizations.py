@@ -3,9 +3,10 @@
 1. stage2_pairs' conditional SimHash-fallback routing — the fallback union
    is now gated on the flagged-bucket count; it must still fire (and link
    the skewed cluster) when a bucket trips the ceiling.
-2. one-pass full-build ingest — the observed-metrics stats must equal the
-   separate aggregation scan's, and the committed state must satisfy the
-   data-aware resume predicate (re-run is a no-op on the same snapshot).
+2. cold-build ingest — the committed pages lineage must equal the input's
+   per-bucket aggregation (``_input_stats``), every bucket must carry a
+   lineage row, and the committed state must satisfy the data-aware resume
+   predicate (re-run is a no-op on the same snapshot).
 3. assign_to_centroids' SQL-literal rendering — the fast path must refuse
    unrenderable ids (falling back to the column-object builder) and both
    paths must assign identically.
@@ -91,21 +92,22 @@ def test_stage2_no_fallback_when_nothing_flagged(spark, tmp_path):
     assert skew_urls <= (set(pairs.url_a) | set(pairs.url_b))
 
 
-def test_one_pass_ingest_stats_match_separate_scan(spark, tmp_path):
-    """The full build's observed-metrics lineage stats must equal the
-    stats-first scan's (the algebra every later resume decision rests on),
-    and a same-snapshot re-run must be a data-aware no-op (no file churn)."""
+def test_cold_ingest_lineage_matches_input_stats(spark, tmp_path):
+    """A cold build's committed lineage stats must equal the input's
+    per-bucket aggregation (the algebra every later resume decision rests
+    on), and a same-snapshot re-run must be a data-aware no-op (no file
+    churn)."""
     cfg = NDDConfig(num_buckets=4)
     base = str(tmp_path / "cat")
     pipe = NDDPipeline(spark, cfg, base)
     pages = _skewed_pages(spark)
-    pipe.stage0_ingest(pages, resume=False)  # one-pass path (nothing resumable)
+    pipe.stage0_ingest(pages, resume=False)  # cold: every bucket pending
     committed = pipe.catalog.latest_partition_stats(
         "pages", cfg.stage1_hash()
     )
-    direct = pipe._input_stats(pages)  # the two-pass path's aggregation
+    direct = pipe._input_stats(pages)
     assert {b: s for b, s in committed.items() if s != (0, 0)} == direct
-    # zero-row buckets are committed as (0, 0), same as the two-pass shape
+    # zero-row buckets are committed as (0, 0)
     assert set(committed) == set(range(cfg.num_buckets))
 
     def file_set():

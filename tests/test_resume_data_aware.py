@@ -41,7 +41,17 @@ def test_append_invalidates_downstream(spark, tmp_path):
 
     # same catalog, grown snapshot (docs 0..399 — ids 300..399 are new)
     pipe2 = NDDPipeline(spark, CFG, base)
-    pipe2.run(generate_pages(spark, 400))
+    grown = generate_pages(spark, 400)
+    pipe2.run(grown)
+    # the drifted buckets were rewritten and re-signed, not appended to:
+    # both views hold each doc once, and the committed lineage is the grown
+    # snapshot's own stats, chained from pages into signatures
+    assert pipe2.pages_table().count() == 400
+    assert pipe2.signatures_table().count() == 400
+    h = CFG.stage1_hash()
+    pages_lineage = pipe2.catalog.latest_partition_stats("pages", h)
+    assert pages_lineage == pipe2._input_stats(grown)
+    assert pipe2.catalog.latest_partition_stats("signatures", h) == pages_lineage
     cl = _cluster_map(pipe2)
     assert len(cl) == 400, "clusters must cover appended docs"
     tr = truth_pairs(400)
