@@ -39,16 +39,18 @@ class NDDConfig:
     substring_min_len: int = 200     # min shared run to link a pair
     # --- incremental execution strategy (NOT semantics) ---
     # These bound WHICH plan the incremental paths pick (targeted retraction
-    # vs full rebuild; driver union-find vs distributed CC; broadcast remap
-    # vs full re-cluster) — never what the committed result contains. They
-    # are therefore deliberately EXCLUDED from every stage hash: changing
-    # them must not invalidate resume state (contrast bucket_pair_ceiling,
-    # which changes the output pair set and so chains into stage2/2b hashes).
+    # vs full rebuild; stage-3 delta vs full CC; merge-on-read commit vs
+    # fold) — never what the committed result contains. They are therefore
+    # deliberately EXCLUDED from every stage hash: changing them must not
+    # invalidate resume state (contrast bucket_pair_ceiling, which changes
+    # the output pair set and so chains into stage2/2b hashes).
     max_retract: int = 100_000       # retraction size ceiling (broadcast map)
-    max_remap: int = 2_000_000       # stage-3 dissolve/remap broadcast ceiling
-    driver_cc_max: int = 200_000     # contraction edges solved driver-side
-    # consecutive append-only (merge-on-read) clusters commits before the
-    # next append folds the patch and rewrites the table (Iceberg
+    # stage-3 delta driver/broadcast bound: a larger dissolve frontier or
+    # contraction graph runs the full CC; a larger stored label patch or
+    # tombstone set folds the clusters table
+    max_remap: int = 2_000_000
+    # merge-on-read clusters commits since the last rewrite at which the
+    # next delta commit folds the sidecars and rewrites the table (Iceberg
     # compaction analog). Era COUNT, not file count: each MOR commit adds
     # exactly one file, while a rewrite's file count scales with cluster
     # parallelism — counting eras keeps the trigger scale-independent.

@@ -186,10 +186,10 @@ def delta_lsh_candidates(
 
 
 def _driver_union_find(edges: list[tuple[str, str]]) -> dict[str, str]:
-    """Min-root union-find with path compression — the driver-side CC for
-    append-sized contraction graphs. Roots are kept lexicographically
-    minimal, so the labeling equals ``connected_components``' min-label
-    fixpoint exactly."""
+    """Min-root union-find with path compression — the CC solver for
+    ``cluster_label_delta``'s contraction graphs. Roots are kept
+    lexicographically minimal, so the labeling equals
+    ``connected_components``' min-label fixpoint exactly."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -213,21 +213,18 @@ def _driver_union_find(edges: list[tuple[str, str]]) -> dict[str, str]:
 
 
 def cluster_label_delta(
-    old_clusters: DataFrame,
-    new_edges: DataFrame,
-    driver_cc_max: int = 200_000,
-) -> tuple[DataFrame, DataFrame, int | None]:
+    old_clusters: DataFrame, new_edges: DataFrame, max_edges: int
+) -> tuple[DataFrame, dict[str, str]] | None:
     """Incremental connected components by cluster contraction.
 
     Append-only premise: new edges can only MERGE existing clusters (or
     attach new nodes) — never split them. So contract every new edge's
     endpoints to their current cluster labels (endpoints absent from
     ``old_clusters`` are new docs and label themselves), drop the
-    self-edges, and run CC over the resulting label graph — whose size is
+    self-edges, and solve the resulting label graph — whose size is
     bounded by the number of NEW edges, independent of the corpus-derived
-    full edge set (the stage the round-2 verdict flagged as the last
-    non-delta scale-killer). Reference semantics: ``update_index`` touches
-    only stale videoids (ndd/server_ndd.py:158-268).
+    full edge set. Reference semantics: ``update_index`` touches only
+    stale videoids (ndd/server_ndd.py:158-268).
 
     The min-label invariant makes the contraction exact: every old
     cluster_id IS the min url of its members (connected_components), so the
@@ -236,23 +233,13 @@ def cluster_label_delta(
 
     Shuffle shape: the ONLY touch of the corpus-sized clusters table here is
     one map-side semi-join (broadcast endpoint set) to look up endpoint
-    labels; the pairs table is never read. The contraction graph is bounded
-    by the APPEND's new edges — never corpus-proportional — so below
-    ``driver_cc_max`` edges it is collected and solved with a driver-side
-    union-find (one job instead of the iterative CC's O(log d) checkpointed
-    rounds); a merge cascade past the guard falls back to the distributed
-    CC. → (remap(url=old_label, label=new_label) — changed labels only,
-    broadcastable by the caller's size guard; node_labels(url, label) over
-    every contraction node; n_remap — the remap's exact row count when the
-    driver solved the graph (the frames are then LOCAL relations: no
-    checkpoint or Spark count needed to size-guard or broadcast them), None
-    when the distributed CC ran and the caller must count; changed_map —
-    the remap as a driver dict when the driver solved (saves the caller a
-    python-relation collect), None otherwise)."""
-    from near_duplicate_detection_spark.operators.connected_components import (
-        connected_components,
-    )
-
+    labels; the pairs table is never read. The contraction graph is
+    collected and solved with the driver union-find — one job instead of
+    the distributed CC's checkpointed rounds. A graph of more than
+    ``max_edges`` edges is never collected: the function returns None and
+    the caller runs the full CC instead. → (node_labels(url, label) over
+    every contraction node, a LOCAL relation; the changed labels
+    {old_label: new_label} as a driver dict)."""
     endpoints = (
         new_edges.select(F.col("url_a").alias("url"))
         .union(new_edges.select(F.col("url_b").alias("url")))
@@ -286,19 +273,17 @@ def cluster_label_delta(
         .dropDuplicates(["url_a", "url_b"])
         .localCheckpoint()
     )
-    if contracted.count() <= driver_cc_max:
-        lab_map = _driver_union_find(
-            [(r["url_a"], r["url_b"]) for r in contracted.collect()]
-        )
-        spark = old_clusters.sparkSession
-        changed = [(u, l) for u, l in lab_map.items() if u != l]
-        ddl = "url string, label string"
-        node_labels = local_frame(spark, list(lab_map.items()), ddl)
-        remap = local_frame(spark, changed, ddl)
-        return remap, node_labels, len(changed), dict(changed)
-    node_labels = connected_components(contracted)
-    remap = node_labels.where(F.col("url") != F.col("label"))
-    return remap, node_labels, None, None
+    if contracted.count() > max_edges:
+        return None
+    lab_map = _driver_union_find(
+        [(r["url_a"], r["url_b"]) for r in contracted.collect()]
+    )
+    node_labels = local_frame(
+        old_clusters.sparkSession,
+        list(lab_map.items()),
+        "url string, label string",
+    )
+    return node_labels, {u: l for u, l in lab_map.items() if u != l}
 
 
 def delta_window_candidates(

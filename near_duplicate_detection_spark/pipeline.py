@@ -637,13 +637,14 @@ class NDDPipeline:
         return self._marker_up("delta.inflight")
 
     # ---- clusters append-era counter (compaction trigger) ----
-    # Each merge-on-read commit appends exactly one clusters file; a
-    # rewriting commit re-bases the table at the job's write parallelism.
+    # Each merge-on-read commit appends exactly one clusters file; the one
+    # rewrite (_rewrite_clusters) re-bases the table at the job's write
+    # parallelism.
     # Counting ERAS (appends since the last rewrite) therefore measures
     # fragmentation independently of cluster size, where a raw file count
     # would mis-trigger at high parallelism. The counter is an advisory
     # execution artifact — any value (including a missing file) is safe; it
-    # only decides WHEN the next append folds, never what it commits.
+    # only decides WHEN a delta commit folds, never what it commits.
 
     def _append_era(self) -> int:
         try:
@@ -964,30 +965,16 @@ class NDDPipeline:
                 self.stage_view("substring_pairs").select("url_a", "url_b")
             )
         labels = connected_components(edges)
-        clusters = clusters_table(labels, self.pages_table().select("url"))
-        import shutil as _shutil
-
-        # the full build recomputes every label from the edge tables, so the
-        # merge-on-read patch is superseded — wipe it before the write (a
-        # stale patch key could collide with a legitimately re-emerging
-        # label in the rebuilt table)
-        _shutil.rmtree(cat.path("cluster_remap"), ignore_errors=True)
-        cat.write(self._stamp_era(clusters), "clusters")
-        # tombstones die AFTER the write (not with the remap wipe above):
-        # the rebuilt rows carry the current era, which every stored
-        # tombstone already fails to govern (era-inert), so a crash in
-        # the write→wipe window never resurrects dead rows — while a
-        # wipe-first crash would have
-        _shutil.rmtree(cat.path("cluster_tombstones"), ignore_errors=True)
-        self._reset_append_era()  # full rewrite re-bases fragmentation
+        self._rewrite_clusters(
+            clusters_table(labels, self.pages_table().select("url"))
+        )
         wall_ms = int((time.monotonic() - t0) * 1000)
         n = cat.count_rows("clusters")
         cat.mark_complete("clusters", h, {-1: n}, wall_ms)
         # multi-doc cluster metric straight from the checkpointed CC labels
-        # instead of re-scanning the just-written corpus-sized table
-        # (_multi_doc_clusters — the delta paths still use it): every CC
-        # component has ≥2 members (labels cover exactly the nodes with an
-        # edge), and no singleton's cluster_id (its own url, absent from
+        # instead of re-scanning the just-written corpus-sized table: every
+        # CC component has ≥2 members (labels cover exactly the nodes with
+        # an edge), and no singleton's cluster_id (its own url, absent from
         # labels) can collide with a component label (a member url), so
         # distinct labels ≡ clusters with ≥2 members.
         cat.add_metrics(
@@ -1000,6 +987,38 @@ class NDDPipeline:
                 "wall_ms": wall_ms,
             },
         )
+
+    def _rewrite_clusters(self, rows: DataFrame) -> None:
+        """The one ``clusters`` rewrite — the full build hands it the CC
+        labels, the delta's fold trigger and ``compact()`` hand it
+        ``clusters_view()``. In order: stage ``rows`` in ``clusters_next``,
+        wipe ``cluster_remap``, rename the staged dir over ``clusters``,
+        wipe ``cluster_tombstones``, reset the append era.
+
+        The staged rows carry the current era and fold every sidecar. The
+        patch dies before the rename (a stale key could collide with a
+        label that re-emerges in the new table); the tombstones die after
+        it (era-inert against the staged rows, so a crash between the two
+        never resurrects dead rows). The destructive window runs under
+        ``delta.inflight``: a kill before it leaves the old table and its
+        sidecars intact, a kill inside it leaves the marker up. A caller's
+        bracket that is already up is left for that caller to clear."""
+        import os
+        import shutil
+
+        cat = self.catalog
+        shutil.rmtree(cat.path("clusters_next"), ignore_errors=True)
+        cat.write(self._stamp_era(rows), "clusters_next")
+        own = not self._delta_suspect()
+        if own:
+            self._set_marker("delta.inflight")
+        shutil.rmtree(cat.path("cluster_remap"), ignore_errors=True)
+        shutil.rmtree(cat.path("clusters"), ignore_errors=True)
+        os.rename(cat.path("clusters_next"), cat.path("clusters"))
+        shutil.rmtree(cat.path("cluster_tombstones"), ignore_errors=True)
+        self._reset_append_era()
+        if own:
+            self._clear_marker("delta.inflight")
 
     def stage3_clusters_delta(
         self,
@@ -1015,28 +1034,34 @@ class NDDPipeline:
         the urls of the changeset's retraction mapping.
 
         Append half: contracts the new edges to the committed clusters'
-        labels and runs CC over the contracted graph (operators/delta.py
-        cluster_label_delta) — work scales with the change, not the corpus
-        edge set (round-2 verdict #1: the last full-reprocess stage).
-        Retract half: every cluster touching a retracted url is DISSOLVED —
-        edge removal can split it and change its min-url label — and its
-        surviving members re-cluster as raw nodes from the post-retraction
-        edge tables (a map-side semi-join filter over the full
-        pairs/substring_pairs tables against the dissolved membership — an
-        O(edges) READ, but no wide shuffle and no re-verification), side by
-        side with the new edges. A pure append with ZERO label merges (the
-        common case) commits by appending only the new rows — O(append), no
-        corpus-table touch; only merge/retract runs pay the map-side
-        rewrite of the clusters table (broadcast remap join + union of new
-        rows) — an Iceberg MERGE at production scale.
+        labels and solves the contracted graph with the driver union-find
+        (operators/delta.py cluster_label_delta) — work scales with the
+        change, not the corpus edge set. Retract half: every cluster
+        touching a retracted url is DISSOLVED — edge removal can split it
+        and change its min-url label — and its surviving members (the
+        frontier) re-cluster as raw nodes from the post-retraction edge
+        tables (a map-side semi-join filter over the full
+        pairs/substring_pairs views — an O(edges) READ, but no wide shuffle
+        and no re-verification), side by side with the new edges.
 
-        Returns False, before any mutation, when the dissolve/remap set
-        exceeds ``cfg.max_remap`` (the broadcast ceiling) — the caller then
-        runs the full stage. Runs under the core's ``delta.inflight``
-        marker: a crash in either commit branch leaves it up, every delta
-        entry refuses, and the idempotent full rebuild heals."""
-        import os
+        Commit, one way — merge-on-read: the new and re-labeled rows land
+        as one appended file, label merges as ``cluster_remap`` rows
+        (old_label → new_label) and the dissolved memberships as
+        ``cluster_tombstones`` rows (url, era), resolved by every reader
+        through ``patched_clusters``. When a fold trigger is crossed — the
+        append era has reached ``cfg.clusters_append_ceiling``, or the
+        stored patch or tombstones exceed ``cfg.max_remap`` —
+        ``_rewrite_clusters`` then folds the view (the same shape as
+        ``retract_patch_ceiling`` → ``_fold``).
+
+        Returns False, before any mutation, when the frontier or the
+        contraction graph exceeds ``cfg.max_remap`` (the driver and
+        broadcast ceiling) — the caller then runs the full stage. Runs
+        under the core's ``delta.inflight`` marker: a crash anywhere leaves
+        it up, every delta entry refuses, and the full rebuild heals."""
         import shutil as _shutil
+
+        import pyarrow as _pa
 
         from near_duplicate_detection_spark.operators.delta import (
             cluster_label_delta,
@@ -1048,19 +1073,21 @@ class NDDPipeline:
         t0 = time.monotonic()
         n_old_rows = cat.count_rows("clusters")  # footer read, no Spark job
         # the VIEW (patched labels): new remaps must contract against what
-        # readers currently see, and any rewrite below must fold the patch
+        # readers currently see
         old = self.clusters_view().select("url", "cluster_id")
-        has_retract = bool(retracted)
-        if has_retract:
-            n_retr = len(retracted)
+        frontier_urls: list[str] = []
+        frontier = sub_edges = None
+        n_dissolved = 0
+        base_old = old
+        if retracted:
             retr = local_frame(self.spark, [(u,) for u in retracted], "url string")
             # affected cluster ids and the surviving frontier are both
             # ceiling-bounded (affected ≤ |retraction|; frontier guarded by
             # max_remap below), so COLLECT them into LocalRelations instead
             # of localCheckpoint+count: one evaluation each of the corpus
             # clusters view rather than two, and every downstream broadcast
-            # (pairs_touching probe, base_old anti-join, tombstone union)
-            # builds driver-side with no extra job
+            # (pairs_touching probe, base_old anti-join) builds driver-side
+            # with no extra job
             affected_ids = sorted(
                 r["cluster_id"]
                 for r in old.join(F.broadcast(retr), "url", "left_semi")
@@ -1080,8 +1107,7 @@ class NDDPipeline:
                 .join(F.broadcast(retr), "url", "left_anti")
                 .take(max_remap + 1)
             )
-            n_frontier = len(frontier_rows)
-            if n_frontier > max_remap:
+            if len(frontier_rows) > max_remap:
                 return False  # dissolve set too wide to broadcast → full CC
             frontier_urls = sorted(r["url"] for r in frontier_rows)
             frontier = local_frame(
@@ -1094,12 +1120,8 @@ class NDDPipeline:
                 )
             sub_edges = pairs_touching(all_edges, frontier)
             base_old = old.join(F.broadcast(affected), "cluster_id", "left_anti")
-        else:
-            frontier = sub_edges = None
-            n_retr = n_dissolved = n_frontier = 0
-            base_old = old
-        had_tomb = cat.exists("cluster_tombstones")
         edge_parts = [p for p in (new_edges, sub_edges) if p is not None]
+        node_labels, changed = None, {}
         if edge_parts:
             combined = edge_parts[0]
             for p in edge_parts[1:]:
@@ -1115,25 +1137,10 @@ class NDDPipeline:
                 combined = combined.localCheckpoint()
             # frontier members are NOT in base_old, so the contraction keeps
             # them as raw nodes and re-derives their labels from scratch
-            remap, node_labels, n_remap, changed_map = cluster_label_delta(
-                base_old, combined, driver_cc_max=self.cfg.driver_cc_max
-            )
-            driver_solved = n_remap is not None
-            if n_remap is None:
-                # distributed-CC fallback: remap is a real plan — materialize
-                # once and count it for the broadcast size guard
-                remap = remap.localCheckpoint()
-                n_remap = remap.count()
-            # driver-CC path: remap/node_labels are LOCAL relations (driver
-            # data) — no checkpoint, no Spark count; broadcast joins below
-            # ship them directly
-            if n_remap > max_remap:
-                return False  # merge cascade too wide to broadcast → full CC
-        else:
-            remap = node_labels = None
-            n_remap = 0
-            changed_map = {}
-            driver_solved = True  # vacuously: no edges, no remaps
+            solved = cluster_label_delta(base_old, combined, max_remap)
+            if solved is None:
+                return False  # contraction graph past the driver bound → full CC
+            node_labels, changed = solved
         # no retracted-url filter: a retracted url in the batch is an
         # UPDATED doc, re-entering with its new content
         new_rows = (
@@ -1143,7 +1150,7 @@ class NDDPipeline:
         )
         if frontier is not None:
             # dissolved-cluster survivors re-enter exactly like new docs:
-            # label from the contraction CC, else themselves (singletons)
+            # label from the contraction, else themselves (singletons)
             new_rows = new_rows.unionByName(frontier.select("url"))
         if node_labels is not None:
             new_rows = new_rows.join(node_labels, "url", "left").select(
@@ -1151,175 +1158,91 @@ class NDDPipeline:
             )
         else:
             new_rows = new_rows.withColumn("cluster_id", F.col("url"))
-        if driver_solved:
-            # Merge-on-read commit, appends AND retractions: new rows land
-            # as an APPEND, label merges land as ``cluster_remap`` patch
-            # rows (old_label → new_label), and a retraction's dissolved
-            # memberships land as ``cluster_tombstones`` rows (url, era) —
-            # applied by every reader through ``patched_clusters``. The
-            # corpus-sized clusters table is never rewritten on either
-            # delta path. The new remaps operate on PATCHED labels (``old``
-            # above reads the view), so the stored patch composes with
-            # them transitively; labels only ever decrease (min-root
-            # union-find), so a folded key can never re-emerge as a
-            # displayed label and one join pass resolves every row.
-            # Tombstones are era-discriminated (operators/mor.py): the
-            # frontier's re-labeled rows are appended at the CURRENT
-            # retraction era, which the tombstone written at that same era
-            # does not govern — only the pre-retraction rows die. Over any
-            # broadcast ceiling the rewrite-and-swap below folds both
-            # sidecars instead (the Iceberg-MERGE analog).
-            new_patch = self._compose_label_patch(changed_map or {})
-            n_tomb = n_retr + n_frontier
-            n_tomb_old = (
-                cat.count_rows("cluster_tombstones") if had_tomb else 0
-            )
-            # era ceiling: after cfg.clusters_append_ceiling consecutive
-            # MOR commits, fold instead (the rewrite below) — bounds
-            # small-file growth (one file per MOR commit), patch age, and
-            # tombstone accumulation (also capped at the broadcast bound)
-            if (
-                len(new_patch) <= max_remap
-                and n_tomb_old + n_tomb <= max_remap
-                and self._append_era() < self.cfg.clusters_append_ceiling
-            ):
-                appended = self._stamp_era(
-                    new_rows.withColumn(
-                        "is_representative",
-                        F.col("url") == F.col("cluster_id"),
-                    )
-                ).coalesce(1)
-                cat.write(appended, "clusters", mode="append")
-                if has_retract:
-                    # ALL rows of the dissolved clusters die: retracted
-                    # members outright, frontier members' PRE-retraction
-                    # rows (their re-labeled rows were just appended at
-                    # the current era, which this tombstone — written at
-                    # that same era — does not govern). Both url sets are
-                    # already driver lists (ceiling-checked above), so the
-                    # append is a driver-side read-union-rewrite of the
-                    # ceiling-bounded sidecar — zero Spark jobs (a python-
-                    # sourced Spark append pays a Python-worker launch per
-                    # default partition, ~4 s measured for tiny tables)
-                    import pyarrow as _pa
-
-                    era_now = int(self._retract_era())
-                    new_tomb = [
-                        (u, era_now)
-                        for u in sorted(set(retracted) | set(frontier_urls))
-                    ]
-                    old_tomb = (
-                        cat.read_small_rows(
-                            "cluster_tombstones", ["url", "era"]
-                        )
-                        if had_tomb
-                        else []
-                    )
-                    cat.write_small_local(
-                        "cluster_tombstones",
-                        old_tomb + new_tomb,
-                        ["url", "era"],
-                        types=[_pa.string(), _pa.int64()],
-                    )
-                if new_patch:
-                    # driver-side pyarrow write: zero Spark jobs (a python-
-                    # sourced Spark write pays a worker launch per default
-                    # partition — measured ~4 s for a 2-row table)
-                    cat.write_small_local(
-                        "cluster_remap",
-                        sorted(new_patch.items()),
-                        ["old_label", "new_label"],
-                    )
-                else:
-                    _shutil.rmtree(
-                        cat.path("cluster_remap"), ignore_errors=True
-                    )
-                n = cat.count_rows("clusters")  # footer read, no Spark job
-                wall_ms = int((time.monotonic() - t0) * 1000)
-                cat.mark_complete("clusters", h, {-1: n}, wall_ms)
-                self._bump_append_era()
-                cat.add_metrics(
-                    "clusters",
-                    {
-                        # physical footer count: includes tombstoned rows
-                        # until a fold reclaims them (live count = view)
-                        "rows": n,
-                        "delta_new_edges": n_new_edges,
-                        "delta_new_urls": n - n_old_rows - n_frontier,
-                        "delta_merged_labels": n_remap,
-                        "delta_retracted_urls": n_retr,
-                        "delta_dissolved_clusters": n_dissolved,
-                        "delta_append_only_commit": 0 if has_retract else 1,
-                        "delta_retract_mor_commit": 1 if has_retract else 0,
-                        "delta_patch_rows": len(new_patch),
-                        "delta_tombstone_rows": n_tomb_old + n_tomb,
-                        "wall_ms": wall_ms,
-                    },
-                )
-                return True
-        updated_old = base_old
-        if remap is not None:
-            rm = remap.select(
-                F.col("url").alias("_old_label"), F.col("label").alias("_new_label")
-            )
-            updated_old = (
-                base_old.join(
-                    F.broadcast(rm),
-                    base_old.cluster_id == rm._old_label,
-                    "left",
-                )
-                .select(
-                    "url",
-                    F.coalesce("_new_label", F.col("cluster_id")).alias(
-                        "cluster_id"
-                    ),
-                )
-            )
-        clusters_next = self._stamp_era(
-            updated_old.unionByName(new_rows).withColumn(
-                "is_representative", F.col("url") == F.col("cluster_id")
-            )
+        # The new remaps operate on PATCHED labels (``old`` reads the view),
+        # so the stored patch composes with them transitively; labels only
+        # ever decrease (min-root union-find), so a folded key can never
+        # re-emerge as a displayed label and one join pass resolves every
+        # row. Tombstones are era-discriminated (operators/mor.py): the
+        # frontier's re-labeled rows are appended at the CURRENT retraction
+        # era, which the tombstone written at that same era does not govern
+        # — only the pre-retraction rows die.
+        new_patch = self._compose_label_patch(changed)
+        new_tomb = sorted(set(retracted) | set(frontier_urls))
+        had_tomb = cat.exists("cluster_tombstones")
+        n_tomb = len(new_tomb) + (
+            cat.count_rows("cluster_tombstones") if had_tomb else 0
         )
-        # stage, then swap dirs under the core's marker
-        _shutil.rmtree(cat.path("clusters_next"), ignore_errors=True)
-        cat.write(clusters_next, "clusters_next")
-        # pure-append runs derive the new-url count from footer counts
-        # (clusters_next = base_old ∪ new_rows row-for-row, and base_old is
-        # the whole prior table when nothing dissolved); the retract path
-        # keeps the Spark count — base_old is then a filtered plan
-        n_new_urls = (
-            cat.count_rows("clusters_next") - n_old_rows
-            if not (has_retract or had_tomb)
-            else new_rows.count()
+        fold = (
+            self._append_era() >= self.cfg.clusters_append_ceiling
+            or len(new_patch) > max_remap
+            or n_tomb > max_remap
         )
-        # the staged table was built from the VIEW, so the patch is folded
-        # into it — wipe the sidecar before the swap
-        _shutil.rmtree(cat.path("cluster_remap"), ignore_errors=True)
-        _shutil.rmtree(cat.path("clusters"), ignore_errors=True)
-        os.rename(cat.path("clusters_next"), cat.path("clusters"))
-        # tombstones die AFTER the swap (unlike the remap wipe above): the
-        # staged rows carry the current era, which stored tombstones fail
-        # to govern (era-inert) — a crash in the swap→wipe window is
-        # harmless, while wipe-before-swap would resurrect dead rows in
-        # the still-old table
-        _shutil.rmtree(cat.path("cluster_tombstones"), ignore_errors=True)
-        self._reset_append_era()  # rewriting commit re-bases fragmentation
+        cat.write(
+            self._stamp_era(
+                new_rows.withColumn(
+                    "is_representative", F.col("url") == F.col("cluster_id")
+                )
+            ).coalesce(1),
+            "clusters",
+            mode="append",
+        )
+        n_new_urls = cat.count_rows("clusters") - n_old_rows - len(frontier_urls)
+        if new_tomb:
+            # ALL rows of the dissolved clusters die: retracted members
+            # outright, frontier members' PRE-retraction rows. Both url sets
+            # are driver lists (ceiling-checked above), so the append is a
+            # driver-side read-union-rewrite of the ceiling-bounded sidecar
+            # — zero Spark jobs (a python-sourced Spark write pays a
+            # Python-worker launch per default partition, ~4 s measured for
+            # tiny tables)
+            era_now = int(self._retract_era())
+            old_tomb = (
+                cat.read_small_rows("cluster_tombstones", ["url", "era"])
+                if had_tomb
+                else []
+            )
+            cat.write_small_local(
+                "cluster_tombstones",
+                old_tomb + [(u, era_now) for u in new_tomb],
+                ["url", "era"],
+                types=[_pa.string(), _pa.int64()],
+            )
+        if new_patch:
+            cat.write_small_local(
+                "cluster_remap",
+                sorted(new_patch.items()),
+                ["old_label", "new_label"],
+            )
+        else:
+            _shutil.rmtree(cat.path("cluster_remap"), ignore_errors=True)
+        if fold:
+            # bounds small-file growth (one file per commit), patch age and
+            # the readers' broadcasts; the fold reads the just-committed view
+            self._rewrite_clusters(self.clusters_view())
+        else:
+            self._bump_append_era()
+        n = cat.count_rows("clusters")  # footer read, no Spark job
         wall_ms = int((time.monotonic() - t0) * 1000)
-        n = cat.count_rows("clusters")
         cat.mark_complete("clusters", h, {-1: n}, wall_ms)
         cat.add_metrics(
             "clusters",
             {
+                # physical footer count: includes tombstoned rows until a
+                # fold reclaims them (live count = view)
                 "rows": n,
                 "delta_new_edges": n_new_edges,
                 "delta_new_urls": n_new_urls,
-                "delta_merged_labels": n_remap,
-                "delta_retracted_urls": n_retr,
+                "delta_merged_labels": len(changed),
+                "delta_retracted_urls": len(retracted),
                 "delta_dissolved_clusters": n_dissolved,
+                "delta_append_only_commit": 0 if retracted else 1,
+                "delta_retract_mor_commit": 1 if retracted else 0,
+                "clusters_fold": 1 if fold else 0,
+                "delta_patch_rows": 0 if fold else len(new_patch),
+                "delta_tombstone_rows": 0 if fold else n_tomb,
                 # multi_doc_clusters deliberately NOT recomputed here: it is
-                # a corpus-wide groupBy — an O(corpus) shuffle per append at
-                # scale. Full builds report it; delta runs leave the last
-                # full-build value standing (metrics are append-only).
+                # a corpus-wide groupBy — an O(corpus) shuffle per commit at
+                # scale. Full builds report it.
                 "wall_ms": wall_ms,
             },
         )
@@ -1350,18 +1273,6 @@ class NDDPipeline:
             if c not in patch:
                 out[c] = n
         return {o: n for o, n in out.items() if o != n}
-
-    def _multi_doc_clusters(self) -> int:
-        """Count of clusters with ≥2 members — a distributed groupBy over the
-        written clusters table (off the stage's critical path, after the
-        commit; never a corpus-proportional driver-side column pull)."""
-        return (
-            self.clusters_view()
-            .groupBy("cluster_id")
-            .count()
-            .where(F.col("count") > 1)
-            .count()
-        )
 
     # ---------- targeted re-index ----------
 
@@ -2061,12 +1972,12 @@ class NDDPipeline:
         untouched — resume stays a no-op).
 
         Two targets:
-        - ``clusters``: when a ``cluster_remap`` sidecar exists or any
-          append eras accumulated (each merge-on-read commit adds exactly
-          one file), rewrite from ``clusters_view`` — folding the patch —
-          via the staged ``clusters_next`` → atomic-rename swap, wipe the
-          sidecar, reset the era counter. Readers then skip the patch join
-          entirely.
+        - ``clusters``: when a ``cluster_remap`` or ``cluster_tombstones``
+          sidecar exists or any append eras accumulated (each merge-on-read
+          commit adds exactly one file), ``_rewrite_clusters`` folds
+          ``clusters_view`` — the same routine the full build and the
+          append path's fold trigger use. Readers then skip the sidecar
+          joins entirely.
         - the ``retract_patch`` log and fragmented buckets: ONE ``_fold``
           call with the buckets of ``pages`` / ``signatures`` holding more
           than one parquet file (every delta append/upsert adds one file
@@ -2074,7 +1985,7 @@ class NDDPipeline:
           most once, and the log's governed tables are rewritten from their
           views.
 
-        The append path folds on its own once
+        The changeset core folds clusters on its own once
         ``cfg.clusters_append_ceiling`` eras accumulate; this entry point
         is for operators who want to schedule the rewrite cost off the
         ingest path (the reference has no analog — its index is a single
@@ -2084,14 +1995,11 @@ class NDDPipeline:
         marker is up — maintenance must not interleave with a crashed
         changeset (a changeset hands stage 3 its change in memory, so none
         is ever left pending between calls). Crash protocol: its own
-        ``delta.inflight`` bracket spans every destructive window (swap and
-        fold); a crash leaves the marker, all delta entry points refuse,
-        and ``run_incremental(full_snapshot)`` heals through a full
-        rebuild, exactly as for a crashed changeset.
+        ``delta.inflight`` bracket spans both rewrites; a crash leaves the
+        marker, all delta entry points refuse, and
+        ``run_incremental(full_snapshot)`` heals through a full rebuild,
+        exactly as for a crashed changeset.
         Returns ``{table: (files_before, files_after), ...}``."""
-        import os as _os
-        import shutil as _shutil
-
         cat, refuse = self.catalog, self._refuse
         if self._delta_suspect():
             refuse("crash marker up (a prior retraction/delta was killed)")
@@ -2106,23 +2014,12 @@ class NDDPipeline:
         )
         frag = set(cat.fragmented_partitions("pages"))
         frag |= set(cat.fragmented_partitions("signatures"))
-        if fold_clusters:
-            before = cat.file_count("clusters")
-            _shutil.rmtree(cat.path("clusters_next"), ignore_errors=True)
-            # the view resolves tombstones + label patch → both folded
-            cat.write(self._stamp_era(self.clusters_view()), "clusters_next")
         if fold_clusters or frag or cat.exists(_mor.PATCH_TABLE):
             self._set_marker("delta.inflight")
             if fold_clusters:
-                _shutil.rmtree(cat.path("cluster_remap"), ignore_errors=True)
-                _shutil.rmtree(cat.path("clusters"), ignore_errors=True)
-                _os.rename(cat.path("clusters_next"), cat.path("clusters"))
-                # after the swap: era-inert against the staged rows, so the
-                # swap→wipe crash window never resurrects dead rows
-                _shutil.rmtree(
-                    cat.path("cluster_tombstones"), ignore_errors=True
-                )
-                self._reset_append_era()
+                before = cat.file_count("clusters")
+                # the view resolves tombstones + label patch → both folded
+                self._rewrite_clusters(self.clusters_view())
                 out["clusters"] = (before, cat.file_count("clusters"))
             if frag or cat.exists(_mor.PATCH_TABLE):
                 out.update(self._fold(frag))
@@ -2202,17 +2099,18 @@ def patched_clusters(catalog: StageCatalog) -> DataFrame:
     """The committed clusters VIEW: physical rows plus the merge-on-read
     label patch.
 
-    Stage-3 append commits never rewrite the corpus-sized clusters table —
+    Stage-3 delta commits never rewrite the corpus-sized clusters table —
     appended rows land as new files and label MERGES land as
     ``cluster_remap`` rows (old_label → new_label), applied here by one
-    broadcast join (the patch is bounded by ``cfg.max_remap``, the same
-    broadcast ceiling the delta already enforces). This is the Iceberg
-    merge-on-read pattern: any rewriting commit (full build, retraction
-    dissolve, over-ceiling fold) folds the patch into the physical rows and
-    wipes it, so the patch never grows past one append era. The patch is
-    transitively closed by construction (composition at every commit), so
-    one join pass fully resolves labels; ``is_representative`` is
-    recomputed against the patched label.
+    broadcast join. This is the Iceberg merge-on-read pattern: the one
+    rewrite (``NDDPipeline._rewrite_clusters`` — the full build, the
+    delta's fold at ``cfg.clusters_append_ceiling`` eras or past
+    ``cfg.max_remap`` sidecar rows, and ``compact()``) folds the patch
+    into the physical rows and wipes it, so the patch spans at most
+    ``clusters_append_ceiling`` commits. The patch is transitively closed
+    by construction (composition at every commit), so one join pass fully
+    resolves labels; ``is_representative`` is recomputed against the
+    patched label.
 
     Stage-3 RETRACTION commits are merge-on-read too: a dissolved
     cluster's memberships land as ``cluster_tombstones`` rows (url, era)
@@ -2221,8 +2119,7 @@ def patched_clusters(catalog: StageCatalog) -> DataFrame:
     it (row.era < tombstone era — operators/mor.py era semantics; the
     newest tombstone per url suffices because a tombstone always kills
     every row alive at its commit). Both sidecars resolve here with one
-    broadcast join each, bounded by ``cfg.max_remap``; any rewriting
-    commit folds and wipes them."""
+    broadcast join each; the same rewrite folds and wipes them."""
     from near_duplicate_detection_spark.operators import mor
 
     df = catalog.read("clusters")
@@ -2263,8 +2160,8 @@ def query_top_k(
 
     FRESHNESS CONTRACT (mid-incremental reads): an in-flight
     run_incremental/append_pages commits signatures and pairs BEFORE the
-    clusters table advances (and the stage-3 delta swaps clusters via a
-    staged ``clusters_next`` dir, so this table is never half-written). A
+    clusters table advances (and every clusters rewrite swaps in a staged
+    ``clusters_next`` dir, so this table is never half-written). A
     query in that window sees the appended docs — they are in the
     signatures index the band probe hits — but not yet in clusters; the
     ``coalesce(cluster_id, url)`` rule below gives each such doc its OWN

@@ -61,8 +61,8 @@ def test_cc_matches_union_find(spark, edges):
 @settings(max_examples=200, deadline=None)
 @given(edges_strategy)
 def test_driver_union_find_matches_oracle_and_min_label(edges):
-    """The driver-side union-find (cluster_label_delta's small-graph fast
-    path) must produce the oracle's partition AND label every node with the
+    """The driver-side union-find (cluster_label_delta's one CC solver)
+    must produce the oracle's partition AND label every node with the
     lexicographic component MIN — the invariant that makes the contraction
     delta equal a full connected_components rebuild. Pure Python: no Spark."""
     from near_duplicate_detection_spark.operators.delta import (

@@ -36,6 +36,10 @@ def _clusters_pdf(pipe):
     )
 
 
+def _partition(pdf):
+    return {frozenset(g.url) for _, g in pdf.groupby("cluster_id")}
+
+
 def test_compact_folds_patch_and_defragments(spark, tmp_path):
     base = str(tmp_path)
     pipe = NDDPipeline(spark, CFG, base)
@@ -81,23 +85,53 @@ def test_compact_equals_full_rebuild(spark, tmp_path):
 
 
 def test_append_era_ceiling_folds_inline(spark, tmp_path):
+    """Every delta commits merge-on-read and then folds through the one
+    clusters rewrite when a trigger is crossed: the append era reaching
+    ``clusters_append_ceiling``, or the stored tombstones (or patch)
+    exceeding ``max_remap``."""
+    from near_duplicate_detection_spark.sources.pages import url_of
+
     cfg = NDDConfig(num_buckets=4, clusters_append_ceiling=1)
-    pipe = NDDPipeline(spark, cfg, str(tmp_path))
+    pipe = NDDPipeline(spark, cfg, str(tmp_path / "cat"))
     pipe.run(generate_pages(spark, 200))
     pipe.append_pages(_batch(spark, 200, 240))
     assert pipe._append_era() == 1  # first append: merge-on-read commit
+    assert pipe.catalog.exists("cluster_remap")
     pipe.append_pages(_batch(spark, 240, 280))
-    # second append hit the ceiling: rewriting commit folded + re-based
+    # second append reached the ceiling: committed, then folded + re-based
+    cat = pipe.catalog
     assert pipe._append_era() == 0
-    assert not pipe.catalog.exists("cluster_remap")
-    m = pipe.catalog.metrics().toPandas()
-    mor = m[(m.stage == "clusters") & (m.key == "delta_append_only_commit")]
-    assert len(mor) == 1  # only the first append committed append-only
+    assert not cat.exists("cluster_remap")
+    m = cat.metrics().toPandas()
+    folds = m[(m.stage == "clusters") & (m.key == "clusters_fold")]
+    assert sorted(folds.value) == [0, 1]
+    full = NDDPipeline(spark, cfg, str(tmp_path / "full"))
+    want = _partition(full.run(generate_pages(spark, 280)).toPandas())
+    assert _partition(_clusters_pdf(pipe)) == want
+
+    # a delete of a singleton dissolves nothing and merges nothing, so only
+    # its one tombstone can trip a fold — over max_remap=0 it does
+    gone = url_of(10)
+    assert _clusters_pdf(pipe).query("cluster_id == @gone").shape[0] == 1
+    tight = NDDPipeline(
+        spark,
+        NDDConfig(num_buckets=4, clusters_append_ceiling=1, max_remap=0),
+        str(tmp_path / "cat"),
+    )
+    tight.delete_pages([gone])
+    assert tight._append_era() == 0
+    assert not cat.exists("cluster_tombstones")
+    assert not cat.exists("cluster_remap")
+    m = cat.metrics().toPandas()
+    folds = m[(m.stage == "clusters") & (m.key == "clusters_fold")]
+    assert sorted(folds.value) == [0, 1, 1]
+    assert _partition(_clusters_pdf(tight)) == want - {frozenset([gone])}
+    assert not tight._delta_suspect()
 
 
 def test_append_ceiling_is_execution_knob_not_semantics(spark, tmp_path):
     """Changing the ceiling never invalidates committed state (same doctrine
-    as max_retract/max_remap/driver_cc_max)."""
+    as max_retract/max_remap)."""
     assert (
         NDDConfig(num_buckets=4, clusters_append_ceiling=1).stage3_hash()
         == CFG.stage3_hash()
@@ -124,16 +158,17 @@ def test_compact_refuses_mid_flight(spark, tmp_path):
 
 
 def test_crash_mid_swap_leaves_marker_and_heals(spark, tmp_path, monkeypatch):
-    """The rewrite-and-swap stage-3 delta branch (taken past the append-era
-    ceiling) wipes the cluster_remap sidecar BEFORE the dir rename. A
-    crash inside that window must leave the delta.inflight marker up —
-    without it, the old clusters table survives with its patch gone, and
-    the next delta would commit unpatched labels or drop the appended docs
-    with no error anywhere. Marker up ⇒ every delta entry
-    refuses; the full rebuild heals to exactly the from-scratch result."""
+    """The fold a stage-3 delta takes at the append-era ceiling (the one
+    clusters rewrite, after the merge-on-read commit) wipes the
+    cluster_remap sidecar BEFORE the dir rename. A crash inside that window
+    must leave the delta.inflight marker up — without it, the old clusters
+    table survives with its patch gone, and the next delta would commit
+    unpatched labels or drop the appended docs with no error anywhere.
+    Marker up ⇒ every delta entry refuses; the full rebuild heals to
+    exactly the from-scratch result."""
     import os as _os
 
-    cfg = NDDConfig(num_buckets=4, clusters_append_ceiling=0)  # always swap
+    cfg = NDDConfig(num_buckets=4, clusters_append_ceiling=0)  # always fold
     pipe = NDDPipeline(spark, cfg, str(tmp_path / "cat"))
     pipe.run(generate_pages(spark, 200))
 

@@ -1,6 +1,6 @@
 """Config-hash contract: knobs that change the OUTPUT chain into stage
 hashes (skew ceilings → stage 2 AND 2b); knobs that only pick the execution
-strategy (retraction/remap/driver-CC ceilings) are excluded — changing them
+strategy (retraction/remap/fold ceilings) are excluded — changing them
 must never invalidate committed state."""
 
 from __future__ import annotations
@@ -31,7 +31,6 @@ def test_execution_knobs_do_not_touch_stage_hashes():
         num_buckets=4,
         max_retract=1,
         max_remap=1,
-        driver_cc_max=1,
         retract_patch_ceiling=0,
         clusters_append_ceiling=1,
         query_collect_ceiling=0,
@@ -50,7 +49,7 @@ def test_execution_knobs_preserve_resume_state(spark, tmp_path):
     NDDPipeline(spark, BASE, base).run(generate_pages(spark, 80))
     tweaked = NDDPipeline(
         spark,
-        NDDConfig(num_buckets=4, max_retract=7, max_remap=9, driver_cc_max=3),
+        NDDConfig(num_buckets=4, max_retract=7, max_remap=9),
         base,
     )
     n_pairs = tweaked.catalog.count_rows("pairs")

@@ -285,46 +285,94 @@ def test_retract_crash_marker_forces_full_rebuild(spark, tmp_path_factory):
     assert not pipe._delta_suspect()  # cleared by the committed rebuild
 
 
-@pytest.mark.parametrize("killed", ["heal", "plain_run"])
+@pytest.mark.parametrize("killed", ["heal", "plain_run", "rebuild_over_patch"])
 def test_lagging_clusters_refuse_deltas(
     spark, tmp_path_factory, monkeypatch, killed
 ):
-    """A full build killed at its clusters write leaves clusters lagging
-    the committed edge tables: a heal (run under the crash marker) keeps
-    the marker up, and a plain run leaves none but fails the clusters
+    """A full build killed inside its clusters rewrite must never leave a
+    catalog the delta paths accept with a wrong clusters view.
+
+    ``heal`` / ``plain_run``: killed at the staged clusters write, clusters
+    lag the committed edge tables: a heal (run under the crash marker)
+    keeps the marker up, and a plain run leaves none but fails the clusters
     run-hash precondition. Either way append_pages refuses — accepting
-    would commit a clusters view missing the killed run's docs — and
-    run_incremental heals to the rebuild's partition."""
+    would commit a clusters view missing the killed run's docs.
+
+    ``rebuild_over_patch``: an append lands a ``cluster_remap`` row, then a
+    rebuild of the same snapshot is killed once at the staged write and
+    once at the rename. After each kill either the marker is up and
+    append_pages refuses, or the clusters view is the partition from
+    before the kill (a rebuild that wiped the patch before rewriting the
+    table would leave no marker and the copy split from its source).
+
+    run_incremental then heals to the rebuild's partition."""
+    import os
+
     from near_duplicate_detection_spark.lineage import StageCatalog
 
     base = str(tmp_path_factory.mktemp(f"ndd_lag_{killed}"))
     pipe = NDDPipeline(spark, CFG, base)
     pipe.run(generate_pages(spark, 80))
-    if killed == "heal":
-        pipe._set_marker("delta.inflight")
-    orig_write = StageCatalog.write
+    orig_write, orig_rename = StageCatalog.write, os.rename
 
-    def crash_at_clusters(self, df, table, **kw):
-        if table == "clusters":
+    def crash_at_staged_write(self, df, table, **kw):
+        if table == "clusters_next":
             raise RuntimeError("simulated crash at the clusters write")
         return orig_write(self, df, table, **kw)
 
-    monkeypatch.setattr(StageCatalog, "write", crash_at_clusters)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        if killed == "heal":
-            pipe.run_incremental(generate_pages(spark, 90))
-        else:
-            pipe.run(generate_pages(spark, 90))
-    monkeypatch.undo()
-    assert pipe.clusters_view().count() == 80  # clusters lag the pairs
+    def crash_at_rename(src, dst):
+        if dst.endswith("clusters"):
+            raise OSError("simulated crash at the clusters rename")
+        return orig_rename(src, dst)
 
-    with pytest.raises(AppendRefusedError):
-        pipe.append_pages(generate_pages(spark, 100, start=90))
-    healed = pipe.run_incremental(generate_pages(spark, 100)).toPandas()
+    if killed != "rebuild_over_patch":
+        if killed == "heal":
+            pipe._set_marker("delta.inflight")
+        monkeypatch.setattr(StageCatalog, "write", crash_at_staged_write)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            if killed == "heal":
+                pipe.run_incremental(generate_pages(spark, 90))
+            else:
+                pipe.run(generate_pages(spark, 90))
+        monkeypatch.undo()
+        assert pipe.clusters_view().count() == 80  # clusters lag the pairs
+        with pytest.raises(AppendRefusedError):
+            pipe.append_pages(generate_pages(spark, 100, start=90))
+        snapshot = generate_pages(spark, 100)
+    else:
+        # an exact copy of doc 5 under a url sorting below every generated
+        # one relabels doc 5's cluster
+        copy_url = "https://aaa.example.com/p/copy-5"
+        copy = (
+            generate_pages(spark, 80)
+            .where(F.col("url") == url_of(5))
+            .withColumn("url", F.lit(copy_url))
+        )
+        pipe.append_pages(copy)
+        assert pipe.catalog.exists("cluster_remap")
+        snapshot = generate_pages(spark, 80).unionByName(copy)
+        before = _partition(pipe.clusters_view().toPandas())
+        assert frozenset({url_of(5), copy_url}) in before
+        for target, name, crash in (
+            (StageCatalog, "write", crash_at_staged_write),
+            (os, "rename", crash_at_rename),
+        ):
+            monkeypatch.setattr(target, name, crash)
+            with pytest.raises((RuntimeError, OSError), match="simulated crash"):
+                pipe.run(snapshot, resume=False)
+            monkeypatch.undo()
+            if pipe._delta_suspect():
+                with pytest.raises(AppendRefusedError, match="crash marker"):
+                    pipe.append_pages(generate_pages(spark, 90, start=80))
+            else:
+                assert _partition(pipe.clusters_view().toPandas()) == before
+        assert pipe._delta_suspect()  # the rename is inside the bracket
+
+    healed = pipe.run_incremental(snapshot).toPandas()
     assert not pipe._delta_suspect()
     full = NDDPipeline(
         spark, CFG, str(tmp_path_factory.mktemp(f"ndd_lag_{killed}_full"))
-    ).run(generate_pages(spark, 100)).toPandas()
+    ).run(snapshot).toPandas()
     assert _partition(healed) == _partition(full)
 
 
@@ -455,7 +503,7 @@ def test_stage3_full_crash_after_clusters_write_never_reapplies_log(
 
     def write_then_crash(self, df, table, **kw):
         orig_write(self, df, table, **kw)
-        if table == "clusters":
+        if table == "clusters_next":
             raise RuntimeError("simulated crash after clusters write")
 
     monkeypatch.setattr(StageCatalog, "write", write_then_crash)
