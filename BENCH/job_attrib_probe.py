@@ -4,7 +4,9 @@ to pipeline phases via a SparkListener-free job-group probe.
 Builds a small base corpus, then runs the delta entry point with
 sc.setJobGroup markers flipped between phases by monkeypatching the phase
 boundaries. Simpler: sample nextJobId() around each stage via a tracing
-wrapper on NDDPipeline methods and catalog writes.
+wrapper on NDDPipeline methods and catalog writes. Every engine call
+submits its jobs on the caller's thread, so the nextJobId() delta around a
+traced call counts exactly that call's jobs.
 
 Usage: python BENCH/job_attrib_probe.py [N_BASE] [N_APPEND]
 """
@@ -145,48 +147,52 @@ def main():
 
         for mode in ("append", "update"):
             work = tempfile.mkdtemp(prefix=f"ndd_attrib_{mode}_")
-            shutil.rmtree(work)
-            shutil.copytree(base, work)
-            pipe = NDDPipeline(spark, cfg, work)
-            log: list[tuple[str, int, float]] = []
-            methods = [
-                "_delta_preconditions",
-                "stage2_pairs_delta",
-                "_retraction_mapping",
-                "stage2b_delta",
-                "stage3_clusters_delta",
-                "stage3_clusters",
-            ]
-            originals = trace_methods(NDDPipeline, methods, log, spark)
-            cat_orig = trace_catalog(StageCatalog, log, spark)
-            act_orig = trace_actions(log, spark)
-            j0, t0 = n_jobs(spark), time.monotonic()
-            if mode == "append":
-                batch = generate_pages(spark, N_BASE + N_APP, start=N_BASE)
-                pipe.append_pages(batch)
-            else:
-                from pyspark.sql import functions as F
+            try:
+                shutil.rmtree(work)
+                shutil.copytree(base, work)
+                pipe = NDDPipeline(spark, cfg, work)
+                log: list[tuple[str, int, float]] = []
+                methods = [
+                    "_delta_preconditions",
+                    "stage2_pairs_delta",
+                    "_retraction_mapping",
+                    "stage2b_delta",
+                    "stage3_clusters_delta",
+                    "stage3_clusters",
+                ]
+                originals = trace_methods(NDDPipeline, methods, log, spark)
+                cat_orig = trace_catalog(StageCatalog, log, spark)
+                act_orig = trace_actions(log, spark)
+                j0, t0 = n_jobs(spark), time.monotonic()
+                if mode == "append":
+                    batch = generate_pages(spark, N_BASE + N_APP, start=N_BASE)
+                    pipe.append_pages(batch)
+                else:
+                    from pyspark.sql import functions as F
 
-                batch = (
-                    generate_pages(spark, N_BASE)
-                    .where(F.xxhash64("url") % 10 == 3)
-                    .withColumn(
-                        "text", F.concat(F.col("text"), F.lit(" edited tail"))
+                    batch = (
+                        generate_pages(spark, N_BASE)
+                        .where(F.xxhash64("url") % 10 == 3)
+                        .withColumn(
+                            "text", F.concat(F.col("text"), F.lit(" edited tail"))
+                        )
                     )
+                    pipe.update_pages(batch)
+                total_j, total_t = n_jobs(spark) - j0, time.monotonic() - t0
+                for name, fn in originals.items():
+                    setattr(NDDPipeline, name, fn)
+                StageCatalog.write, StageCatalog.count_rows = cat_orig
+                untrace_actions(act_orig)
+                print(f"\n=== {mode}: {total_j} jobs, {total_t:.1f}s ===")
+                for name, j, w in log:
+                    print(f"  {name:38s} {j:4d} jobs  {w:7.2f}s")
+                accounted = sum(
+                    j for nm, j, _ in log if not nm.startswith("  ")
                 )
-                pipe.update_pages(batch)
-            total_j, total_t = n_jobs(spark) - j0, time.monotonic() - t0
-            for name, fn in originals.items():
-                setattr(NDDPipeline, name, fn)
-            StageCatalog.write, StageCatalog.count_rows = cat_orig
-            untrace_actions(act_orig)
-            print(f"\n=== {mode}: {total_j} jobs, {total_t:.1f}s ===")
-            for name, j, w in log:
-                print(f"  {name:38s} {j:4d} jobs  {w:7.2f}s")
-            accounted = sum(
-                j for nm, j, _ in log if not nm.startswith("  ")
-            )
-            print(f"  {'(outside traced methods)':38s} {total_j - accounted:4d} jobs")
+                outside = total_j - accounted
+                print(f"  {'(outside traced methods)':38s} {outside:4d} jobs")
+            finally:
+                shutil.rmtree(work, ignore_errors=True)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 

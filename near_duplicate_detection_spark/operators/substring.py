@@ -57,21 +57,6 @@ _ROLL_B = 1099511628211  # FNV prime as polynomial base
 _B_I64 = np.int64(np.uint64(_ROLL_B).astype(np.int64))
 
 
-def anchor_positions(t: str, g: int, d: int) -> np.ndarray:
-    """Content-defined anchor positions of one normalized string.
-
-    Per-doc reference implementation (tests compare the batch kernel against
-    it); the hot path is window_hashes_batch."""
-    raw = np.frombuffer(t.encode("utf-8"), dtype=np.uint8).astype(np.int64)
-    n = len(raw)
-    if n < g:
-        return np.empty(0, dtype=np.int64)
-    h = np.zeros(n - g + 1, dtype=np.int64)
-    for j in range(g):  # Horner: h = Σ c_j·B^(g-1-j), int64 wraparound
-        h = h * _B_I64 + raw[j : n - g + 1 + j]
-    return np.nonzero(h.view(np.uint64) % np.uint64(d) == 0)[0].astype(np.int64)
-
-
 # byte span of one kernel chunk: g+w strided/gathered passes run over the
 # concatenated buffer, so keeping the working set L2-resident is worth 2.3×
 # (r6: 0.69 s → 0.29 s per 4k docs at 64 KB, bit-identical) vs one dense

@@ -63,20 +63,6 @@ def _wrap64(x: int) -> int:
     return x - (1 << 64) if x >= (1 << 63) else x
 
 
-def _overlap(*thunks):
-    """Run ``thunks`` concurrently on driver threads (each submits its own
-    Spark jobs, so independent writes and computes run UNDER each other —
-    guide §2.6), wait for ALL of them, and return their results in order.
-    The first error is re-raised only after every thunk has finished, so no
-    write is still in flight when a caller's crash protocol takes over."""
-    from concurrent.futures import ThreadPoolExecutor, wait
-
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
-        wait(futures)
-    return [f.result() for f in futures]
-
-
 class NDDPipeline:
     def __init__(self, spark: SparkSession, cfg: NDDConfig, base_dir: str):
         self.spark = spark
@@ -384,8 +370,7 @@ class NDDPipeline:
         # delta state (reps/windows may change under seen_2b's cover) — wipe
         # it BEFORE any write below: a crash mid-rewrite must leave the
         # conservative state (missing ⇒ the 2b delta refuses), never
-        # stale-but-plausible state. (r6: the wipe moved ahead of the
-        # compute chain so the overlapped `seen` write can start at once.)
+        # stale-but-plausible state.
         import shutil as _shutil
 
         for t in ("window_index", "seen_2b"):
@@ -395,96 +380,69 @@ class NDDPipeline:
         # array through the exact-group shuffles would 5× the bytes for
         # nothing (the minhash column exists for the query path / re-banding)
         sigs = self.signatures_table().select("url", "fp", "bands", "simhash")
-        # the `seen` and `reps` writes depend only on the signature scan /
-        # the star checkpoint, not on the candidate-verify chain — each is
-        # overlapped as soon as its input exists so it runs UNDER the chain
-        # instead of as a serial tail (guide §2.6). Lineage still commits
-        # only at mark_complete, so crash behavior matches the sequential
-        # shape.
-        #
         # `seen` = the (url, fp) snapshot this stage processed, stamped with
         # the stage-2 PARAM hash so the delta path can reject state built
         # under different parameters. At Iceberg scale this is a snapshot
         # id + table property, not a table.
-        def write_seen():
-            cat.write(
-                self._stamp_era(
-                    sigs.select("url", "fp").withColumn(
-                        "cfg_hash", F.lit(cfg.stage2_hash())
-                    )
-                ),
-                "seen",
-            )
-
-        def pairs_chain() -> int:
-            # exact-dup star edges first; LSH sees one representative per
-            # distinct content (collapses boilerplate/exact-dup bucket
-            # skew). Materialize the JOINED star table ONCE and derive
-            # edges/reps as map-side filters over the checkpoint: the
-            # round-5 shape checkpointed exact_edges and reps separately,
-            # which ran the signature scan + exact-group shuffle TWICE
-            # (r6 A/B: 2.99 s for the two checkpoints vs 0.48 s for one at
-            # 40k docs).
-            rep_map = sigs.groupBy("fp").agg(F.min("url").alias("rep"))
-            with_rep = sigs.join(rep_map, "fp").localCheckpoint()
-            exact_edges = with_rep.where(F.col("url") != F.col("rep")).select(
-                F.col("rep").alias("url_a"),
-                F.col("url").alias("url_b"),
-                F.lit(1.0).alias("jaccard"),
-            )
-            reps = with_rep.where(F.col("url") == F.col("rep")).drop("rep")
-            # reps doubles as the delta path's INDEX: fp is the exact-group
-            # rep_map, bands/simhash let an append's LSH probe scan this
-            # table map-side instead of re-deriving the rep set by
-            # semi-joining the full signatures table against reps every
-            # delta run (an O(corpus) shuffle per append in round 3).
-            # Signatures are pure functions of text, so retraction
-            # rep-substitution keeps these columns exact.
-            def write_reps():
-                cat.write(
-                    self._stamp_era(reps.select("url", "fp", "bands", "simhash")),
-                    "reps",
+        cat.write(
+            self._stamp_era(
+                sigs.select("url", "fp").withColumn(
+                    "cfg_hash", F.lit(cfg.stage2_hash())
                 )
-
-            def verify_chain() -> int:
-                # materialize ONLY the multi-member band buckets (small) —
-                # every later consumer (flag metric, pair expansion) derives
-                # map-side from it instead of recomputing the
-                # scan+window+groupBy subtree
-                buckets = band_buckets(reps, cfg).localCheckpoint()
-                flagged = flagged_buckets(buckets, cfg)
-                # the fallback is only joined in when a bucket actually
-                # tripped the ceiling. Deciding that takes one count over the
-                # checkpointed (tiny) bucket table — near-zero, and it doubles
-                # as the flagged metric the round-5 shape paid a separate
-                # post-commit job for. (Round 1's sin was recomputing the
-                # corpus-wide band explode to decide; counting materialized
-                # partitions is the CC-fixpoint trick instead.) The
-                # unconditional union cost ~0.4 s of empty-side shuffles/run.
-                n_flagged = flagged.count()
-                cands = pairs_from_buckets(buckets, cfg, dedup=False)
-                if n_flagged:
-                    cands = cands.union(
-                        simhash_fallback_pairs(
-                            reps, flagged_members(buckets, cfg), cfg, dedup=False
-                        )
-                    )
-                cands = cands.dropDuplicates(["url_a", "url_b"]).localCheckpoint()
-                # materialize the shingle sets: verify joins them TWICE
-                # (url_a and url_b sides), which would run the Arrow
-                # recompute twice
-                sets = candidate_shingle_sets(
-                    cands, self.pages_table(), cfg
-                ).localCheckpoint()
-                verified = verify_pairs(cands, sets, cfg)
-                cat.write(
-                    self._stamp_era(verified.unionByName(exact_edges)), "pairs"
+            ),
+            "seen",
+        )
+        # exact-dup star edges first; LSH sees one representative per
+        # distinct content (collapses boilerplate/exact-dup bucket skew).
+        # Materialize the JOINED star table ONCE and derive edges/reps as
+        # map-side filters over the checkpoint: the round-5 shape
+        # checkpointed exact_edges and reps separately, which ran the
+        # signature scan + exact-group shuffle TWICE (r6 A/B: 2.99 s for the
+        # two checkpoints vs 0.48 s for one at 40k docs).
+        rep_map = sigs.groupBy("fp").agg(F.min("url").alias("rep"))
+        with_rep = sigs.join(rep_map, "fp").localCheckpoint()
+        exact_edges = with_rep.where(F.col("url") != F.col("rep")).select(
+            F.col("rep").alias("url_a"),
+            F.col("url").alias("url_b"),
+            F.lit(1.0).alias("jaccard"),
+        )
+        reps = with_rep.where(F.col("url") == F.col("rep")).drop("rep")
+        # reps doubles as the delta path's INDEX: fp is the exact-group
+        # rep_map, bands/simhash let an append's LSH probe scan this table
+        # map-side instead of re-deriving the rep set by semi-joining the
+        # full signatures table against reps every delta run (an O(corpus)
+        # shuffle per append in round 3). Signatures are pure functions of
+        # text, so retraction rep-substitution keeps these columns exact.
+        cat.write(
+            self._stamp_era(reps.select("url", "fp", "bands", "simhash")), "reps"
+        )
+        # materialize ONLY the multi-member band buckets (small) — every
+        # later consumer (flag metric, pair expansion) derives map-side from
+        # it instead of recomputing the scan+window+groupBy subtree
+        buckets = band_buckets(reps, cfg).localCheckpoint()
+        flagged = flagged_buckets(buckets, cfg)
+        # the fallback is only joined in when a bucket actually tripped the
+        # ceiling. Deciding that takes one count over the checkpointed
+        # (tiny) bucket table — near-zero, and it doubles as the flagged
+        # metric the round-5 shape paid a separate post-commit job for.
+        # (Round 1's sin was recomputing the corpus-wide band explode to
+        # decide; counting materialized partitions is the CC-fixpoint trick
+        # instead.) The unconditional union cost ~0.4 s of empty-side
+        # shuffles/run.
+        n_flagged = flagged.count()
+        cands = pairs_from_buckets(buckets, cfg, dedup=False)
+        if n_flagged:
+            cands = cands.union(
+                simhash_fallback_pairs(
+                    reps, flagged_members(buckets, cfg), cfg, dedup=False
                 )
-                return n_flagged
-
-            return _overlap(write_reps, verify_chain)[1]
-
-        n_flagged = _overlap(write_seen, pairs_chain)[1]
+            )
+        cands = cands.dropDuplicates(["url_a", "url_b"]).localCheckpoint()
+        # materialize the shingle sets: verify joins them TWICE (url_a and
+        # url_b sides), which would run the Arrow recompute twice
+        sets = candidate_shingle_sets(cands, self.pages_table(), cfg).localCheckpoint()
+        verified = verify_pairs(cands, sets, cfg)
+        cat.write(self._stamp_era(verified.unionByName(exact_edges)), "pairs")
         wall_ms = int((time.monotonic() - t0) * 1000)
         n_pairs = cat.count_rows("pairs")
         cat.mark_complete("pairs", h, {-1: n_pairs}, wall_ms)
@@ -540,46 +498,30 @@ class NDDPipeline:
         cands, flagged = delta_lsh_candidates(old_rep_sigs, new_reps, cfg)
         cands = cands.localCheckpoint()
 
-        def verify() -> DataFrame:
-            sets = candidate_shingle_sets(
-                cands, self.pages_table(), cfg
-            ).localCheckpoint()
-            # materialize the appended pairs ONCE: the pairs append and the
-            # returned keys (2b prune, stage-3 edges) consume them, and the
-            # verify join must not re-run
-            return (
-                verify_pairs(cands, sets, cfg)
-                .unionByName(exact_edges)
-                .localCheckpoint()
-            )
-
-        # the flagged metric only has to COMPLETE before the appends below
-        # mutate the tables its lineage reads from (stale file-listing
-        # hazard) — overlapped with the shingle-set/verify chain instead of
-        # run as a serial step after it (guide §2.6)
-        n_flagged, appended_pairs = _overlap(flagged.count, verify)
-        # the three appends are order-free: the core's inflight marker
-        # routes any partial combination to the idempotent full rebuild
-        _overlap(
-            lambda: cat.write(
-                self._stamp_era(appended_pairs), "pairs", mode="append"
+        # the flagged metric must complete before the appends below mutate
+        # the tables its lineage reads from (stale file-listing hazard)
+        n_flagged = flagged.count()
+        sets = candidate_shingle_sets(cands, self.pages_table(), cfg).localCheckpoint()
+        # materialize the appended pairs ONCE: the pairs append and the
+        # returned keys (2b prune, stage-3 edges) consume them, and the
+        # verify join must not re-run
+        appended_pairs = (
+            verify_pairs(cands, sets, cfg).unionByName(exact_edges).localCheckpoint()
+        )
+        cat.write(self._stamp_era(appended_pairs), "pairs", mode="append")
+        cat.write(
+            self._stamp_era(new_reps.select("url", "fp", "bands", "simhash")),
+            "reps",
+            mode="append",
+        )
+        cat.write(
+            self._stamp_era(
+                new_sigs.select("url", "fp").withColumn(
+                    "cfg_hash", F.lit(cfg.stage2_hash())
+                )
             ),
-            lambda: cat.write(
-                self._stamp_era(
-                    new_reps.select("url", "fp", "bands", "simhash")
-                ),
-                "reps",
-                mode="append",
-            ),
-            lambda: cat.write(
-                self._stamp_era(
-                    new_sigs.select("url", "fp").withColumn(
-                        "cfg_hash", F.lit(cfg.stage2_hash())
-                    )
-                ),
-                "seen",
-                mode="append",
-            ),
+            "seen",
+            mode="append",
         )
         wall_ms = int((time.monotonic() - t0) * 1000)
         n_pairs = cat.count_rows("pairs")
@@ -811,29 +753,23 @@ class NDDPipeline:
         # Coverage = the reps table when it exists (equal to the pruned
         # pages' urls, already materialized and tiny — no second corpus
         # scan), stamped with the 2b PARAM hash so the delta can reject
-        # state built under other parameters. Both sidecar writes depend
-        # only on state that is materialized by the time the candidate set
-        # is (doc_windows checkpoint / reps table), so they are submitted
-        # here and run UNDER the LCS verify instead of as a serial tail
-        # (guide §2.6) — the stage commits only at mark_complete below, so
-        # crash behavior is unchanged from the sequential shape.
+        # state built under other parameters. The stage commits only at
+        # mark_complete below.
         covered = (
             self.stage_view("reps").select("url")
             if cat.exists("reps")
             else pages.select("url")
         )
-        _overlap(
-            lambda: cat.write(self._stamp_era(windows), "window_index"),
-            lambda: cat.write(
-                self._stamp_era(
-                    covered.withColumn("cfg_hash", F.lit(cfg.stage2b_hash()))
-                ),
-                "seen_2b",
+        cat.write(self._stamp_era(windows), "window_index")
+        cat.write(
+            self._stamp_era(
+                covered.withColumn("cfg_hash", F.lit(cfg.stage2b_hash()))
             ),
-            lambda: cat.write(
-                self._stamp_era(verify_substring_pairs(cands, pages, cfg)),
-                "substring_pairs",
-            ),
+            "seen_2b",
+        )
+        cat.write(
+            self._stamp_era(verify_substring_pairs(cands, pages, cfg)),
+            "substring_pairs",
         )
         wall_ms = int((time.monotonic() - t0) * 1000)
         n = cat.count_rows("substring_pairs")
@@ -897,41 +833,31 @@ class NDDPipeline:
             self.stage_view("window_index"), new_windows, cfg
         )
 
-        def verify() -> DataFrame:
-            # already-verified pairs skip the LCS. ``prior_edges`` is the
-            # SAME run's appended stage-2 pairs (checkpointed,
-            # append-sized): every candidate touches ≥1 new url, and a new
-            # url has no OTHER visible edges — it is either genuinely new or
-            # its old edges were retraction-governed before the append — so
-            # one broadcast anti-join prunes exactly what an edge-table scan
-            # would, with zero corpus-edge reads.
-            pruned = cands.join(
-                F.broadcast(prior_edges), ["url_a", "url_b"], "left_anti"
-            ).localCheckpoint()
-            # two consumers: the table append and the returned keys
-            return verify_substring_pairs(
-                pruned, self.pages_table(), cfg
-            ).localCheckpoint()
-
-        # the flagged metric only has to COMPLETE before the appends mutate
-        # the tables its lineage reads from — overlapped with the prune +
-        # LCS-verify chain instead of run as a serial step after it (§2.6)
-        n_flagged, hits = _overlap(flagged.count, verify)
-        # order-free appends under the core's inflight marker (§2.6)
-        _overlap(
-            lambda: cat.write(
-                self._stamp_era(hits), "substring_pairs", mode="append"
+        # the flagged metric must complete before the appends mutate the
+        # tables its lineage reads from
+        n_flagged = flagged.count()
+        # already-verified pairs skip the LCS. ``prior_edges`` is the SAME
+        # run's appended stage-2 pairs (checkpointed, append-sized): every
+        # candidate touches ≥1 new url, and a new url has no OTHER visible
+        # edges — it is either genuinely new or its old edges were
+        # retraction-governed before the append — so one broadcast
+        # anti-join prunes exactly what an edge-table scan would, with zero
+        # corpus-edge reads.
+        pruned = cands.join(
+            F.broadcast(prior_edges), ["url_a", "url_b"], "left_anti"
+        ).localCheckpoint()
+        # two consumers: the table append and the returned keys
+        hits = verify_substring_pairs(
+            pruned, self.pages_table(), cfg
+        ).localCheckpoint()
+        cat.write(self._stamp_era(hits), "substring_pairs", mode="append")
+        cat.write(self._stamp_era(new_windows), "window_index", mode="append")
+        cat.write(
+            self._stamp_era(
+                new_urls.withColumn("cfg_hash", F.lit(cfg.stage2b_hash()))
             ),
-            lambda: cat.write(
-                self._stamp_era(new_windows), "window_index", mode="append"
-            ),
-            lambda: cat.write(
-                self._stamp_era(
-                    new_urls.withColumn("cfg_hash", F.lit(cfg.stage2b_hash()))
-                ),
-                "seen_2b",
-                mode="append",
-            ),
+            "seen_2b",
+            mode="append",
         )
         wall_ms = int((time.monotonic() - t0) * 1000)
         n = cat.count_rows("substring_pairs")
@@ -1607,8 +1533,8 @@ class NDDPipeline:
           operators/mor.py); it governs pages, signatures and the six
           stage-2/2b tables. Past ``retract_patch_ceiling`` stored log rows,
           ``_fold`` reclaims them physically;
-        - stages 0/1: the pages append and the batch signing + signatures
-          append, overlapped — no bucket is rewritten;
+        - stages 0/1: the pages append, then the batch signing +
+          signatures append — no bucket is rewritten;
         - stage 2: ``stage2_pairs_delta`` (the append, under the one final
           run hash); stage 2b: ``stage2b_delta``; stage 3:
           ``stage3_clusters_delta``, handed the change in memory — the two
@@ -1761,29 +1687,18 @@ class NDDPipeline:
                 checksums={b: m[1] for b, m in merged.items()},
             )
 
-        def commit_signatures() -> DataFrame | None:
-            # sign ONLY the batch (partitions stay bucket-pure through the
-            # Arrow map, so the partitioned append is fan-out-free)
-            sigs = None
-            if new_rows is not None:
-                sigs = (
-                    new_rows.select("url", "text")
-                    .mapInPandas(signature_map_fn(cfg), schema=SIGNATURE_SCHEMA)
-                    .withColumn("bucket", self._bucket_expr())
-                    .localCheckpoint()
-                )
-            commit("signatures", sigs)
-            return sigs
-
-        # the two commits read only the checkpointed batch and mutate
-        # different tables under the marker, which routes any partial
-        # combination to the idempotent heal — so they overlap (§2.6)
-        _, new_sigs = _overlap(
-            lambda: commit(
-                "pages", None if new_rows is None else new_rows.drop("h")
-            ),
-            commit_signatures,
-        )
+        commit("pages", None if new_rows is None else new_rows.drop("h"))
+        # sign ONLY the batch (partitions stay bucket-pure through the Arrow
+        # map, so the partitioned append is fan-out-free)
+        new_sigs = None
+        if new_rows is not None:
+            new_sigs = (
+                new_rows.select("url", "text")
+                .mapInPandas(signature_map_fn(cfg), schema=SIGNATURE_SCHEMA)
+                .withColumn("bucket", self._bucket_expr())
+                .localCheckpoint()
+            )
+        commit("signatures", new_sigs)
         wall_ms = int((time.monotonic() - t0) * 1000)
         cat.add_metrics(
             "pages",

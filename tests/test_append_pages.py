@@ -236,37 +236,35 @@ def test_append_pages_crash_marker_routes_retry_to_full(
     assert not pipe._delta_suspect()
 
 
-def test_append_pages_crash_between_overlapped_commits_heals(
+def test_append_pages_crash_at_signatures_commit_heals(
     spark, tmp_path_factory, monkeypatch, base_catalog, full_n2
 ):
-    """The overlapped stage-0/1 commit's worst order: the batch's pages
-    files are appended and the signatures lineage has advanced, then the
-    process dies before the pages lineage commit. The signatures lineage is
-    ahead of pages; the marker must refuse every retry and the full-snapshot
+    """The stage-0/1 commit's worst reachable window: the pages commit is
+    durable and the batch's signatures files have landed, then the process
+    dies at the signatures lineage commit. Pages lineage is ahead of
+    signatures; the marker must refuse every retry and the full-snapshot
     heal must reach the rebuild's partition."""
-    import threading
-
     from near_duplicate_detection_spark.lineage import StageCatalog
 
-    cat_dir = _copy(base_catalog, tmp_path_factory, "ndd_ap_overlap_crash")
+    cat_dir = _copy(base_catalog, tmp_path_factory, "ndd_ap_sigs_crash")
     pipe = NDDPipeline(spark, CFG, cat_dir)
     orig_mark = StageCatalog.mark_complete
-    sigs_committed = threading.Event()
 
     def mark_then_crash(self, stage, *a, **kw):
-        if stage == "pages":
-            # hold the pages commit until the signatures commit is durable
-            assert sigs_committed.wait(timeout=300)
-            raise RuntimeError("simulated crash before the pages commit")
-        orig_mark(self, stage, *a, **kw)
         if stage == "signatures":
-            sigs_committed.set()
+            raise RuntimeError("simulated crash at the signatures commit")
+        orig_mark(self, stage, *a, **kw)
 
     monkeypatch.setattr(StageCatalog, "mark_complete", mark_then_crash)
     with pytest.raises(RuntimeError, match="simulated crash"):
         pipe.append_pages(generate_pages(spark, N2, start=N1))
     monkeypatch.setattr(StageCatalog, "mark_complete", orig_mark)
-    assert sigs_committed.is_set()
+
+    def lineage_rows(stage):
+        stats = pipe.catalog.latest_partition_stats(stage)
+        return sum(rows for rows, _ in stats.values())
+
+    assert (lineage_rows("pages"), lineage_rows("signatures")) == (N2, N1)
     assert pipe._delta_suspect()
     with pytest.raises(AppendRefusedError, match="crash marker"):
         pipe.append_pages(generate_pages(spark, N2, start=N1))

@@ -19,14 +19,16 @@ every view equals the view before the ``compact()``; and
 ``run_incremental`` of the catalog's snapshot heals to the rebuild's
 partition.
 
-The last case of each kills nothing: it pins the number of mutation
+The last case of each kills nothing: it pins the sequence of mutation
 points, so a change to a commit protocol must revisit this enumeration.
+Every mutation runs in program order on the caller's thread, so the k-th
+point is one fixed program point and a kill at k leaves exactly the first
+k-1 mutations.
 """
 
 from __future__ import annotations
 
 import shutil
-import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -46,13 +48,49 @@ CATALOG_MUTATORS = (
     "mark_complete",
 )
 PIPELINE_MUTATORS = ("_set_marker", "_clear_marker", "_write_counter")
-# mutation points of one mixed run on the base catalog (lineage rows are
-# counted once, at mark_complete; metrics rows are advisory, not counted):
-# era bump, marker set, log append, pages + signatures commits, the
-# stage-2 and 2b appends + commits, the clusters commit, marker clear
-N_MUTATIONS = 21
-# mutation points of one compact() on the compact base catalog
-N_COMPACT = 12
+# mutation points of one mixed run on the base catalog, in order (lineage
+# rows are counted once, at mark_complete; metrics rows are advisory, not
+# counted)
+MUTATIONS = (
+    "_write_counter(retract.era)",
+    "_set_marker(delta.inflight)",
+    "_append_small(retract_patch)",
+    "write(pages)",
+    "mark_complete(pages)",
+    "write(signatures)",
+    "mark_complete(signatures)",
+    "write(pairs)",
+    "write(reps)",
+    "write(seen)",
+    "mark_complete(pairs)",
+    "write(substring_pairs)",
+    "write(window_index)",
+    "write(seen_2b)",
+    "mark_complete(substring_pairs)",
+    "write(clusters)",
+    "write_small_local(cluster_tombstones)",
+    "write_small_local(cluster_remap)",
+    "_write_counter(delta.appends)",
+    "mark_complete(clusters)",
+    "_clear_marker(delta.inflight)",
+)
+N_MUTATIONS = len(MUTATIONS)
+# mutation points of one compact() on the compact base catalog, in order
+COMPACT_MUTATIONS = (
+    "_set_marker(delta.inflight)",
+    "write(clusters_next)",
+    "_clear_marker(delta.appends)",
+    "write(pages)",
+    "write(signatures)",
+    "write(seen)",
+    "write(reps)",
+    "write(window_index)",
+    "write(seen_2b)",
+    "write(pairs)",
+    "write(substring_pairs)",
+    "_clear_marker(delta.inflight)",
+)
+N_COMPACT = len(COMPACT_MUTATIONS)
 # sorts below every generated url, so appending it as an exact copy of
 # url 11 relabels url 11's cluster: a cluster_remap entry for compact()
 COPY_URL = "https://aaa.example.com/p/copy-0000000011"
@@ -63,18 +101,16 @@ class Crash(RuntimeError):
 
 
 class FaultInjector:
-    """Counts mutations across the driver's threads; raises at the k-th,
-    before it takes effect."""
+    """Records every mutation in order; raises at the k-th, before it takes
+    effect."""
 
     def __init__(self, crash_at: int):
         self.crash_at = crash_at
-        self.count = 0
-        self.lock = threading.Lock()
+        self.seen: list[str] = []
 
     def hit(self, what: str) -> None:
-        with self.lock:
-            self.count += 1
-            k = self.count
+        self.seen.append(what)
+        k = len(self.seen)
         if k == self.crash_at:
             raise Crash(f"simulated crash at mutation {k}: {what}")
 
@@ -143,8 +179,9 @@ def rebuilt(spark, tmp_path_factory, snapshot):
     return part, _pages(pipe.pages_table())
 
 
-# a kill point past the last mutation never fires: the run completes having
-# counted exactly N_MUTATIONS; checked just past the end and well past it
+# every case makes the first k of MUTATIONS, in order (the k-th raises); a
+# kill point past the last never fires, so the run completes having made
+# exactly MUTATIONS: checked just past the end and well past it
 @pytest.mark.parametrize("k", [*range(1, N_MUTATIONS + 2), 31])
 def test_crash_at_every_mutation_heals(
     spark, tmp_path_factory, monkeypatch, base, snapshot, rebuilt, k
@@ -161,7 +198,7 @@ def test_crash_at_every_mutation_heals(
             pipe.run_incremental(snapshot())
     else:
         pipe.run_incremental(snapshot())
-        assert injector.count == N_MUTATIONS
+    assert tuple(injector.seen) == MUTATIONS[:k]
     monkeypatch.undo()
 
     if not pipe._delta_suspect():
@@ -240,7 +277,7 @@ def test_compact_crash_at_every_mutation_heals(
             pipe.compact()
     else:
         pipe.compact()
-        assert injector.count == N_COMPACT
+    assert tuple(injector.seen) == COMPACT_MUTATIONS[:k]
     monkeypatch.undo()
 
     if not pipe._delta_suspect():
