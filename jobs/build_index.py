@@ -182,9 +182,10 @@ def main(argv: list[str] | None = None) -> int:
     stats = {
         "clusters_rows": pipe.catalog.count_rows("clusters"),
         "pairs": pipe.catalog.count_rows("pairs"),
+        # the latest value per key: rows in commit order, later ones win
         "metrics": {
             f"{r['stage']}/{r['key']}": r["value"]
-            for r in pipe.catalog.metrics().collect()
+            for r in pipe.catalog.metrics().orderBy("completed_at").collect()
         },
     }
     print(json.dumps(stats))

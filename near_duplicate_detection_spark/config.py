@@ -56,7 +56,7 @@ class NDDConfig:
     # parallelism — counting eras keeps the trigger scale-independent.
     clusters_append_ceiling: int = 64
     # stored retract_patch log rows above which a delete/update folds the
-    # log (rewrites the governed pages/signatures buckets and the six
+    # log (rewrites the governed pages/signatures buckets and the four
     # stage-2/2b tables from their views — the same routine compact()
     # runs) right after appending its entries — bounds both the broadcast
     # the readers pay and the driver-side composition. 0 folds on every

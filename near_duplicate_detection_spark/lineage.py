@@ -9,8 +9,8 @@ Engine: a `lineage` parquet table
     (stage, partition_id, config_hash, rows, wall_ms, completed_at)
 appended once per completed (stage, partition); resume = anti-join of the
 work-list against lineage rows with a matching config_hash. A `metrics` table
-(stage, key, value) records counts, wall times, and flagged skew buckets
-("no silent caps").
+(stage, key, value, completed_at) records counts, wall times, and flagged
+skew buckets ("no silent caps"), each row stamped with its commit time.
 
 Stage tables live under a base dir as parquet; an Iceberg catalog would slot
 in behind the same three calls (read_table / write_table / append_rows) — the
@@ -38,7 +38,14 @@ LINEAGE_SCHEMA = (
     "stage string, partition_id int, config_hash string, rows bigint, "
     "checksum bigint, wall_ms bigint, completed_at timestamp"
 )
-METRICS_SCHEMA = "stage string, key string, value double"
+METRICS_SCHEMA = "stage string, key string, value double, completed_at timestamp"
+
+
+def _now() -> pd.Timestamp:
+    # microsecond resolution: second-level stamps tie when two marks land
+    # in the same second (e.g. invalidate → immediate re-sign) and the
+    # latest-stats ordering would then depend on file read order
+    return pd.Timestamp(int(time.time() * 1_000_000), unit="us")
 
 
 class StageCatalog:
@@ -219,53 +226,9 @@ class StageCatalog:
         }[op]
         return ds.count_rows(filter=f)
 
-    def distinct_values(self, table: str, column: str) -> set:
-        """Distinct values of a CONSTANT-PER-FILE control column (the
-        delta-state cfg_hash stamp) from parquet row-group STATISTICS only —
-        no data pages are decoded, so the cost is footer reads regardless of
-        row count. Every row group contributes its (min, max) bounds: a
-        constant column has min == max == the value, so the result set stays
-        exact; any within-group variation widens the set to ≥2 members,
-        which is all the stamp-guard callers need (equality against one
-        expected value refuses on mixed stamps). A group with NULLs or
-        missing/truncated statistics contributes a ``None`` sentinel —
-        strictly conservative, the guard refuses. Returns an empty set when
-        the column is absent. (Round-3 shipped this as a full-column
-        ``to_table`` pull — an O(corpus) driver read over the one-row-per-url
-        seen/seen_2b tables; stats bound the cost by file count instead.)
-
-        Stats-truncation note: parquet writers may truncate min/max for long
-        binary values (parquet-mr truncates above 64 bytes); the cfg_hash
-        stamp is 16 ASCII chars, far below every writer's threshold."""
-        ds = pads.dataset(self.path(table), format="parquet")
-        if column not in ds.schema.names:
-            return set()
-        out: set = set()
-        for frag in ds.get_fragments():
-            md = frag.metadata
-            names = [md.schema.column(i).name for i in range(md.num_columns)]
-            ci = names.index(column)
-            for rg in range(md.num_row_groups):
-                grp = md.row_group(rg)
-                if grp.num_rows == 0:
-                    continue
-                st = grp.column(ci).statistics
-                if (
-                    st is None
-                    or not st.has_min_max
-                    or (st.null_count or 0) > 0
-                ):
-                    out.add(None)
-                    continue
-                out.add(st.min)
-                out.add(st.max)
-        return out
-
     def drop_partition(self, table: str, bucket: int) -> None:
         """Remove one bucket partition dir (delete handling: a bucket whose
         input rows all vanished is never rewritten by dynamic overwrite)."""
-        import shutil
-
         shutil.rmtree(
             os.path.join(self.path(table), f"bucket={bucket}"),
             ignore_errors=True,
@@ -305,7 +268,8 @@ class StageCatalog:
         ]
     )
     _METRICS_PA = pa.schema(
-        [("stage", pa.string()), ("key", pa.string()), ("value", pa.float64())]
+        [("stage", pa.string()), ("key", pa.string()), ("value", pa.float64()),
+         ("completed_at", pa.timestamp("us"))]
     )
 
     def mark_complete(
@@ -320,10 +284,7 @@ class StageCatalog:
         — stored so later runs can detect content drift, not just row-count
         drift (an append+delete that keeps the count would otherwise slip
         through)."""
-        # microsecond resolution: second-level stamps tie when two marks land
-        # in the same second (e.g. invalidate → immediate re-sign) and the
-        # latest-stats ordering would then depend on file read order
-        now = pd.Timestamp(int(time.time() * 1_000_000), unit="us")
+        now = _now()
         cks = checksums or {}
         pdf = pd.DataFrame(
             [
@@ -339,11 +300,14 @@ class StageCatalog:
     # ---- metrics ----
 
     def add_metrics(self, stage: str, metrics: dict[str, float]) -> None:
+        """One row per key, stamped with ``completed_at`` (lineage's clock):
+        the commit order of per-commit metrics."""
         if not metrics:
             return
+        now = _now()
         pdf = pd.DataFrame(
-            [(stage, k, float(v)) for k, v in metrics.items()],
-            columns=["stage", "key", "value"],
+            [(stage, k, float(v), now) for k, v in metrics.items()],
+            columns=["stage", "key", "value", "completed_at"],
         )
         self._append_small("metrics", pdf, self._METRICS_PA)
 

@@ -2,10 +2,10 @@
 log.
 
 Rewriting every table a delete or edit touches is O(change) in COMPUTE but
-O(corpus) in I/O: the two bucket tables (pages, signatures) and the six
-stage-2/2b tables (seen, reps, pairs, window_index, seen_2b,
-substring_pairs) would each be rewritten per changeset. At the 10^12-doc
-contract that write volume dominates any delete/edit. This module is the
+O(corpus) in I/O: the two bucket tables (pages, signatures) and the four
+stage-2/2b tables (reps, pairs, window_index, substring_pairs) would each
+be rewritten per changeset. At the 10^12-doc contract that write volume
+dominates any delete/edit. This module is the
 position-delete analog (Iceberg v2 merge-on-read): each changeset that
 deletes or updates urls appends ONE driver-written file to the
 ``retract_patch`` log, holding its raw mapping at its one era
@@ -29,9 +29,9 @@ once per changeset with deletes or updates, so rows appended after it carry
 era >= R and pass through untouched. Per url the log may hold several
 entries (retract -> re-add -> retract again); the governing entry for a row
 is the EARLIEST entry with `entry.era > row.era` — the first retraction that
-happened after the row was written. The bucket tables and ``seen`` only
-drop governed rows (a row dies iff some entry is newer than it); the other
-stage tables relabel a retracted representative's rows onto its replacement.
+happened after the row was written. The bucket tables only drop governed
+rows (a row dies iff some entry is newer than it); the stage tables relabel
+a retracted representative's rows onto its replacement.
 
 Transitive closure: the stored entries are composed at READ time
 (``patch_agg`` replays ``compose_patch`` over the entries in era order) —
@@ -60,12 +60,11 @@ from pyspark.sql import functions as F
 from near_duplicate_detection_spark.session import local_frame
 
 PATCH_TABLE = "retract_patch"
-# the stage tables whose readers resolve the log (all six carry an `era`
-# column); the bucket tables pages/signatures resolve it drop-only too
-URL_DROP_TABLES = ("seen",)            # governing entry ⇒ row dropped
-URL_RELABEL_TABLES = ("reps", "window_index", "seen_2b")
+# the stage tables whose readers resolve the log (all four carry an `era`
+# column); the bucket tables pages/signatures resolve it drop-only
+URL_RELABEL_TABLES = ("reps", "window_index")
 PAIR_TABLES = ("pairs", "substring_pairs")
-GOVERNED_TABLES = URL_DROP_TABLES + URL_RELABEL_TABLES + PAIR_TABLES
+GOVERNED_TABLES = URL_RELABEL_TABLES + PAIR_TABLES
 
 # sidecar → broadcast-ready LocalRelation cache, keyed by (session, catalog
 # dir, file signature). Sidecars are ceiling-bounded, so they are read
@@ -191,11 +190,11 @@ def apply_url_patch(
     """Resolve the retraction log over a single-url table. Broadcast join
     only — a map-side pass over the table, zero wide shuffles.
 
-    drop_only: `seen`-style tables (and the pages/signatures bucket
-    tables) where a retracted url's row is dropped outright (the
-    replacement rep has its OWN row already); otherwise a NULL target drops
-    the row and a non-NULL target substitutes it (the replacement has
-    byte-identical content, so signature/window columns stay exact)."""
+    drop_only: the pages/signatures bucket tables, where a retracted url's
+    row is dropped outright (the replacement rep has its OWN row already);
+    otherwise a NULL target drops the row and a non-NULL target substitutes
+    it (the replacement has byte-identical content, so signature/window
+    columns stay exact)."""
     cols = df.columns
     p = patch.select(F.col("url").alias(col), "__entries")
     j = df.join(F.broadcast(p), col, "left")

@@ -21,6 +21,8 @@ bucket-size ceiling. Stage 3 shuffles only the duplicate-pair edge set.
 from __future__ import annotations
 
 import hashlib
+import os
+import shutil
 import time
 
 import pandas as pd
@@ -34,6 +36,7 @@ from near_duplicate_detection_spark.functions.signatures import (
     signature_map_fn,
 )
 from near_duplicate_detection_spark.lineage import StageCatalog
+from near_duplicate_detection_spark.operators import mor
 from near_duplicate_detection_spark.operators.connected_components import (
     clusters_table,
     connected_components,
@@ -366,32 +369,22 @@ class NDDPipeline:
         ):
             return
         t0 = time.monotonic()
+        # invalidate the stage BEFORE its first mutation: a lineage row no
+        # run hash matches, so a crash mid-rewrite leaves the delta
+        # preconditions refusing (``completed_partitions`` trusts only the
+        # latest row) instead of old-hash lineage over rewritten tables
+        cat.mark_complete("pairs", "", {-1: 0}, 0)
         # a full stage-2 rewrite (e.g. after an edit) invalidates the 2b
-        # delta state (reps/windows may change under seen_2b's cover) — wipe
-        # it BEFORE any write below: a crash mid-rewrite must leave the
+        # delta state (reps may change under the window index) — wipe it
+        # BEFORE any table write below: a crash mid-rewrite must leave the
         # conservative state (missing ⇒ the 2b delta refuses), never
         # stale-but-plausible state.
-        import shutil as _shutil
-
-        for t in ("window_index", "seen_2b"):
-            _shutil.rmtree(cat.path(t), ignore_errors=True)
+        shutil.rmtree(cat.path("window_index"), ignore_errors=True)
         # column-prune BEFORE the fp join: stage 2 only ever uses url+bands
         # (LSH) and url+simhash (fallback) — shipping the 128-perm minhash
         # array through the exact-group shuffles would 5× the bytes for
         # nothing (the minhash column exists for the query path / re-banding)
         sigs = self.signatures_table().select("url", "fp", "bands", "simhash")
-        # `seen` = the (url, fp) snapshot this stage processed, stamped with
-        # the stage-2 PARAM hash so the delta path can reject state built
-        # under different parameters. At Iceberg scale this is a snapshot
-        # id + table property, not a table.
-        cat.write(
-            self._stamp_era(
-                sigs.select("url", "fp").withColumn(
-                    "cfg_hash", F.lit(cfg.stage2_hash())
-                )
-            ),
-            "seen",
-        )
         # exact-dup star edges first; LSH sees one representative per
         # distinct content (collapses boilerplate/exact-dup bucket skew).
         # Materialize the JOINED star table ONCE and derive edges/reps as
@@ -514,15 +507,6 @@ class NDDPipeline:
             "reps",
             mode="append",
         )
-        cat.write(
-            self._stamp_era(
-                new_sigs.select("url", "fp").withColumn(
-                    "cfg_hash", F.lit(cfg.stage2_hash())
-                )
-            ),
-            "seen",
-            mode="append",
-        )
         wall_ms = int((time.monotonic() - t0) * 1000)
         n_pairs = cat.count_rows("pairs")
         cat.mark_complete("pairs", h, {-1: n_pairs}, wall_ms)
@@ -547,18 +531,14 @@ class NDDPipeline:
     # stage from scratch (whose overwrites are idempotent), clearing the
     # marker once its clusters commit.
     # This file-exists check replaced the round-3 anti-join "partial" guards
-    # (reps ∪ pairs(a) ∪ pairs(b) vs seen, and the 2b mirror) — two full
-    # edge-table scans per delta run whose only purpose was detecting the
-    # same crash window the marker now brackets exactly.
+    # (reps ∪ pairs(a) ∪ pairs(b) vs the processed urls, and the 2b
+    # mirror) — two full edge-table scans per delta run whose only purpose
+    # was detecting the same crash window the marker now brackets exactly.
 
     def _marker_path(self, name: str) -> str:
-        import os
-
         return os.path.join(self.catalog.base_dir, name)
 
     def _marker_up(self, name: str) -> bool:
-        import os
-
         return os.path.exists(self._marker_path(name))
 
     def _set_marker(self, name: str) -> None:
@@ -566,8 +546,6 @@ class NDDPipeline:
             f.write("in progress\n")
 
     def _clear_marker(self, name: str) -> None:
-        import os
-
         try:
             os.remove(self._marker_path(name))
         except FileNotFoundError:
@@ -639,8 +617,6 @@ class NDDPipeline:
         """Atomic counter write: temp file + rename, so a crash mid-write
         can never leave a truncated/empty counter (open('w') truncates at
         open — a kill before the write would otherwise tear the file)."""
-        import os
-
         path = self._marker_path(name)
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
@@ -661,20 +637,16 @@ class NDDPipeline:
     def stage_view(self, table: str) -> DataFrame:
         """A governed stage-2/2b table with the merge-on-read retraction
         log resolved (operators/mor.py) — broadcast join only, zero wide
-        shuffles over the table. Every consumer of seen/reps/pairs/
-        window_index/seen_2b/substring_pairs must read through this, never
-        ``catalog.read(...)`` raw (same contract as ``clusters_view``)."""
-        from near_duplicate_detection_spark.operators import mor
-
+        shuffles over the table. Every consumer of reps/pairs/window_index/
+        substring_pairs must read through this, never ``catalog.read(...)``
+        raw (same contract as ``clusters_view``)."""
         df = self.catalog.read(table)
         patch = mor.patch_agg(self.catalog)
         if patch is None:
             return df
         if table in mor.PAIR_TABLES:
             return mor.apply_pair_patch(df, patch)
-        return mor.apply_url_patch(
-            df, patch, drop_only=table in mor.URL_DROP_TABLES
-        )
+        return mor.apply_url_patch(df, patch)
 
     def _retraction_mapping(self, urls: list[str]) -> dict[str, str | None]:
         """The retraction mapping of one changeset, read before its first
@@ -686,8 +658,11 @@ class NDDPipeline:
         without rebuilding the index (ndd/server_ndd.py:246-261).
 
         Cost: the broken reps' fp groups — ONE map-side broadcast-pruned
-        pass over the reps view and one over the seen view (read-only
-        scans with tiny outputs). ``urls``: the distinct retracted urls,
+        pass over the reps view and one over the signatures view (read-only
+        scans with tiny outputs). The signatures view holds exactly the
+        (url, fp) rows stage 2 processed whenever the delta preconditions
+        pass: pairs are committed under a run hash that chains the
+        signatures fingerprint. ``urls``: the distinct retracted urls,
         already bounded by ``cfg.max_retract`` (the broadcast ceiling)."""
         retracted = local_frame(self.spark, [(u,) for u in urls], "url string")
         broken = (
@@ -697,7 +672,8 @@ class NDDPipeline:
             .localCheckpoint()
         )
         surv = (
-            self.stage_view("seen")
+            self.signatures_table()
+            .select("url", "fp")
             .join(
                 F.broadcast(broken.select("fp").distinct()), "fp", "left_semi"
             )
@@ -726,6 +702,8 @@ class NDDPipeline:
         ):
             return
         t0 = time.monotonic()
+        # invalidate before the first mutation, as in stage2_pairs
+        cat.mark_complete("substring_pairs", "", {-1: 0}, 0)
         pages = self.pages_table()
         if cat.exists("reps"):
             # substring pass over unique-content representatives only —
@@ -748,25 +726,9 @@ class NDDPipeline:
         # consumer
         cands = cands.localCheckpoint()
         # delta-path state next to the verified pairs: the per-doc window
-        # fingerprint index + the set of urls this pass covered (appended
-        # docs delta against these, the same seen convention as stage 2).
-        # Coverage = the reps table when it exists (equal to the pruned
-        # pages' urls, already materialized and tiny — no second corpus
-        # scan), stamped with the 2b PARAM hash so the delta can reject
-        # state built under other parameters. The stage commits only at
+        # fingerprint index appended docs probe. The stage commits only at
         # mark_complete below.
-        covered = (
-            self.stage_view("reps").select("url")
-            if cat.exists("reps")
-            else pages.select("url")
-        )
         cat.write(self._stamp_era(windows), "window_index")
-        cat.write(
-            self._stamp_era(
-                covered.withColumn("cfg_hash", F.lit(cfg.stage2b_hash()))
-            ),
-            "seen_2b",
-        )
         cat.write(
             self._stamp_era(verify_substring_pairs(cands, pages, cfg)),
             "substring_pairs",
@@ -795,15 +757,15 @@ class NDDPipeline:
         appended reps' anchored windows probe the persisted window_index
         (operators/delta.py delta_window_candidates) instead of
         re-fingerprinting the corpus. ``new_urls`` are the stage-2 delta's
-        appended rep urls (materialized, not covered by seen_2b),
+        appended rep urls (materialized),
         ``new_pages`` the changeset's materialized (url, text) batch they
         come from, ``prior_edges`` the same run's appended stage-2 pair
         keys; None (a pure retraction) commits substring_pairs under its
         new run hash. Returns the appended pair keys (checkpointed — stage
         3's new edges), or None when nothing was appended. Runs under the
         core's ``delta.inflight`` marker. The full stage-2 path wipes
-        window_index/seen_2b, so a rebuild never leaves stale 2b delta
-        state behind."""
+        window_index, so a rebuild never leaves stale 2b delta state
+        behind."""
         from near_duplicate_detection_spark.operators.delta import (
             delta_window_candidates,
         )
@@ -852,13 +814,6 @@ class NDDPipeline:
         ).localCheckpoint()
         cat.write(self._stamp_era(hits), "substring_pairs", mode="append")
         cat.write(self._stamp_era(new_windows), "window_index", mode="append")
-        cat.write(
-            self._stamp_era(
-                new_urls.withColumn("cfg_hash", F.lit(cfg.stage2b_hash()))
-            ),
-            "seen_2b",
-            mode="append",
-        )
         wall_ms = int((time.monotonic() - t0) * 1000)
         n = cat.count_rows("substring_pairs")
         cat.mark_complete("substring_pairs", h, {-1: n}, wall_ms)
@@ -929,9 +884,6 @@ class NDDPipeline:
         ``delta.inflight``: a kill before it leaves the old table and its
         sidecars intact, a kill inside it leaves the marker up. A caller's
         bracket that is already up is left for that caller to clear."""
-        import os
-        import shutil
-
         cat = self.catalog
         shutil.rmtree(cat.path("clusters_next"), ignore_errors=True)
         cat.write(self._stamp_era(rows), "clusters_next")
@@ -985,8 +937,6 @@ class NDDPipeline:
         broadcast ceiling) — the caller then runs the full stage. Runs
         under the core's ``delta.inflight`` marker: a crash anywhere leaves
         it up, every delta entry refuses, and the full rebuild heals."""
-        import shutil as _shutil
-
         import pyarrow as _pa
 
         from near_duplicate_detection_spark.operators.delta import (
@@ -1140,7 +1090,7 @@ class NDDPipeline:
                 ["old_label", "new_label"],
             )
         else:
-            _shutil.rmtree(cat.path("cluster_remap"), ignore_errors=True)
+            shutil.rmtree(cat.path("cluster_remap"), ignore_errors=True)
         if fold:
             # bounds small-file growth (one file per commit), patch age and
             # the readers' broadcasts; the fold reads the just-committed view
@@ -1417,15 +1367,15 @@ class NDDPipeline:
         calls it before its snapshot diff, and ``_apply_changeset`` (behind
         ``append_pages`` / ``delete_pages`` / ``update_pages``) before its
         first mutation. The catalog must be a committed, CURRENT build with
-        healthy delta state
-        — pages/signatures lineage consistent, pairs (and substring_pairs,
-        when ``substring_pass``) committed under the current run hashes,
-        param stamps matching, clusters committed under the current stage-3
-        run hash (a killed full build leaves them lagging with no marker
-        up), no crash marker. Every check is footer/lineage-level (zero
-        Spark jobs). Raises
-        ``AppendRefusedError`` (nothing mutated); returns the committed
-        per-bucket pages stats."""
+        healthy delta state — pages/signatures lineage consistent, pairs
+        (and substring_pairs, when ``substring_pass``) committed under the
+        current run hashes (a full stage-2/2b rewrite invalidates its
+        lineage before its first mutation, so a killed rewrite refuses
+        here), clusters committed under the current stage-3 run hash (a
+        killed full build leaves them lagging with no marker up), no crash
+        marker. Every check is footer/lineage-level (zero Spark jobs).
+        Raises ``AppendRefusedError`` (nothing mutated); returns the
+        committed per-bucket pages stats."""
         cfg, cat, refuse = self.cfg, self.catalog, self._refuse
         if self._delta_suspect():
             refuse("crash marker up (a prior retraction/delta was killed)")
@@ -1442,29 +1392,19 @@ class NDDPipeline:
         ]
         if stale:
             refuse(f"signatures lag pages in buckets {stale[:5]}")
-        if not (
-            cat.exists("seen") and cat.exists("reps") and cat.exists("pairs")
-        ):
-            refuse("no stage-2 delta state (seen/reps/pairs)")
+        if not (cat.exists("reps") and cat.exists("pairs")):
+            refuse("no stage-2 delta state (reps/pairs)")
         if not cat.completed_partitions("pairs", self.stage2_run_hash()):
             refuse("pairs not committed under the current run hash")
-        if cat.distinct_values("seen", "cfg_hash") != {cfg.stage2_hash()}:
-            refuse("stage-2 param stamp drift in seen")
         if substring_pass:
             if not (
-                cat.exists("window_index")
-                and cat.exists("seen_2b")
-                and cat.exists("substring_pairs")
+                cat.exists("window_index") and cat.exists("substring_pairs")
             ):
                 refuse("no stage-2b delta state")
             if not cat.completed_partitions(
                 "substring_pairs", self.stage2b_run_hash()
             ):
                 refuse("substring_pairs not committed under the current run hash")
-            if cat.distinct_values("seen_2b", "cfg_hash") != {
-                cfg.stage2b_hash()
-            }:
-                refuse("stage-2b param stamp drift in seen_2b")
         if not (
             cat.exists("clusters")
             and cat.completed_partitions("clusters", self.stage3_run_hash())
@@ -1547,8 +1487,6 @@ class NDDPipeline:
         every delta entry refuses and ``run_incremental(full_snapshot)``
         heals through a full rebuild."""
         import pyarrow as pa
-
-        from near_duplicate_detection_spark.operators import mor
 
         cfg, cat, refuse = self.cfg, self.catalog, self._refuse
         h1 = cfg.stage1_hash()
@@ -1766,7 +1704,7 @@ class NDDPipeline:
         explicit videoids, ndd/server_ndd.py:307-315), so no drift is
         inferred. Caller contract: the urls must not exist in the catalog —
         NOT detected (that probe is the O(corpus) scan this path skips; a
-        violation surfaces as duplicate urls in ``seen``/``clusters``);
+        violation surfaces as duplicate urls in ``signatures``/``clusters``);
         in-batch duplicates are refused. Plan, refusals and crash protocol:
         ``_apply_changeset``."""
         return self._apply_changeset(new_pages, None, substring_pass)
@@ -1789,7 +1727,7 @@ class NDDPipeline:
           bucket, row eras kept — and a bucket whose view came out empty is
           dropped (decided from this output: inside a changeset the lineage
           still lags);
-        - the six stage-2/2b tables are rewritten from ``stage_view`` with
+        - the four stage-2/2b tables are rewritten from ``stage_view`` with
           a fresh era stamp;
         - the log is removed.
 
@@ -1799,10 +1737,6 @@ class NDDPipeline:
         remaining log governs it no more than before) and the marker routes
         every delta entry to the full rebuild. Returns ``{table:
         (files_before, files_after)}`` for every table it rewrote."""
-        import shutil as _shutil
-
-        from near_duplicate_detection_spark.operators import mor
-
         cat = self.catalog
         has_log = cat.exists(mor.PATCH_TABLE)
         buckets = set(extra_buckets)
@@ -1846,7 +1780,7 @@ class NDDPipeline:
                         table,
                     )
             out[mor.PATCH_TABLE] = (cat.file_count(mor.PATCH_TABLE), 0)
-            _shutil.rmtree(cat.path(mor.PATCH_TABLE), ignore_errors=True)
+            shutil.rmtree(cat.path(mor.PATCH_TABLE), ignore_errors=True)
             cat.add_metrics("compaction", {"retract_patch_rows_folded": n_log})
         cat.add_metrics("pages", {"buckets_rewritten": len(buckets)})
         return out
@@ -1920,8 +1854,6 @@ class NDDPipeline:
             refuse("crash marker up (a prior retraction/delta was killed)")
         t0 = time.monotonic()
         out: dict = {}
-        from near_duplicate_detection_spark.operators import mor as _mor
-
         fold_clusters = cat.exists("clusters") and (
             cat.exists("cluster_remap")
             or cat.exists("cluster_tombstones")
@@ -1929,14 +1861,14 @@ class NDDPipeline:
         )
         frag = set(cat.fragmented_partitions("pages"))
         frag |= set(cat.fragmented_partitions("signatures"))
-        if fold_clusters or frag or cat.exists(_mor.PATCH_TABLE):
+        if fold_clusters or frag or cat.exists(mor.PATCH_TABLE):
             self._set_marker("delta.inflight")
             if fold_clusters:
                 before = cat.file_count("clusters")
                 # the view resolves tombstones + label patch → both folded
                 self._rewrite_clusters(self.clusters_view())
                 out["clusters"] = (before, cat.file_count("clusters"))
-            if frag or cat.exists(_mor.PATCH_TABLE):
+            if frag or cat.exists(mor.PATCH_TABLE):
                 out.update(self._fold(frag))
             self._clear_marker("delta.inflight")
         # a serving operator who built a band_index wants it to survive
@@ -1990,8 +1922,6 @@ def _log_view(catalog: StageCatalog, table: str) -> DataFrame:
     LocalRelation (a row written at or after an entry's era is a re-add
     and survives). Physical reclamation happens at the
     ``retract_patch_ceiling`` fold or via ``compact()``."""
-    from near_duplicate_detection_spark.operators import mor
-
     df = catalog.read(table)
     patch = mor.patch_agg(catalog)
     if patch is None:
@@ -2035,8 +1965,6 @@ def patched_clusters(catalog: StageCatalog) -> DataFrame:
     newest tombstone per url suffices because a tombstone always kills
     every row alive at its commit). Both sidecars resolve here with one
     broadcast join each; the same rewrite folds and wipes them."""
-    from near_duplicate_detection_spark.operators import mor
-
     df = catalog.read("clusters")
     cols = ("url", "cluster_id", "is_representative")
     tomb = mor.tombstone_agg(catalog)

@@ -88,9 +88,7 @@ def test_append_pages_matches_full_rebuild_and_skips_control_plane(
     assert clusters.url.nunique() == N2
     assert _partition(clusters) == _partition(full_n2)
     # metrics: exactly the batch was ingested and signed, and no bucket was
-    # rewritten beyond the base build's initial full write (metric rows
-    # carry no timestamp and parquet read order isn't chronological, so
-    # assert on the multiset of values)
+    # rewritten beyond the base build's initial full write
     m = pipe.catalog.read("metrics").toPandas()
     assert (
         m[(m.stage == "pages") & (m.key == "appended_docs_ingested")].value
@@ -508,8 +506,9 @@ def test_append_pages_keeps_one_pages_schema(
 
 def test_append_pages_job_count_pinned(spark, tmp_path_factory):
     """One append_pages of 20 docs onto a 100-doc, 4-bucket catalog submits
-    no more Spark jobs than the explicit append path did before it became
-    a caller of the shared changeset core (91, counted the same way)."""
+    at most 81 Spark jobs, the count measured at local[4] (83 while it
+    also appended the two param-stamp tables, 91 before the shared
+    changeset core)."""
     base = str(tmp_path_factory.mktemp("ndd_ap_jobcount"))
     pipe = NDDPipeline(spark, CFG, base)
     pipe.run(generate_pages(spark, 100))
@@ -519,4 +518,4 @@ def test_append_pages_job_count_pinned(spark, tmp_path_factory):
     pipe.append_pages(batch)
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = len(set(tracker.getJobIdsForGroup(None)) - before)
-    assert 0 < jobs <= 91, jobs
+    assert 0 < jobs <= 81, jobs

@@ -104,7 +104,8 @@ def test_append_era_ceiling_folds_inline(spark, tmp_path):
     assert not cat.exists("cluster_remap")
     m = cat.metrics().toPandas()
     folds = m[(m.stage == "clusters") & (m.key == "clusters_fold")]
-    assert sorted(folds.value) == [0, 1]
+    # commit order: the first append commits merge-on-read, the second folds
+    assert folds.sort_values("completed_at").value.tolist() == [0, 1]
     full = NDDPipeline(spark, cfg, str(tmp_path / "full"))
     want = _partition(full.run(generate_pages(spark, 280)).toPandas())
     assert _partition(_clusters_pdf(pipe)) == want
@@ -124,7 +125,7 @@ def test_append_era_ceiling_folds_inline(spark, tmp_path):
     assert not cat.exists("cluster_remap")
     m = cat.metrics().toPandas()
     folds = m[(m.stage == "clusters") & (m.key == "clusters_fold")]
-    assert sorted(folds.value) == [0, 1, 1]
+    assert folds.sort_values("completed_at").value.tolist() == [0, 1, 1]
     assert _partition(_clusters_pdf(tight)) == want - {frozenset([gone])}
     assert not tight._delta_suspect()
 

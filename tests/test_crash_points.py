@@ -61,11 +61,9 @@ MUTATIONS = (
     "mark_complete(signatures)",
     "write(pairs)",
     "write(reps)",
-    "write(seen)",
     "mark_complete(pairs)",
     "write(substring_pairs)",
     "write(window_index)",
-    "write(seen_2b)",
     "mark_complete(substring_pairs)",
     "write(clusters)",
     "write_small_local(cluster_tombstones)",
@@ -82,10 +80,8 @@ COMPACT_MUTATIONS = (
     "_clear_marker(delta.appends)",
     "write(pages)",
     "write(signatures)",
-    "write(seen)",
     "write(reps)",
     "write(window_index)",
-    "write(seen_2b)",
     "write(pairs)",
     "write(substring_pairs)",
     "_clear_marker(delta.inflight)",
@@ -217,11 +213,9 @@ def _views(pipe):
         "signatures": pipe.signatures_table().select("url", "fp"),
     }
     for t, cols in (
-        ("seen", ["url", "fp"]),
         ("reps", ["url", "fp"]),
         ("pairs", ["url_a", "url_b"]),
         ("window_index", ["url", "win_hash"]),
-        ("seen_2b", ["url"]),
         ("substring_pairs", ["url_a", "url_b"]),
     ):
         dfs[t] = pipe.stage_view(t).select(*cols)

@@ -80,9 +80,8 @@ def test_incremental_used_delta_path(incremental_built):
     ]
     assert len(sp_delta) == 3
     assert pipe.catalog.count_rows("pairs") > pairs_before
-    # the changeset core signed exactly the appended docs (metrics rows
-    # carry no timestamp, so assert over value sums: only the core emits
-    # the append keys, the full build none)
+    # the changeset core signed exactly the appended docs (value sums:
+    # only the core emits the append keys, the full build none)
     sig = metrics[metrics.stage == "signatures"]
     assert (
         sig[sig.key == "appended_docs_signed"].value.astype(int).sum()
@@ -437,19 +436,64 @@ def test_param_change_rejects_delta_state(spark, tmp_path_factory):
     again.run_incremental(generate_pages(spark, 100))
     assert again.catalog.count_rows("pairs") == n_pairs
     # the changed params heal through the resume path: stage 2 and 2b are
-    # recommitted under the new run hashes and param stamps
+    # recommitted under the new run hashes
     assert len(changed.run_incremental(generate_pages(spark, 100)).toPandas()) == 100
     cat = changed.catalog
     assert cat.completed_partitions("pairs", changed.stage2_run_hash())
     assert cat.completed_partitions(
         "substring_pairs", changed.stage2b_run_hash()
     )
-    assert cat.distinct_values("seen", "cfg_hash") == {
-        changed.cfg.stage2_hash()
-    }
-    assert cat.distinct_values("seen_2b", "cfg_hash") == {
-        changed.cfg.stage2b_hash()
-    }
+
+
+class _KilledWrite(RuntimeError):
+    pass
+
+
+@pytest.mark.parametrize(
+    "changed_cfg, table, passes",
+    [
+        (NDDConfig(num_buckets=4, jaccard_threshold=0.5), "pairs", (True, False)),
+        (
+            NDDConfig(num_buckets=4, substring_min_len=400),
+            "substring_pairs",
+            (True,),
+        ),
+    ],
+    ids=["pairs", "substring_pairs"],
+)
+def test_killed_param_changed_rewrite_refuses_old_params(
+    spark, tmp_path_factory, monkeypatch, changed_cfg, table, passes
+):
+    """A full stage-2 (or 2b) rewrite under changed params, killed at its
+    table write, leaves lineage naming the OLD params. The old config's
+    deltas must refuse anyway (the rewrite invalidated the stage's lineage
+    before its first mutation) instead of appending onto tables half
+    rebuilt under the new params; the old config then heals to a rebuild."""
+    from near_duplicate_detection_spark.lineage import StageCatalog
+
+    base = str(tmp_path_factory.mktemp(f"ndd_killed_{table}"))
+    NDDPipeline(spark, CFG, base).run(generate_pages(spark, 80))
+    write = StageCatalog.write
+
+    def killing_write(cat, df, name, *args, **kwargs):
+        if name == table:
+            raise _KilledWrite(f"killed at write({name})")
+        return write(cat, df, name, *args, **kwargs)
+
+    monkeypatch.setattr(StageCatalog, "write", killing_write)
+    with pytest.raises(_KilledWrite):
+        NDDPipeline(spark, changed_cfg, base).run(generate_pages(spark, 80))
+    monkeypatch.undo()
+
+    old = NDDPipeline(spark, CFG, base)
+    for substring_pass in passes:
+        with pytest.raises(AppendRefusedError):
+            old._delta_preconditions(substring_pass)
+    got = old.run_incremental(generate_pages(spark, 90)).toPandas()
+    full = NDDPipeline(
+        spark, CFG, str(tmp_path_factory.mktemp(f"ndd_killed_{table}_f"))
+    ).run(generate_pages(spark, 90)).toPandas()
+    assert _partition(got) == _partition(full)
 
 
 def test_delete_retracts_and_matches_full(spark, tmp_path_factory):

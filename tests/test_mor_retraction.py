@@ -79,18 +79,19 @@ def test_mor_delete_writes_nothing_to_governed_tables(
     pipe = NDDPipeline(
         spark, CFG, _copy(base_catalog, tmp_path_factory, "ndd_mor_del")
     )
-    before = _table_files(pipe.catalog, GOVERNED)
+    touched = GOVERNED + ("signatures",)
+    before = _table_files(pipe.catalog, touched)
     clusters = pipe.delete_pages(del_urls).toPandas()
-    assert _table_files(pipe.catalog, GOVERNED) == before
+    assert _table_files(pipe.catalog, touched) == before
     assert pipe.catalog.exists(mor.PATCH_TABLE)
     m = pipe.catalog.read("metrics").toPandas()
     assert (
         m[(m.stage == "pairs") & (m.key == "retract_mor_commit")].value == 1
     ).any()
     # the views show the retraction the files don't
-    seen_v = pipe.stage_view("seen")
-    assert seen_v.where(F.col("url").isin(del_urls)).count() == 0
-    assert pipe.catalog.read("seen").where(
+    sigs_v = pipe.signatures_table()
+    assert sigs_v.where(F.col("url").isin(del_urls)).count() == 0
+    assert pipe.catalog.read("signatures").where(
         F.col("url").isin(del_urls)
     ).count() == len(del_urls)
     # rep inheritance: 20 was an exact-dup rep, 21 its surviving copy —
@@ -159,7 +160,7 @@ def test_era_guards_readded_url(spark, tmp_path_factory, base_catalog):
         spark, CFG, _copy(base_catalog, tmp_path_factory, "ndd_mor_readd")
     )
     pipe.delete_pages([u])
-    assert pipe.stage_view("seen").where(F.col("url") == u).count() == 0
+    assert pipe.signatures_table().where(F.col("url") == u).count() == 0
     batch = spark.createDataFrame(
         [(u, "a brand new body for the re-added url eleven")],
         "url string, text string",
@@ -168,7 +169,7 @@ def test_era_guards_readded_url(spark, tmp_path_factory, base_catalog):
     # exactly ONE live row for u in each url view (the new era's), and the
     # patch entry still on disk did not swallow it
     assert pipe.catalog.exists(mor.PATCH_TABLE)
-    assert pipe.stage_view("seen").where(F.col("url") == u).count() == 1
+    assert pipe.signatures_table().where(F.col("url") == u).count() == 1
     assert pipe.stage_view("reps").where(F.col("url") == u).count() == 1
     assert u in set(clusters.url)
     snap = generate_pages(spark, N).withColumn(
@@ -223,9 +224,12 @@ def test_chained_retraction_composes_patch(
     [(era21, nu21)] = entries[url_of(21)]
     assert nu20 == third and nu21 == third
     assert era20 < era21
-    for t, key in (("seen", "url"), ("reps", "url")):
-        v = pipe.stage_view(t).groupBy(key).count()
-        assert v.where(F.col("count") > 1).count() == 0, t
+    for t, view in (
+        ("signatures", pipe.signatures_table()),
+        ("reps", pipe.stage_view("reps")),
+    ):
+        dups = view.groupBy("url").count().where(F.col("count") > 1)
+        assert dups.count() == 0, t
     pairs_v = pipe.stage_view("pairs").groupBy("url_a", "url_b").count()
     assert pairs_v.where(F.col("count") > 1).count() == 0
     clusters = pipe.clusters_view().toPandas()
@@ -270,7 +274,7 @@ def test_double_update_same_url(spark, tmp_path_factory, base_catalog):
     ]
     eras = [e["e"] for e in row["__entries"]]
     assert len(eras) == 2 and eras[0] < eras[1]
-    assert pipe.stage_view("seen").where(F.col("url") == u).count() == 1
+    assert pipe.signatures_table().where(F.col("url") == u).count() == 1
     clusters = pipe.clusters_view().toPandas()
     snap = generate_pages(spark, N).withColumn(
         "text",
@@ -300,17 +304,19 @@ def test_inline_fold_past_patch_ceiling(
         _copy(base_catalog, tmp_path_factory, "ndd_mor_fold"),
     )
     del_urls = [url_of(i) for i in (20, 43)]
-    before = _table_files(pipe.catalog, ("pairs", "seen"))
+    before = _table_files(pipe.catalog, ("pairs", "signatures"))
     clusters = pipe.delete_pages(del_urls).toPandas()
     assert not pipe.catalog.exists(mor.PATCH_TABLE)
-    assert _table_files(pipe.catalog, ("pairs", "seen")) != before
+    assert _table_files(pipe.catalog, ("pairs", "signatures")) != before
     m = pipe.catalog.read("metrics").toPandas()
     assert (
         m[(m.stage == "pairs") & (m.key == "retract_fold")].value == 1
     ).any()
     # physical rows really died (fold, not sidecar)
     assert (
-        pipe.catalog.read("seen").where(F.col("url").isin(del_urls)).count()
+        pipe.catalog.read("signatures")
+        .where(F.col("url").isin(del_urls))
+        .count()
         == 0
     )
     full = (
@@ -402,7 +408,6 @@ def test_crash_mid_mor_routes_to_full(spark, tmp_path_factory, base_catalog):
             "signatures": p.signatures_table().select("url", "fp"),
         }
         for t, cols in (
-            ("seen", ["url", "fp"]),
             ("reps", ["url", "fp"]),
             ("pairs", ["url_a", "url_b"]),
             ("substring_pairs", ["url_a", "url_b"]),
