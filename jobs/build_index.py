@@ -4,15 +4,17 @@ Usage:
     zip -r ndd.zip near_duplicate_detection_spark/
     spark-submit --py-files ndd.zip jobs/build_index.py \
         --pages /path/to/pages_parquet --catalog /path/to/catalog \
-        [--n-synthetic 100000] [--no-resume] [--no-substring] \
+        [--n-synthetic 100000] [--no-resume] \
         [--incremental | --append | --update | --delete-urls PATH \
          | --compact | --serving-index] \
         [--shingle-k 5] [--num-perms 128] [--bands 32] [--rows 4] \
         [--jaccard 0.6] [--buckets 64]
 
 Exactly one of --pages (existing parquet with the input_hint schema) or
---n-synthetic (deterministic generator) selects the input. Re-running with
-the same catalog resumes from lineage (the reference's `.done` semantics,
+--n-synthetic (deterministic generator) selects the input. Every build and
+every changeset runs stages 0→1→2→2b→3 (ingest, signatures, LSH pairs, the
+suffix-array substring pass, connected components). Re-running with the same
+catalog resumes from lineage (the reference's `.done` semantics,
 ndd/extract_features.py:88, distributed).
 """
 
@@ -72,7 +74,6 @@ def main(argv: list[str] | None = None) -> int:
              "interactive query serving (build_serving_index() — derived "
              "state, stamp-validated at read); no input snapshot needed",
     )
-    ap.add_argument("--no-substring", action="store_true")
     ap.add_argument("--shingle-k", type=int, default=5)
     ap.add_argument("--num-perms", type=int, default=128)
     ap.add_argument("--bands", type=int, default=32)
@@ -121,7 +122,6 @@ def main(argv: list[str] | None = None) -> int:
         num_buckets=args.buckets,
     )
     pipe = NDDPipeline(spark, cfg, args.catalog)
-    sub = not args.no_substring
     if args.compact:
         clusters = None
         print(json.dumps({"compacted": {
@@ -142,7 +142,7 @@ def main(argv: list[str] | None = None) -> int:
         else:
             with open(args.delete_urls) as f:
                 urls = [ln.strip() for ln in f if ln.strip()]
-        clusters = pipe.delete_pages(urls, substring_pass=sub)
+        clusters = pipe.delete_pages(urls)
     else:
         if args.pages:
             pages = spark.read.parquet(args.pages)
@@ -168,17 +168,13 @@ def main(argv: list[str] | None = None) -> int:
                 if args.changed_buckets
                 else None
             )
-            clusters = pipe.run_incremental(
-                pages, substring_pass=sub, changed_buckets=cb
-            )
+            clusters = pipe.run_incremental(pages, changed_buckets=cb)
         elif args.append:
-            clusters = pipe.append_pages(pages, substring_pass=sub)
+            clusters = pipe.append_pages(pages)
         elif args.update:
-            clusters = pipe.update_pages(pages, substring_pass=sub)
+            clusters = pipe.update_pages(pages)
         else:
-            clusters = pipe.run(
-                pages, resume=not args.no_resume, substring_pass=sub
-            )
+            clusters = pipe.run(pages, resume=not args.no_resume)
     stats = {
         "clusters_rows": pipe.catalog.count_rows("clusters"),
         "pairs": pipe.catalog.count_rows("pairs"),

@@ -66,7 +66,7 @@ def source_signature(catalog) -> str:
     return hashlib.sha256("|".join(parts).encode("utf-8")).hexdigest()[:16]
 
 
-def build_band_index(catalog, cfg, partitions: int | None = None) -> None:
+def build_band_index(catalog, cfg) -> None:
     """Materialize ``band_index`` from the CURRENT log-resolved
     signatures view and stamp it against the current source state.
 
@@ -78,7 +78,7 @@ def build_band_index(catalog, cfg, partitions: int | None = None) -> None:
 
     from near_duplicate_detection_spark.pipeline import signatures_view
 
-    P = partitions or cfg.band_index_partitions
+    P = cfg.band_index_partitions
     # crash protocol: drop the stamp FIRST (readers fall back from here on),
     # then the old index (a dynamic-partition overwrite with a smaller P
     # would otherwise leave stale pt= dirs), then write index → stamp last.

@@ -331,25 +331,14 @@ class NDDPipeline:
         )
 
     def stage2b_run_hash(self) -> str:
-        # 2b consumes signatures (via reps) AND stage-2 pairs (anti-join of
-        # already-verified pairs) → chain both
-        return self._h16(
-            self.cfg.stage2b_hash()
-            + "|"
-            + self.catalog.content_fingerprint("signatures")
-            + "|"
-            + self.stage2_run_hash()
-        )
+        # 2b consumes signatures (via reps) and stage-2 pairs (anti-join of
+        # already-verified pairs): stage2_run_hash carries both
+        return self._h16(self.cfg.stage2b_hash() + "|" + self.stage2_run_hash())
 
     def stage3_run_hash(self) -> str:
-        s2b = (
-            self.stage2b_run_hash()
-            if self.catalog.exists("substring_pairs")
-            else "none"
-        )
-        return self._h16(
-            self.cfg.stage3_hash() + "|" + self.stage2_run_hash() + "|" + s2b
-        )
+        # stage 3 reads pairs ∪ substring_pairs: stage2b_run_hash chains
+        # stage2_run_hash, so it carries both edge tables' inputs
+        return self._h16(self.cfg.stage3_hash() + "|" + self.stage2b_run_hash())
 
     def clusters_view(self) -> DataFrame:
         """The committed clusters with the merge-on-read label patch applied
@@ -704,22 +693,21 @@ class NDDPipeline:
         t0 = time.monotonic()
         # invalidate before the first mutation, as in stage2_pairs
         cat.mark_complete("substring_pairs", "", {-1: 0}, 0)
-        pages = self.pages_table()
-        if cat.exists("reps"):
-            # substring pass over unique-content representatives only —
-            # exact copies are already linked by stage 2's star edges
-            # (view: a retraction may have relabeled reps onto survivors)
-            pages = pages.join(self.stage_view("reps"), "url", "left_semi")
+        # substring pass over unique-content representatives only — exact
+        # copies are already linked by stage 2's star edges (view: a
+        # retraction may have relabeled reps onto survivors)
+        pages = self.pages_table().join(
+            self.stage_view("reps"), "url", "left_semi"
+        )
         cands, flagged, windows = substring_candidates(
             pages, cfg, return_windows=True
         )
         # pairs already verified by stage 2 don't need the expensive LCS pass
-        if cat.exists("pairs"):
-            cands = cands.join(
-                self.stage_view("pairs").select("url_a", "url_b"),
-                ["url_a", "url_b"],
-                "left_anti",
-            )
+        cands = cands.join(
+            self.stage_view("pairs").select("url_a", "url_b"),
+            ["url_a", "url_b"],
+            "left_anti",
+        )
         # materialize the (small) candidate set ONCE: the verify step reads
         # it three times (url prune ×2 branches + the pair join) — without
         # this the whole fingerprint→bucket→expand subtree re-evaluates per
@@ -830,6 +818,14 @@ class NDDPipeline:
 
     # ---------- stage 3 ----------
 
+    def _edges(self) -> DataFrame:
+        """Stage 3's edge set: the pairs ∪ substring_pairs views' keys."""
+        return (
+            self.stage_view("pairs")
+            .select("url_a", "url_b")
+            .union(self.stage_view("substring_pairs").select("url_a", "url_b"))
+        )
+
     def stage3_clusters(self, resume: bool = True) -> None:
         cfg, cat = self.cfg, self.catalog
         h = self.stage3_run_hash()
@@ -840,12 +836,7 @@ class NDDPipeline:
         ):
             return
         t0 = time.monotonic()
-        edges = self.stage_view("pairs").select("url_a", "url_b")
-        if cat.exists("substring_pairs"):
-            edges = edges.union(
-                self.stage_view("substring_pairs").select("url_a", "url_b")
-            )
-        labels = connected_components(edges)
+        labels = connected_components(self._edges())
         self._rewrite_clusters(
             clusters_table(labels, self.pages_table().select("url"))
         )
@@ -989,12 +980,7 @@ class NDDPipeline:
             frontier = local_frame(
                 self.spark, [(u,) for u in frontier_urls], "url string"
             )
-            all_edges = self.stage_view("pairs").select("url_a", "url_b")
-            if cat.exists("substring_pairs"):
-                all_edges = all_edges.union(
-                    self.stage_view("substring_pairs").select("url_a", "url_b")
-                )
-            sub_edges = pairs_touching(all_edges, frontier)
+            sub_edges = pairs_touching(self._edges(), frontier)
             base_old = old.join(F.broadcast(affected), "cluster_id", "left_anti")
         edge_parts = [p for p in (new_edges, sub_edges) if p is not None]
         node_labels, changed = None, {}
@@ -1184,7 +1170,6 @@ class NDDPipeline:
         self,
         pages: DataFrame | None = None,
         resume: bool = True,
-        substring_pass: bool = True,
     ) -> DataFrame:
         """Full build. `pages=None` reuses the catalog's existing pages table.
         While a crash marker is up the catalog's physical state is suspect
@@ -1198,8 +1183,7 @@ class NDDPipeline:
             self.stage0_ingest(pages, resume)
         self.stage1_signatures(resume)
         self.stage2_pairs(resume)
-        if substring_pass:
-            self.stage2b_substring(resume)
+        self.stage2b_substring(resume)
         self.stage3_clusters(resume)
         self._clear_marker("delta.inflight")
         return self.clusters_view()
@@ -1207,7 +1191,6 @@ class NDDPipeline:
     def run_incremental(
         self,
         pages: DataFrame | None = None,
-        substring_pass: bool = True,
         changed_buckets=None,
     ) -> DataFrame:
         """Snapshot-inferred incremental build. ``pages`` is the FULL
@@ -1245,16 +1228,14 @@ class NDDPipeline:
         try:
             if pages is not None:
                 try:
-                    pstats = self._delta_preconditions(substring_pass)
+                    pstats = self._delta_preconditions()
                     upserts, deletes, expect = self._snapshot_changeset(
                         pages, pstats
                     )
-                    return self._apply_changeset(
-                        upserts, deletes, substring_pass, expect
-                    )
+                    return self._apply_changeset(upserts, deletes, expect)
                 except AppendRefusedError:
                     pass  # nothing mutated: heal through the resume path
-            return self.run(pages, resume=True, substring_pass=substring_pass)
+            return self.run(pages, resume=True)
         finally:
             self._changed_buckets = None
 
@@ -1360,18 +1341,15 @@ class NDDPipeline:
             "(or run() for a rebuild)"
         )
 
-    def _delta_preconditions(
-        self, substring_pass: bool
-    ) -> dict[int, tuple[int, int]]:
+    def _delta_preconditions(self) -> dict[int, tuple[int, int]]:
         """Shared refusal gate of the O(change) paths: ``run_incremental``
         calls it before its snapshot diff, and ``_apply_changeset`` (behind
         ``append_pages`` / ``delete_pages`` / ``update_pages``) before its
         first mutation. The catalog must be a committed, CURRENT build with
         healthy delta state — pages/signatures lineage consistent, pairs
-        (and substring_pairs, when ``substring_pass``) committed under the
-        current run hashes (a full stage-2/2b rewrite invalidates its
-        lineage before its first mutation, so a killed rewrite refuses
-        here), clusters committed under the current stage-3 run hash (a
+        and substring_pairs committed under the current run hashes (a full
+        stage-2/2b rewrite invalidates its lineage before its first
+        mutation, so a killed rewrite refuses here), clusters committed under the current stage-3 run hash (a
         killed full build leaves them lagging with no marker up), no crash
         marker. Every check is footer/lineage-level (zero Spark jobs).
         Raises ``AppendRefusedError`` (nothing mutated); returns the
@@ -1396,15 +1374,12 @@ class NDDPipeline:
             refuse("no stage-2 delta state (reps/pairs)")
         if not cat.completed_partitions("pairs", self.stage2_run_hash()):
             refuse("pairs not committed under the current run hash")
-        if substring_pass:
-            if not (
-                cat.exists("window_index") and cat.exists("substring_pairs")
-            ):
-                refuse("no stage-2b delta state")
-            if not cat.completed_partitions(
-                "substring_pairs", self.stage2b_run_hash()
-            ):
-                refuse("substring_pairs not committed under the current run hash")
+        if not (cat.exists("window_index") and cat.exists("substring_pairs")):
+            refuse("no stage-2b delta state")
+        if not cat.completed_partitions(
+            "substring_pairs", self.stage2b_run_hash()
+        ):
+            refuse("substring_pairs not committed under the current run hash")
         if not (
             cat.exists("clusters")
             and cat.completed_partitions("clusters", self.stage3_run_hash())
@@ -1438,7 +1413,6 @@ class NDDPipeline:
         self,
         upserts: DataFrame | None,
         deletes: list[str] | DataFrame | None,
-        substring_pass: bool,
         expect: dict[int, tuple[int, int]] | None = None,
     ) -> DataFrame:
         """The one changeset core behind ``append_pages``, ``delete_pages``,
@@ -1470,7 +1444,7 @@ class NDDPipeline:
           first (``_retraction_mapping``), then the era bumps ONCE and ONE
           ``retract_patch`` log file holds the mapping at that era (rows
           stamped AT the era are the re-adds and survive —
-          operators/mor.py); it governs pages, signatures and the six
+          operators/mor.py); it governs pages, signatures and the four
           stage-2/2b tables. Past ``retract_patch_ceiling`` stored log rows,
           ``_fold`` reclaims them physically;
         - stages 0/1: the pages append, then the batch signing +
@@ -1490,7 +1464,7 @@ class NDDPipeline:
 
         cfg, cat, refuse = self.cfg, self.catalog, self._refuse
         h1 = cfg.stage1_hash()
-        pstats = self._delta_preconditions(substring_pass)
+        pstats = self._delta_preconditions()
 
         new_rows, add_stats = None, {}
         if upserts is not None:
@@ -1662,11 +1636,7 @@ class NDDPipeline:
         def edge_rows() -> int:
             # footer reads: the deltas only append, so the difference is
             # the new-edge count with no Spark job
-            return sum(
-                cat.count_rows(t)
-                for t in ("pairs", "substring_pairs")
-                if cat.exists(t)
-            )
+            return cat.count_rows("pairs") + cat.count_rows("substring_pairs")
 
         n_edges_before = edge_rows()
         appended = self.stage2_pairs_delta(
@@ -1676,14 +1646,13 @@ class NDDPipeline:
             n_up,
         )
         new_rep_urls, new_edges = appended or (None, None)
-        if substring_pass:
-            hits = self.stage2b_delta(
-                new_rep_urls,
-                None if new_rows is None else new_rows.select("url", "text"),
-                new_edges,
-            )
-            if hits is not None:
-                new_edges = new_edges.unionByName(hits)
+        hits = self.stage2b_delta(
+            new_rep_urls,
+            None if new_rows is None else new_rows.select("url", "text"),
+            new_edges,
+        )
+        if hits is not None:
+            new_edges = new_edges.unionByName(hits)
         if not self.stage3_clusters_delta(
             new_edges,
             None if new_rows is None else new_rows.select("url"),
@@ -1696,9 +1665,7 @@ class NDDPipeline:
         self._clear_marker("delta.inflight")
         return self.clusters_view()
 
-    def append_pages(
-        self, new_pages: DataFrame, substring_pass: bool = True
-    ) -> DataFrame:
+    def append_pages(self, new_pages: DataFrame) -> DataFrame:
         """O(append) explicit entry point: the caller KNOWS the appended
         rows and hands exactly them (the reference's ``update_index`` with
         explicit videoids, ndd/server_ndd.py:307-315), so no drift is
@@ -1707,7 +1674,7 @@ class NDDPipeline:
         violation surfaces as duplicate urls in ``signatures``/``clusters``);
         in-batch duplicates are refused. Plan, refusals and crash protocol:
         ``_apply_changeset``."""
-        return self._apply_changeset(new_pages, None, substring_pass)
+        return self._apply_changeset(new_pages, None)
 
     def _buckets_of(self, urls) -> set[int]:
         """The url-hash buckets of driver-known urls: Spark's own xxhash64
@@ -1785,11 +1752,7 @@ class NDDPipeline:
         cat.add_metrics("pages", {"buckets_rewritten": len(buckets)})
         return out
 
-    def delete_pages(
-        self,
-        urls: list[str] | DataFrame,
-        substring_pass: bool = True,
-    ) -> DataFrame:
+    def delete_pages(self, urls: list[str] | DataFrame) -> DataFrame:
         """O(delete) explicit retraction: the caller KNOWS the deleted urls
         and hands exactly them (the reference's ``update_index`` dropping a
         vanished video's entries by videoid, ndd/server_ndd.py:246-261).
@@ -1798,19 +1761,15 @@ class NDDPipeline:
         ``_apply_changeset``."""
         if not isinstance(urls, DataFrame):
             urls = list(urls)
-        return self._apply_changeset(None, urls, substring_pass)
+        return self._apply_changeset(None, urls)
 
-    def update_pages(
-        self, changed_rows: DataFrame, substring_pass: bool = True
-    ) -> DataFrame:
+    def update_pages(self, changed_rows: DataFrame) -> DataFrame:
         """O(edit) explicit upsert: the caller hands the NEW rows of docs
         that already exist (the reference's ``update_index`` re-indexing
         explicit videoids, ndd/server_ndd.py:307-315); only the batch is
         signed. Every url must exist and appear once. Plan, refusals and
         crash protocol: ``_apply_changeset``."""
-        return self._apply_changeset(
-            changed_rows, changed_rows.select("url"), substring_pass
-        )
+        return self._apply_changeset(changed_rows, changed_rows.select("url"))
 
     def compact(self) -> dict:
         """Table maintenance: fold the merge-on-read label patch and rewrite
@@ -1891,7 +1850,7 @@ class NDDPipeline:
             cat.add_metrics("compaction", flat)
         return out
 
-    def build_serving_index(self, partitions: int | None = None) -> None:
+    def build_serving_index(self) -> None:
         """Materialize the partition-pruned query probe index
         (operators/serving_index.py): ``band_index`` partitioned by
         ``xxhash64(band_hash) % cfg.band_index_partitions``, stamped against
@@ -1904,7 +1863,7 @@ class NDDPipeline:
             build_band_index,
         )
 
-        build_band_index(self.catalog, self.cfg, partitions)
+        build_band_index(self.catalog, self.cfg)
 
 
 class AppendRefusedError(RuntimeError):

@@ -306,7 +306,7 @@ def test_pure_append_fast_path_routing(
         spark, CFG, _copy(base_catalog, tmp_path_factory, "ndd_fp_edit")
     )
     upserts, deletes, _ = pipe_e._snapshot_changeset(
-        edited, pipe_e._delta_preconditions(True)
+        edited, pipe_e._delta_preconditions()
     )
     assert deletes == [url_of(7)]
     assert upserts.count() == N2 - N1 + 1
@@ -320,7 +320,7 @@ def test_pure_append_fast_path_routing(
         spark, CFG, _copy(base_catalog, tmp_path_factory, "ndd_fp_del")
     )
     upserts, deletes, _ = pipe_d._snapshot_changeset(
-        shrunk, pipe_d._delta_preconditions(True)
+        shrunk, pipe_d._delta_preconditions()
     )
     assert deletes == [url_of(7)]
     assert upserts.count() == N2 - N1

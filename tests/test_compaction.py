@@ -142,7 +142,7 @@ def test_append_ceiling_is_execution_knob_not_semantics(spark, tmp_path):
     tweaked = NDDPipeline(
         spark, NDDConfig(num_buckets=4, clusters_append_ceiling=1), base
     )
-    assert tweaked._delta_preconditions(True)  # committed state trusted
+    assert tweaked._delta_preconditions()  # committed state trusted
     before = _clusters_pdf(tweaked)
     n_lineage = tweaked.catalog.count_rows("lineage")
     tweaked.run_incremental(generate_pages(spark, 80))  # no drift → no-op

@@ -53,7 +53,7 @@ def test_execution_knobs_preserve_resume_state(spark, tmp_path):
         base,
     )
     n_pairs = tweaked.catalog.count_rows("pairs")
-    assert tweaked._delta_preconditions(True)
+    assert tweaked._delta_preconditions()
     assert len(tweaked.run_incremental(generate_pages(spark, 80)).toPandas()) == 80
     assert tweaked.catalog.count_rows("pairs") == n_pairs
     m = tweaked.catalog.read("metrics").toPandas()
@@ -74,7 +74,7 @@ def test_ceiling_change_invalidates_2b_delta_state(spark, tmp_path):
         "substring_pairs", changed.stage2b_run_hash()
     )
     with pytest.raises(AppendRefusedError):
-        changed._delta_preconditions(True)
+        changed._delta_preconditions()
     # the refused delta heals through the resume path: substring_pairs is
     # recommitted under the new run hash
     assert len(changed.run_incremental(generate_pages(spark, 80)).toPandas()) == 80

@@ -248,11 +248,11 @@ def test_retraction_cap_refuses_before_touching_state(
     lineage = capped.catalog.latest_partition_stats("pages", CFG.stage1_hash())
     n_pairs = capped.catalog.count_rows("pairs")
     upserts, deletes, expect = capped._snapshot_changeset(
-        edited, capped._delta_preconditions(True)
+        edited, capped._delta_preconditions()
     )
     assert deletes == [url_of(6)]
     with pytest.raises(AppendRefusedError, match="max_retract"):
-        capped._apply_changeset(upserts, deletes, True, expect)
+        capped._apply_changeset(upserts, deletes, expect)
     # the refusal happened before any rewrite
     assert not capped.catalog.exists(mor.PATCH_TABLE)
     assert not capped._delta_suspect()
@@ -278,7 +278,7 @@ def test_retract_crash_marker_forces_full_rebuild(spark, tmp_path_factory):
     pipe.run(generate_pages(spark, 80))
     pipe._set_marker("delta.inflight")  # a killed retraction
     with pytest.raises(AppendRefusedError, match="crash marker"):
-        pipe._delta_preconditions(True)
+        pipe._delta_preconditions()
     clusters = pipe.run_incremental(generate_pages(spark, 90)).toPandas()
     assert len(clusters) == 90
     assert not pipe._delta_suspect()  # cleared by the committed rebuild
@@ -419,19 +419,20 @@ def test_param_change_rejects_delta_state(spark, tmp_path_factory):
         base,
     )
     with pytest.raises(AppendRefusedError, match="pairs not committed"):
-        changed._delta_preconditions(True)
-    # a stage-2b-only change refuses on the 2b state — and, with the
-    # substring pass off, on clusters, whose run hash chains the 2b params
+        changed._delta_preconditions()
+    # a stage-2b-only change refuses on the 2b state; clusters' run hash
+    # chains the 2b params too, so they are not committed under it either
     changed_2b = NDDPipeline(
         spark, NDDConfig(num_buckets=4, substring_min_len=400), base
     )
-    with pytest.raises(AppendRefusedError, match="clusters not committed"):
-        changed_2b._delta_preconditions(False)
     with pytest.raises(AppendRefusedError, match="substring_pairs"):
-        changed_2b._delta_preconditions(True)
+        changed_2b._delta_preconditions()
+    assert not changed_2b.catalog.completed_partitions(
+        "clusters", changed_2b.stage3_run_hash()
+    )
     # same params → the delta accepts, and an unchanged snapshot no-ops
     again = NDDPipeline(spark, CFG, base)
-    assert again._delta_preconditions(True)
+    assert again._delta_preconditions()
     n_pairs = again.catalog.count_rows("pairs")
     again.run_incremental(generate_pages(spark, 100))
     assert again.catalog.count_rows("pairs") == n_pairs
@@ -450,19 +451,15 @@ class _KilledWrite(RuntimeError):
 
 
 @pytest.mark.parametrize(
-    "changed_cfg, table, passes",
+    "changed_cfg, table",
     [
-        (NDDConfig(num_buckets=4, jaccard_threshold=0.5), "pairs", (True, False)),
-        (
-            NDDConfig(num_buckets=4, substring_min_len=400),
-            "substring_pairs",
-            (True,),
-        ),
+        (NDDConfig(num_buckets=4, jaccard_threshold=0.5), "pairs"),
+        (NDDConfig(num_buckets=4, substring_min_len=400), "substring_pairs"),
     ],
     ids=["pairs", "substring_pairs"],
 )
 def test_killed_param_changed_rewrite_refuses_old_params(
-    spark, tmp_path_factory, monkeypatch, changed_cfg, table, passes
+    spark, tmp_path_factory, monkeypatch, changed_cfg, table
 ):
     """A full stage-2 (or 2b) rewrite under changed params, killed at its
     table write, leaves lineage naming the OLD params. The old config's
@@ -486,9 +483,8 @@ def test_killed_param_changed_rewrite_refuses_old_params(
     monkeypatch.undo()
 
     old = NDDPipeline(spark, CFG, base)
-    for substring_pass in passes:
-        with pytest.raises(AppendRefusedError):
-            old._delta_preconditions(substring_pass)
+    with pytest.raises(AppendRefusedError):
+        old._delta_preconditions()
     got = old.run_incremental(generate_pages(spark, 90)).toPandas()
     full = NDDPipeline(
         spark, CFG, str(tmp_path_factory.mktemp(f"ndd_killed_{table}_f"))
